@@ -117,12 +117,21 @@ object BenchExtra {
         r += 1
       }
       spark.sparkContext.setJobDescription(null)
-      println(f"[extra] $name%-34s ${best}%8.3f s  jobs=$bestJobs%3d stages=$bestStages%3d " +
-        f"task=${bestTaskMs / 1000.0}%8.1f s  shuffle=${bestShuf / 1024.0 / 1024.0}%7.2f MiB")
-      name -> best
+      // every rep failed: `best` is still the sentinel, which is no time
+      if (best == Double.MaxValue) {
+        println(f"[extra] $name%-34s FAILED (all $reps reps)")
+        name -> None
+      } else {
+        println(f"[extra] $name%-34s ${best}%8.3f s  jobs=$bestJobs%3d stages=$bestStages%3d " +
+          f"task=${bestTaskMs / 1000.0}%8.1f s  shuffle=${bestShuf / 1024.0 / 1024.0}%7.2f MiB")
+        name -> Some(best)
+      }
     }
-    val total = results.map(_._2).sum
-    println(f"[extra] TOTAL ${total}%.3f s over ${results.size} entries")
+    val timed = results.flatMap(_._2)
+    val failedNote =
+      if (timed.size == results.size) ""
+      else s" (${results.size - timed.size} FAILED entries excluded)"
+    println(f"[extra] TOTAL ${timed.sum}%.3f s over ${timed.size} entries$failedNote")
     spark.stop()
   }
 }

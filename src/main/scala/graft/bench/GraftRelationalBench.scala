@@ -35,8 +35,10 @@ object GraftRelationalBench {
       // The 9 bridge writes are independent jobs over distinct table dirs
       // and each is a 1-8-task job that underuses the executor — submit
       // them from a small driver pool so the scheduler overlaps them
-      // (optimization guide §2.6 "overlap independent jobs"). Job-group
-      // properties are thread-local, so each write is correctly labelled.
+      // (optimization guide §2.6 "overlap independent jobs"). The writes'
+      // jobs carry no per-table label: a pool thread copies the submitting
+      // thread's local properties once, when the thread is created, not per
+      // submitted task.
       val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
       try {
         tables.map { case (name, buckets) =>
@@ -44,7 +46,14 @@ object GraftRelationalBench {
             def call(): Unit = GraftTableBridge.write(
               spark.read.parquet(s"$sfDir/$name.parquet"), s"$root/$name", name, buckets)
           })
-        }.foreach(_.get())
+        }.foreach { fu =>
+          // rethrow the write's own failure, not the future's wrapper
+          try fu.get()
+          catch {
+            case e: java.util.concurrent.ExecutionException =>
+              throw Option(e.getCause).getOrElse(e)
+          }
+        }
       } finally {
         // On a failed write, drain the pool BEFORE the outer finally
         // deletes root — an orderly shutdown() would leave in-flight

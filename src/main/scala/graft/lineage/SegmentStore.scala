@@ -228,6 +228,14 @@ object SegmentStore {
     p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
   }
 
+  /** The ledger's visibility facts through the memoized driver-side fold
+    * ([[graft.sources.GraftLayout.committedPairs]]) — no Spark job; a
+    * table without a ledger has no pairs. */
+  private def ledgerPairs(tableDir: String, conf: org.apache.hadoop.conf.Configuration)
+      : graft.sources.GraftLayout.LedgerPairs =
+    graft.sources.GraftLayout.committedPairs(tableDir, conf)
+      .getOrElse(graft.sources.GraftLayout.LedgerPairs(Set.empty, Map.empty, Map.empty))
+
   def readLineage(spark: SparkSession, tableDir: String): Dataset[LineageRow] = {
     import spark.implicits._
     if (!hExists(spark, lineageDir(tableDir)))
@@ -383,18 +391,13 @@ object SegmentStore {
     // stored-domain path (decode streams -> re-chunk -> re-encode, no
     // external type rendering); canonical tables keep the TokenRow path,
     // which additionally supports re-bucketing.
+    val conf = spark.sessionState.newHadoopConf()
     val metaDdl = graft.sources.GraftTableMeta
-      .read(tableDir, spark.sessionState.newHadoopConf())
+      .read(tableDir, conf)
       .flatMap(_.schemaDdl)
       .filter(_ != graft.sources.MetaColumns.CanonicalDdl)
-    val ledger = readLineage(spark, tableDir).collect()
-    val committed = ledger.collect {
-      case r if r.status == Committed && r.snapshotId <= upTo => (r.snapshotId, r.bucket)
-    }.toSet
-    val superseded = ledger.collect {
-      case r if supersededBy(r.status).isDefined => (r.snapshotId, r.bucket)
-    }.toSet
-    val visible = committed -- superseded
+    val ledger = ledgerPairs(tableDir, conf)
+    val visible = ledger.committed.filter(_._1 <= upTo) -- ledger.superseded.keySet
     if (visible.isEmpty) return None
     // Compaction ids live in their OWN space above both batch ids and
     // streaming epoch ids (a max-over-everything+1 on a streaming table
@@ -403,8 +406,8 @@ object SegmentStore {
     // "after" everything it supersedes, so the highest space also keeps
     // time travel consistent: as-of any pre-compaction snapshot id, both
     // the markers and the compacted snapshot are invisible.
-    val compactionId =
-      math.max(CompactionBase - 1L, ledger.map(_.snapshotId).max) + 1L
+    val compactionId = math.max(CompactionBase - 1L,
+      (ledger.committed.iterator ++ ledger.superseded.keysIterator).map(_._1).max) + 1L
     // Decode EXACTLY the pair set this compaction supersedes — NOT the
     // historical as-of view: readSegmentsVisible(asOf = upTo) would
     // resurrect partitions a LATER compaction already superseded (its
@@ -423,9 +426,10 @@ object SegmentStore {
     val metaSchema = metaDdl.map(graft.sources.MetaColumns.parseDdl)
     val metaFields = metaSchema.map(graft.sources.MetaColumns.metaFields).getOrElse(Nil)
     metaDdl.foreach { _ =>
-      val perSnapshotBuckets = ledger
-        .filter(r => r.status == Committed && visible.exists(_._1 == r.snapshotId))
-        .groupBy(_.snapshotId).view.mapValues(_.map(_.bucket).max + 1)
+      val visibleSnapshots = visible.map(_._1)
+      val perSnapshotBuckets = ledger.committed
+        .filter(p => visibleSnapshots(p._1))
+        .groupBy(_._1).view.mapValues(_.map(_._2).max + 1)
       val off = perSnapshotBuckets.filter(_._2 != buckets).toMap
       require(off.isEmpty,
         s"compact($tableDir): metadata-table compaction reuses stored bucket " +
@@ -467,13 +471,12 @@ object SegmentStore {
     // the ledger AFTER the expensive decode and abort if a concurrent
     // compact/expire superseded any input pair in the interim (committing
     // would double-count every row of the doubly-compacted partitions).
+    // The fold re-lists the ledger dir, so any file appended since the
+    // first read changes its key and is folded in — never a stale answer.
     // The window between this check and the commit append is milliseconds
     // vs the minutes-scale decode; a maintenance scheduler must still not
     // run two compactions of one table deliberately in parallel.
-    val supersededNow = readLineage(spark, tableDir).collect().collect {
-      case r if supersededBy(r.status).isDefined => (r.snapshotId, r.bucket)
-    }.toSet
-    val clash = visible.intersect(supersededNow)
+    val clash = visible.intersect(ledgerPairs(tableDir, conf).superseded.keySet)
     if (clash.nonEmpty)
       throw new java.util.ConcurrentModificationException(
         s"compact($tableDir): ${clash.size} input partition(s) were superseded " +
@@ -481,8 +484,7 @@ object SegmentStore {
           "aborting this compaction — re-run to compact the current state")
     metaInput match {
       case Some(segs) =>
-        graft.sources.GraftTableMeta.ensureForCommit(
-          tableDir, spark.sessionState.newHadoopConf(), metaDdl)
+        graft.sources.GraftTableMeta.ensureForCommit(tableDir, conf, metaDdl)
         commitSegments(spark, tableDir, compactionId, segs,
           graft.sources.SegmentLayoutV2.CanonicalStreams ++
             metaFields.flatMap(graft.sources.MetaColumns.streamsFor),
@@ -509,13 +511,9 @@ object SegmentStore {
     * compact/expire per table at a time (the standard table-maintenance
     * stance; Iceberg's expire_snapshots carries the same contract). */
   def expireSuperseded(spark: SparkSession, tableDir: String): Long = {
-    val ledger = readLineage(spark, tableDir).collect()
-    val superseded = ledger.collect {
-      case r if supersededBy(r.status).isDefined => (r.snapshotId, r.bucket)
-    }.toSet
-    var removed = 0L
     val conf = spark.sessionState.newHadoopConf()
-    superseded.foreach { case (s, b) =>
+    var removed = 0L
+    ledgerPairs(tableDir, conf).superseded.keysIterator.foreach { case (s, b) =>
       val dir = new org.apache.hadoop.fs.Path(
         s"${dataDir(tableDir)}/snapshotId=$s/bucket=$b")
       val fs = dir.getFileSystem(conf)

@@ -4,7 +4,8 @@ import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path => HPath}
+import org.apache.parquet.{HadoopReadOptions, ParquetReadOptions}
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
 import org.apache.parquet.hadoop.api.ReadSupport.ReadContext
@@ -58,12 +59,34 @@ object GraftLayout {
         size() > HeaderCacheMax
     }
 
+  /** The read options of the last Configuration footers were opened with.
+    * `ParquetFileReader.open(HadoopInputFile)` builds fresh options from
+    * the Configuration on every call (it copies every property — a few ms
+    * per file), so a listing that sniffs N footers under one Configuration
+    * pays that N times. One slot is enough: the callers that open many
+    * footers (compaction's input sniff, header prefetch) hold one
+    * Configuration for the whole listing. The options are path-free, which
+    * only matters for parquet modular encryption (per-file decryption
+    * properties) — graft never writes encrypted parquet. */
+  @volatile private var lastReadOptions: (Configuration, ParquetReadOptions) = null
+
+  private def readOptions(conf: Configuration): ParquetReadOptions = {
+    val last = lastReadOptions
+    if (last != null && (last._1 eq conf)) last._2
+    else {
+      val opts = HadoopReadOptions.builder(conf).build()
+      lastReadOptions = (conf, opts)
+      opts
+    }
+  }
+
   def footerInfo(file: String, conf: Configuration): FooterInfo = {
     footerCache.synchronized {
       val hit = footerCache.get(file)
       if (hit != null) return hit
     }
-    val r = ParquetFileReader.open(HadoopInputFile.fromPath(new HPath(file), conf))
+    val r = ParquetFileReader.open(
+      HadoopInputFile.fromPath(new HPath(file), conf), readOptions(conf))
     val fi =
       try {
         val md = r.getFooter.getFileMetaData
@@ -249,39 +272,38 @@ object GraftLayout {
     FileHeader(rows, bytes.toMap, ranges.toMap, nValues = nVals.toMap)
   }
 
-  /** List the data part-files of a graft table, ledger-filtered and sorted.
+  /** Every file under `root` (recursive), by `listStatus`.
     *
-    * Bare layout (a plain `Dataset[Segment].write.parquet` dump): every
-    * parquet file under the dir. SegmentStore layout (`dir/data` +
-    * `dir/lineage`): ONLY files under ledger-committed (snapshotId, bucket)
-    * partitions — data written in the crash window between a bucket write
-    * and its ledger append is invisible until recommitted, and a bucket
-    * overwritten by a retry is read exactly once (read-committed, the
-    * Iceberg-snapshot stance the lineage layer emulates). A `data` dir
-    * with no ledger at all falls back to reading everything (foreign
-    * writer).
-    *
-    * `asOf` = time travel (the Iceberg `snapshot-id` read option analog):
-    * only partitions whose ledgered snapshotId is <= the bound are
-    * visible — snapshots are append increments, so "as of N" is the union
-    * of snapshots 1..N. Requires a ledger: a bare dump has no snapshot
-    * history to travel through. */
+    * Not `fs.listFiles`: that builds a `LocatedFileStatus` per entry, and
+    * its constructor reads the entry's permission and owner. On the local
+    * filesystem without Hadoop's native library each such read forks an
+    * `ls` subprocess — milliseconds per file, `.crc` side files included.
+    * The statuses `listStatus` returns load those fields lazily, and
+    * nothing here asks for them (Spark's own file index skips that
+    * constructor for the same reason). */
+  def listFilesUnder(fs: FileSystem, root: HPath): Seq[FileStatus] = {
+    val out = ArrayBuffer.empty[FileStatus]
+    def walk(dir: HPath): Unit = fs.listStatus(dir).foreach { st =>
+      if (st.isDirectory) walk(st.getPath) else if (st.isFile) out += st
+    }
+    walk(root)
+    out.toSeq
+  }
+
+  /** A data or ledger file name: parquet, not a `_`/`.` side file. */
+  private[sources] def isDataFile(name: String): Boolean =
+    name.endsWith(".parquet") && !name.startsWith("_") && !name.startsWith(".")
+
   /** Every parquet data file under a directory (recursive, `_`/`.` files
-    * skipped) — the raw listing behind [[listDataFiles]] and the engine
-    * path's layout-aware reads. */
+    * skipped), sorted — the raw listing behind [[listDataFiles]] and the
+    * engine path's layout-aware reads. */
   def listParquetFiles(dir: String, conf: Configuration): Seq[String] = {
     val root = new HPath(dir)
     val fs = root.getFileSystem(conf)
     if (!fs.exists(root)) return Nil
-    val files = ArrayBuffer.empty[String]
-    val it = fs.listFiles(root, true)
-    while (it.hasNext) {
-      val f = it.next()
-      val n = f.getPath.getName
-      if (f.isFile && n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith("."))
-        files += f.getPath.toString
-    }
-    files.toSeq
+    listFilesUnder(fs, root).iterator
+      .filter(f => isDataFile(f.getPath.getName))
+      .map(_.getPath.toString).toSeq.sorted
   }
 
   /** Resolved data-file listings, keyed by (table, asOf) and guarded by
@@ -305,6 +327,23 @@ object GraftLayout {
     while (it.hasNext) { if (it.next()._1 == path) it.remove() }
   }
 
+  /** List the data part-files of a graft table, ledger-filtered and sorted.
+    *
+    * Bare layout (a plain `Dataset[Segment].write.parquet` dump): every
+    * parquet file under the dir. SegmentStore layout (`dir/data` +
+    * `dir/lineage`): ONLY files under ledger-committed (snapshotId, bucket)
+    * partitions — data written in the crash window between a bucket write
+    * and its ledger append is invisible until recommitted, and a bucket
+    * overwritten by a retry is read exactly once (read-committed, the
+    * Iceberg-snapshot stance the lineage layer emulates). A `data` dir
+    * with no ledger at all falls back to reading everything (foreign
+    * writer).
+    *
+    * `asOf` = time travel (the Iceberg `snapshot-id` read option analog):
+    * only partitions whose ledgered snapshotId is <= the bound are
+    * visible — snapshots are append increments, so "as of N" is the union
+    * of snapshots 1..N. Requires a ledger: a bare dump has no snapshot
+    * history to travel through. */
   def listDataFiles(path: String, conf: Configuration,
                     asOf: Option[Long] = None): Seq[String] = {
     val committed = committedPairs(path, conf)
@@ -317,12 +356,12 @@ object GraftLayout {
     val dataDir = new HPath(path, "data")
     val fs = dataDir.getFileSystem(conf)
     val root = if (fs.exists(dataDir)) dataDir else new HPath(path)
-    val files = ArrayBuffer.empty[String] ++ listParquetFiles(root.toString, conf)
+    val files = listParquetFiles(root.toString, conf)
     if (asOf.isDefined && committed.isEmpty)
       throw new IllegalArgumentException(
         s"snapshotId time travel requires a lineage ledger; $path has none")
     val kept = committed match {
-      case None => files.toSeq
+      case None => files
       case Some(lp) =>
         // visible at the bound = committed by then, minus partitions a
         // compaction at or before the bound superseded (a later compaction
@@ -334,7 +373,7 @@ object GraftLayout {
         // entries to one per snapshot
         val pairs = lp.committed.filter(_._1 <= bound) --
           lp.superseded.iterator.collect { case (sb, c) if c <= bound => sb }
-        val kept = files.toSeq.filter { f =>
+        val kept = files.filter { f =>
           partitionOf(f) match {
             case Some(sb) => pairs.contains(sb)
             case None => asOf.isEmpty // unledgered path: tolerate unless time traveling
@@ -354,11 +393,10 @@ object GraftLayout {
         }
         kept
     }
-    val out = kept.sorted
     committed.foreach(lp => dataFilesCache.synchronized {
-      dataFilesCache.put((path, asOf), (lp, out)): Unit
+      dataFilesCache.put((path, asOf), (lp, kept)): Unit
     })
-    out
+    kept
   }
 
   private val PartitionRe = ".*/snapshotId=(\\d+)/bucket=(\\d+)/[^/]+$".r
@@ -418,15 +456,12 @@ object GraftLayout {
     val ldir = new HPath(path, "lineage")
     val fs = ldir.getFileSystem(conf)
     if (!fs.exists(ldir)) return None
-    val files = ArrayBuffer.empty[(String, LedgerFileKey)]
-    val it = fs.listFiles(ldir, true)
-    while (it.hasNext) {
-      val f = it.next()
-      val n = f.getPath.getName
-      if (f.isFile && n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith("."))
-        files += f.getPath.toString -> LedgerFileKey(f.getLen, f.getModificationTime)
-    }
-    val sig = files.sortBy(_._1).toSeq
+    // the ledger dir is flat (every writer appends files directly under
+    // it), so one listStatus call is the whole listing
+    val sig = fs.listStatus(ldir).iterator
+      .filter(f => f.isFile && isDataFile(f.getPath.getName))
+      .map(f => f.getPath.toString -> LedgerFileKey(f.getLen, f.getModificationTime))
+      .toSeq.sortBy(_._1)
     ledgerPairsCache.synchronized {
       val hit = ledgerPairsCache.get(path)
       if (hit != null && hit._1 == sig) return Some(hit._2)

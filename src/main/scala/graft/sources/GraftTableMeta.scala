@@ -248,12 +248,8 @@ object GraftTableMeta {
     val ldir = new HPath(tableDir, "lineage")
     val fs = ldir.getFileSystem(conf)
     if (!fs.exists(ldir)) return false
-    val it = fs.listFiles(ldir, false)
-    while (it.hasNext) {
-      val n = it.next().getPath.getName
-      if (n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")) return true
-    }
-    false
+    // listStatus, not listFiles: see GraftLayout.listFilesUnder
+    fs.listStatus(ldir).exists(f => f.isFile && GraftLayout.isDataFile(f.getPath.getName))
   }
 
   /** Commit-path gate: stamp the marker on a fresh table, validate it on an

@@ -246,4 +246,62 @@ class LineageSpec extends AnyFunSuite {
     // expire is idempotent
     assert(SegmentStore.expireSuperseded(spark, dir) === 0L)
   }
+
+  test("maintenance reads the ledger fold: expire runs no Spark job, compact sees a fresh marker") {
+    val input = TokenTables.synthetic(spark, nDocs = 200, seed = 5L)
+    val dir = tmp()
+    for (r <- 0 until 3)
+      SegmentStore.encodeCommit(input.filter(_.n_tok % 3 == r), dir,
+        snapshotId = r + 1L, buckets = 2)
+    val conf = spark.sessionState.newHadoopConf()
+    // memoize the fold over the three snapshots...
+    val before = graft.sources.GraftLayout.committedPairs(dir, conf).get
+    assert(before.committed.size === 6 && before.superseded.isEmpty)
+    // ...then another maintainer supersedes one pair behind its back
+    val gone = (1L, 0)
+    assert(before.rows(gone) > 0L)
+    graft.sources.GraftWriteCommit.appendLedgerRows(dir, Seq(
+      LineageRow(gone._1, gone._2, 0L, 0L, 0L, 0L, 0L, "", "", "",
+        s"${SegmentStore.SupersededPrefix}3")), conf)
+
+    // compact must exclude the freshly superseded pair, not re-publish it
+    val cid = SegmentStore.compact(spark, dir, upTo = 3L, buckets = 2).get
+    val ledger = SegmentStore.readLineage(spark, dir).collect()
+    val markedByCompact = ledger
+      .filter(_.status == s"${SegmentStore.SupersededPrefix}$cid")
+      .map(r => (r.snapshotId, r.bucket)).toSet
+    assert(markedByCompact === before.committed - gone)
+    val compactedRows = ledger
+      .filter(r => r.snapshotId == cid && r.status == SegmentStore.Committed)
+      .map(_.nRows).sum
+    assert(compactedRows === 200L - before.rows(gone))
+    assert(spark.read.format("graft").load(dir).count() === compactedRows)
+
+    // expire submits no Spark job: count the jobs of its thread's job
+    // group, then wait for a sentinel job — listener events arrive in
+    // order, so once the sentinel is seen every earlier job has been too
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    val removed =
+      try {
+        sc.setJobGroup("graft-expire-probe", "expireSuperseded")
+        val n = try SegmentStore.expireSuperseded(spark, dir) finally sc.clearJobGroup()
+        sc.setJobGroup("graft-expire-sentinel", "sentinel")
+        try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+        val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+        while (!groups.contains("graft-expire-sentinel") && System.nanoTime() < deadline)
+          Thread.sleep(10)
+        assert(groups.contains("graft-expire-sentinel"), "listener never saw the sentinel job")
+        n
+      } finally sc.removeSparkListener(listener)
+    assert(!groups.contains("graft-expire-probe"), "expireSuperseded submitted a Spark job")
+    // every superseded pair with data had a partition dir to remove
+    assert(removed === before.committed.count(p => before.rows(p) > 0L).toLong)
+    assert(spark.read.format("graft").load(dir).count() === compactedRows)
+  }
 }

@@ -157,67 +157,39 @@ object SegmentStore {
   def dataDir(tableDir: String): String = s"$tableDir/data"
   def lineageDir(tableDir: String): String = s"$tableDir/lineage"
 
-  /** Explicit read schema of the LEGACY (nested-cols) stored layout (the
-    * Segment encoder schema + the on-disk partition columns). Reading with
-    * an explicit schema keeps two contracts: empty data dirs don't fail
-    * inference, and files written BEFORE a schema addition (e.g. the r3
-    * `bloom` field) surface the missing field as null instead of failing
-    * `.as[Segment]` — the "pre-bloom files stay readable" stance. */
-  private def segmentTableSchema: org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.StructType(
-      org.apache.spark.sql.Encoders.product[Segment].schema
-        .filterNot(_.name == "bucket"))
-      .add("snapshotId", "long").add("bucket", "int")
-
-  /** Explicit read schema of the v2 (pivoted) stored layout. `streams`
-    * defaults to the canonical five; a METADATA table's reads pass the
-    * footer-derived stream set so its extra chunks survive into the
-    * Segment `cols` array (a canonical-only schema would silently drop
-    * them — the bug class the compaction guard used to refuse). */
-  private def segmentTableSchemaV2(
-      streams: Seq[String] = graft.sources.SegmentLayoutV2.CanonicalStreams
-    ): org.apache.spark.sql.types.StructType =
+  /** Explicit read schema of the stored v2 layout
+    * ([[graft.sources.SegmentLayoutV2]]) plus the on-disk partition columns.
+    * Reading with an explicit schema keeps empty data dirs from failing
+    * inference. */
+  private def segmentTableSchema(streams: Seq[String]): org.apache.spark.sql.types.StructType =
     graft.sources.SegmentLayoutV2.sparkSchema(streams)
       .add("snapshotId", "long").add("bucket", "int")
 
-  /** The committed-or-not segment table as a Segment-shaped DataFrame,
-    * LAYOUT-AWARE: since round 4 both writers store the pivoted v2 layout
-    * ([[graft.sources.SegmentLayoutV2]] — one parquet column per stream,
-    * so Catalyst/parquet prune payload IO natively), while pre-pivot
-    * tables (and mixed tables: a legacy table appended to by this build)
-    * keep the nested layout. Files are split by footer-sniffed layout
-    * (memoized per immutable file) and the two reads union back to one
-    * shape. Visibility filtering stays with the callers. */
+  /** The committed-or-not segment table as a Segment-shaped DataFrame:
+    * both writers store the pivoted v2 layout (one parquet column per
+    * stream, so Catalyst/parquet prune payload IO natively), and
+    * [[graft.sources.SegmentLayoutV2.unflatten]] restores the `cols` array.
+    * The read schema carries the UNION of the files' stream sets, not the
+    * canonical five: a metadata table's extra chunks must survive into
+    * `cols` (a canonical-only schema would silently drop them), and under
+    * schema evolution older files lack later-added streams (unflatten
+    * drops the absent streams per segment). Footer info is memoized per
+    * immutable file; a file in any other layout fails there, by name.
+    * Visibility filtering stays with the callers. */
   private def segmentsDF(spark: SparkSession, tableDir: String): org.apache.spark.sql.DataFrame = {
+    import graft.sources.SegmentLayoutV2.CanonicalStreams
     val dd = dataDir(tableDir)
     val conf = spark.sessionState.newHadoopConf()
     val files = graft.sources.GraftLayout.listParquetFiles(dd, conf)
-    if (files.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], segmentTableSchema)
-    val (v2Files, legacyFiles) =
-      files.partition(f => graft.sources.GraftLayout.footerInfo(f, conf).v2)
-    // schema evolution means files can carry DIFFERENT stream sets (older
-    // generations lack later-added columns) — take the union across all v2
-    // footers (footer info is memoized per immutable file); unflatten drops
-    // the absent streams per segment
-    val v2Streams = {
-      val all = v2Files.flatMap(f =>
-        graft.sources.GraftLayout.footerInfo(f, conf).streams).distinct
-      if (all.isEmpty) graft.sources.SegmentLayoutV2.CanonicalStreams
-      else graft.sources.SegmentLayoutV2.CanonicalStreams.filter(all.contains) ++
-        all.filterNot(graft.sources.SegmentLayoutV2.CanonicalStreams.contains).sorted
-    }
-    val parts = Seq(
-      if (legacyFiles.isEmpty) None
-      else Some(spark.read.schema(segmentTableSchema)
-        .option("basePath", dd).parquet(legacyFiles: _*)),
-      if (v2Files.isEmpty) None
-      else Some(graft.sources.SegmentLayoutV2.unflatten(
-        spark.read.schema(segmentTableSchemaV2(v2Streams))
-          .option("basePath", dd).parquet(v2Files: _*)))
-    ).flatten
-    parts.reduce(_.unionByName(_))
+    val found = files.flatMap(f => graft.sources.GraftLayout.footerInfo(f, conf).streams).toSet
+    val streams =
+      if (found.isEmpty) CanonicalStreams
+      else CanonicalStreams.filter(found) ++ (found -- CanonicalStreams).toSeq.sorted
+    val schema = segmentTableSchema(streams)
+    graft.sources.SegmentLayoutV2.unflatten(
+      if (files.isEmpty)
+        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+      else spark.read.schema(schema).option("basePath", dd).parquet(files: _*))
   }
 
   /** Hadoop-FS existence check — `java.io.File` would be blind to any
@@ -565,36 +537,23 @@ object SegmentStore {
 
   /** Segments of every (snapshot, bucket) partition VISIBLE at `asOf`
     * (None = now): committed in the ledger, minus partitions superseded by
-    * a compaction at or before the bound. Visibility is decided by a
-    * broadcast semi-join against the (metadata-scale) ledger — no driver
-    * collect of data. */
+    * a compaction at or before the bound — the connector's rule
+    * ([[graft.sources.GraftLayout.LedgerPairs.visibleAt]]), over the
+    * memoized ledger fold. A data dir without a ledger is read whole. */
   def readSegmentsVisible(spark: SparkSession, tableDir: String,
                           asOf: Option[Long]): Dataset[Segment] = {
     import spark.implicits._
-    if (!hExists(spark, lineageDir(tableDir))) // bare layout: no ledger to consult
-      return spark.read.parquet(dataDir(tableDir)).drop($"snapshotId").as[Segment]
-    // Time-travel reads must fail fast when the requested snapshot's data
-    // files were reclaimed by expireSuperseded, not silently return the
-    // partial history that happens to remain (advisor finding). The
-    // connector's listing already implements the check (compare visible
-    // pairs with nRows > 0 against the partitions present under data/);
-    // run it for its validation side effect — it throws by snapshot name.
-    if (asOf.isDefined)
-      graft.sources.GraftLayout.listDataFiles(
-        tableDir, spark.sessionState.newHadoopConf(), asOf)
-    val all = segmentsDF(spark, tableDir)
-    val ledger = readLineage(spark, tableDir)
-    val bound = asOf.getOrElse(Long.MaxValue)
-    val committed = ledger
-      .filter($"status" === Committed && $"snapshotId" <= bound)
-      .select($"snapshotId", $"bucket")
-    val superseded = ledger
-      .filter($"status".startsWith(SupersededPrefix) &&
-        substring_index($"status", "@", -1).cast("long") <= bound)
-      .select($"snapshotId", $"bucket")
-    val visible = committed.except(superseded)
-    all.join(broadcast(visible), Seq("snapshotId", "bucket"), "left_semi")
-      .drop($"snapshotId")
-      .as[Segment]
+    val conf = spark.sessionState.newHadoopConf()
+    graft.sources.GraftLayout.committedPairs(tableDir, conf) match {
+      case None => segmentsDF(spark, tableDir).drop($"snapshotId").as[Segment]
+      case Some(lp) =>
+        // Time-travel reads must fail fast when the requested snapshot's
+        // data files were reclaimed by expireSuperseded, not silently
+        // return the partial history that happens to remain. The
+        // connector's listing implements that check; run it for its
+        // validation side effect — it throws by snapshot name.
+        if (asOf.isDefined) graft.sources.GraftLayout.listDataFiles(tableDir, conf, asOf)
+        readSegmentsOf(spark, tableDir, lp.visibleAt(asOf.getOrElse(Long.MaxValue)))
+    }
   }
 }

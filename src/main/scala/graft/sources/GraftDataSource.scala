@@ -6,14 +6,11 @@ import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.hadoop.ParquetReader
-import org.apache.parquet.hadoop.example.GroupReadSupport
-import org.apache.parquet.schema.{GroupType, MessageType, Type}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
 import org.apache.spark.sql.connector.expressions.{Expressions, Literal, NamedReference, Transform}
@@ -100,8 +97,9 @@ import graft.codec.{IntCodecs, SegmentBloom, StringCodecs}
   *    counters (/root/reference/src/metrics.rs:57-218), visible in the SQL
   *    UI and isolated per execution (no cross-query statics).
   *
-  * Works on both layouts: a bare `Dataset[Segment].write.parquet(dir)` dump
-  * and a [[graft.lineage.SegmentStore]] table dir. For the latter the
+  * Reads the v2 segment layout ([[SegmentLayoutV2]]), either as a bare
+  * dir of flattened segments or as a [[graft.lineage.SegmentStore]] table
+  * dir. For the latter the
   * planner consults the lineage ledger and reads ONLY ledger-committed
   * (snapshotId, bucket) partitions — data written in the crash window
   * between a partition write and its ledger commit is invisible, the same
@@ -225,8 +223,7 @@ class GraftTable(path: String, catalogBacked: Boolean = false,
       pushdown = toggle("pushdown", GraftScan.PushdownConf),
       bloom = toggle("bloom", GraftScan.BloomConf),
       limitPlanning = toggle("limitPlanning", GraftScan.LimitPlanningConf))
-    new GraftScanBuilder(path, sessionConf,
-      options.getBoolean("columnar", GraftScan.ColumnarDefault), asOf,
+    new GraftScanBuilder(path, sessionConf, asOf,
       if (asOf.isEmpty) spjBuckets else None, // as-of reads may see fewer buckets
       resolvedSchema, batchRows, toggles)
   }
@@ -254,7 +251,6 @@ object AggSpec {
 }
 
 class GraftScanBuilder(path: String, hconf: SerializableConfiguration,
-                       columnar: Boolean = GraftScan.ColumnarDefault,
                        asOf: Option[Long] = None,
                        spjBuckets: Option[Int] = None,
                        tableSchema: StructType = null,
@@ -429,17 +425,11 @@ class GraftScanBuilder(path: String, hconf: SerializableConfiguration,
   override def build(): Scan =
     if (aggSpecs.nonEmpty) new GraftAggScan(path, aggSpecs, hconf, asOf)
     else new GraftScan(path, required,
-      StatPredicate.normalize(pushed, typeOf), limit, None, hconf, columnar, asOf,
+      StatPredicate.normalize(pushed, typeOf), limit, None, hconf, asOf,
       spjBuckets, batchRows = batchRows, toggles = toggles)
 }
 
 object GraftScan {
-  /** Columnar reads are the default (flip per-read with
-    * `.option("columnar", "false")`): one ColumnarBatch per segment through
-    * OnHeapColumnVectors, the Spark-native analog of the reference's Arrow
-    * RecordBatch stream. */
-  final val ColumnarDefault = true
-
   /** Session-conf default for the `batchRows` read option (the reference
     * factory accepts `orc.batch_size` at the format level too,
     * file_format.rs:42-86). */
@@ -674,9 +664,8 @@ final case class KeyedGraftInputPartition(file: String, bucket: Int)
   * feed the pruned/decoded byte metrics honestly). */
 final case class ChunkStats(minV: Long, maxV: Long, minS: String,
                             maxS: String, payload: Array[Byte],
-                            bloom: Array[Byte] = Array.emptyByteArray,
-                            storedBytes: Long = 0L,
-                            nValues: Long = -1L)
+                            bloom: Array[Byte], storedBytes: Long,
+                            nValues: Long)
 
 class GraftScan(
     val path: String,
@@ -685,7 +674,6 @@ class GraftScan(
     limit: Option[Int],
     val tokenRange: Option[(Long, Long)],
     hconf: SerializableConfiguration,
-    columnar: Boolean = GraftScan.ColumnarDefault,
     asOf: Option[Long] = None,
     spjBuckets: Option[Int] = None,
     tokenPoints: Seq[Long] = Nil,
@@ -742,7 +730,7 @@ class GraftScan(
   /** Used by [[GraftTokenRangePushdown]] once per scan (guarded by
     * `tokenRange.isEmpty`); the listing is re-derived lazily in the copy. */
   def withTokenRange(lo: Long, hi: Long, points: Seq[Long] = Nil): GraftScan =
-    new GraftScan(path, required, pushed, limit, Some((lo, hi)), hconf, columnar, asOf,
+    new GraftScan(path, required, pushed, limit, Some((lo, hi)), hconf, asOf,
       spjBuckets, points, batchRows, elemRanges, elemPoints, toggles, mapStats)
 
   /** [[GraftTokenRangePushdown]] generalized to LIST metadata columns:
@@ -753,7 +741,7 @@ class GraftScan(
                     points: Map[String, Seq[Long]]): GraftScan =
     new GraftScan(path, required, pushed, limit,
       tok.map { case (lo, hi, _) => (lo, hi) }.orElse(tokenRange),
-      hconf, columnar, asOf, spjBuckets,
+      hconf, asOf, spjBuckets,
       tok.map(_._3).getOrElse(tokenPoints), batchRows, ranges, points, toggles,
       mapStats)
 
@@ -761,7 +749,7 @@ class GraftScan(
     * pseudo-streams, already normalized to the stat domain. Applied at
     * most once per scan (guarded by `mapStats.isEmpty`). */
   def withMapStats(fs: Array[Filter]): GraftScan =
-    new GraftScan(path, required, pushed, limit, tokenRange, hconf, columnar,
+    new GraftScan(path, required, pushed, limit, tokenRange, hconf,
       asOf, spjBuckets, tokenPoints, batchRows, elemRanges, elemPoints,
       toggles, fs)
 
@@ -1060,25 +1048,23 @@ class GraftScan(
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new GraftReaderFactory(required, effectiveFilters, limit, tokenRange, hconf, columnar,
+    new GraftReaderFactory(required, effectiveFilters, limit, tokenRange, hconf,
       tokenPoints, batchRows, elemRanges, elemPoints, toggles.bloom)
 }
 
 class GraftReaderFactory(required: StructType, pushed: Array[Filter],
                          limit: Option[Int], tokenRange: Option[(Long, Long)],
                          hconf: SerializableConfiguration,
-                         columnar: Boolean = false,
                          tokenPoints: Seq[Long] = Nil,
                          batchRows: Int = Int.MaxValue,
                          elemRanges: Map[String, (Long, Long)] = Map.empty,
                          elemPoints: Map[String, Seq[Long]] = Map.empty,
                          bloomEnabled: Boolean = true)
     extends PartitionReaderFactory {
+  // Spark never asks a factory that supports columnar reads for rows
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new GraftPartitionReader(GraftInputPartition.fileOf(partition),
-      required, pushed, limit, tokenRange, hconf.value, tokenPoints,
-      elemRanges, elemPoints, bloomEnabled)
-  override def supportColumnarReads(partition: InputPartition): Boolean = columnar
+    throw new UnsupportedOperationException("graft scans are columnar only")
+  override def supportColumnarReads(partition: InputPartition): Boolean = true
   override def createColumnarReader(partition: InputPartition): PartitionReader[ColumnarBatch] =
     new GraftColumnarPartitionReader(GraftInputPartition.fileOf(partition),
       required, pushed, limit, tokenRange, hconf.value, tokenPoints, batchRows,
@@ -1438,7 +1424,7 @@ private[sources] object StatPredicate {
 /** One decoded METADATA stream of a segment ([[MetaColumns]]): int-kind
   * values in the stored 64-bit domain with a PRESENT mask, or strings with
   * null slots. The Spark-type rendering (date days, timestamp micros,
-  * sortable-bits -> double) happens at emit time in the readers. */
+  * sortable-bits -> double) happens at emit time in the reader. */
 private[sources] sealed trait DecodedExtra
 private[sources] final class ExtraLongsDecoded(
     val values: Array[Long], val present: Array[Boolean]) extends DecodedExtra
@@ -1483,20 +1469,18 @@ private[sources] final class DecodedSegment(
     val flat: Array[Int],
     val extras: Array[DecodedExtra] = null)
 
-/** Shared per-part-file scan core for the row and columnar readers:
-  * streams Segment groups from one parquet file, prunes on chunk stats
+/** Per-part-file scan core of the columnar reader: streams segment records
+  * from one v2 parquet file ([[SegmentLayoutV2]]), prunes on chunk stats
   * (pushed filters AND the optional token range), decodes ONLY the
   * projected streams, and keeps the task-level scan counters.
   *
-  * v2-layout files ([[SegmentLayoutV2]]) get the IO-saving path the
-  * round-3 judge demanded: the requested parquet schema omits every
-  * unprojected stream's payload column (pages never read), and the pushed
-  * stat predicates ride to parquet as a `FilterPredicate` over the stat
-  * columns, so row groups / pages whose folded stats can't match are
-  * skipped before any payload IO. Records that parquet's record-level
-  * stat filter drops are never materialized here (they don't appear in
-  * the pruned-segment counters — their IO simply never happened).
-  * Legacy files keep the round-3 behavior unchanged. */
+  * The requested parquet schema omits every unprojected stream's payload
+  * column (pages never read), and the pushed stat predicates ride to
+  * parquet as a `FilterPredicate` over the stat columns, so row groups /
+  * pages whose folded stats can't match are skipped before any payload
+  * IO. Records that parquet's record-level stat filter drops are never
+  * materialized here (they don't appear in the pruned-segment counters —
+  * their IO simply never happened). */
 private[sources] final class SegmentScanCore(
     file: String, required: StructType, pushed: Array[Filter],
     tokenRange: Option[(Long, Long)], conf: Configuration,
@@ -1541,26 +1525,22 @@ private[sources] final class SegmentScanCore(
       elemPoints.keySet
   }
 
-  private val reader: ParquetReader[Group] =
-    if (!footer.v2)
-      ParquetReader.builder(new GroupReadSupport(), new HPath(file))
-        .withConf(conf).build()
-    else {
-      val statSuffixes = Seq("minV", "maxV", "minS", "maxS", "bytesOut", "nValues")
-      val wanted: Set[String] = Set("nRows") ++
-        footer.streams.flatMap(s => statSuffixes.map(f => SegmentLayoutV2.field(s, f))) ++
-        payloadStreams.map(s => SegmentLayoutV2.field(s, "payload")) ++
-        bloomStreams.map(s => SegmentLayoutV2.field(s, "bloom"))
-      val b = ParquetReader
-        .builder(new NameFilterReadSupport(wanted.contains _), new HPath(file))
-        .withConf(conf)
-      SegmentLayoutV2.statFilter(pushed.toSeq, tokenRange, tokenPoints,
-        footer.fieldNames.contains _, elemRanges, elemPoints) match {
-        case Some(p) =>
-          b.withFilter(org.apache.parquet.filter2.compat.FilterCompat.get(p)).build()
-        case None => b.build()
-      }
+  private val reader: ParquetReader[Group] = {
+    val statSuffixes = Seq("minV", "maxV", "minS", "maxS", "bytesOut", "nValues")
+    val wanted: Set[String] = Set("nRows") ++
+      footer.streams.flatMap(s => statSuffixes.map(f => SegmentLayoutV2.field(s, f))) ++
+      payloadStreams.map(s => SegmentLayoutV2.field(s, "payload")) ++
+      bloomStreams.map(s => SegmentLayoutV2.field(s, "bloom"))
+    val b = ParquetReader
+      .builder(new NameFilterReadSupport(wanted.contains _), new HPath(file))
+      .withConf(conf)
+    SegmentLayoutV2.statFilter(pushed.toSeq, tokenRange, tokenPoints,
+      footer.fieldNames.contains _, elemRanges, elemPoints) match {
+      case Some(p) =>
+        b.withFilter(org.apache.parquet.filter2.compat.FilterCompat.get(p)).build()
+      case None => b.build()
     }
+  }
 
   // per-task scan counters, reported to Spark as DSv2 custom task metrics
   var mSegsDecoded = 0L
@@ -1592,34 +1572,10 @@ private[sources] final class SegmentScanCore(
     GraftTaskMetric("graft payload bytes pruned", mBytesPruned),
     GraftTaskMetric("graft rows emitted", rowsEmitted))
 
-  private def chunks(g: Group): Map[String, ChunkStats] =
-    if (footer.v2) chunksV2(g) else chunksLegacy(g)
-
-  private def chunksLegacy(g: Group): Map[String, ChunkStats] = {
-    val wrapper = g.getGroup("cols", 0) // LIST wrapper
-    val n = wrapper.getFieldRepetitionCount(0)
-    (0 until n).map { i =>
-      val el = wrapper.getGroup(0, i).getGroup(0, 0) // repeated "list" -> "element"
-      // pre-bloom files lack the field entirely; present-but-unset is
-      // possible on foreign writers — both degrade to "no filter". The
-      // bloom kill switch gates here too (bloomStreams is empty then).
-      val bloom =
-        if (bloomStreams(el.getString("col", 0)) &&
-          el.getType.containsField("bloom") && el.getFieldRepetitionCount("bloom") > 0)
-          el.getBinary("bloom", 0).getBytes
-        else Array.emptyByteArray
-      val payload = el.getBinary("payload", 0).getBytes
-      el.getString("col", 0) -> ChunkStats(
-        el.getLong("minV", 0), el.getLong("maxV", 0),
-        el.getString("minS", 0), el.getString("maxS", 0),
-        payload, bloom, payload.length.toLong, el.getLong("nValues", 0))
-    }.toMap
-  }
-
-  /** v2: stats from the flat stat columns; payload/bloom bytes ONLY for
+  /** Stats from the flat stat columns; payload/bloom bytes ONLY for
     * streams the projection / point predicates put in the requested
     * schema — everything else was never read from parquet. */
-  private def chunksV2(g: Group): Map[String, ChunkStats] = {
+  private def chunks(g: Group): Map[String, ChunkStats] = {
     footer.streams.flatMap { s =>
       def fld(f: String) = SegmentLayoutV2.field(s, f)
       def has(f: String): Boolean = g.getFieldRepetitionCount(fld(f)) > 0
@@ -1762,13 +1718,13 @@ private[sources] final class SegmentScanCore(
     val tokLens = if (needTok) IntCodecs.decodeChunkInt(byCol("tok_len").payload) else null
     val flat = if (needTok) IntCodecs.decodeChunkInt(byCol("tokens").payload) else null
     // projected metadata streams: PRESENT framing outside, selector codec
-    // inside; stored-domain values (the Spark rendering is the readers')
+    // inside; stored-domain values (the Spark rendering is the reader's)
     val extras: Array[DecodedExtra] =
       if (metaFields.isEmpty) null
       else {
         // LIST decode of stream `name` + its __len stream; an ABSENT
         // stream (schema evolution: the file predates the column) reads
-        // as all-null — same stance as the chunk readers' absent guard
+        // as all-null — same stance as the chunk reader's absent guard
         def decodeList(name: String, et: org.apache.spark.sql.types.DataType): ExtraListDecoded =
           if (!byCol.contains(name))
             new ExtraListDecoded(new Array[Long](nRows), new Array[Boolean](nRows),
@@ -1849,264 +1805,13 @@ private[sources] final class SegmentScanCore(
   }
 }
 
-/** Row-based reader: wraps the scan core, emits one InternalRow per doc,
-  * stops at the pushed limit. */
-class GraftPartitionReader(file: String, required: StructType, pushed: Array[Filter],
-                           limit: Option[Int], tokenRange: Option[(Long, Long)],
-                           conf: Configuration, tokenPoints: Seq[Long] = Nil,
-                           elemRanges: Map[String, (Long, Long)] = Map.empty,
-                           elemPoints: Map[String, Seq[Long]] = Map.empty,
-                           bloomEnabled: Boolean = true)
-    extends PartitionReader[InternalRow] {
-
-  private val core = new SegmentScanCore(file, required, pushed, tokenRange, conf,
-    tokenPoints, elemRanges, elemPoints, bloomEnabled)
-  private var rows: Iterator[InternalRow] = Iterator.empty
-  private var current: InternalRow = _
-  private var mRows = 0L
-  private val maxRows: Long = limit.map(_.toLong).getOrElse(Long.MaxValue)
-
-  override def next(): Boolean = {
-    if (mRows >= maxRows) return false // pushed limit: stop opening groups
-    while (!rows.hasNext) {
-      val seg = core.nextSegment()
-      if (seg == null) return false
-      rows = rowsOf(seg)
-    }
-    current = rows.next()
-    mRows += 1
-    true
-  }
-  override def get(): InternalRow = current
-  override def close(): Unit = core.close()
-
-  override def currentMetricsValues(): Array[CustomTaskMetric] =
-    core.metricsValues(mRows)
-
-  // projected metadata fields: ordinal into DecodedSegment.extras
-  private val metaIndex: Map[String, Int] =
-    core.metaFields.map(_.name).zipWithIndex.toMap
-
-  /** Boxed internal-type value of row `i` of a decoded SCALAR extra (null
-    * where absent) — struct members re-use the scalar rendering. */
-  private def scalarValueOf(ex: DecodedExtra, dt: DataType): Int => AnyRef =
-    (ex, dt) match {
-      case (es: ExtraStringsDecoded, BinaryType) =>
-        i => if (!es.present(i)) null
-          else {
-            val j = es.idx(i)
-            java.util.Arrays.copyOfRange(
-              es.chunk.blob, es.chunk.offsets(j), es.chunk.offsets(j) + es.chunk.lens(j))
-          }
-      case (es: ExtraStringsDecoded, _) =>
-        i => if (!es.present(i)) null
-          else {
-            val j = es.idx(i)
-            UTF8String.fromBytes(es.chunk.blob, es.chunk.offsets(j), es.chunk.lens(j))
-          }
-      case (el: ExtraLongsDecoded, _) =>
-        val box: Long => AnyRef = dt match {
-          case IntegerType | DateType => v => java.lang.Integer.valueOf(v.toInt)
-          case LongType | TimestampType | TimestampNTZType => v => java.lang.Long.valueOf(v)
-          case DoubleType => v => java.lang.Double.valueOf(MetaColumns.fromSortableDouble(v))
-          case FloatType => v => java.lang.Float.valueOf(MetaColumns.fromSortableFloat(v))
-          case BooleanType => v => java.lang.Boolean.valueOf(v != 0L)
-          case ByteType => v => java.lang.Byte.valueOf(v.toByte)
-          case ShortType => v => java.lang.Short.valueOf(v.toShort)
-          case d: DecimalType =>
-            v => org.apache.spark.sql.types.Decimal.createUnsafe(v, d.precision, d.scale)
-          case other => throw new IllegalStateException(
-            s"unreachable: unvalidated metadata type $other")
-        }
-        i => if (!el.present(i)) null else box(el.values(i))
-      case other => throw new IllegalStateException(
-        s"unreachable: scalar extra shape $other")
-    }
-
-  private def rowsOf(seg: DecodedSegment): Iterator[InternalRow] = {
-    var pos = 0
-    // one writer per projected field, resolved ONCE per segment — the old
-    // shape string-matched field names (and metadata types) on EVERY row
-    val fillers: Array[(GenericInternalRow, Int, Int) => Unit] =
-      required.fields.map { field =>
-        field.name match {
-          case "doc_id" => (row: GenericInternalRow, f: Int, i: Int) => row.update(f,
-            UTF8String.fromBytes(seg.docIds.blob, seg.docIds.offsets(i), seg.docIds.lens(i)))
-          case "tokens" => (row: GenericInternalRow, f: Int, i: Int) => {
-            val len = seg.tokLens(i)
-            val t = java.util.Arrays.copyOfRange(seg.flat, pos, pos + len)
-            pos += len
-            row.update(f, new GenericArrayData(t))
-          }
-          case "n_tok" =>
-            (row: GenericInternalRow, f: Int, i: Int) => row.setInt(f, seg.nToks(i))
-          case "source" => (row: GenericInternalRow, f: Int, i: Int) => row.update(f,
-            UTF8String.fromBytes(seg.sources.blob, seg.sources.offsets(i), seg.sources.lens(i)))
-          case name => seg.extras(metaIndex(name)) match {
-            // LIST metadata columns: slice the flattened element stream by
-            // the row's offset/length; null list / null elements preserved
-            case e: ExtraListDecoded =>
-              val elemOf: Int => AnyRef = (field.dataType, e.elems) match {
-                case (_, null) => _ => null // absent stream: no list is present
-                case (ArrayType(StringType, _), es: ExtraStringsDecoded) =>
-                  (k: Int) =>
-                    if (!es.present(k)) null
-                    else {
-                      val j = es.idx(k)
-                      UTF8String.fromBytes(es.chunk.blob, es.chunk.offsets(j), es.chunk.lens(j))
-                    }
-                case (ArrayType(IntegerType, _), el: ExtraLongsDecoded) =>
-                  (k: Int) => if (!el.present(k)) null
-                    else java.lang.Integer.valueOf(el.values(k).toInt)
-                case (ArrayType(LongType, _), el: ExtraLongsDecoded) =>
-                  (k: Int) => if (!el.present(k)) null
-                    else java.lang.Long.valueOf(el.values(k))
-                case other => throw new IllegalStateException(
-                  s"unreachable: list column shape $other")
-              }
-              (row: GenericInternalRow, f: Int, i: Int) =>
-                if (!e.listPresent(i)) row.setNullAt(f)
-                else {
-                  val from = e.offsets(i)
-                  val n = e.lens(i).toInt
-                  val out = new Array[Any](n)
-                  var k = 0
-                  while (k < n) { out(k) = elemOf(from + k); k += 1 }
-                  row.update(f, new GenericArrayData(out))
-                }
-            // STRUCT metadata columns: presence mask + per-member scalar
-            // extras re-assembled into one InternalRow per non-null struct
-            case e: ExtraStructDecoded =>
-              val st = field.dataType match {
-                case s: StructType => s
-                case other => throw new IllegalStateException(
-                  s"unreachable: struct decode for non-struct field $other")
-              }
-              val memberOf: Array[Int => AnyRef] =
-                st.fields.zip(e.members).map { case (m, ex) =>
-                  scalarValueOf(ex, m.dataType)
-                }
-              (row: GenericInternalRow, f: Int, i: Int) =>
-                if (!e.present(i)) row.setNullAt(f)
-                else {
-                  val out = new GenericInternalRow(memberOf.length)
-                  var k = 0
-                  while (k < memberOf.length) {
-                    val v = memberOf(k)(i)
-                    if (v != null) out.update(k, v)
-                    k += 1
-                  }
-                  row.update(f, out)
-                }
-            // MAP metadata columns: the two pseudo-lists share per-row
-            // lengths; zip slices back into ArrayBasedMapData. Keys are
-            // non-null by Spark's map contract; the keys list's PRESENT
-            // mask carries map-level nulls (incl. the absent-stream
-            // schema-evolution read).
-            case e: ExtraMapDecoded =>
-              val (kt, vt) = field.dataType match {
-                case MapType(k, v, _) => (k, v)
-                case other => throw new IllegalStateException(
-                  s"unreachable: map decode for non-map field $other")
-              }
-              def elemFn(lst: ExtraListDecoded, et: DataType): Int => AnyRef =
-                (et, lst.elems) match {
-                  case (_, null) => _ => null // absent stream
-                  case (StringType, es: ExtraStringsDecoded) =>
-                    (k: Int) =>
-                      if (!es.present(k)) null
-                      else {
-                        val j = es.idx(k)
-                        UTF8String.fromBytes(es.chunk.blob, es.chunk.offsets(j), es.chunk.lens(j))
-                      }
-                  case (IntegerType, el: ExtraLongsDecoded) =>
-                    (k: Int) => if (!el.present(k)) null
-                      else java.lang.Integer.valueOf(el.values(k).toInt)
-                  case (LongType, el: ExtraLongsDecoded) =>
-                    (k: Int) => if (!el.present(k)) null
-                      else java.lang.Long.valueOf(el.values(k))
-                  case other => throw new IllegalStateException(
-                    s"unreachable: map element shape $other")
-                }
-              val keyOf = elemFn(e.keys, kt)
-              val valOf = elemFn(e.values, vt)
-              (row: GenericInternalRow, f: Int, i: Int) =>
-                if (!e.keys.listPresent(i)) row.setNullAt(f)
-                else {
-                  val n = e.keys.lens(i).toInt
-                  val kFrom = e.keys.offsets(i)
-                  val vFrom = e.values.offsets(i)
-                  val ks = new Array[Any](n)
-                  val vs = new Array[Any](n)
-                  var k = 0
-                  while (k < n) {
-                    ks(k) = keyOf(kFrom + k)
-                    vs(k) = valOf(vFrom + k)
-                    k += 1
-                  }
-                  row.update(f, new ArrayBasedMapData(
-                    new GenericArrayData(ks), new GenericArrayData(vs)))
-                }
-            // metadata columns ([[MetaColumns]]): stored 64-bit domain ->
-            // external type; absent PRESENT bit / null string = SQL null
-            case e: ExtraStringsDecoded if field.dataType == BinaryType =>
-              (row: GenericInternalRow, f: Int, i: Int) =>
-                if (!e.present(i)) row.setNullAt(f)
-                else {
-                  val j = e.idx(i)
-                  row.update(f, java.util.Arrays.copyOfRange(
-                    e.chunk.blob, e.chunk.offsets(j), e.chunk.offsets(j) + e.chunk.lens(j)))
-                }
-            case e: ExtraStringsDecoded =>
-              (row: GenericInternalRow, f: Int, i: Int) =>
-                if (!e.present(i)) row.setNullAt(f)
-                else {
-                  val j = e.idx(i)
-                  row.update(f, UTF8String.fromBytes(
-                    e.chunk.blob, e.chunk.offsets(j), e.chunk.lens(j)))
-                }
-            case e: ExtraLongsDecoded =>
-              val put: (GenericInternalRow, Int, Int) => Unit = field.dataType match {
-                case IntegerType | DateType =>
-                  (row, f, i) => row.setInt(f, e.values(i).toInt)
-                case LongType | TimestampType | TimestampNTZType =>
-                  (row, f, i) => row.setLong(f, e.values(i))
-                case DoubleType =>
-                  (row, f, i) => row.setDouble(f, MetaColumns.fromSortableDouble(e.values(i)))
-                case FloatType =>
-                  (row, f, i) => row.setFloat(f, MetaColumns.fromSortableFloat(e.values(i)))
-                case BooleanType =>
-                  (row, f, i) => row.setBoolean(f, e.values(i) != 0L)
-                case ByteType => (row, f, i) => row.setByte(f, e.values(i).toByte)
-                case ShortType => (row, f, i) => row.setShort(f, e.values(i).toShort)
-                case d: DecimalType =>
-                  (row, f, i) => row.update(f,
-                    org.apache.spark.sql.types.Decimal.createUnsafe(
-                      e.values(i), d.precision, d.scale))
-                case other => throw new IllegalStateException(
-                  s"unreachable: unvalidated metadata type $other")
-              }
-              (row: GenericInternalRow, f: Int, i: Int) =>
-                if (!e.present(i)) row.setNullAt(f) else put(row, f, i)
-          }
-        }
-      }
-    (0 until seg.nRows).iterator.map { i =>
-      val row = new GenericInternalRow(required.length)
-      var f = 0
-      while (f < fillers.length) { fillers(f)(row, f, i); f += 1 }
-      row
-    }
-  }
-}
-
 /** Columnar reader: one [[ColumnarBatch]] per decoded segment, built on
   * [[OnHeapColumnVector]]s — the Spark-native rendering of the reference's
   * Arrow `RecordBatch` stream (/root/reference/src/opener.rs:308-358; its
   * DEFAULT_BATCH_SIZE 8192 ≈ our segment row counts). Downstream, Spark
-  * fuses the batches into whole-stage codegen via ColumnarToRow, skipping
-  * the per-row object allocation of the row path; token arrays land as one
-  * bulk `putInts` into the child vector per segment. */
+  * fuses the batches into whole-stage codegen via ColumnarToRow, with no
+  * per-row object allocation; token arrays land as one bulk `putInts` into
+  * the child vector per segment. */
 class GraftColumnarPartitionReader(file: String, required: StructType,
                                    pushed: Array[Filter], limit: Option[Int],
                                    tokenRange: Option[(Long, Long)],

@@ -6,7 +6,6 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path => HPath}
 import org.apache.parquet.{HadoopReadOptions, ParquetReadOptions}
-import org.apache.parquet.example.data.Group
 import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
 import org.apache.parquet.hadoop.api.ReadSupport.ReadContext
 import org.apache.parquet.hadoop.example.GroupReadSupport
@@ -37,19 +36,18 @@ object GraftLayout {
     * before scheduling a task for them (the file-granularity analog of the
     * reference's per-file stripe pruning — at 10^12 rows most of the win
     * is tasks never launched, not segments skipped inside a task).
-    * `blooms` are the FILE-level folded split-block blooms the v2 writer
-    * records in the parquet footer metadata — the planner consults them
+    * `blooms` are the FILE-level folded split-block blooms the writers
+    * record in the parquet footer metadata — the planner consults them
     * for point predicates min/max can't discriminate (round-3 judge #5);
-    * legacy/engine-written files simply have none (sound: may-match). */
+    * a file written without blooms has none (sound: may-match). */
   final case class FileHeader(rows: Long, bytesIn: Map[String, Long],
                               ranges: Map[String, ColRange],
-                              blooms: Map[String, Array[Byte]] = Map.empty,
-                              v2: Boolean = false,
-                              nValues: Map[String, Long] = Map.empty)
+                              blooms: Map[String, Array[Byte]],
+                              nValues: Map[String, Long])
 
-  /** Footer-level facts of one immutable part-file: layout generation,
-    * stream names (v2), and the file-level blooms. Cached like headers. */
-  final case class FooterInfo(v2: Boolean, streams: Seq[String],
+  /** Footer-level facts of one immutable v2 part-file: stream names, field
+    * names and the file-level blooms. Cached like headers. */
+  final case class FooterInfo(streams: Seq[String],
                               fieldNames: Set[String],
                               blooms: Map[String, Array[Byte]])
 
@@ -80,6 +78,9 @@ object GraftLayout {
     }
   }
 
+  /** Footer facts of a [[SegmentLayoutV2]] file. Any other parquet file —
+    * in particular one in the pre-v2 nested `cols` layout — fails here,
+    * naming the file, before a reader can misread it. */
   def footerInfo(file: String, conf: Configuration): FooterInfo = {
     footerCache.synchronized {
       val hit = footerCache.get(file)
@@ -91,16 +92,16 @@ object GraftLayout {
       try {
         val md = r.getFooter.getFileMetaData
         val schema = md.getSchema
+        if (!SegmentLayoutV2.isV2(schema))
+          throw new IllegalStateException(
+            s"$file is not a v2 graft segment file " +
+              "(the pre-v2 nested `cols` layout is no longer read)")
         val names = schema.getFields.asScala.map(_.getName).toSeq
-        val v2 = SegmentLayoutV2.isV2(schema)
-        val blooms =
-          if (!v2) Map.empty[String, Array[Byte]]
-          else md.getKeyValueMetaData.asScala.toMap.collect {
-            case (k, v) if k.startsWith("graft.filebloom.") && v != null && v.nonEmpty =>
-              k.stripPrefix("graft.filebloom.") -> java.util.Base64.getDecoder.decode(v)
-          }
-        FooterInfo(v2, if (v2) SegmentLayoutV2.streamsOf(names) else Nil,
-          names.toSet, blooms)
+        val blooms = md.getKeyValueMetaData.asScala.toMap.collect {
+          case (k, v) if k.startsWith("graft.filebloom.") && v != null && v.nonEmpty =>
+            k.stripPrefix("graft.filebloom.") -> java.util.Base64.getDecoder.decode(v)
+        }
+        FooterInfo(SegmentLayoutV2.streamsOf(names), names.toSet, blooms)
       } finally r.close()
     footerCache.synchronized { footerCache.put(file, fi) }
     fi
@@ -164,16 +165,10 @@ object GraftLayout {
     } finally pool.shutdownNow()
   }
 
+  /** Per-stream stat COLUMNS — the requested schema keeps only nRows + the
+    * stat fields, so parquet's column pruning never reads payload pages. */
   private def readHeader(file: String, conf: Configuration): FileHeader = {
     val fi = footerInfo(file, conf)
-    if (fi.v2) readHeaderV2(file, conf, fi) else readHeaderLegacy(file, conf)
-  }
-
-  /** v2 layout: per-stream stat COLUMNS — the requested schema keeps only
-    * nRows + the stat fields, so payload pages are never read (same
-    * contract as the legacy pruned read, now enforced by parquet's own
-    * column pruning). */
-  private def readHeaderV2(file: String, conf: Configuration, fi: FooterInfo): FileHeader = {
     val statSuffixes = Set("minV", "maxV", "minS", "maxS", "bytesIn", "nValues")
     val wanted: Set[String] = Set("nRows") ++
       fi.streams.flatMap(s => statSuffixes.map(f => SegmentLayoutV2.field(s, f)))
@@ -227,52 +222,14 @@ object GraftLayout {
         g = reader.read()
       }
     } finally reader.close()
-    FileHeader(rows, bytes.toMap, ranges.toMap, fi.blooms, v2 = true, nVals.toMap)
+    FileHeader(rows, bytes.toMap, ranges.toMap, fi.blooms, nVals.toMap)
   }
 
-  private def readHeaderLegacy(file: String, conf: Configuration): FileHeader = {
-    val reader = openPruned(file, conf,
-      top = Set("nRows", "cols"),
-      chunkFields = Set("col", "bytesIn", "minV", "maxV", "minS", "maxS", "nValues"))
-    var rows = 0L
-    val bytes = scala.collection.mutable.Map.empty[String, Long]
-    val ranges = scala.collection.mutable.Map.empty[String, ColRange]
-    val nVals = scala.collection.mutable.Map.empty[String, Long]
-    val cmp = graft.engine.GraftEncoder.compareUtf8 _
-    try {
-      var g = reader.read()
-      while (g != null) {
-        rows += g.getInteger("nRows", 0)
-        val wrapper = g.getGroup("cols", 0)
-        val n = wrapper.getFieldRepetitionCount(0)
-        var i = 0
-        while (i < n) {
-          val el = wrapper.getGroup(0, i).getGroup(0, 0)
-          val c = el.getString("col", 0)
-          bytes.updateWith(c)(v => Some(v.getOrElse(0L) + el.getLong("bytesIn", 0)))
-          val nv = el.getLong("nValues", 0)
-          nVals.updateWith(c)(v => Some(v.getOrElse(0L) + nv))
-          // skip value-less chunk streams' neutral stats (see readHeaderV2)
-          if (nv > 0L) {
-            val r = ColRange(el.getLong("minV", 0), el.getLong("maxV", 0),
-              el.getString("minS", 0), el.getString("maxS", 0))
-            ranges.updateWith(c) {
-              case None => Some(r)
-              case Some(p) => Some(ColRange(
-                math.min(p.minV, r.minV), math.max(p.maxV, r.maxV),
-                if (cmp(r.minS, p.minS) < 0) r.minS else p.minS,
-                if (cmp(r.maxS, p.maxS) > 0) r.maxS else p.maxS))
-            }
-          }
-          i += 1
-        }
-        g = reader.read()
-      }
-    } finally reader.close()
-    FileHeader(rows, bytes.toMap, ranges.toMap, nValues = nVals.toMap)
-  }
-
-  /** Every file under `root` (recursive), by `listStatus`.
+  /** Every file under `root` (recursive), by `listStatus`, skipping
+    * `_`/`.` directories below the root as Spark's file index does: an
+    * in-flight write stages its part-files there (`_temporary/`, dynamic
+    * overwrite's `.spark-staging-<job>/snapshotId=S/bucket=B/`), and
+    * listing them would show a retried, already-committed (S, B) twice.
     *
     * Not `fs.listFiles`: that builds a `LocatedFileStatus` per entry, and
     * its constructor reads the entry's permission and owner. On the local
@@ -284,19 +241,25 @@ object GraftLayout {
   def listFilesUnder(fs: FileSystem, root: HPath): Seq[FileStatus] = {
     val out = ArrayBuffer.empty[FileStatus]
     def walk(dir: HPath): Unit = fs.listStatus(dir).foreach { st =>
-      if (st.isDirectory) walk(st.getPath) else if (st.isFile) out += st
+      if (st.isDirectory) { if (!isHidden(st.getPath.getName)) walk(st.getPath) }
+      else if (st.isFile) out += st
     }
     walk(root)
     out.toSeq
   }
 
+  /** A `_`/`.`-prefixed name: a side file (`_SUCCESS`, `.crc`) or the
+    * directory of an in-flight write (`_temporary/`, `.spark-staging-*`). */
+  private def isHidden(name: String): Boolean =
+    name.startsWith("_") || name.startsWith(".")
+
   /** A data or ledger file name: parquet, not a `_`/`.` side file. */
   private[sources] def isDataFile(name: String): Boolean =
-    name.endsWith(".parquet") && !name.startsWith("_") && !name.startsWith(".")
+    name.endsWith(".parquet") && !isHidden(name)
 
   /** Every parquet data file under a directory (recursive, `_`/`.` files
-    * skipped), sorted — the raw listing behind [[listDataFiles]] and the
-    * engine path's layout-aware reads. */
+    * and directories skipped), sorted — the raw listing behind
+    * [[listDataFiles]] and the engine path's reads. */
   def listParquetFiles(dir: String, conf: Configuration): Seq[String] = {
     val root = new HPath(dir)
     val fs = root.getFileSystem(conf)
@@ -329,9 +292,9 @@ object GraftLayout {
 
   /** List the data part-files of a graft table, ledger-filtered and sorted.
     *
-    * Bare layout (a plain `Dataset[Segment].write.parquet` dump): every
-    * parquet file under the dir. SegmentStore layout (`dir/data` +
-    * `dir/lineage`): ONLY files under ledger-committed (snapshotId, bucket)
+    * Bare layout (flattened segments written with a plain
+    * `.write.parquet`): every parquet file under the dir. SegmentStore
+    * layout (`dir/data` + `dir/lineage`): ONLY files under ledger-committed (snapshotId, bucket)
     * partitions — data written in the crash window between a bucket write
     * and its ledger append is invisible until recommitted, and a bucket
     * overwritten by a retry is read exactly once (read-committed, the
@@ -363,16 +326,7 @@ object GraftLayout {
     val kept = committed match {
       case None => files
       case Some(lp) =>
-        // visible at the bound = committed by then, minus partitions a
-        // compaction at or before the bound superseded (a later compaction
-        // does NOT hide them from an earlier as-of read — snapshot
-        // isolation across compaction, same stance as Iceberg)
-        val bound = asOf.getOrElse(Long.MaxValue)
-        // iterator.collect, NOT Map.collect: a collect on the Map whose
-        // results are pairs would rebuild a Map and collapse the per-bucket
-        // entries to one per snapshot
-        val pairs = lp.committed.filter(_._1 <= bound) --
-          lp.superseded.iterator.collect { case (sb, c) if c <= bound => sb }
+        val pairs = lp.visibleAt(asOf.getOrElse(Long.MaxValue))
         val kept = files.filter { f =>
           partitionOf(f) match {
             case Some(sb) => pairs.contains(sb)
@@ -412,7 +366,18 @@ object GraftLayout {
     * ([[graft.lineage.SegmentStore.SupersededPrefix]]). */
   final case class LedgerPairs(committed: Set[(Long, Int)],
                                superseded: Map[(Long, Int), Long],
-                               rows: Map[(Long, Int), Long])
+                               rows: Map[(Long, Int), Long]) {
+    /** The pairs visible at snapshot `bound`: committed by then, minus
+      * those a compaction at or before the bound superseded (a later
+      * compaction does NOT hide them from an earlier as-of read — snapshot
+      * isolation across compaction, same stance as Iceberg). */
+    def visibleAt(bound: Long): Set[(Long, Int)] =
+      // iterator.collect, NOT Map.collect: a collect on the Map whose
+      // results are pairs would rebuild a Map and collapse the per-bucket
+      // entries to one per snapshot
+      committed.filter(_._1 <= bound) --
+        superseded.iterator.collect { case (sb, c) if c <= bound => sb }
+  }
 
   /** One parsed lineage row (the 4 columns visibility needs). */
   private final case class LedgerEntry(snapshotId: Long, bucket: Int,
@@ -502,8 +467,10 @@ object GraftLayout {
   private def readLedgerFile(file: String, conf: Configuration): Array[LedgerEntry] = {
     ledgerFilesRead.incrementAndGet()
     val out = ArrayBuffer.empty[LedgerEntry]
-    val reader = openPruned(file, conf,
-      top = Set("snapshotId", "bucket", "status", "nRows"), chunkFields = Set.empty)
+    val top = Set("snapshotId", "bucket", "status", "nRows")
+    val reader = ParquetReader
+      .builder(new NameFilterReadSupport(top.contains _), new HPath(file))
+      .withConf(conf).build()
     try {
       var g = reader.read()
       while (g != null) {
@@ -522,17 +489,6 @@ object GraftLayout {
     * the streaming sink uses membership for epoch-replay idempotence. */
   def committedSnapshots(path: String, conf: Configuration): Option[Set[Long]] =
     committedPairs(path, conf).map(_.committed.map(_._1))
-
-  /** Open a parquet file with a name-pruned requested schema: keep only the
-    * `top`-level fields, and inside the `cols` LIST elements only
-    * `chunkFields`. Pruning from the FILE's actual schema (rather than a
-    * hand-written schema string) keeps repetition/annotation exactly
-    * compatible, and dropping `payload` here is what makes header reads
-    * skip the data pages at the parquet IO layer. */
-  def openPruned(file: String, conf: Configuration,
-                 top: Set[String], chunkFields: Set[String]): ParquetReader[Group] =
-    ParquetReader.builder(new PrunedGroupReadSupport(top, chunkFields), new HPath(file))
-      .withConf(conf).build()
 }
 
 /** GroupReadSupport keeping only top-level fields satisfying a name
@@ -548,35 +504,6 @@ object GraftLayout {
 class NameFilterReadSupport(keep: String => Boolean) extends GroupReadSupport {
   private def prune(fileSchema: MessageType): ReadContext = {
     val kept = fileSchema.getFields.asScala.filter(f => keep(f.getName))
-    new ReadContext(new MessageType(fileSchema.getName, kept.asJava))
-  }
-  override def init(configuration: Configuration,
-                    keyValueMetaData: java.util.Map[String, String],
-                    fileSchema: MessageType): ReadContext = prune(fileSchema)
-  override def init(configuration: org.apache.parquet.conf.ParquetConfiguration,
-                    keyValueMetaData: java.util.Map[String, String],
-                    fileSchema: MessageType): ReadContext = prune(fileSchema)
-}
-
-/** GroupReadSupport whose requested projection is derived by name-pruning
-  * the file schema (top-level fields + the `cols` list-element fields).
-  * Both `init` overloads forward to one pruner — see
-  * [[NameFilterReadSupport]] for why the `ParquetConfiguration` overload
-  * is the one parquet 1.16 actually calls. */
-class PrunedGroupReadSupport(top: Set[String], chunkFields: Set[String])
-    extends GroupReadSupport {
-  private def prune(fileSchema: MessageType): ReadContext = {
-    val kept = fileSchema.getFields.asScala.filter(f => top.contains(f.getName)).map {
-      case f if f.getName == "cols" && chunkFields.nonEmpty =>
-        // optional group cols (LIST) { repeated group list { optional group element {...} } }
-        val colsG = f.asGroupType()
-        val listG = colsG.getFields.get(0).asGroupType()
-        val elemG = listG.getFields.get(0).asGroupType()
-        val prunedElem = elemG.withNewFields(
-          elemG.getFields.asScala.filter(e => chunkFields.contains(e.getName)).asJava)
-        colsG.withNewFields(listG.withNewFields(prunedElem))
-      case f => f
-    }
     new ReadContext(new MessageType(fileSchema.getName, kept.asJava))
   }
   override def init(configuration: Configuration,

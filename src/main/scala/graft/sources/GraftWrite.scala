@@ -445,42 +445,6 @@ object GraftSegmentWriter {
     * granularity (a row group is the coarsest skippable unit; ~8 MiB ≈
     * tens of segments at the default chunk budget). */
   final val RowGroupBytes: Long = 8L * 1024 * 1024
-
-  /** LEGACY (round-1..3) physical schema — the nested 3-level LIST shape.
-    * The writer now emits the pivoted v2 layout
-    * ([[SegmentLayoutV2.messageType]]); this schema is retained so tests
-    * can still WRITE legacy files and pin that every reader keeps
-    * accepting them (pre-pivot tables stay readable forever). */
-  val SegmentFileSchema: MessageType = {
-    val str = LogicalTypeAnnotation.stringType()
-    val element = Types.optionalGroup()
-      .addField(Types.optional(BINARY).as(str).named("col"))
-      .addField(Types.optional(INT32).named("codecId"))
-      .addField(Types.optional(BINARY).as(str).named("codecName"))
-      .addField(Types.optional(INT64).named("nValues"))
-      .addField(Types.optional(INT64).named("bytesIn"))
-      .addField(Types.optional(INT64).named("bytesOut"))
-      .addField(Types.optional(INT64).named("minV"))
-      .addField(Types.optional(INT64).named("maxV"))
-      .addField(Types.optional(BINARY).as(str).named("minS"))
-      .addField(Types.optional(BINARY).as(str).named("maxS"))
-      .addField(Types.optional(BINARY).named("payload"))
-      .addField(Types.optional(BINARY).named("bloom"))
-      .named("element")
-    val cols = Types.optionalGroup().as(LogicalTypeAnnotation.listType())
-      .addField(Types.repeatedGroup().addField(element).named("list"))
-      .named("cols")
-    new MessageType("spark_schema",
-      Types.optional(BINARY).as(str).named("segmentId"),
-      Types.optional(BINARY).as(str).named("source"),
-      Types.optional(INT32).named("partitionId"),
-      Types.optional(INT32).named("chunkIdx"),
-      Types.optional(INT32).named("nRows"),
-      Types.optional(INT64).named("nTokens"),
-      Types.optional(INT64).named("bytesIn"),
-      Types.optional(INT64).named("bytesOut"),
-      cols)
-  }
 }
 
 /** Buffers one bucket's rows (the engine's explicit task-memory contract),

@@ -40,9 +40,9 @@ import org.apache.spark.sql.types.{ArrayType, BinaryType, IntegerType, LongType,
   * The `__` separator is reserved — stream names may not contain it.
   *
   * BOTH writers emit v2 (the DSv2 [[GraftSegmentWriter]] via the example
-  * API, the engine path via [[flatten]] + Spark's parquet writer), and all
-  * readers keep full legacy support — pre-pivot files stay readable
-  * forever, per-file ([[GraftLayout.footerInfo]] sniffs the layout). */
+  * API, the engine path via [[flattenSegments]] + Spark's parquet writer),
+  * and it is the only layout the readers accept: a pre-pivot nested file
+  * fails in [[GraftLayout.footerInfo]], naming the file. */
 object SegmentLayoutV2 {
 
   /** Canonical streams in Segment.cols order (doc order matters: the

@@ -29,7 +29,8 @@ class GraftDataSourceSpec extends AnyFunSuite {
   private lazy val bare: String = {
     val dir = tmp()
     val input = TokenTables.synthetic(spark, nDocs = 400, seed = 42L)
-    GraftEncoder.encode(input, buckets = 4).write.parquet(s"$dir/segs")
+    SegmentLayoutV2.flattenSegments(GraftEncoder.encode(input, buckets = 4))
+      .write.parquet(s"$dir/segs")
     s"$dir/segs"
   }
 
@@ -45,7 +46,8 @@ class GraftDataSourceSpec extends AnyFunSuite {
       val b = math.min(rangeBuckets - 1, (id * rangeBuckets / 400L).toInt)
       graft.engine.BucketedRow(r.doc_id, r.tokens, r.n_tok, r.source, b)
     }
-    GraftEncoder.encodeBucketed(bucketed, rangeBuckets, tokensPerChunk = 4096)
+    SegmentLayoutV2.flattenSegments(
+      GraftEncoder.encodeBucketed(bucketed, rangeBuckets, tokensPerChunk = 4096))
       .write.parquet(s"$dir/segs")
     s"$dir/segs"
   }
@@ -76,6 +78,23 @@ class GraftDataSourceSpec extends AnyFunSuite {
     (rows, metrics)
   }
 
+  /** Segments of the part-files `df`'s scan planned that the stat prune
+    * behind `counter` skipped (`m`: the scan's metrics). The pushed stat
+    * predicates ride to parquet as a record filter over the v2 stat
+    * columns, and the segments parquet skips never reach the reader-side
+    * counters: they are the planned segments no reader counter saw. */
+  private def segmentsPrunedBy(df: DataFrame, m: Map[String, Long], counter: String): Long = {
+    val files = df.queryExecution.executedPlan.collect {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+        b.inputPartitions.map(GraftInputPartition.fileOf)
+    }.flatten
+    val planned = if (files.isEmpty) 0L else spark.read.parquet(files: _*).count()
+    val seen = Seq("graft segments decoded", "graft segments pruned (filter stats)",
+      "graft segments pruned (token range)", "graft segments pruned (bloom)")
+      .map(m.getOrElse(_, 0L)).sum
+    planned - seen + m.getOrElse(counter, 0L)
+  }
+
   test("format(\"graft\") full read equals the engine decode (bare layout)") {
     import spark.implicits._
     val got = spark.read.format("graft").load(bare)
@@ -89,22 +108,19 @@ class GraftDataSourceSpec extends AnyFunSuite {
     }
   }
 
-  test("columnar batches: default read plans ColumnarToRow, equals the row reader exactly") {
+  test("columnar scan plans ColumnarToRow, equals the generator") {
     import spark.implicits._
     val colDf = spark.read.format("graft").load(bare)
     colDf.collect()
-    // default is the columnar reader: the executed plan fuses the batches
-    // through ColumnarToRow into whole-stage codegen
+    // the executed plan fuses the batches through ColumnarToRow into
+    // whole-stage codegen
     assert(colDf.queryExecution.executedPlan.toString.contains("ColumnarToRow"),
       "columnar read did not plan ColumnarToRow")
-    val rowDf = spark.read.format("graft").option("columnar", "false").load(bare)
-    rowDf.collect()
-    assert(!rowDf.queryExecution.executedPlan.toString.contains("ColumnarToRow"),
-      "columnar=false still planned a columnar scan")
     def key(df: org.apache.spark.sql.DataFrame) =
       df.as[graft.engine.TokenRow].collect()
         .map(r => (r.doc_id, r.tokens.toSeq, r.n_tok, r.source)).sortBy(_._1).toSeq
-    assert(key(colDf) === key(rowDf))
+    val generated = key(TokenTables.synthetic(spark, nDocs = 400, seed = 42L).toDF())
+    assert(key(colDf) === generated)
     // limit truncates the final batch without corrupting values
     val lim = spark.read.format("graft").load(bare).limit(7)
       .as[graft.engine.TokenRow].collect()
@@ -114,9 +130,7 @@ class GraftDataSourceSpec extends AnyFunSuite {
     lim.foreach(g => assert(g.tokens.sameElements(exp(g.doc_id).tokens)))
     // filters stay exact through the columnar residual re-filter
     val f = spark.read.format("graft").load(bare).filter($"n_tok" > 100)
-    val fr = spark.read.format("graft").option("columnar", "false").load(bare)
-      .filter($"n_tok" > 100)
-    assert(key(f) === key(fr))
+    assert(key(f) === generated.filter(_._3 > 100))
   }
 
   test("batchRows slices segments into bounded batches; results stay exact") {
@@ -158,7 +172,7 @@ class GraftDataSourceSpec extends AnyFunSuite {
     // crash-window data: a bucket written WITHOUT a ledger commit must stay
     // invisible (read-committed), and not double-count rows
     val orphan = TokenTables.synthetic(spark, nDocs = 50, seed = 9L)
-    GraftEncoder.encode(orphan, buckets = 1)
+    SegmentLayoutV2.flattenSegments(GraftEncoder.encode(orphan, buckets = 1)).drop("bucket")
       .write.mode("append").parquet(s"$dir/data/snapshotId=99/bucket=0")
     assert(spark.read.format("graft").load(dir).count() === 200L,
       "uncommitted snapshot leaked into the scan")
@@ -176,10 +190,10 @@ class GraftDataSourceSpec extends AnyFunSuite {
     import spark.implicits._
     val input = TokenTables.synthetic(spark, nDocs = 400, seed = 42L)
     val target = input.collect().head.doc_id
-    val (rows, m) = runWithScanMetrics(
-      spark.read.format("graft").load(clustered).filter($"doc_id" === target))
+    val lookup = spark.read.format("graft").load(clustered).filter($"doc_id" === target)
+    val (rows, m) = runWithScanMetrics(lookup)
     assert(rows.length === 1 && rows.head.getString(0) === target)
-    assert(m.getOrElse("graft segments pruned (filter stats)", 0L) > 0L,
+    assert(segmentsPrunedBy(lookup, m, "graft segments pruned (filter stats)") > 0L,
       s"expected pruned segments, metrics=$m")
     // the plan advertises the negotiation
     val desc = spark.read.format("graft").load(clustered)
@@ -218,18 +232,19 @@ class GraftDataSourceSpec extends AnyFunSuite {
     val ids = TokenTables.synthetic(spark, nDocs = 400, seed = 42L)
       .collect().map(_.doc_id).sorted
     val (a, b) = (ids.head, ids.last)
-    val (rows, m) = runWithScanMetrics(
-      spark.read.format("graft").load(clustered)
-        .filter($"doc_id" === a || $"doc_id" === b))
+    val either = spark.read.format("graft").load(clustered)
+      .filter($"doc_id" === a || $"doc_id" === b)
+    val (rows, m) = runWithScanMetrics(either)
     assert(rows.map(_.getString(0)).toSet === Set(a, b))
-    assert(m.getOrElse("graft segments pruned (filter stats)", 0L) > 0L,
+    assert(segmentsPrunedBy(either, m, "graft segments pruned (filter stats)") > 0L,
       "OR of two point lookups must still prune middle segments")
 
     // IN-list prunes like OR-of-equalities
-    val (inRows, m2) = runWithScanMetrics(
-      spark.read.format("graft").load(clustered).filter($"doc_id".isin(a, b)))
+    val in = spark.read.format("graft").load(clustered).filter($"doc_id".isin(a, b))
+    val (inRows, m2) = runWithScanMetrics(in)
     assert(inRows.map(_.getString(0)).toSet === Set(a, b))
-    assert(m2.getOrElse("graft segments pruned (filter stats)", 0L) > 0L, "IN-list must prune")
+    assert(segmentsPrunedBy(in, m2, "graft segments pruned (filter stats)") > 0L,
+      "IN-list must prune")
   }
 
   test("COUNT(*) pushes to segment headers (no decode, payload pages unread)") {
@@ -304,7 +319,7 @@ class GraftDataSourceSpec extends AnyFunSuite {
     val plan = exists.queryExecution.executedPlan.toString
     assert(plan.contains(s"PushedTokenRange: [$lo, $hi]"), s"range not pushed:\n$plan")
     val (rows, m) = runWithScanMetrics(exists)
-    assert(m.getOrElse("graft segments pruned (token range)", 0L) > 0L,
+    assert(segmentsPrunedBy(exists, m, "graft segments pruned (token range)") > 0L,
       s"zipf layout must let the token range prune segments: $m")
     // exactness: residual re-filter keeps only true matches
     val expected = TokenTables.synthetic(spark, nDocs = 400, seed = 42L)
@@ -395,30 +410,28 @@ class GraftDataSourceSpec extends AnyFunSuite {
     val streams = MetaColumns.streamsFor(
       StructField("attrs", MapType(StringType, StringType, valueContainsNull = true)))
     assert(streams === Seq("attrs__k", "attrs__k__len", "attrs__v", "attrs__v__len"))
-    for (columnar <- Seq("true", "false")) {
-      val table = spark.read.format("graft").option("columnar", columnar).load(dir)
-      // valueContainsNull follows the input's value nullability — pin the
-      // key/value types only
-      assert((table.schema("attrs").dataType, table.schema("scores").dataType) match {
-        case (MapType(StringType, StringType, _), MapType(StringType, LongType, _)) => true
-        case other => fail(s"map schema mismatch: $other")
-      })
-      val dec = table.toDF("doc_id", "tokens_d", "n_tok_d", "source_d",
-        "attrs_d", "scores_d")
-      def entries(c: org.apache.spark.sql.Column) = sort_array(map_entries(c))
-      val bad = input.join(dec, Seq("doc_id"), "full_outer")
-        .filter(!(entries($"attrs") <=> entries($"attrs_d") &&
-          entries($"scores") <=> entries($"scores_d") &&
-          $"tokens" <=> $"tokens_d"))
-        .count()
-      assert(bad === 0L, s"columnar=$columnar: $bad rows mismatched after round-trip")
-      // NULL-value rows decode as present-key/null-value, not dropped keys
-      val tierNull = table.filter($"attrs".isNotNull &&
-        element_at($"attrs", "tier").isNull).count()
-      val expectTierNull = input.filter($"attrs".isNotNull &&
-        element_at($"attrs", "tier").isNull).count()
-      assert(tierNull === expectTierNull && expectTierNull > 0L)
-    }
+    val table = spark.read.format("graft").load(dir)
+    // valueContainsNull follows the input's value nullability — pin the
+    // key/value types only
+    assert((table.schema("attrs").dataType, table.schema("scores").dataType) match {
+      case (MapType(StringType, StringType, _), MapType(StringType, LongType, _)) => true
+      case other => fail(s"map schema mismatch: $other")
+    })
+    val dec = table.toDF("doc_id", "tokens_d", "n_tok_d", "source_d",
+      "attrs_d", "scores_d")
+    def entries(c: org.apache.spark.sql.Column) = sort_array(map_entries(c))
+    val bad = input.join(dec, Seq("doc_id"), "full_outer")
+      .filter(!(entries($"attrs") <=> entries($"attrs_d") &&
+        entries($"scores") <=> entries($"scores_d") &&
+        $"tokens" <=> $"tokens_d"))
+      .count()
+    assert(bad === 0L, s"$bad rows mismatched after round-trip")
+    // NULL-value rows decode as present-key/null-value, not dropped keys
+    val tierNull = table.filter($"attrs".isNotNull &&
+      element_at($"attrs", "tier").isNull).count()
+    val expectTierNull = input.filter($"attrs".isNotNull &&
+      element_at($"attrs", "tier").isNull).count()
+    assert(tierNull === expectTierNull && expectTierNull > 0L)
   }
 
   test("STRUCT metadata columns round-trip through both readers " +
@@ -437,27 +450,25 @@ class GraftDataSourceSpec extends AnyFunSuite {
     input.write.format("graft").option("buckets", "4")
       .option("tokensPerChunk", "64")
       .mode(org.apache.spark.sql.SaveMode.Append).save(dir)
-    for (columnar <- Seq("true", "false")) {
-      val table = spark.read.format("graft").option("columnar", columnar).load(dir)
-      assert(table.schema("info").dataType match {
-        case StructType(Array(
-          StructField("score", DoubleType, _, _),
-          StructField("price", _: DecimalType, _, _),
-          StructField("kind", StringType, _, _))) => true
-        case other => fail(s"struct schema mismatch: $other")
-      })
-      val dec = table.toDF("doc_id", "tokens_d", "n_tok_d", "source_d", "info_d")
-      val bad = input.join(dec, Seq("doc_id"), "full_outer")
-        .filter(!($"info" <=> $"info_d" && $"tokens" <=> $"tokens_d"))
-        .count()
-      assert(bad === 0L, s"columnar=$columnar: $bad rows mismatched after round-trip")
-      // NULL-member rows decode as struct-present/member-null, not null structs
-      val scoreNull = table.filter($"info".isNotNull && $"info.score".isNull).count()
-      val expectScoreNull = input.filter($"info".isNotNull && $"info.score".isNull).count()
-      assert(scoreNull === expectScoreNull && expectScoreNull > 0L)
-      val nullStructs = table.filter($"info".isNull).count()
-      assert(nullStructs === input.filter($"info".isNull).count() && nullStructs > 0L)
-    }
+    val table = spark.read.format("graft").load(dir)
+    assert(table.schema("info").dataType match {
+      case StructType(Array(
+        StructField("score", DoubleType, _, _),
+        StructField("price", _: DecimalType, _, _),
+        StructField("kind", StringType, _, _))) => true
+      case other => fail(s"struct schema mismatch: $other")
+    })
+    val dec = table.toDF("doc_id", "tokens_d", "n_tok_d", "source_d", "info_d")
+    val bad = input.join(dec, Seq("doc_id"), "full_outer")
+      .filter(!($"info" <=> $"info_d" && $"tokens" <=> $"tokens_d"))
+      .count()
+    assert(bad === 0L, s"$bad rows mismatched after round-trip")
+    // NULL-member rows decode as struct-present/member-null, not null structs
+    val scoreNull = table.filter($"info".isNotNull && $"info.score".isNull).count()
+    val expectScoreNull = input.filter($"info".isNotNull && $"info.score".isNull).count()
+    assert(scoreNull === expectScoreNull && expectScoreNull > 0L)
+    val nullStructs = table.filter($"info".isNull).count()
+    assert(nullStructs === input.filter($"info".isNull).count() && nullStructs > 0L)
   }
 
   test("NESTED projection pruning: a struct member subset reads only its " +
@@ -474,27 +485,25 @@ class GraftDataSourceSpec extends AnyFunSuite {
         concat(lit("k"), ($"n_tok" % 3).cast("string")).as("kind"))))
     input.write.format("graft").option("buckets", "4")
       .mode(org.apache.spark.sql.SaveMode.Append).save(dir)
-    for (columnar <- Seq("true", "false")) {
-      val table = spark.read.format("graft").option("columnar", columnar).load(dir)
-      val pruned = table.select($"doc_id", $"info.score".as("score"))
-      val plan = pruned.queryExecution.executedPlan.toString
-      // the scan schema carries ONLY the projected member
-      assert(plan.contains("struct<score:double>") && !plan.contains("blob"),
-        s"columnar=$columnar: member subset not pruned in scan schema:\n$plan")
-      val (rows, m) = runWithScanMetrics(pruned)
-      // whole-struct projection (nothing to prune) as the byte baseline
-      val (fullRows, mFull) = runWithScanMetrics(table.select($"doc_id", $"info"))
-      val expect = input.select($"doc_id", $"info.score".as("score"))
-        .collect().map(r => r.getString(0) -> Option(r.get(1))).toMap
-      assert(rows.length === 300 && fullRows.length === 300)
-      rows.foreach(r => assert(expect(r.getString(0)) === Option(r.get(1))))
-      // and the pruned scan decodes strictly fewer payload bytes than the
-      // full-struct scan (the blob + kind + __p-only delta)
-      val bPruned = m.getOrElse("graft payload bytes decoded", Long.MaxValue)
-      val bFull = mFull.getOrElse("graft payload bytes decoded", 0L)
-      assert(bPruned < bFull,
-        s"columnar=$columnar: pruned=$bPruned full=$bFull — member streams not skipped")
-    }
+    val table = spark.read.format("graft").load(dir)
+    val pruned = table.select($"doc_id", $"info.score".as("score"))
+    val plan = pruned.queryExecution.executedPlan.toString
+    // the scan schema carries ONLY the projected member
+    assert(plan.contains("struct<score:double>") && !plan.contains("blob"),
+      s"member subset not pruned in scan schema:\n$plan")
+    val (rows, m) = runWithScanMetrics(pruned)
+    // whole-struct projection (nothing to prune) as the byte baseline
+    val (fullRows, mFull) = runWithScanMetrics(table.select($"doc_id", $"info"))
+    val expect = input.select($"doc_id", $"info.score".as("score"))
+      .collect().map(r => r.getString(0) -> Option(r.get(1))).toMap
+    assert(rows.length === 300 && fullRows.length === 300)
+    rows.foreach(r => assert(expect(r.getString(0)) === Option(r.get(1))))
+    // and the pruned scan decodes strictly fewer payload bytes than the
+    // full-struct scan (the blob + kind + __p-only delta)
+    val bPruned = m.getOrElse("graft payload bytes decoded", Long.MaxValue)
+    val bFull = mFull.getOrElse("graft payload bytes decoded", 0L)
+    assert(bPruned < bFull,
+      s"pruned=$bPruned full=$bFull — member streams not skipped")
   }
 
   test("column-level min/max/null statistics reach Catalyst " +
@@ -687,8 +696,8 @@ class GraftDataSourceSpec extends AnyFunSuite {
     }
     val dir = tmp()
     val conf = graft.codec.CodecConf(bloomColumns = Set("doc_id", "tokens"))
-    GraftEncoder.encode(spark.createDataset(rows), buckets = 8,
-      tokensPerChunk = 4096, codecConf = conf).write.parquet(s"$dir/segs")
+    SegmentLayoutV2.flattenSegments(GraftEncoder.encode(spark.createDataset(rows), buckets = 8,
+      tokensPerChunk = 4096, codecConf = conf)).write.parquet(s"$dir/segs")
     val df = spark.read.format("graft").load(s"$dir/segs")
       .filter(array_contains($"tokens", probe))
     val plan = df.queryExecution.executedPlan.toString
@@ -702,8 +711,8 @@ class GraftDataSourceSpec extends AnyFunSuite {
     // without the opt-in, the same lookup decodes every segment (correct,
     // just unpruned) — pinning that the knob is the difference
     val dir2 = tmp()
-    GraftEncoder.encode(spark.createDataset(rows), buckets = 8,
-      tokensPerChunk = 4096).write.parquet(s"$dir2/segs")
+    SegmentLayoutV2.flattenSegments(GraftEncoder.encode(spark.createDataset(rows), buckets = 8,
+      tokensPerChunk = 4096)).write.parquet(s"$dir2/segs")
     val (got2, m2) = runWithScanMetrics(
       spark.read.format("graft").load(s"$dir2/segs")
         .filter(array_contains($"tokens", probe)))
@@ -724,8 +733,8 @@ class GraftDataSourceSpec extends AnyFunSuite {
       graft.engine.TokenRow("d3", Array(1, 2), 2, "s"))
     val dir = tmp()
     val conf = graft.codec.CodecConf(bloomColumns = Set("doc_id", "tokens"))
-    GraftEncoder.encode(spark.createDataset(rows), buckets = 2,
-      tokensPerChunk = 4, codecConf = conf).write.parquet(s"$dir/segs")
+    SegmentLayoutV2.flattenSegments(GraftEncoder.encode(spark.createDataset(rows), buckets = 2,
+      tokensPerChunk = 4, codecConf = conf)).write.parquet(s"$dir/segs")
     val df = spark.read.format("graft").load(s"$dir/segs")
       .filter(expr("exists(tokens, x -> x >= 7)") && expr("exists(tokens, x -> x <= 7)"))
     val plan = df.queryExecution.executedPlan.toString
@@ -800,7 +809,8 @@ class GraftDataSourceSpec extends AnyFunSuite {
       val b = math.min(rangeBuckets - 1, (id * rangeBuckets / 400L).toInt)
       graft.engine.BucketedRow(r.doc_id, r.tokens, r.n_tok, r.source, b)
     }
-    GraftEncoder.encodeBucketed(bucketed, rangeBuckets, tokensPerChunk = 4096)
+    SegmentLayoutV2.flattenSegments(
+      GraftEncoder.encodeBucketed(bucketed, rangeBuckets, tokensPerChunk = 4096))
       .write.parquet(s"$dir/segs")
     // dim categories are CONTIGUOUS id ranges (cat = id / 50), so a
     // selective dim filter maps to one range bucket = one part-file
@@ -955,13 +965,11 @@ class GraftDataSourceSpec extends AnyFunSuite {
     assert(table.schema("created").dataType === org.apache.spark.sql.types.DateType)
     assert(table.schema("ts").dataType === org.apache.spark.sql.types.TimestampType)
     assert(table.schema("quality").nullable && table.schema("lang").nullable)
-    // bit-exact row set, columnar (default) and row readers
+    // bit-exact row set
     val want = input.collect().toSet
-    for (columnar <- Seq("true", "false")) {
-      val got = spark.read.format("graft").option("columnar", columnar).load(dir)
-        .select(input.columns.map(col): _*).collect().toSet
-      assert(got === want, s"columnar=$columnar round-trip mismatch")
-    }
+    val got = spark.read.format("graft").load(dir)
+      .select(input.columns.map(col): _*).collect().toSet
+    assert(got === want, "round-trip mismatch")
     // null semantics surface in SQL
     assert(table.filter($"quality".isNull).count() ===
       input.filter($"quality".isNull).count())

@@ -9,10 +9,10 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The `listStatus` walk behind every data-file listing must return
-  * exactly what Hadoop's `listFiles(root, recursive = true)` returned
-  * under the same name filter: the walk only changes how statuses are
-  * built, never which files a table is made of. `listFiles` stays here as
-  * the reference. */
+  * exactly what Hadoop's `listFiles(root, recursive = true)` returns under
+  * the same filters: data-file names only, and nothing below a `_`/`.`
+  * directory (where in-flight writes stage their part-files). `listFiles`
+  * stays here as the reference. */
 class GraftLayoutListingSpec extends AnyFunSuite {
 
   private val conf = new Configuration()
@@ -20,8 +20,10 @@ class GraftLayoutListingSpec extends AnyFunSuite {
   /** A table-shaped tree with every kind of entry the filters must handle:
     * data files in nested `snapshotId=/bucket=` dirs (written through the
     * checksummed local FS, so each gets a `.crc` side file), `_SUCCESS`,
-    * hidden and `_`-prefixed files, non-parquet files, and a `_temporary/`
-    * subtree holding a half-committed part-file. */
+    * hidden and `_`-prefixed files, non-parquet files, and the staging
+    * dirs of in-flight writes: a `_temporary/` subtree holding a
+    * half-committed part-file and a dynamic-overwrite `.spark-staging-*`
+    * dir holding a retried, already-committed partition. */
   private def tree(): Path = {
     val root = new Path(
       java.nio.file.Files.createTempDirectory("graft-listing-spec").toUri)
@@ -44,21 +46,26 @@ class GraftLayoutListingSpec extends AnyFunSuite {
       "notes.txt",
       "snapshotId=2/bucket=0/part-00002-b.parquet.tmp",
       "_temporary/0/_temporary/attempt_1/part-00009-d.parquet",
-      "_temporary/0/_temporary/attempt_1/.part-00009-d.parquet.crc"
+      "_temporary/0/_temporary/attempt_1/.part-00009-d.parquet.crc",
+      ".spark-staging-e/snapshotId=1/bucket=0/part-00000-e.parquet"
     ).foreach(put)
     fs.mkdirs(new Path(root, "snapshotId=4/bucket=0")) // empty partition dir
     root
   }
 
-  /** The reference: `listFiles` plus the data-file name filter. */
+  /** The reference: `listFiles` minus the files below `_`/`.`
+    * directories, plus (with `filter`) the data-file name filter. */
   private def viaListFiles(fs: FileSystem, root: Path, filter: Boolean): Seq[String] = {
+    def hidden(n: String) = n.startsWith("_") || n.startsWith(".")
+    val rootPath = fs.makeQualified(root).toUri.getPath.stripSuffix("/")
     val out = ArrayBuffer.empty[String]
     val it = fs.listFiles(root, true)
     while (it.hasNext) {
       val f = it.next()
       val n = f.getPath.getName
-      if (f.isFile && (!filter ||
-          (n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith("."))))
+      val dirs = f.getPath.toUri.getPath.stripPrefix(rootPath).split('/').filter(_.nonEmpty).init
+      if (f.isFile && !dirs.exists(hidden) &&
+          (!filter || (n.endsWith(".parquet") && !hidden(n))))
         out += f.getPath.toString
     }
     out.toSeq.sorted
@@ -71,10 +78,10 @@ class GraftLayoutListingSpec extends AnyFunSuite {
     val want = viaListFiles(fs, root, filter = true)
     assert(got === want)
     assert(got === got.sorted)
-    // the five committed data files are kept. Known gap, not a contract:
-    // the filter is by file name only, so an in-flight part-file under
-    // `_temporary/` is listed too (it is in `want` as well)
-    assert(got.count(!_.contains("/_temporary/")) === 5, got)
+    // exactly the five committed data files: no in-flight part-file from
+    // a `_temporary/` or `.spark-staging-*` dir
+    assert(got.size === 5, got)
+    assert(!got.exists(p => p.contains("/_temporary/") || p.contains("/.spark-staging-")), got)
     assert(!got.exists(p => p.endsWith(".crc") || p.contains("_SUCCESS") || p.contains(".hidden")))
   }
 

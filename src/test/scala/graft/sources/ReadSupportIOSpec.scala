@@ -79,14 +79,20 @@ class ReadSupportIOSpec extends AnyFunSuite {
       s"projected read counted $smallOnly B vs full $full B — init override dead again?")
   }
 
-  test("legacy header read (PrunedGroupReadSupport) skips payload pages") {
-    import spark.implicits._
+  test("v2 header read (GraftLayout.header) skips payload pages") {
     val input = graft.engine.TokenTables.synthetic(spark, nDocs = 1500, seed = 3L)
-    val dir = java.nio.file.Files.createTempDirectory("pq-legacy-pin").toString
-    graft.engine.GraftEncoder.encode(input, buckets = 2).toDF()
+    val dir = java.nio.file.Files.createTempDirectory("pq-header-pin").toString
+    SegmentLayoutV2.flattenSegments(graft.engine.GraftEncoder.encode(input, buckets = 2))
       .withColumn("snapshotId", org.apache.spark.sql.functions.lit(1L))
       .write.partitionBy("snapshotId", "bucket").parquet(s"$dir/data")
     val conf = spark.sessionState.newHadoopConf()
+    // count the bytes parquet asks for, not the readahead of the local
+    // FS's read buffer (Spark sets it to 64 KiB): the v2 stat columns sit
+    // on both sides of the tokens payload, and a 64 KiB window at each
+    // would be a third of this small file. A fresh, uncached FS instance
+    // picks the smaller buffer up.
+    conf.setInt("io.file.buffer.size", 4096)
+    conf.setBoolean("fs.file.impl.disable.cache", true)
     val file = GraftLayout.listParquetFiles(s"$dir/data", conf).head
     val fileSize = new java.io.File(file.stripPrefix("file:")).length
     val b0 = fsBytesRead()

@@ -15,7 +15,7 @@ import graft.lineage.SegmentStore
   * stream means projection and stat pruning save REAL parquet IO — the
   * round-3 judge's "assert via parquet input metrics, not mBytesPruned"
   * criterion — plus the planning-time file-bloom skip, LIMIT×filter
-  * composition, and mixed legacy/v2 table readability. */
+  * composition, and the loud failure on a pre-v2 nested-layout file. */
 class SegmentLayoutV2Spec extends AnyFunSuite {
 
   lazy val spark: SparkSession = {
@@ -168,41 +168,37 @@ class SegmentLayoutV2Spec extends AnyFunSuite {
       .filter($"source" === "uniform").limit(5).count() === 5L)
   }
 
-  test("mixed table: legacy nested snapshot + v2 appended snapshot both readable") {
+  test("a nested-layout file in a table fails loudly, naming it") {
     import spark.implicits._
     val dir = tmp()
     val input = TokenTables.synthetic(spark, nDocs = 300, seed = 5L)
-    val first = input.filter(_.n_tok % 2 == 0)
-    val second = input.filter(_.n_tok % 2 == 1)
-    // stamp _meta FIRST (before any ledger exists — a ledgered table
-    // without a marker is correctly refused by ensureForCommit): the
-    // marker versions the bucket function, not the file layout, and the
-    // legacy fixture below uses the current bucket function
-    GraftTableMeta.ensureForCommit(dir, spark.sessionState.newHadoopConf())
-    // snapshot 1 in the LEGACY nested layout (what rounds 1-3 wrote)
-    GraftEncoder.encode(first, buckets = 4).toDF()
-      .withColumn("snapshotId", lit(1L))
-      .write.partitionBy("snapshotId", "bucket").parquet(s"$dir/data")
-    // legacy ledger rows so the table is ledger-committed
-    spark.createDataset((0 until 4).map(b =>
-      graft.lineage.LineageRow(1L, b, 1L, 0L, 0L, 0L, 0L, "", "", "",
-        SegmentStore.Committed)))
-      .repartition(1).write.mode("append").parquet(s"$dir/lineage")
-    // snapshot 2 through the DSv2 v2 writer
-    second.toDF("doc_id", "tokens", "n_tok", "source")
+    // snapshot 1 through the DSv2 v2 writer
+    input.filter(_.n_tok % 2 == 1).toDF("doc_id", "tokens", "n_tok", "source")
       .write.format("graft").option("buckets", "4")
       .mode(SaveMode.Append).save(dir)
-
-    // engine path: union of both layouts decodes completely
-    val decoded = SegmentStore.readSegmentsAll(spark, dir)
-      .transform(GraftEncoder.decode).collect()
-    assert(decoded.length === 300)
-    // connector path too
-    assert(spark.read.format("graft").load(dir).count() === 300L)
-    // and both snapshots contributed
-    // partition-column type is inferred (int) on the raw parquet read
-    val perSnap = spark.read.parquet(s"$dir/data").groupBy($"snapshotId").count()
-      .collect().map(r => r.getAs[Number](0).longValue() -> r.getLong(1)).toMap
-    assert(perSnap.keySet === Set(1L, 2L))
+    // snapshot 2 in the pre-v2 nested `cols` layout (what rounds 1-3
+    // wrote), ledger-committed
+    GraftEncoder.encode(input.filter(_.n_tok % 2 == 0), buckets = 4).toDF()
+      .withColumn("snapshotId", lit(2L))
+      .write.mode(SaveMode.Append).partitionBy("snapshotId", "bucket").parquet(s"$dir/data")
+    spark.createDataset((0 until 4).map(b =>
+      graft.lineage.LineageRow(2L, b, 1L, 0L, 0L, 0L, 0L, "", "", "",
+        SegmentStore.Committed)))
+      .repartition(1).write.mode(SaveMode.Append).parquet(s"$dir/lineage")
+    val nested = GraftLayout.listParquetFiles(s"$dir/data/snapshotId=2",
+      spark.sessionState.newHadoopConf()).map(f => new org.apache.hadoop.fs.Path(f).getName)
+    assert(nested.nonEmpty)
+    def assertNamesNestedFile(e: Throwable): Unit = {
+      val msgs = Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+        .map(_.getMessage).mkString("\n")
+      assert(msgs.contains("pre-v2 nested `cols` layout is no longer read") &&
+        nested.exists(msgs.contains), msgs)
+    }
+    // connector path
+    assertNamesNestedFile(intercept[Exception](
+      spark.read.format("graft").load(dir).collect()))
+    // engine path
+    assertNamesNestedFile(intercept[Exception](
+      SegmentStore.readSegmentsAll(spark, dir).collect()))
   }
 }

@@ -90,14 +90,17 @@ object SqlFunctions {
 /** `spark.sql.extensions=graft.engine.GraftExtensions` — the standard
   * builder-time injection seam for clusters where sessions are created by
   * the platform, not application code. Injects the SQL decode functions
-  * and the connector's token-range pushdown rule (as a pre-CBO rule: that
+  * and the connector's optimizer rules
+  * ([[graft.sources.GraftDataSource.OptimizerRules]]: token-range and
+  * map-access pruning, header-answered aggregates) as pre-CBO rules: that
   * batch runs after `V2ScanRelationPushDown`, so the graft scan relation
-  * exists by then — live sessions get the same rule via
-  * [[graft.sources.GraftTokenRangePushdown.install]]). */
+  * exists by then. The rules need no extension: the connector adds the
+  * same list to any session that resolves a graft table
+  * ([[graft.sources.GraftDataSource.installRules]]), skipping the ones
+  * injected here. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     SqlFunctions.all.foreach(ext.injectFunction)
-    ext.injectPreCBORule(_ => graft.sources.GraftTokenRangePushdown)
-    ext.injectPreCBORule(_ => graft.sources.GraftMapAccessPushdown)
+    graft.sources.GraftDataSource.OptimizerRules.foreach(r => ext.injectPreCBORule(_ => r))
   }
 }

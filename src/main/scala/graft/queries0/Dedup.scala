@@ -40,6 +40,10 @@ object Dedup {
   final val EmbPlanes = 64    // random hyperplanes for embedding LSH
   final val EmbBands = 8      // 8 bands x 8 bits
   final val EmbBandBits = 8   // sign bits per band (key space 256/band)
+  // each band reads EmbBandBits consecutive planes: drifting constants
+  // would index past the last plane or leave planes unread
+  require(EmbBands * EmbBandBits == EmbPlanes,
+    s"embedding LSH bands ($EmbBands x $EmbBandBits bits) must cover exactly $EmbPlanes planes")
   final val CosineThreshold = 0.95
 
   private def mix(z0: Long): Long = {

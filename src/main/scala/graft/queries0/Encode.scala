@@ -435,7 +435,6 @@ object Encode {
     val (lo, hi) = (29490, 29519)
     val base = java.nio.file.Files.createTempDirectory("graft-dsv2-tok-q").toString
     try {
-      graft.sources.GraftTokenRangePushdown.install(spark)
       val input = TokenTables.fromDocuments(spark, dir)
       SegmentStore.encodeCommit(input, base, snapshotId = 1L, buckets = 8)
       val hits = spark.read.format("graft").load(base)
@@ -466,7 +465,6 @@ object Encode {
     val probe = 29499 // stableHash("dup")
     val base = java.nio.file.Files.createTempDirectory("graft-dsv2-bloom-q").toString
     try {
-      graft.sources.GraftTokenRangePushdown.install(spark)
       val input = TokenTables.fromDocuments(spark, dir)
       input.toDF("doc_id", "tokens", "n_tok", "source")
         .write.format("graft").option("buckets", "8")
@@ -681,7 +679,6 @@ object Encode {
       .persist() // feeds the write and the null-safe audit join
     val base = java.nio.file.Files.createTempDirectory("graft-dsv2-list-q").toString
     try {
-      graft.sources.GraftTokenRangePushdown.install(spark)
       input.write.format("graft").option("buckets", "8")
         .mode(org.apache.spark.sql.SaveMode.Append).save(base)
       val table = spark.read.format("graft").load(base)
@@ -910,8 +907,9 @@ object Encode {
     * (`info__f_score`) header stats — non-null members only, exactly SQL's
     * null-ignoring domain — with zero payload decode, the same exact-stats
     * stance as the reference's metadata.rs:64-86 rendered one nesting level
-    * down. The plan is REQUIRED to carry the member-stream aggregate, so
-    * the entry fails loudly if the pushdown stops engaging. Values derive
+    * down. The plan is REQUIRED to be answered on the driver (a local
+    * relation, no graft scan), so the entry fails loudly if the fold stops
+    * engaging. Values derive
     * from n_tok, so DuckDB replays the struct nested-free. */
   def dsv2NestedAgg(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -933,11 +931,9 @@ object Encode {
         count($"info.kind").as("n_kind"),
         min($"info.kind").as("min_kind"),
         max($"info.kind").as("max_kind"))
-      val plan = fused.queryExecution.executedPlan.toString
-      require(plan.contains("PushedAggregation") &&
-        plan.contains("MIN(info__f_score)") && plan.contains("MAX(info__f_kind)") &&
-        plan.contains("COUNT(info__f_score)"),
-        s"member aggregates not folded from member-stream stats:\n$plan")
+      val plan = fused.queryExecution.executedPlan
+      require(graft.sources.GraftStatsAggPushdown.answeredOnDriver(plan),
+        s"member aggregates not answered from member-stream header stats:\n$plan")
       // materialize before the temp table directory is deleted
       val rows = fused.collect().toSeq
       import org.apache.spark.sql.types._
@@ -1057,9 +1053,9 @@ object Encode {
     * (names))` over LIST metadata columns reduce to the element streams'
     * header stats via [[graft.sources.GraftStatsAggPushdown]] — mixed in
     * the SAME aggregate with plain scalar MIN/MAX and COUNTs, all folded,
-    * zero payload decode. The plan is REQUIRED to carry the element-fold
-    * markers. Values derive from n_tok, so DuckDB replays the lists with
-    * list_min/list_max. */
+    * zero payload decode. The plan is REQUIRED to be answered on the
+    * driver (a local relation, no graft scan). Values derive from n_tok,
+    * so DuckDB replays the lists with list_min/list_max. */
   def dsv2ElemAgg(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val base = java.nio.file.Files.createTempDirectory("graft-dsv2-elemagg-q").toString
@@ -1073,7 +1069,6 @@ object Encode {
         .withColumn("quality", when($"n_tok" % 5 =!= 0, ($"n_tok" / 10.0) - 3.0))
       input.write.format("graft").option("buckets", "8")
         .mode(org.apache.spark.sql.SaveMode.Append).save(base)
-      graft.sources.GraftStatsAggPushdown.install(spark)
       val table = spark.read.format("graft").load(base)
       val fused = table.agg(
         min(array_min($"tags")).as("lo_tag"),
@@ -1082,10 +1077,9 @@ object Encode {
         max(array_max($"names")).as("hi_name"),
         min($"quality").as("lo_q"), max($"quality").as("hi_q"),
         count($"tags").as("n_tags"), count(lit(1)).as("n_docs"))
-      val plan = fused.queryExecution.executedPlan.toString
-      require(plan.contains("MIN_ELEM(tags)") && plan.contains("MAX_ELEM(names)") &&
-        plan.contains("MIN(quality)") && plan.contains("COUNT(tags)"),
-        s"element aggregates not folded from header stats:\n$plan")
+      val plan = fused.queryExecution.executedPlan
+      require(graft.sources.GraftStatsAggPushdown.answeredOnDriver(plan),
+        s"element aggregates not answered from header stats:\n$plan")
       val rows = fused.collect().toSeq
       import org.apache.spark.sql.types._
       spark.createDataFrame(
@@ -1119,7 +1113,6 @@ object Encode {
         .withColumn("scores", map(lit("rank"), $"n_tok" * 10))
       input.write.format("graft").option("buckets", "8")
         .mode(org.apache.spark.sql.SaveMode.Append).save(base)
-      graft.sources.GraftMapAccessPushdown.install(spark)
       val table = spark.read.format("graft").load(base)
       def requireMapStats(df: DataFrame): DataFrame = {
         val p = df.queryExecution.executedPlan.toString

@@ -49,9 +49,10 @@ class GraftCatalog extends CatalogPlugin with TableCatalog with FunctionCatalog 
     // existence via the Hadoop filesystem — java.io.File is blind to any
     // non-local scheme and would refuse every remote table
     val hp = new org.apache.hadoop.fs.Path(dir)
-    val conf = org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf()
-    if (!hp.getFileSystem(conf).exists(hp))
+    val spark = org.apache.spark.sql.SparkSession.active
+    if (!hp.getFileSystem(spark.sessionState.newHadoopConf()).exists(hp))
       throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(ident)
+    GraftDataSource.installRules(spark)
     new GraftTable(dir, catalogBacked = true)
   }
 

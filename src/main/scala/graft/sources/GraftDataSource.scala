@@ -11,20 +11,20 @@ import org.apache.parquet.example.data.Group
 import org.apache.parquet.hadoop.ParquetReader
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
 import org.apache.spark.sql.connector.expressions.{Expressions, Literal, NamedReference, Transform}
-import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, Count, CountStar, Max, Min}
 import org.apache.spark.sql.connector.expressions.filter.{Predicate => VPredicate}
 import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
-import org.apache.spark.sql.connector.read.{Batch, HasPartitionKey, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownAggregates, SupportsPushDownFilters, SupportsPushDownLimit, SupportsPushDownRequiredColumns, SupportsReportPartitioning, SupportsReportStatistics, SupportsRuntimeV2Filtering}
+import org.apache.spark.sql.connector.read.{Batch, HasPartitionKey, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownFilters, SupportsPushDownLimit, SupportsPushDownRequiredColumns, SupportsReportPartitioning, SupportsReportStatistics, SupportsRuntimeV2Filtering}
 import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning, UnknownPartitioning}
 import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
 import org.apache.spark.sql.sources.{And => SAnd, DataSourceRegister, EqualNullSafe, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, IsNotNull, IsNull, LessThan, LessThanOrEqual, Or => SOr, StringStartsWith}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
 import graft.codec.{IntCodecs, SegmentBloom, StringCodecs}
@@ -60,9 +60,11 @@ import graft.codec.{IntCodecs, SegmentBloom, StringCodecs}
   *    the Spark-side analog of the reference's arbitrary-PhysicalExpr
   *    conversion, /root/reference/src/predicate.rs:53-166). Inexact like
   *    every other prune: the Filter stays in the plan;
-  *  - **aggregate pushdown**: COUNT(*)/MIN/MAX over stats-bearing columns
-  *    collapse to segment-header reads — payload pages are never read
-  *    (partial pushdown; Spark merges the per-file partials);
+  *  - **header-answered aggregates**: COUNT(*), COUNT(col), MIN/MAX over
+  *    stat-bearing columns and array element extrema are computed on the
+  *    driver from the folded segment headers and replace the aggregate
+  *    with a local relation ([[GraftStatsAggPushdown]]) — no Spark job,
+  *    payload pages never read;
   *  - **scan opener** (§2.A.5/7): one InputPartition per segment part-file;
   *    each reader streams Groups straight from parquet with no Spark
   *    session on the executor path, under the session's Hadoop conf
@@ -121,7 +123,32 @@ class GraftDataSource extends TableProvider with DataSourceRegister {
                         properties: JMap[String, String]): Table = {
     val path = Option(properties.get("path")).getOrElse(
       throw new IllegalArgumentException("graft source requires a path, e.g. .load(dir)"))
+    GraftDataSource.installRules(org.apache.spark.sql.SparkSession.active)
     new GraftTable(path, providedSchema = Option(schema))
+  }
+}
+
+object GraftDataSource {
+  /** The connector's optimizer rules. Each runs after Spark's DSv2 scan
+    * pushdown and only rewrites plans over a [[GraftScan]]. */
+  val OptimizerRules: Seq[Rule[LogicalPlan]] =
+    Seq(GraftTokenRangePushdown, GraftMapAccessPushdown, GraftStatsAggPushdown)
+
+  /** Makes [[OptimizerRules]] part of `spark`'s optimizer, idempotently.
+    * Called where a graft table is resolved (table-provider resolution and
+    * [[GraftCatalog.loadTable]]), which is analysis: the optimizer fixes
+    * its batches when a query's optimization starts, so a rule added
+    * later (say, in `newScanBuilder`) would miss the query that resolved
+    * the table. Rules the session already injected through
+    * `spark.sql.extensions=graft.engine.GraftExtensions` are not added a
+    * second time. */
+  def installRules(spark: org.apache.spark.sql.SparkSession): Unit = {
+    val injected = spark.sessionState.optimizer.preCBORules.toSet
+    val exp = spark.experimental
+    exp.synchronized {
+      val missing = OptimizerRules.filterNot(r => injected(r) || exp.extraOptimizations.contains(r))
+      if (missing.nonEmpty) exp.extraOptimizations = exp.extraOptimizations ++ missing
+    }
   }
 }
 
@@ -231,25 +258,6 @@ class GraftTable(path: String, catalogBacked: Boolean = false,
     new GraftWriteBuilder(path, info, sessionConf)
 }
 
-/** What MIN/MAX/COUNT(*)/COUNT(col) reduce to against the segment headers. */
-sealed trait AggSpec
-object AggSpec {
-  final case class MinOf(col: String) extends AggSpec
-  final case class MaxOf(col: String) extends AggSpec
-  case object CountAll extends AggSpec
-  /** Non-null count: header row count for the (non-nullable) canonical
-    * columns, the per-file sum of chunk nValues for metadata columns. */
-  final case class CountOf(col: String) extends AggSpec
-  /** ELEMENT extrema of an array column (`min(array_min(c))` /
-    * `max(array_max(c))`, the [[GraftStatsAggPushdown]] rewrite): the
-    * header-folded element-stream stats ARE this aggregate's answer —
-    * the fold skips value-less chunks, array_min/array_max skip null
-    * elements, and MIN/MAX ignore the nulls empty/null arrays produce,
-    * so both sides range over exactly the non-null elements present. */
-  final case class ElemMinOf(col: String) extends AggSpec
-  final case class ElemMaxOf(col: String) extends AggSpec
-}
-
 class GraftScanBuilder(path: String, hconf: SerializableConfiguration,
                        asOf: Option[Long] = None,
                        spjBuckets: Option[Int] = None,
@@ -257,8 +265,7 @@ class GraftScanBuilder(path: String, hconf: SerializableConfiguration,
                        batchRows: Int = Int.MaxValue,
                        toggles: ScanToggles = ScanToggles.Default)
     extends ScanBuilder with SupportsPushDownFilters
-    with SupportsPushDownRequiredColumns with SupportsPushDownAggregates
-    with SupportsPushDownLimit {
+    with SupportsPushDownRequiredColumns with SupportsPushDownLimit {
   /** Full table schema (canonical four + metadata columns). Direct
     * constructions (tests) pass null and get the stored schema. */
   private val fullSchema: StructType =
@@ -286,7 +293,6 @@ class GraftScanBuilder(path: String, hconf: SerializableConfiguration,
   }
   private var required: StructType = fullSchema
   private var pushed: Array[Filter] = Array.empty
-  private var aggSpecs: Seq[AggSpec] = Nil
   private var limit: Option[Int] = None
 
   /** Accept stats-prunable comparisons for segment skipping; hand EVERY
@@ -342,89 +348,11 @@ class GraftScanBuilder(path: String, hconf: SerializableConfiguration,
     * is filtered; Spark keeps the exact global limit on top (the same
     * split as the reference's per-stream `take_while` + engine-level
     * GlobalLimit, opener.rs:212-266). */
-  override def pushLimit(n: Int): Boolean =
-    if (aggSpecs.nonEmpty) false else { limit = Some(n); true }
+  override def pushLimit(n: Int): Boolean = { limit = Some(n); true }
   override def isPartiallyPushed(): Boolean = true
 
-  /** COUNT(*)/MIN/MAX with no grouping and no residual filters reduce to
-    * the segment headers: nRows for counts, the chunk min/max statistics
-    * for MIN/MAX over stats-bearing columns — the reader requests a
-    * payload-free parquet schema, so data pages are never read at all (a
-    * count or min over the 10^12-row table touches megabytes, not
-    * petabytes; the reference's exact-stats stance, metadata.rs:64-86).
-    * Partial pushdown: each partition returns its own partials, Spark
-    * merges. Any filter blocks the push (ours always re-filter). */
-  override def supportCompletePushDown(aggregation: Aggregation): Boolean = false
-  override def pushAggregation(aggregation: Aggregation): Boolean = {
-    // a 2-part reference is a STRUCT MEMBER (`info.score` arrives as
-    // FieldReference(["info","score"]) under nested pushdown): resolve it
-    // onto the member's own stream (`info__f_score`) the way
-    // resolveStreamAttrs does for filters — the stream's header stats
-    // cover non-null members and its nValues counts them, exactly SQL's
-    // null-ignoring MIN/MAX/COUNT domain over `info.score`
-    def field(e: org.apache.spark.sql.connector.expressions.Expression): Option[String] =
-      e match {
-        case nr: NamedReference if nr.fieldNames().length == 1 => Some(nr.fieldNames()(0))
-        case nr: NamedReference if nr.fieldNames().length == 2 =>
-          val c = nr.fieldNames()(0); val m = nr.fieldNames()(1)
-          fullSchema.fields.find(_.name == c).map(_.dataType) match {
-            case Some(st: org.apache.spark.sql.types.StructType)
-              if st.fieldNames.contains(m) => Some(s"${c}__f_$m")
-            case _ => None
-          }
-        case _ => None
-      }
-    // every SCALAR column carries exact min/max stats: the canonical three
-    // plus all metadata columns (their stats cover non-null values only —
-    // exactly SQL MIN/MAX's null-ignoring domain; the header fold skips
-    // all-null chunks' neutral stats, so the fold is exact). `tokens` is
-    // excluded: SQL MIN over an array column is lexicographic array order,
-    // which element stats cannot answer (GraftStatsAggPushdown handles the
-    // element shapes instead).
-    // binary columns record neutral stats (no SQL order), array columns'
-    // element stats can't answer SQL's lexicographic array MIN/MAX, and
-    // map/struct columns store their stats under pseudo-stream names
-    // (c__k/c__v, c__p/c__f_*) that cannot answer SQL's struct ordering —
-    // all are excluded from MIN/MAX folding (COUNT still folds)
-    val statCols = fullSchema.fields.collect {
-      case f if f.name != "tokens" &&
-        f.dataType != org.apache.spark.sql.types.BinaryType &&
-        !f.dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType] &&
-        !f.dataType.isInstanceOf[org.apache.spark.sql.types.MapType] &&
-        !f.dataType.isInstanceOf[org.apache.spark.sql.types.StructType] => f.name
-    }.toSet
-    // a resolved MEMBER stream (`c__f_m`) folds MIN/MAX when the member
-    // type has SQL order (every scalar but binary); its stats cover
-    // non-null members only — SQL's domain for `MIN(info.score)`
-    def statOk(n: String): Boolean = statCols(n) ||
-      (n.contains("__f_") && typeOf(n).exists {
-        case org.apache.spark.sql.types.BinaryType => false
-        case dt => MetaColumns.isScalar(dt)
-      })
-    // COUNT(col) folds from headers for EVERY column: rows for the
-    // non-nullable canonical four, the header-summed non-null count for
-    // scalar/binary metadata columns, the __len stream's for lists, the
-    // __k pseudo-list's __len for maps, the __p presence stream's for
-    // structs (GraftAggReader resolves the stream per type) — and for a
-    // member stream, its own nValues (null where struct OR member is)
-    val tableCols = fullSchema.fields.map(_.name).toSet
-    def countOk(n: String): Boolean = tableCols(n) || n.contains("__f_")
-    if (!toggles.pushdown) return false // kill switch
-    if (pushed.nonEmpty || limit.isDefined || aggregation.groupByExpressions.nonEmpty ||
-      aggregation.aggregateExpressions.isEmpty) return false
-    val specs = aggregation.aggregateExpressions.map {
-      case _: CountStar => Some(AggSpec.CountAll)
-      case c: Count if !c.isDistinct => field(c.column).filter(countOk).map(AggSpec.CountOf)
-      case m: Min => field(m.column).filter(statOk).map(AggSpec.MinOf)
-      case m: Max => field(m.column).filter(statOk).map(AggSpec.MaxOf)
-      case _ => None
-    }
-    if (specs.forall(_.isDefined)) { aggSpecs = specs.flatten.toSeq; true } else false
-  }
-
   override def build(): Scan =
-    if (aggSpecs.nonEmpty) new GraftAggScan(path, aggSpecs, hconf, asOf)
-    else new GraftScan(path, required,
+    new GraftScan(path, required,
       StatPredicate.normalize(pushed, typeOf), limit, None, hconf, asOf,
       spjBuckets, batchRows = batchRows, toggles = toggles)
 }
@@ -711,21 +639,21 @@ class GraftScan(
 
   override def supportedCustomMetrics(): Array[CustomMetric] = GraftScan.customMetrics
 
-  /** Only an UN-NARROWED scan may fold aggregates from headers
+  /** Only an UN-NARROWED scan may answer aggregates from headers
     * ([[GraftStatsAggPushdown]]): any pushed filter, limit or token
-    * predicate changes the aggregate's input set, and runtime filters
-    * cannot arrive later because an agg scan opts out of them. The
-    * pushdown kill switch gates this too — `graft.scan.pushdown=false`
-    * exists to bypass header stats when debugging a suspected wrong
-    * prune, so answers must not be READ from those same stats. */
-  def statsAggEligible: Boolean =
+    * predicate changes the aggregate's input set. The pushdown kill
+    * switch gates this too — `graft.scan.pushdown=false` exists to bypass
+    * header stats when debugging a suspected wrong prune, so answers must
+    * not be READ from those same stats. */
+  def headerAnswerable: Boolean =
     toggles.pushdown &&
       pushed.isEmpty && limit.isEmpty && tokenRange.isEmpty && tokenPoints.isEmpty &&
       elemRanges.isEmpty && elemPoints.isEmpty && mapStats.isEmpty
 
-  /** Header-stat aggregate twin of this scan ([[GraftStatsAggPushdown]]). */
-  def toStatsAggScan(specs: Seq[AggSpec]): GraftAggScan =
-    new GraftAggScan(path, specs, hconf, asOf)
+  /** The headers of [[files]] folded per stream ([[GraftLayout.foldHeaders]]):
+    * what statistics and the header-answered aggregates read. */
+  private[sources] lazy val headerFold: GraftLayout.FileHeader =
+    GraftLayout.foldHeaders(files, hconf.value)
 
   /** Used by [[GraftTokenRangePushdown]] once per scan (guarded by
     * `tokenRange.isEmpty`); the listing is re-derived lazily in the copy. */
@@ -773,7 +701,7 @@ class GraftScan(
   /** Committed part-files of the table (as-of the requested snapshot),
     * sorted (deterministic partition order). Listed once per scan and
     * shared by planning and statistics. */
-  protected lazy val files: Seq[String] = GraftLayout.listDataFiles(path, hconf.value, asOf)
+  private[sources] lazy val files: Seq[String] = GraftLayout.listDataFiles(path, hconf.value, asOf)
 
   // ---- runtime filtering (DSv2 dynamic pruning) ---------------------------
   // Spark derives IN-set predicates from the selective side of a join at
@@ -826,10 +754,7 @@ class GraftScan(
     * to broadcast small graft tables (a v2 scan is otherwise assumed
     * huge). */
   override def estimateStatistics(): Statistics = new Statistics {
-    private lazy val (rows, bytes, folded) = {
-      val conf = hconf.value
-      var r = 0L
-      var b = 0L
+    private lazy val (rows, bytes) = {
       // header bytesIn is keyed by STREAM name: canonical columns map
       // 1:1 (+ tok_len riding tokens) but struct/map/list metadata
       // columns fan out to pseudo-streams — resolve through streamsFor
@@ -840,37 +765,8 @@ class GraftScan(
           if (f.name == "tokens") Seq("tokens", "tok_len") else Seq(f.name)
         else MetaColumns.streamsFor(f)
       }.toSet
-      // across-files fold of the per-file header folds, for CBO column
-      // statistics: stream -> (range, non-null count, input bytes)
-      val ranges = scala.collection.mutable.HashMap.empty[String, GraftLayout.ColRange]
-      val nVals = scala.collection.mutable.HashMap.empty[String, Long]
-      val colBytes = scala.collection.mutable.HashMap.empty[String, Long]
-      def cmp(a: String, bb: String) = graft.engine.GraftEncoder.compareUtf8(a, bb)
-      GraftLayout.prefetchHeaders(files, conf)
-      files.foreach { f =>
-        val h = GraftLayout.header(f, conf)
-        r += h.rows
-        b += h.bytesIn.collect { case (c, n) if cols.contains(c) => n }.sum
-        h.ranges.foreach { case (c, cr) if cols.contains(c) =>
-          ranges.get(c) match {
-            case None => ranges(c) = cr
-            case Some(p) => ranges(c) = GraftLayout.ColRange(
-              math.min(p.minV, cr.minV), math.max(p.maxV, cr.maxV),
-              if (cmp(cr.minS, p.minS) < 0) cr.minS else p.minS,
-              if (cmp(cr.maxS, p.maxS) > 0) cr.maxS else p.maxS)
-          }
-        case _ => ()
-        }
-        h.nValues.foreach { case (c, n) if cols.contains(c) =>
-          nVals(c) = nVals.getOrElse(c, 0L) + n
-        case _ => ()
-        }
-        h.bytesIn.foreach { case (c, n) if cols.contains(c) =>
-          colBytes(c) = colBytes.getOrElse(c, 0L) + n
-        case _ => ()
-        }
-      }
-      (r, math.max(1L, b), (ranges.toMap, nVals.toMap, colBytes.toMap))
+      (headerFold.rows,
+        math.max(1L, headerFold.bytesIn.collect { case (c, n) if cols.contains(c) => n }.sum))
     }
     override def sizeInBytes(): java.util.OptionalLong = java.util.OptionalLong.of(bytes)
     override def numRows(): java.util.OptionalLong = java.util.OptionalLong.of(rows)
@@ -889,20 +785,10 @@ class GraftScan(
         : java.util.Map[org.apache.spark.sql.connector.expressions.NamedReference,
                         org.apache.spark.sql.connector.read.colstats.ColumnStatistics] = {
       import org.apache.spark.sql.connector.read.colstats.ColumnStatistics
-      val (ranges, nVals, colBytes) = folded
+      val ranges = headerFold.ranges
+      val nVals = headerFold.nValues
+      val colBytes = headerFold.bytesIn
       val nRows = rows
-      def statValue(dt: DataType, v: Long): Any = dt match {
-        case IntegerType | DateType => v.toInt
-        case LongType | TimestampType | TimestampNTZType => v
-        case DoubleType => MetaColumns.fromSortableDouble(v)
-        case FloatType => MetaColumns.fromSortableFloat(v)
-        case BooleanType => v != 0L
-        case ByteType => v.toByte
-        case ShortType => v.toShort
-        case d: DecimalType =>
-          org.apache.spark.sql.types.Decimal.createUnsafe(v, d.precision, d.scale)
-        case other => throw new IllegalStateException(s"unreachable: $other")
-      }
       val out = new java.util.HashMap[
         org.apache.spark.sql.connector.expressions.NamedReference, ColumnStatistics]()
       required.fields.foreach { f =>
@@ -922,8 +808,8 @@ class GraftScan(
         val range = if (isOrderableNum) ranges.get(f.name) else None
         val minMax: (java.util.Optional[Object], java.util.Optional[Object]) = range match {
           case Some(cr) => (
-            java.util.Optional.of(statValue(f.dataType, cr.minV).asInstanceOf[Object]),
-            java.util.Optional.of(statValue(f.dataType, cr.maxV).asInstanceOf[Object]))
+            java.util.Optional.of(MetaColumns.fromStat(f.dataType, cr.minV).asInstanceOf[Object]),
+            java.util.Optional.of(MetaColumns.fromStat(f.dataType, cr.maxV).asInstanceOf[Object]))
           case None => (java.util.Optional.empty[Object](), java.util.Optional.empty[Object]())
         }
         val avgBytes: java.util.OptionalLong = f.dataType match {
@@ -1069,169 +955,6 @@ class GraftReaderFactory(required: StructType, pushed: Array[Filter],
     new GraftColumnarPartitionReader(GraftInputPartition.fileOf(partition),
       required, pushed, limit, tokenRange, hconf.value, tokenPoints, batchRows,
       elemRanges, elemPoints, bloomEnabled)
-}
-
-/** Header-only aggregate scan: COUNT(*)/MIN/MAX partials per part-file from
-  * segment headers; payload pages are never requested from parquet. */
-class GraftAggScan(path: String, specs: Seq[AggSpec], hconf: SerializableConfiguration,
-                   asOf: Option[Long] = None)
-    extends GraftScan(path, GraftTable.TokenSchema, Array.empty, None, None, hconf,
-      asOf = asOf) {
-  // A pushed aggregate's partials are computed straight from the headers;
-  // a runtime filter narrowing them would change the RESULT, not just prune
-  // work — so the agg scan opts out of runtime filtering entirely.
-  override def filterAttributes(): Array[NamedReference] = Array.empty
-  // min/max partials are nullable: a segment-free file still emits a
-  // partial row (count 0, null extrema) — with NO partial rows at all,
-  // Spark's merge would compute sum(counts) over empty input and a pushed
-  // COUNT(*) on an empty table would return null instead of 0
-  /** Column types from the recorded table schema — MIN/MAX partials carry
-    * the column's OWN type (int/long/date/timestamp/double/string), so
-    * metadata-column aggregates push like canonical ones. Struct MEMBER
-    * streams (`c__f_m`, what a pushed `MIN(info.score)` resolves to) carry
-    * the member's own type. */
-  private lazy val colTypes: Map[String, DataType] =
-    GraftTable.tableSchema(path, hconf.value).fields.flatMap { f =>
-      val members = f.dataType match {
-        case st: org.apache.spark.sql.types.StructType =>
-          st.fields.toSeq.map(mf => s"${f.name}__f_${mf.name}" -> mf.dataType)
-        case _ => Nil
-      }
-      (f.name -> f.dataType) +: members
-    }.toMap
-  private def partialType(c: String): DataType =
-    colTypes.getOrElse(c, StringType)
-  /** Element type of an array column — what an ELEMENT extremum partial
-    * carries (`tokens` predates colTypes' metadata DDL: int). */
-  private def elemType(c: String): DataType = colTypes.get(c) match {
-    case Some(org.apache.spark.sql.types.ArrayType(et, _)) => et
-    case _ => IntegerType
-  }
-  override def readSchema(): StructType = StructType(specs.map {
-    case AggSpec.CountAll => StructField("count(*)", LongType, nullable = false)
-    case AggSpec.CountOf(c) => StructField(s"count($c)", LongType, nullable = false)
-    // array ELEMENT extrema (min over array_min / max over array_max, the
-    // GraftStatsAggPushdown rewrite) — NOT SQL MIN(c), which is
-    // lexicographic array order and is never pushed
-    case AggSpec.ElemMinOf(c) => StructField(s"min_elem($c)", elemType(c), nullable = true)
-    case AggSpec.ElemMaxOf(c) => StructField(s"max_elem($c)", elemType(c), nullable = true)
-    case AggSpec.MinOf(c) => StructField(s"min($c)", partialType(c), nullable = true)
-    case AggSpec.MaxOf(c) => StructField(s"max($c)", partialType(c), nullable = true)
-  })
-  override def description(): String =
-    "GraftScan PushedAggregation: [" + specs.map {
-      case AggSpec.CountAll => "COUNT(*)"
-      case AggSpec.CountOf(c) => s"COUNT($c)"
-      case AggSpec.ElemMinOf("tokens") => "MIN_TOKEN_ELEM"
-      case AggSpec.ElemMaxOf("tokens") => "MAX_TOKEN_ELEM"
-      case AggSpec.ElemMinOf(c) => s"MIN_ELEM($c)"
-      case AggSpec.ElemMaxOf(c) => s"MAX_ELEM($c)"
-      case AggSpec.MinOf(c) => s"MIN($c)"
-      case AggSpec.MaxOf(c) => s"MAX($c)"
-    }.mkString(", ") + "]"
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val hc = hconf
-    val sp = specs
-    // CountOf needs the type too: list/map/struct counts resolve to their
-    // __len/__k__len/__p streams, not the column's own name. ELEMENT
-    // extrema carry their types in a SEPARATE map — count(tags) and
-    // min(array_min(tags)) in one aggregate must not collide on the key.
-    val types = specs.collect {
-      case AggSpec.MinOf(c) => c -> partialType(c)
-      case AggSpec.MaxOf(c) => c -> partialType(c)
-      case AggSpec.CountOf(c) => c -> partialType(c)
-    }.toMap
-    val elemTypes = specs.collect {
-      case AggSpec.ElemMinOf(c) => c -> elemType(c)
-      case AggSpec.ElemMaxOf(c) => c -> elemType(c)
-    }.toMap
-    new PartitionReaderFactory {
-      override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-        new GraftAggReader(GraftInputPartition.fileOf(partition), sp, hc.value, types, elemTypes)
-    }
-  }
-}
-
-/** One partial-aggregate row per part-file, projected straight from
-  * [[GraftLayout.header]] — the SAME payload-free header walk (and
-  * memoization) planning and statistics use; `FileHeader.rows`/`ranges`
-  * carry exactly the count and folded min/max the pushed aggregate needs.
-  * A segment-free file still contributes (count 0, null extrema) — see
-  * [[GraftAggScan.readSchema]]. */
-class GraftAggReader(file: String, specs: Seq[AggSpec], conf: Configuration,
-                     types: Map[String, DataType] = Map.empty,
-                     elemTypes: Map[String, DataType] = Map.empty)
-    extends PartitionReader[InternalRow] {
-  private var done = false
-  private var row: InternalRow = _
-
-  /** Emit one folded extremum in the given type (the stored stat
-    * domain is a 64-bit long; doubles invert the sortable-bits bijection). */
-  private def emit(out: GenericInternalRow, i: Int, dt: DataType,
-                   r: GraftLayout.ColRange, isMin: Boolean): Unit = {
-    val v = if (isMin) r.minV else r.maxV
-    dt match {
-      case IntegerType | DateType => out.setInt(i, v.toInt)
-      case LongType | TimestampType | TimestampNTZType => out.setLong(i, v)
-      case DoubleType => out.setDouble(i, MetaColumns.fromSortableDouble(v))
-      case FloatType => out.setFloat(i, MetaColumns.fromSortableFloat(v))
-      case BooleanType => out.setBoolean(i, v != 0L)
-      case ByteType => out.setByte(i, v.toByte)
-      case ShortType => out.setShort(i, v.toShort)
-      case d: DecimalType => out.update(i,
-        org.apache.spark.sql.types.Decimal.createUnsafe(v, d.precision, d.scale))
-      case _ => out.update(i, UTF8String.fromString(if (isMin) r.minS else r.maxS))
-    }
-  }
-
-  override def next(): Boolean = {
-    if (done) return false
-    done = true
-    val h = GraftLayout.header(file, conf)
-    val out = new GenericInternalRow(specs.length)
-    specs.zipWithIndex.foreach {
-      case (AggSpec.CountAll, i) => out.setLong(i, h.rows)
-      // COUNT(col): rows for the non-nullable canonical columns; the
-      // header-summed non-null chunk cardinality for metadata columns.
-      // LIST metadata columns count non-null LISTS — that lives in the
-      // __len stream's nValues (the element stream's counts elements).
-      // MAP columns count non-null maps via the __k pseudo-list's __len
-      // stream (a pseudo-list is null exactly where the map is); STRUCT
-      // columns via the __p presence stream (its PRESENT mask IS the
-      // struct nullability). Absent streams (schema-evolved files written
-      // before the column existed) fold to 0 — all rows null there.
-      case (AggSpec.CountOf(c), i) =>
-        if (MetaColumns.CanonicalNames.contains(c)) out.setLong(i, h.rows)
-        else types.get(c) match {
-          case Some(dt) if MetaColumns.isList(dt) =>
-            out.setLong(i, h.nValues.getOrElse(MetaColumns.lenStream(c), 0L))
-          case Some(_: org.apache.spark.sql.types.MapType) =>
-            out.setLong(i, h.nValues.getOrElse(MetaColumns.lenStream(s"${c}__k"), 0L))
-          case Some(_: org.apache.spark.sql.types.StructType) =>
-            out.setLong(i, h.nValues.getOrElse(s"${c}__p", 0L))
-          case _ => out.setLong(i, h.nValues.getOrElse(c, 0L))
-        }
-      // array ELEMENT extrema: the fold skips value-less chunks, so the
-      // range is exact over the elements present; an element-free file
-      // emits null (= array_min/array_max over empty arrays, MIN ignores)
-      case (AggSpec.ElemMinOf(c), i) =>
-        h.ranges.get(c).fold(out.setNullAt(i))(r =>
-          emit(out, i, elemTypes.getOrElse(c, IntegerType), r, isMin = true))
-      case (AggSpec.ElemMaxOf(c), i) =>
-        h.ranges.get(c).fold(out.setNullAt(i))(r =>
-          emit(out, i, elemTypes.getOrElse(c, IntegerType), r, isMin = false))
-      case (AggSpec.MinOf(c), i) =>
-        h.ranges.get(c).fold(out.setNullAt(i))(r =>
-          emit(out, i, types.getOrElse(c, StringType), r, isMin = true))
-      case (AggSpec.MaxOf(c), i) =>
-        h.ranges.get(c).fold(out.setNullAt(i))(r =>
-          emit(out, i, types.getOrElse(c, StringType), r, isMin = false))
-    }
-    row = out
-    true
-  }
-  override def get(): InternalRow = row
-  override def close(): Unit = ()
 }
 
 /** Sound may-match evaluation of pushed filters against [min, max] column

@@ -6,10 +6,13 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path => HPath}
 import org.apache.parquet.{HadoopReadOptions, ParquetReadOptions}
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
+import org.apache.parquet.example.data.Group
+import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
+import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.api.ReadSupport.ReadContext
 import org.apache.parquet.hadoop.example.GroupReadSupport
-import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.hadoop.util.{HadoopCodecs, HadoopInputFile}
+import org.apache.parquet.io.ColumnIOFactory
 import org.apache.parquet.schema.MessageType
 
 /** Driver-side knowledge of the segment-table layout shared by planning,
@@ -27,7 +30,15 @@ object GraftLayout {
   /** File-level [min, max] of one column stream, folded over the file's
     * chunk stats — the partition-skipping index (int columns use
     * minV/maxV, string columns minS/maxS in UTF-8 byte order). */
-  final case class ColRange(minV: Long, maxV: Long, minS: String, maxS: String)
+  final case class ColRange(minV: Long, maxV: Long, minS: String, maxS: String) {
+    /** The smallest range covering both (strings in UTF-8 byte order). */
+    def union(o: ColRange): ColRange = {
+      val cmp = graft.engine.GraftEncoder.compareUtf8 _
+      ColRange(math.min(minV, o.minV), math.max(maxV, o.maxV),
+        if (cmp(o.minS, minS) < 0) o.minS else minS,
+        if (cmp(o.maxS, maxS) > 0) o.maxS else maxS)
+    }
+  }
 
   /** Payload-free per-file header sums. `bytesIn` is the header-recorded
     * UNENCODED byte count per column stream — i.e. the measured decoded
@@ -57,15 +68,16 @@ object GraftLayout {
         size() > HeaderCacheMax
     }
 
-  /** The read options of the last Configuration footers were opened with.
-    * `ParquetFileReader.open(HadoopInputFile)` builds fresh options from
-    * the Configuration on every call (it copies every property — a few ms
-    * per file), so a listing that sniffs N footers under one Configuration
-    * pays that N times. One slot is enough: the callers that open many
-    * footers (compaction's input sniff, header prefetch) hold one
-    * Configuration for the whole listing. The options are path-free, which
-    * only matters for parquet modular encryption (per-file decryption
-    * properties) — graft never writes encrypted parquet. */
+  /** The read options of the last Configuration files were opened with.
+    * `ParquetFileReader.open(HadoopInputFile)` and `ParquetReader.builder
+    * (...).withConf` build fresh options from the Configuration on every
+    * call (they copy every property — a few ms per file), so a listing
+    * that opens N files under one Configuration pays that N times. One
+    * slot is enough: the callers that open many files (header prefetch,
+    * the ledger fold, compaction's input sniff) hold one Configuration
+    * for the whole listing. The options are path-free, which only matters
+    * for parquet modular encryption (per-file decryption properties) —
+    * graft never writes encrypted parquet. */
   @volatile private var lastReadOptions: (Configuration, ParquetReadOptions) = null
 
   private def readOptions(conf: Configuration): ParquetReadOptions = {
@@ -78,34 +90,63 @@ object GraftLayout {
     }
   }
 
+  /** Opens `file` with the shared [[readOptions]] and a codec factory of
+    * its own: a factory caches one decompressor per codec, which is not
+    * thread-safe ([[prefetchHeaders]] reads files in parallel), and
+    * closing a reader releases its factory. */
+  private def withReader[A](file: String, conf: Configuration)(f: ParquetFileReader => A): A = {
+    val shared = readOptions(conf)
+    val opts = ParquetReadOptions.builder(shared.getConfiguration).copy(shared)
+      .withCodecFactory(HadoopCodecs.newFactory(conf, 0)).build()
+    val r = ParquetFileReader.open(HadoopInputFile.fromPath(new HPath(file), conf), opts)
+    try f(r) finally r.close()
+  }
+
+  /** Every record of an open file, projected to the top-level fields
+    * `keep` accepts: parquet reads only those fields' column chunks, so a
+    * dropped `c_<s>__payload` field's pages are never fetched. */
+  private def foreachRecord(r: ParquetFileReader, keep: String => Boolean)(f: Group => Unit): Unit = {
+    val md = r.getFooter.getFileMetaData
+    val schema = md.getSchema
+    val requested = new MessageType(schema.getName,
+      schema.getFields.asScala.filter(t => keep(t.getName)).asJava)
+    r.setRequestedSchema(requested)
+    val io = new ColumnIOFactory(md.getCreatedBy).getColumnIO(requested, schema, true)
+    var pages = r.readNextRowGroup()
+    while (pages != null) {
+      val records = io.getRecordReader(pages, new GroupRecordConverter(requested))
+      var i = 0L
+      while (i < pages.getRowCount) { f(records.read()); i += 1 }
+      pages = r.readNextRowGroup()
+    }
+  }
+
   /** Footer facts of a [[SegmentLayoutV2]] file. Any other parquet file —
     * in particular one in the pre-v2 nested `cols` layout — fails here,
     * naming the file, before a reader can misread it. */
-  def footerInfo(file: String, conf: Configuration): FooterInfo = {
-    footerCache.synchronized {
-      val hit = footerCache.get(file)
-      if (hit != null) return hit
+  def footerInfo(file: String, conf: Configuration): FooterInfo =
+    cachedFooter(file).getOrElse(withReader(file, conf)(footerOf(file, _)))
+
+  private def cachedFooter(file: String): Option[FooterInfo] =
+    footerCache.synchronized(Option(footerCache.get(file)))
+
+  private def footerOf(file: String, r: ParquetFileReader): FooterInfo =
+    cachedFooter(file).getOrElse {
+      val md = r.getFooter.getFileMetaData
+      val schema = md.getSchema
+      if (!SegmentLayoutV2.isV2(schema))
+        throw new IllegalStateException(
+          s"$file is not a v2 graft segment file " +
+            "(the pre-v2 nested `cols` layout is no longer read)")
+      val names = schema.getFields.asScala.map(_.getName).toSeq
+      val blooms = md.getKeyValueMetaData.asScala.toMap.collect {
+        case (k, v) if k.startsWith("graft.filebloom.") && v != null && v.nonEmpty =>
+          k.stripPrefix("graft.filebloom.") -> java.util.Base64.getDecoder.decode(v)
+      }
+      val fi = FooterInfo(SegmentLayoutV2.streamsOf(names), names.toSet, blooms)
+      footerCache.synchronized { footerCache.put(file, fi) }
+      fi
     }
-    val r = ParquetFileReader.open(
-      HadoopInputFile.fromPath(new HPath(file), conf), readOptions(conf))
-    val fi =
-      try {
-        val md = r.getFooter.getFileMetaData
-        val schema = md.getSchema
-        if (!SegmentLayoutV2.isV2(schema))
-          throw new IllegalStateException(
-            s"$file is not a v2 graft segment file " +
-              "(the pre-v2 nested `cols` layout is no longer read)")
-        val names = schema.getFields.asScala.map(_.getName).toSeq
-        val blooms = md.getKeyValueMetaData.asScala.toMap.collect {
-          case (k, v) if k.startsWith("graft.filebloom.") && v != null && v.nonEmpty =>
-            k.stripPrefix("graft.filebloom.") -> java.util.Base64.getDecoder.decode(v)
-        }
-        FooterInfo(SegmentLayoutV2.streamsOf(names), names.toSet, blooms)
-      } finally r.close()
-    footerCache.synchronized { footerCache.put(file, fi) }
-    fi
-  }
 
   /** Bounded LRU: a process-lifetime unbounded map keyed by part-file path
     * would retain a FileHeader for every file ever planned — a driver OOM
@@ -165,33 +206,46 @@ object GraftLayout {
     } finally pool.shutdownNow()
   }
 
-  /** Per-stream stat COLUMNS — the requested schema keeps only nRows + the
-    * stat fields, so parquet's column pruning never reads payload pages. */
-  private def readHeader(file: String, conf: Configuration): FileHeader = {
-    val fi = footerInfo(file, conf)
-    val statSuffixes = Set("minV", "maxV", "minS", "maxS", "bytesIn", "nValues")
-    val wanted: Set[String] = Set("nRows") ++
-      fi.streams.flatMap(s => statSuffixes.map(f => SegmentLayoutV2.field(s, f)))
-    val reader = ParquetReader
-      .builder(new NameFilterReadSupport(wanted.contains _), new HPath(file))
-      .withConf(conf).build()
+  /** Header sums of many part-files, folded per stream: rows, bytes and
+    * non-null counts add up and ranges widen ([[ColRange.union]]), so a
+    * stream's range covers exactly the files that hold values of it.
+    * File blooms are not folded. Reads through the memoized [[header]]s. */
+  def foldHeaders(files: Seq[String], conf: Configuration): FileHeader = {
+    prefetchHeaders(files, conf)
     var rows = 0L
     val bytes = scala.collection.mutable.Map.empty[String, Long]
     val ranges = scala.collection.mutable.Map.empty[String, ColRange]
     val nVals = scala.collection.mutable.Map.empty[String, Long]
-    val cmp = graft.engine.GraftEncoder.compareUtf8 _
-    try {
-      var g = reader.read()
-      while (g != null) {
-        rows += g.getInteger("nRows", 0)
-        fi.streams.foreach { s =>
-          def has(f: String): Boolean =
-            g.getFieldRepetitionCount(SegmentLayoutV2.field(s, f)) > 0
-          // a segment missing this stream entirely (flattenSegments writes
-          // NULL stream fields then) contributes nothing — same soundness
-          // stance as the chunk reader's absent-stream guard
-          if (!has("nValues")) ()
-          else {
+    files.foreach { f =>
+      val h = header(f, conf)
+      rows += h.rows
+      h.bytesIn.foreach { case (c, n) => bytes(c) = bytes.getOrElse(c, 0L) + n }
+      h.nValues.foreach { case (c, n) => nVals(c) = nVals.getOrElse(c, 0L) + n }
+      h.ranges.foreach { case (c, r) => ranges(c) = ranges.get(c).fold(r)(_.union(r)) }
+    }
+    FileHeader(rows, bytes.toMap, ranges.toMap, Map.empty, nVals.toMap)
+  }
+
+  /** Per-stream stat COLUMNS — the requested schema keeps only nRows + the
+    * stat fields, so parquet's column pruning never reads payload pages. */
+  private def readHeader(file: String, conf: Configuration): FileHeader = withReader(file, conf) { reader =>
+    val fi = footerOf(file, reader)
+    val statSuffixes = Set("minV", "maxV", "minS", "maxS", "bytesIn", "nValues")
+    val wanted: Set[String] = Set("nRows") ++
+      fi.streams.flatMap(s => statSuffixes.map(f => SegmentLayoutV2.field(s, f)))
+    var rows = 0L
+    val bytes = scala.collection.mutable.Map.empty[String, Long]
+    val ranges = scala.collection.mutable.Map.empty[String, ColRange]
+    val nVals = scala.collection.mutable.Map.empty[String, Long]
+    foreachRecord(reader, wanted.contains) { g =>
+      rows += g.getInteger("nRows", 0)
+      fi.streams.foreach { s =>
+        def has(f: String): Boolean =
+          g.getFieldRepetitionCount(SegmentLayoutV2.field(s, f)) > 0
+        // a segment missing this stream entirely (flattenSegments writes
+        // NULL stream fields then) contributes nothing — same soundness
+        // stance as the chunk reader's absent-stream guard
+        if (has("nValues")) {
           bytes.updateWith(s)(v => Some(v.getOrElse(0L) +
             (if (has("bytesIn")) g.getLong(SegmentLayoutV2.field(s, "bytesIn"), 0) else 0L)))
           val nv = g.getLong(SegmentLayoutV2.field(s, "nValues"), 0)
@@ -200,28 +254,20 @@ object GraftLayout {
           // metadata chunk — nValues is the NON-NULL count) records
           // neutral 0/0 stats — folding those in would (a) widen the file
           // range spuriously and (b) make the fold unusable for MIN/MAX
-          // aggregate pushdown (a neutral 0 is indistinguishable from real
-          // value 0). Skip them: the folded range is then EXACT over the
-          // values present.
+          // answered from headers (a neutral 0 is indistinguishable from
+          // real value 0). Skip them: the folded range is then EXACT over
+          // the values present.
           if (nv > 0L) {
             val r = ColRange(
               if (has("minV")) g.getLong(SegmentLayoutV2.field(s, "minV"), 0) else 0L,
               if (has("maxV")) g.getLong(SegmentLayoutV2.field(s, "maxV"), 0) else 0L,
               if (has("minS")) g.getString(SegmentLayoutV2.field(s, "minS"), 0) else "",
               if (has("maxS")) g.getString(SegmentLayoutV2.field(s, "maxS"), 0) else "")
-            ranges.updateWith(s) {
-              case None => Some(r)
-              case Some(p) => Some(ColRange(
-                math.min(p.minV, r.minV), math.max(p.maxV, r.maxV),
-                if (cmp(r.minS, p.minS) < 0) r.minS else p.minS,
-                if (cmp(r.maxS, p.maxS) > 0) r.maxS else p.maxS))
-            }
-          }
+            ranges(s) = ranges.get(s).fold(r)(_.union(r))
           }
         }
-        g = reader.read()
       }
-    } finally reader.close()
+    }
     FileHeader(rows, bytes.toMap, ranges.toMap, fi.blooms, nVals.toMap)
   }
 
@@ -468,17 +514,10 @@ object GraftLayout {
     ledgerFilesRead.incrementAndGet()
     val out = ArrayBuffer.empty[LedgerEntry]
     val top = Set("snapshotId", "bucket", "status", "nRows")
-    val reader = ParquetReader
-      .builder(new NameFilterReadSupport(top.contains _), new HPath(file))
-      .withConf(conf).build()
-    try {
-      var g = reader.read()
-      while (g != null) {
-        out += LedgerEntry(g.getLong("snapshotId", 0), g.getInteger("bucket", 0),
-          g.getString("status", 0), g.getLong("nRows", 0))
-        g = reader.read()
-      }
-    } finally reader.close()
+    withReader(file, conf)(foreachRecord(_, top.contains) { g =>
+      out += LedgerEntry(g.getLong("snapshotId", 0), g.getInteger("bucket", 0),
+        g.getString("status", 0), g.getLong("nRows", 0))
+    })
     out.toArray
   }
 

@@ -1,6 +1,5 @@
 package graft.sources
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{And, Attribute, EqualTo, Expression, GetMapValue, GreaterThan, GreaterThanOrEqual, IsNotNull, LessThan, LessThanOrEqual, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -37,7 +36,7 @@ object GraftMapAccessPushdown extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
     case f @ Filter(cond, r: DataSourceV2ScanRelation)
-        if r.scan.isInstanceOf[GraftScan] && !r.scan.isInstanceOf[GraftAggScan] && {
+        if r.scan.isInstanceOf[GraftScan] && {
           val gs = r.scan.asInstanceOf[GraftScan]
           gs.toggles.pushdown && gs.mapStats.isEmpty
         } =>
@@ -132,13 +131,5 @@ object GraftMapAccessPushdown extends Rule[LogicalPlan] {
         keyed(m, k)((_, _) => Some(Nil))
       case _ => Nil
     }
-  }
-
-  /** Install on a live session (idempotent); platform sessions get it via
-    * `spark.sql.extensions=graft.engine.GraftExtensions`. */
-  def install(spark: SparkSession): Unit = {
-    val cur = spark.experimental.extraOptimizations
-    if (!cur.contains(GraftMapAccessPushdown))
-      spark.experimental.extraOptimizations = cur :+ GraftMapAccessPushdown
   }
 }

@@ -1,139 +1,134 @@
 package graft.sources
 
-import org.apache.spark.sql.catalyst.expressions.{Alias, ArrayMax, ArrayMin, Attribute, AttributeReference, Coalesce, Literal, NamedExpression}
-import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count, Max, Min, Sum}
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{AliasHelper, ArrayMax, ArrayMin, Attribute, AttributeMap, Alias, Expression, GetStructField, Literal}
+import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count, Max, Min}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LocalRelation, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
-import org.apache.spark.sql.types.{ArrayType, BinaryType, IntegerType, LongType, StringType}
+import org.apache.spark.sql.execution.{LocalTableScanExec, SparkPlan}
+import org.apache.spark.sql.execution.datasources.v2.{BatchScanExec, DataSourceV2ScanRelation}
+import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, IntegerType, LongType, MapType, StringType, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
-/** Pushes array ELEMENT extrema to the segment headers (round-3 judge #8,
-  * generalized in round 5 from the hard-coded tokens column to every LIST
-  * column): `SELECT min(array_min(c)), max(array_max(c))` shapes reduce to
-  * the header-folded element-stream chunk stats — the same numbers the
-  * reference keeps as ORC column statistics for a nested stream
-  * (/root/reference/src/metadata.rs:64-86) — so the global element range
-  * of a 10^12-row table is answered from kilobytes of headers, payload
-  * pages never read.
+/** Answers header-answerable aggregates on the driver: an ungrouped
+  * `Aggregate` directly over an un-narrowed graft scan, whose every output
+  * is one of the shapes below, is computed during optimization from the
+  * scan's folded segment headers ([[GraftScan.headerFold]] — the same
+  * memoized fold `estimateStatistics` reads, over the same planned files,
+  * `snapshotId` respected) and replaced by a [[LocalRelation]] holding the
+  * one answer row. The query then runs no Spark job, and no payload page
+  * is read. Spark's own `OptimizeMetadataOnlyQuery` uses the same pattern;
+  * the numbers are the exact statistics the reference hands DataFusion
+  * (the reference's `src/metadata.rs:64-86`).
   *
-  * Spark's own DSv2 aggregate pushdown cannot carry these: the connector
-  * API only offers MIN/MAX over plain column references, and SQL
-  * `MIN(c)` on an array column means LEXICOGRAPHIC array order — a
-  * different function the stats can't answer. This rule therefore rewrites
-  * the logical plan after standard pushdown (installed via
-  * `spark.experimental.extraOptimizations`, like
-  * [[GraftTokenRangePushdown]]): the scan becomes a [[GraftAggScan]]
-  * emitting one header-derived partial row per part-file, and the
-  * aggregate re-merges the partials (Min over file minima, Sum over file
-  * counts) — the exact split Spark plans for its own pushed aggregates.
-  * Plain MIN/MAX/COUNT over stat-bearing scalar columns riding in the SAME
-  * aggregate fold too (they would otherwise block the rewrite: Spark's own
-  * pushdown is all-or-nothing across the aggregate list, and so is this).
+  * The shapes:
+  *  - `COUNT(*)`: the header row count;
+  *  - `COUNT(col)`: rows for the non-nullable canonical columns, else the
+  *    non-null count of the column's presence-bearing stream — its own
+  *    for scalars and struct members (`info.score` -> `info__f_score`,
+  *    null where the struct OR the member is), `__len` for lists, the
+  *    `__k` pseudo-list's `__len` for maps, `__p` for structs. A stream a
+  *    file lacks (schema evolution) counts 0 there: all its rows are null;
+  *  - `MIN`/`MAX` over an ordered scalar column or struct member: the
+  *    folded stream range. Binary columns record neutral stats, and SQL
+  *    orders arrays, maps and structs lexicographically, which stream
+  *    stats cannot answer, so those never fold;
+  *  - element extrema `min(array_min(c))` / `max(array_max(c))` over
+  *    int/long/string lists: the element stream's folded range.
   *
-  * Soundness hinges on the header fold skipping VALUE-LESS chunks
-  * ([[GraftLayout]] `nValues > 0` guard): `array_min(empty)` is null,
-  * array_min/array_max skip null ELEMENTS, and MIN ignores the nulls, so
-  * the folded range over chunks that HAVE elements is exactly the
-  * aggregate's domain. A file with no elements at all has no folded range
-  * and emits a null partial. Only an un-narrowed scan qualifies (no pushed
-  * filters / limit / token predicates): any residual filter changes the
-  * aggregate's input set. */
-object GraftStatsAggPushdown extends Rule[LogicalPlan] {
-
-  private sealed trait Shape
-  private final case class ElemMin(col: String) extends Shape
-  private final case class ElemMax(col: String) extends Shape
-  private final case class PlainMin(col: String) extends Shape
-  private final case class PlainMax(col: String) extends Shape
-  private final case class PlainCount(col: String) extends Shape
-  private case object CountStar extends Shape
+  * Soundness rests on the header fold skipping VALUE-LESS chunks
+  * ([[GraftLayout]] `nValues > 0` guard): MIN/MAX and array_min/array_max
+  * ignore nulls, so a range folded over the chunks that hold values is
+  * exactly the aggregate's domain, and a table with none answers null.
+  * Any filter, limit or token predicate between the aggregate and the
+  * scan, or `graft.scan.pushdown=false`, leaves the plan alone
+  * ([[GraftScan.headerAnswerable]]); so does a single output of any other
+  * shape (`avg`, `sum`, DISTINCT, FILTER clauses, grouping). */
+object GraftStatsAggPushdown extends Rule[LogicalPlan] with AliasHelper {
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
-    case agg @ Aggregate(Seq(), aggExprs, r: DataSourceV2ScanRelation, None)
-        if r.scan.isInstanceOf[GraftScan] && !r.scan.isInstanceOf[GraftAggScan] &&
-          r.scan.asInstanceOf[GraftScan].statsAggEligible && aggExprs.nonEmpty =>
-      val shapes = aggExprs.map(shapeOf)
-      // every output must be a foldable shape, and at least one must be an
-      // element extremum (all-plain aggregates are already Spark's own
-      // DSv2 pushdown — don't shadow it)
-      if (shapes.exists(_.isEmpty) ||
-        !shapes.flatten.exists(s => s.isInstanceOf[ElemMin] || s.isInstanceOf[ElemMax]))
-        agg
-      else {
-        val gs = r.scan.asInstanceOf[GraftScan]
-        val specs = shapes.flatten.map {
-          case ElemMin(c) => AggSpec.ElemMinOf(c)
-          case ElemMax(c) => AggSpec.ElemMaxOf(c)
-          case PlainMin(c) => AggSpec.MinOf(c)
-          case PlainMax(c) => AggSpec.MaxOf(c)
-          case PlainCount(c) => AggSpec.CountOf(c)
-          case CountStar => AggSpec.CountAll
-        }
-        val aggScan = gs.toStatsAggScan(specs)
-        val newOutput: Seq[AttributeReference] =
-          aggScan.readSchema().fields.toSeq.map(f =>
-            AttributeReference(f.name, f.dataType, f.nullable)())
-        val rewritten: Seq[NamedExpression] =
-          aggExprs.zip(shapes.flatten).zip(newOutput).map {
-            case ((a: Alias, shape), partial) =>
-              val merged = shape match {
-                case ElemMin(_) | PlainMin(_) => Min(partial).toAggregateExpression()
-                case ElemMax(_) | PlainMax(_) => Max(partial).toAggregateExpression()
-                // COUNT is 0 on an empty table, but Sum over zero partial
-                // rows (no part-files) is null — coalesce restores the
-                // count contract
-                case CountStar | PlainCount(_) => Coalesce(Seq(
-                  Sum(partial).toAggregateExpression(), Literal(0L)))
-              }
-              Alias(merged, a.name)(exprId = a.exprId)
-            case ((other, _), _) =>
-              throw new IllegalStateException(s"unreachable non-alias agg: $other")
-          }
-        Aggregate(Nil, rewritten, r.copy(scan = aggScan, output = newOutput), None)
+    case agg @ Aggregate(Seq(), aggExprs, child, _) if aggExprs.nonEmpty =>
+      scanUnder(child) match {
+        case Some((gs, aliases)) if gs.headerAnswerable =>
+          val answers = aggExprs.map(e => answerOf(replaceAlias(e, aliases)))
+          if (answers.forall(_.isDefined)) {
+            val h = gs.headerFold
+            LocalRelation(agg.output, Seq(InternalRow.fromSeq(answers.map(_.get(h)))))
+          } else agg
+        case _ => agg
       }
   }
 
-  /** Array columns whose element STREAM carries orderable stats: int/long
-    * elements fold from minV/maxV, strings from minS/maxS (UTF-8 byte
-    * order on both sides — GraftEncoder.compareUtf8 = UTF8String order). */
-  private def elemStats(e: Any): Option[String] = e match {
-    case a: Attribute => a.dataType match {
-      case ArrayType(IntegerType | LongType | StringType, _) => Some(a.name)
+  /** True when `plan` was answered on the driver: a local relation and no
+    * graft scan left to execute. */
+  def answeredOnDriver(plan: SparkPlan): Boolean =
+    plan.collectFirst { case l: LocalTableScanExec => l }.isDefined &&
+      plan.collectFirst { case b: BatchScanExec if b.scan.isInstanceOf[GraftScan] => b }.isEmpty
+
+  /** The graft scan an aggregate reads, seen through at most one
+    * projection (column pruning and nested-field aliasing put one there),
+    * with that projection's aliases. */
+  private def scanUnder(child: LogicalPlan): Option[(GraftScan, AttributeMap[Alias])] =
+    child match {
+      case r: DataSourceV2ScanRelation => graftScan(r).map(_ -> AttributeMap.empty[Alias])
+      case p @ Project(_, r: DataSourceV2ScanRelation) => graftScan(r).map(_ -> getAliasMap(p))
+      case _ => None
+    }
+
+  private def graftScan(r: DataSourceV2ScanRelation): Option[GraftScan] = r.scan match {
+    case gs: GraftScan => Some(gs)
+    case _ => None
+  }
+
+  /** The header stream a column reference reads, with its type: a column,
+    * or a member of a struct column (`c__f_m`). */
+  private def streamOf(e: Expression): Option[(String, DataType)] = e match {
+    case a: Attribute => Some(a.name -> a.dataType)
+    case g @ GetStructField(a: Attribute, _, _) => Some(s"${a.name}__f_${g.extractFieldName}" -> g.dataType)
+    case _ => None
+  }
+
+  /** How one aggregate output is computed from the fold, if it can be. */
+  private def answerOf(e: Expression): Option[GraftLayout.FileHeader => Any] = e match {
+    case AggregateExpression(f, _, false, None, _) => f match {
+      case Count(Seq(l: Literal)) if l.value != null => Some(_.rows)
+      case Count(Seq(c)) => streamOf(c).map { case (s, dt) => countOf(s, dt) }
+      case Min(ArrayMin(c)) => elemStream(c).map { case (s, et) => extremum(s, et, isMin = true) }
+      case Max(ArrayMax(c)) => elemStream(c).map { case (s, et) => extremum(s, et, isMin = false) }
+      case Min(c) => streamOf(c).filter(ordered).map { case (s, dt) => extremum(s, dt, isMin = true) }
+      case Max(c) => streamOf(c).filter(ordered).map { case (s, dt) => extremum(s, dt, isMin = false) }
       case _ => None
     }
     case _ => None
   }
 
-  /** Scalar columns whose own stream stats answer plain MIN/MAX: every
-    * orderable scalar (binary has stats-free neutral entries; arrays/maps/
-    * structs order lexicographically, which stats can't answer). */
-  private def scalarStats(e: Any): Option[String] = e match {
-    case a: Attribute if a.name != "tokens" && a.dataType != BinaryType &&
-      MetaColumns.isScalar(a.dataType) => Some(a.name)
+  private def countOf(s: String, dt: DataType): GraftLayout.FileHeader => Any = {
+    val presence = dt match {
+      case _ if MetaColumns.CanonicalNames.contains(s) => None
+      case _: MapType => Some(MetaColumns.lenStream(s"${s}__k"))
+      case _: StructType => Some(s"${s}__p")
+      case _ if MetaColumns.isList(dt) => Some(MetaColumns.lenStream(s))
+      case _ => Some(s)
+    }
+    h => presence.fold(h.rows)(p => h.nValues.getOrElse(p, 0L))
+  }
+
+  /** Scalars whose stream stats are in SQL order (not binary). */
+  private def ordered(c: (String, DataType)): Boolean =
+    c._2 != BinaryType && MetaColumns.isScalar(c._2)
+
+  /** The element stream of an int/long/string list column. */
+  private def elemStream(e: Expression): Option[(String, DataType)] = e match {
+    case a: Attribute => a.dataType match {
+      case ArrayType(et @ (IntegerType | LongType | StringType), _) => Some(a.name -> et)
+      case _ => None
+    }
     case _ => None
   }
 
-  private def shapeOf(e: NamedExpression): Option[Shape] = e match {
-    case Alias(AggregateExpression(Min(ArrayMin(t)), _, false, None, _), _) =>
-      elemStats(t).map(ElemMin)
-    case Alias(AggregateExpression(Max(ArrayMax(t)), _, false, None, _), _) =>
-      elemStats(t).map(ElemMax)
-    case Alias(AggregateExpression(Min(t), _, false, None, _), _) =>
-      scalarStats(t).map(PlainMin)
-    case Alias(AggregateExpression(Max(t), _, false, None, _), _) =>
-      scalarStats(t).map(PlainMax)
-    case Alias(AggregateExpression(Count(Seq(Literal(1, _))), _, false, None, _), _) =>
-      Some(CountStar)
-    // COUNT(col) folds for EVERY column: GraftAggReader resolves the
-    // presence-bearing stream per type (__len/__k__len/__p/own nValues)
-    case Alias(AggregateExpression(Count(Seq(t: Attribute)), _, false, None, _), _) =>
-      Some(PlainCount(t.name))
-    case _ => None
-  }
-
-  def install(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val cur = spark.experimental.extraOptimizations
-    if (!cur.contains(GraftStatsAggPushdown))
-      spark.experimental.extraOptimizations = cur :+ GraftStatsAggPushdown
-  }
+  private def extremum(s: String, dt: DataType, isMin: Boolean): GraftLayout.FileHeader => Any =
+    h => h.ranges.get(s).map { r =>
+      if (dt == StringType) UTF8String.fromString(if (isMin) r.minS else r.maxS)
+      else MetaColumns.fromStat(dt, if (isMin) r.minV else r.maxV)
+    }.orNull
 }

@@ -1,6 +1,5 @@
 package graft.sources
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{And, ArrayContains, ArrayExists, Attribute, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, LambdaFunction, LessThan, LessThanOrEqual, Literal, NamedLambdaVariable}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -17,9 +16,9 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
   * `V2ExpressionBuilder` has no ARRAY_CONTAINS translation either, so
   * `SupportsPushDownV2Filters` cannot carry it. This rule is the justified
   * custom-Catalyst step (brief tier (c)): it runs AFTER
-  * `V2ScanRelationPushDown` (via `spark.experimental.extraOptimizations`'
-  * "User Provided Optimizers" batch, or `injectPreCBORule` from
-  * [[graft.engine.GraftExtensions]]), recognizes token predicates in a
+  * `V2ScanRelationPushDown` (in the "User Provided Optimizers" batch,
+  * where [[GraftDataSource.installRules]] adds it, or as a pre-CBO rule
+  * from [[graft.engine.GraftExtensions]]), recognizes token predicates in a
   * Filter directly above a graft scan, and re-plans the scan with the
   * range attached — mirroring how the reference converts arbitrary
   * PhysicalExprs into its stripe-pruning predicate
@@ -148,14 +147,5 @@ object GraftTokenRangePushdown extends Rule[LogicalPlan] {
     case LessThan(l: Literal, x) if sameVar(x, v) => longOf(l).map(n => (n + 1, Long.MaxValue))
     case EqualTo(l: Literal, x) if sameVar(x, v) => longOf(l).map(n => (n, n))
     case _ => None
-  }
-
-  /** Install on a live session (idempotent) — query entries and tests use
-    * this; platform-created sessions get the same rule via
-    * `spark.sql.extensions=graft.engine.GraftExtensions`. */
-  def install(spark: SparkSession): Unit = {
-    val cur = spark.experimental.extraOptimizations
-    if (!cur.contains(GraftTokenRangePushdown))
-      spark.experimental.extraOptimizations = cur :+ GraftTokenRangePushdown
   }
 }

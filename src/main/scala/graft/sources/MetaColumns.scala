@@ -346,6 +346,21 @@ object MetaColumns {
     if (s == -1L) 0L else s // -1 is exactly sortable(-0.0)
   }
 
+  /** The Catalyst internal value of a stat-domain long of an int-kind
+    * column: Int days for DATE, Long micros for TIMESTAMP, the bits
+    * bijections for FLOAT/DOUBLE, unscaled Decimal. */
+  def fromStat(dt: DataType, v: Long): Any = dt match {
+    case IntegerType | DateType => v.toInt
+    case LongType | TimestampType | TimestampNTZType => v
+    case DoubleType => fromSortableDouble(v)
+    case FloatType => fromSortableFloat(v)
+    case BooleanType => v != 0L
+    case ByteType => v.toByte
+    case ShortType => v.toShort
+    case d: DecimalType => Decimal.createUnsafe(v, d.precision, d.scale)
+    case other => throw new IllegalStateException(s"no stat domain for $other")
+  }
+
   // ---- predicate values -> stat domain ---------------------------------
 
   /** Convert a pushed-filter value of an int-kind column into the stored

@@ -240,22 +240,7 @@ object SegmentStore {
                    snapshotId: Long,
                    buckets: Int,
                    tokensPerChunk: Int = GraftEncoder.DefaultTokensPerChunk,
-                   maxBucketsPerRun: Int = Int.MaxValue): Set[Int] =
-    encodeCommitWith(input, tableDir, snapshotId, buckets, tokensPerChunk,
-      maxBucketsPerRun, Nil)
-
-  /** [[encodeCommit]] plus extra ledger rows carried in the SAME atomic
-    * append as the commit rows — the mechanism [[compact]] uses to make
-    * "new snapshot becomes visible" and "old snapshots become superseded"
-    * one indivisible ledger event (a crash can lose both, never leave
-    * both generations visible). */
-  private def encodeCommitWith(input: Dataset[TokenRow],
-                               tableDir: String,
-                               snapshotId: Long,
-                               buckets: Int,
-                               tokensPerChunk: Int,
-                               maxBucketsPerRun: Int,
-                               extraLedger: Seq[LineageRow]): Set[Int] = {
+                   maxBucketsPerRun: Int = Int.MaxValue): Set[Int] = {
     val spark = input.sparkSession
     import spark.implicits._
 
@@ -275,32 +260,18 @@ object SegmentStore {
       .filter($"bucket".isin(pending.map(Int.box): _*))
     val segments = GraftEncoder.encodeBucketed(bucketedPending, buckets, tokensPerChunk)
 
-    commitSegments(spark, tableDir, snapshotId, segments,
-      graft.sources.SegmentLayoutV2.CanonicalStreams, pendingSet, extraLedger)
-    pendingSet
-  }
-
-  /** Write + commit one snapshot's Segment-shaped DataFrame: dynamic
-    * partition overwrite of ONLY the bucket dirs present (previously
-    * committed buckets untouched), stored as the pivoted v2 layout, then
-    * ONE driver-side ledger append as the commit point. `streams` names
-    * the stream set to pivot (canonical, or canonical ++ metadata names
-    * for a metadata table's compaction). */
-  private def commitSegments(spark: SparkSession, tableDir: String,
-                             snapshotId: Long,
-                             segments: Dataset[Segment],
-                             streams: Seq[String],
-                             pendingSet: Set[Int],
-                             extraLedger: Seq[LineageRow]): Unit = {
-    // Lineage stats fold INSIDE the write tasks (round-5 item 4): the
-    // previous read-back of the new snapshot was a second Spark job per
-    // commit and dominated the streaming sink's per-epoch fixed cost. A
-    // commit is now exactly ONE job + one driver-side ledger append.
+    // Write + commit: dynamic partition overwrite of ONLY the bucket dirs
+    // present (previously committed buckets untouched), stored as the
+    // pivoted v2 layout, then ONE driver-side ledger append as the commit
+    // point. Lineage stats fold INSIDE the write tasks (round-5 item 4):
+    // the previous read-back of the new snapshot was a second Spark job
+    // per commit and dominated the streaming sink's per-epoch fixed cost.
+    // A commit is now exactly ONE job + one driver-side ledger append.
     val acc = new LineageStatsAccumulator
     spark.sparkContext.register(acc, s"graft lineage snapshot=$snapshotId")
     implicit val segEnc = org.apache.spark.sql.Encoders.product[Segment]
     val tracked = segments.mapPartitions(it => it.map { s => acc.add(s); s })
-    graft.sources.SegmentLayoutV2.flattenSegments(tracked, streams)
+    graft.sources.SegmentLayoutV2.flattenSegments(tracked)
       .withColumn("snapshotId", lit(snapshotId))
       .write
       .option("partitionOverwriteMode", "dynamic")
@@ -322,14 +293,12 @@ object SegmentStore {
     val emptyRows = (pendingSet -- withData).toSeq.sorted.map { b =>
       LineageRow(snapshotId, b, 0L, 0L, 0L, 0L, 0L, "", "", "", Committed)
     }
-    // ONE append = one commit event, written driver-side (the commit rows
-    // and any supersede markers land in a single ledger file so visibility
-    // flips atomically at the file move; the repartition(1) Spark job this
-    // replaces re-computed the read-back and dominated the streaming
-    // sink's per-epoch fixed cost — round-3 judge #10)
+    // ONE append = one commit event, written driver-side (the repartition(1)
+    // Spark job this replaces re-computed the read-back and dominated the
+    // streaming sink's per-epoch fixed cost — round-3 judge #10)
     graft.sources.GraftWriteCommit.appendLedgerRows(
-      tableDir, dataRows ++ emptyRows ++ extraLedger,
-      spark.sessionState.newHadoopConf())
+      tableDir, dataRows ++ emptyRows, spark.sessionState.newHadoopConf())
+    pendingSet
   }
 
   /** Compact every visible snapshot ≤ `upTo` into ONE fresh snapshot —
@@ -338,18 +307,30 @@ object SegmentStore {
     * part-files and under-filled chunks; at the 10^12-sequence scale the
     * small-file problem dominates scan cost long before data volume does).
     *
-    * Decode → re-encode through the standard kernel, so compaction also
-    * RE-CHUNKS to full token budgets and re-runs codec selection over the
-    * merged value distributions; the result is byte-for-byte what a
-    * single batch encode of the same rows would have produced (segment
-    * determinism contract).
+    * ONE Spark job, one task per bucket, no shuffle: each task reads its
+    * bucket's input part-files directly, decodes them to the stored domain
+    * and re-encodes the rows through the append path's writer
+    * ([[graft.sources.GraftSegmentWriter.rewriteBucket]]). So compaction
+    * RE-CHUNKS to full token budgets, re-runs codec selection over the
+    * merged value distributions, re-sorts `sortBy` tables by their recorded
+    * order and writes the footer file blooms an append writes; the payload
+    * bytes of every segment are what one batch encode of the same rows
+    * produces (segment determinism contract). Files written before a
+    * metadata column existed decode it as nulls.
+    *
+    * Buckets are kept, never re-hashed: `buckets` must equal every input
+    * snapshot's bucket count. A change of bucket count goes through the
+    * connector (`read.format("graft")` → `write.format("graft")
+    * .option("buckets", n)`).
     *
     * Atomicity: the compacted snapshot's commit rows and the
     * `superseded@C` markers for the old snapshots land in one ledger
-    * append. A crash before it leaves the new data files invisible (the
-    * standard crash-window stance); there is no window where both
-    * generations are readable. Time travel to a snapshot before C still
-    * reads the pre-compaction layout ([[SupersededPrefix]]).
+    * append ([[graft.sources.GraftWriteCommit.publish]]), after the
+    * compaction snapshot's directory is cleared of whatever a crashed
+    * earlier attempt left there. A crash before the append leaves the new
+    * data files invisible; there is no window where both generations are
+    * readable. Time travel to a snapshot before C still reads the
+    * pre-compaction layout ([[SupersededPrefix]]).
     *
     * Returns the compaction snapshot id, or None if nothing was visible
     * to compact. */
@@ -358,17 +339,14 @@ object SegmentStore {
               upTo: Long,
               buckets: Int,
               tokensPerChunk: Int = GraftEncoder.DefaultTokensPerChunk): Option[Long] = {
-    import spark.implicits._
-    // A table with METADATA columns compacts through the meta-aware
-    // stored-domain path (decode streams -> re-chunk -> re-encode, no
-    // external type rendering); canonical tables keep the TokenRow path,
-    // which additionally supports re-bucketing.
     val conf = spark.sessionState.newHadoopConf()
-    val metaDdl = graft.sources.GraftTableMeta
-      .read(tableDir, conf)
-      .flatMap(_.schemaDdl)
-      .filter(_ != graft.sources.MetaColumns.CanonicalDdl)
+    val meta = graft.sources.GraftTableMeta.read(tableDir, conf)
     val ledger = ledgerPairs(tableDir, conf)
+    // EXACTLY the pair set this compaction supersedes — NOT the historical
+    // as-of view: visibleAt(upTo) would resurrect partitions a LATER
+    // compaction already superseded (its markers carry C > upTo), silently
+    // duplicating their rows into the new snapshot while the earlier
+    // compaction's copy stays visible.
     val visible = ledger.committed.filter(_._1 <= upTo) -- ledger.superseded.keySet
     if (visible.isEmpty) return None
     // Compaction ids live in their OWN space above both batch ids and
@@ -380,90 +358,76 @@ object SegmentStore {
     // the markers and the compacted snapshot are invisible.
     val compactionId = math.max(CompactionBase - 1L,
       (ledger.committed.iterator ++ ledger.superseded.keysIterator).map(_._1).max) + 1L
-    // Decode EXACTLY the pair set this compaction supersedes — NOT the
-    // historical as-of view: readSegmentsVisible(asOf = upTo) would
-    // resurrect partitions a LATER compaction already superseded (its
-    // markers carry C > upTo and the as-of bound ignores them), silently
-    // duplicating their rows into the new snapshot while the earlier
-    // compaction's copy stays visible.
-    // localCheckpoint breaks the plan's file lineage: the re-encode WRITES
-    // under dataDir while the decode READS it (disjoint partitions, but
-    // Spark's overwrite-while-reading guard keys on the root path), and it
-    // bounds the maintenance op to one decode pass
-    // Canonical tables: decode to TokenRow (re-bucketing supported).
-    // Metadata tables: stored-domain decode -> re-chunk in one pass
-    // ([[GraftEncoder.decodeSegmentWithMeta]] -> encodePartitionWithMeta),
-    // reusing each segment's own bucket id — valid only while the bucket
-    // count is unchanged, which the guard below enforces per snapshot.
-    val metaSchema = metaDdl.map(graft.sources.MetaColumns.parseDdl)
-    val metaFields = metaSchema.map(graft.sources.MetaColumns.metaFields).getOrElse(Nil)
-    metaDdl.foreach { _ =>
-      val visibleSnapshots = visible.map(_._1)
-      val perSnapshotBuckets = ledger.committed
-        .filter(p => visibleSnapshots(p._1))
-        .groupBy(_._1).view.mapValues(_.map(_._2).max + 1)
-      val off = perSnapshotBuckets.filter(_._2 != buckets).toMap
-      require(off.isEmpty,
-        s"compact($tableDir): metadata-table compaction reuses stored bucket " +
-          s"ids, so the target bucket count ($buckets) must equal every input " +
-          s"snapshot's (mismatches: ${off.take(3).mkString(", ")}); re-bucketing " +
-          "a metadata table requires a decode through the connector")
-    }
-    val metaInput: Option[Dataset[Segment]] = metaSchema.map { schema =>
-      val specs = metaFields.flatMap(graft.sources.MetaColumns.specsFor)
-      // the table's recorded (advisory) sort order survives compaction:
-      // the re-chunk re-sorts each bucket by it, so the clustering that
-      // made the sort column's stats prune stays tight across generations
-      val sortedConf = graft.codec.CodecConf.Default.copy(
-        sortBy = graft.sources.GraftTableMeta
-          .read(tableDir, spark.sparkContext.hadoopConfiguration).flatMap(_.sortBy)
-          .toSeq.flatMap(_.split(',').iterator.map(_.trim).filter(_.nonEmpty)))
-      implicit val segEnc = org.apache.spark.sql.Encoders.product[Segment]
-      readSegmentsOf(spark, tableDir, visible)
-        .repartition(buckets, $"bucket")
-        .mapPartitions { it =>
-          it.toArray.groupBy(_.bucket).iterator.flatMap { case (_, ss) =>
-            GraftEncoder.encodePartitionWithMeta(
-              ss.iterator.flatMap(GraftEncoder.decodeSegmentWithMeta(_, specs)),
-              specs, tokensPerChunk, sortedConf)
-          }
+    // Each task reuses its segments' stored bucket id — valid only while
+    // the bucket count is unchanged (bucket is pmod(hash(doc_id), n)).
+    val visibleSnapshots = visible.map(_._1)
+    val off = ledger.committed
+      .filter(p => visibleSnapshots(p._1))
+      .groupBy(_._1).view.mapValues(_.map(_._2).max + 1)
+      .filter(_._2 != buckets).toMap
+    require(off.isEmpty,
+      s"compact($tableDir): compaction reuses stored bucket ids, so the " +
+        s"target bucket count ($buckets) must equal every input snapshot's " +
+        s"(mismatches: ${off.take(3).mkString(", ")}); re-bucketing a table " +
+        "requires a decode through the connector")
+    val schemaDdl = meta.flatMap(_.schemaDdl)
+    graft.sources.GraftTableMeta.ensureForCommit(tableDir, conf, schemaDdl)
+    val schema = graft.sources.MetaColumns.parseDdl(
+      schemaDdl.getOrElse(graft.sources.MetaColumns.CanonicalDdl))
+    // the table's recorded (advisory) sort order survives compaction: the
+    // writer re-sorts each bucket by it, so the clustering that made the
+    // sort column's stats prune stays tight across generations
+    val codecConf = graft.codec.CodecConf.Default.copy(
+      sortBy = meta.flatMap(_.sortBy).toSeq
+        .flatMap(_.split(',').iterator.map(_.trim).filter(_.nonEmpty)))
+    val inputs = graft.sources.GraftLayout.listParquetFiles(dataDir(tableDir), conf)
+      .flatMap(f => graft.sources.GraftLayout.partitionOf(f).filter(visible).map(_._2 -> f))
+      .groupMap(_._1)(_._2)
+    val stagingDir = s"$tableDir/_staging/compact-$compactionId-${java.util.UUID.randomUUID()}"
+    val hconf = new org.apache.spark.util.SerializableConfiguration(conf)
+    try {
+      // one element per slice: task i is bucket i, so the partition id the
+      // encoder records is the bucket's, as in an append
+      val messages = spark.sparkContext
+        .parallelize((0 until buckets).map(b => b -> inputs.getOrElse(b, Nil)), buckets)
+        .map { case (b, files) =>
+          graft.sources.GraftSegmentWriter.rewriteBucket(files, b, stagingDir, schema,
+            tokensPerChunk, codecConf, hconf.value,
+            org.apache.spark.TaskContext.get().taskAttemptId())
         }
-        .localCheckpoint()
-    }
-    val input =
-      if (metaSchema.isDefined) spark.emptyDataset[TokenRow]
-      else GraftEncoder.decode(readSegmentsOf(spark, tableDir, visible))
-        .localCheckpoint()
-    val markers = visible.toSeq.sorted.map { case (s, b) =>
-      LineageRow(s, b, 0L, 0L, 0L, 0L, 0L, "", "", "",
-        s"$SupersededPrefix$compactionId")
-    }
-    // Concurrency guard (advisor finding): compaction is a single-maintainer
-    // operation by design — but rather than trust the assumption, re-read
-    // the ledger AFTER the expensive decode and abort if a concurrent
-    // compact/expire superseded any input pair in the interim (committing
-    // would double-count every row of the doubly-compacted partitions).
-    // The fold re-lists the ledger dir, so any file appended since the
-    // first read changes its key and is folded in — never a stale answer.
-    // The window between this check and the commit append is milliseconds
-    // vs the minutes-scale decode; a maintenance scheduler must still not
-    // run two compactions of one table deliberately in parallel.
-    val clash = visible.intersect(ledgerPairs(tableDir, conf).superseded.keySet)
-    if (clash.nonEmpty)
-      throw new java.util.ConcurrentModificationException(
-        s"compact($tableDir): ${clash.size} input partition(s) were superseded " +
-          s"by a concurrent maintenance operation (e.g. ${clash.take(3).mkString(", ")}); " +
-          "aborting this compaction — re-run to compact the current state")
-    metaInput match {
-      case Some(segs) =>
-        graft.sources.GraftTableMeta.ensureForCommit(tableDir, conf, metaDdl)
-        commitSegments(spark, tableDir, compactionId, segs,
-          graft.sources.SegmentLayoutV2.CanonicalStreams ++
-            metaFields.flatMap(graft.sources.MetaColumns.streamsFor),
-          (0 until buckets).toSet, markers)
-      case None =>
-        encodeCommitWith(input, tableDir, compactionId, buckets, tokensPerChunk,
-          Int.MaxValue, markers)
+        .collect()
+      // Concurrency guard (advisor finding): compaction is a single-
+      // maintainer operation by design — but rather than trust the
+      // assumption, re-read the ledger AFTER the rewrite job and abort if a
+      // concurrent compact/expire superseded any input pair in the interim
+      // (committing would double-count every row of the doubly-compacted
+      // partitions). The fold re-lists the ledger dir, so any file appended
+      // since the first read is folded in — never a stale answer. The
+      // window between this check and the ledger append is milliseconds; a
+      // maintenance scheduler must still not run two compactions of one
+      // table deliberately in parallel.
+      val clash = visible.intersect(ledgerPairs(tableDir, conf).superseded.keySet)
+      if (clash.nonEmpty)
+        throw new java.util.ConcurrentModificationException(
+          s"compact($tableDir): ${clash.size} input partition(s) were superseded " +
+            s"by a concurrent maintenance operation (e.g. ${clash.take(3).mkString(", ")}); " +
+            "aborting this compaction — re-run to compact the current state")
+      val markers = visible.toSeq.sorted.map { case (s, b) =>
+        LineageRow(s, b, 0L, 0L, 0L, 0L, 0L, "", "", "",
+          s"$SupersededPrefix$compactionId")
+      }
+      // a crashed earlier attempt at this id may have moved part-files here
+      // without its ledger append: unread until now, but visible once the
+      // rows below land (compaction ids are this maintainer's alone; a
+      // batch append's claimed id gets no such clear)
+      val target = new org.apache.hadoop.fs.Path(s"${dataDir(tableDir)}/snapshotId=$compactionId")
+      target.getFileSystem(conf).delete(target, true)
+      graft.sources.GraftWriteCommit.publish(tableDir, stagingDir, compactionId,
+        messages, conf, markers)
+    } catch {
+      case e: Throwable =>
+        graft.sources.GraftWriteCommit.dropStaging(stagingDir, conf)
+        throw e
     }
     Some(compactionId)
   }
@@ -523,8 +487,7 @@ object SegmentStore {
   def readSegmentsAll(spark: SparkSession, tableDir: String): Dataset[Segment] =
     readSegmentsVisible(spark, tableDir, None)
 
-  /** Segments of an EXPLICIT (snapshot, bucket) pair set — the compaction
-    * input reader (the pairs being superseded, no more, no less). */
+  /** Segments of an EXPLICIT (snapshot, bucket) pair set. */
   private def readSegmentsOf(spark: SparkSession, tableDir: String,
                              pairs: Set[(Long, Int)]): Dataset[Segment] = {
     import spark.implicits._

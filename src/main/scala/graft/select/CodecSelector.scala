@@ -196,8 +196,16 @@ object CodecSelector {
   }
 
   /** Pick the string codec for one column chunk (ORC's 0.8 dict threshold). */
-  def chooseString(values: Array[String], conf: CodecConf = CodecConf.Default): StringCodec = {
-    if (values.isEmpty) return RawStringCodec
+  def chooseString(values: Array[String], conf: CodecConf = CodecConf.Default): StringCodec =
+    trialString(values, conf)._1
+
+  /** [[chooseString]] plus, when the sample IS the chunk
+    * (`sampleStrings(values) eq values`, at most 2048 values), its trial
+    * encodings: the winner's bytes and RAW's when RAW was a candidate
+    * (null otherwise). */
+  private def trialString(values: Array[String],
+                          conf: CodecConf): (StringCodec, Array[Byte], Array[Byte]) = {
+    if (values.isEmpty) return (RawStringCodec, null, null)
     val s = sampleStrings(values)
     val distinct = new java.util.HashSet[String]()
     var i = 0
@@ -207,20 +215,27 @@ object CodecSelector {
       if (ratio <= conf.dictThreshold) List(DictStringCodec, DictFsstStringCodec)
       else List(RawStringCodec, FsstStringCodec)
     var best: StringCodec = candidates.head
-    var bestSize = Long.MaxValue
+    var bestBytes: Array[Byte] = null
+    var raw: Array[Byte] = null
     candidates.foreach { c =>
-      val sz = StringCodecs.encodeChunk(s, c, conf).length.toLong
-      if (sz < bestSize) { best = c; bestSize = sz }
+      val b = StringCodecs.encodeChunk(s, c, conf)
+      if (c.id == RawStringCodec.id) raw = b
+      if (bestBytes == null || b.length < bestBytes.length) { best = c; bestBytes = b }
     }
-    best
+    if (s eq values) (best, bestBytes, raw) else (best, null, null)
   }
 
+  /** Encode one string chunk with the selected codec, then the raw guard.
+    * Encoding is deterministic, so a trial over the whole chunk IS its
+    * encode: FSST builds a small chunk's symbol table once, not twice. */
   def encodeStringsAuto(values: Array[String],
                         conf: CodecConf = CodecConf.Default): (StringCodec, Array[Byte]) = {
-    val codec = chooseString(values, conf)
-    val encoded = StringCodecs.encodeChunk(values, codec, conf)
+    val (codec, trialBytes, trialRaw) = trialString(values, conf)
+    val encoded =
+      if (trialBytes != null) trialBytes else StringCodecs.encodeChunk(values, codec, conf)
     if (codec.id != RawStringCodec.id) {
-      val raw = StringCodecs.encodeChunk(values, RawStringCodec, conf)
+      val raw =
+        if (trialRaw != null) trialRaw else StringCodecs.encodeChunk(values, RawStringCodec, conf)
       if (raw.length < encoded.length) return (RawStringCodec, raw)
     }
     (codec, encoded)

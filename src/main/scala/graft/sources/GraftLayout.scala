@@ -121,6 +121,34 @@ object GraftLayout {
     }
   }
 
+  /** Every segment of a v2 part-file, payloads included, in file order —
+    * the compaction input reader. `bucket` comes from the file's partition
+    * directory (the layout does not store it). A stream whose fields are
+    * null in a record (absent from that segment: a stream added by schema
+    * evolution, written by the engine path's flatten) is left out of
+    * `cols`, as [[SegmentLayoutV2.unflatten]] does. */
+  def foreachSegment(file: String, conf: Configuration, bucket: Int)(
+      f: graft.engine.Segment => Unit): Unit = withReader(file, conf) { r =>
+    val streams = footerOf(file, r).streams
+    foreachRecord(r, _ => true) { g =>
+      def has(n: String): Boolean = g.getFieldRepetitionCount(n) > 0
+      def str(n: String): String = if (has(n)) g.getString(n, 0) else ""
+      def long(n: String): Long = if (has(n)) g.getLong(n, 0) else 0L
+      def bytes(n: String): Array[Byte] =
+        if (has(n)) g.getBinary(n, 0).getBytes else Array.emptyByteArray
+      val cols = streams.filter(s => has(SegmentLayoutV2.field(s, "codecId"))).map { s =>
+        def n(x: String) = SegmentLayoutV2.field(s, x)
+        graft.engine.ColChunk(s, g.getInteger(n("codecId"), 0), str(n("codecName")),
+          long(n("nValues")), long(n("bytesIn")), long(n("bytesOut")),
+          long(n("minV")), long(n("maxV")), str(n("minS")), str(n("maxS")),
+          bytes(n("payload")), bytes(n("bloom")))
+      }
+      f(graft.engine.Segment(g.getString("segmentId", 0), str("source"), bucket,
+        g.getInteger("partitionId", 0), g.getInteger("chunkIdx", 0),
+        g.getInteger("nRows", 0), long("nTokens"), long("bytesIn"), long("bytesOut"), cols))
+    }
+  }
+
   /** Footer facts of a [[SegmentLayoutV2]] file. Any other parquet file —
     * in particular one in the pre-v2 nested `cols` layout — fails here,
     * naming the file, before a reader can misread it. */

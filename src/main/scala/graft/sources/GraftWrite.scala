@@ -337,8 +337,12 @@ object GraftWriteCommit {
     * commit. */
   final val StreamEpochBase: Long = 1L << 40
 
+  /** Move the staged files, then ONE ledger append of the messages' rows
+    * plus `extraLedger` (compaction's supersede markers) — the commit
+    * point. */
   def publish(path: String, stagingDir: String, snapshotId: Long,
-              messages: Array[GraftCommitMessage], conf: Configuration): Unit = {
+              messages: Array[GraftCommitMessage], conf: Configuration,
+              extraLedger: Seq[graft.lineage.LineageRow] = Nil): Unit = {
     val fs = new HPath(path).getFileSystem(conf)
     messages.foreach { m =>
       m.stagedFile.foreach { staged =>
@@ -349,7 +353,10 @@ object GraftWriteCommit {
           throw new java.io.IOException(s"graft commit: rename failed for $staged")
       }
     }
-    writeLineage(path, snapshotId, messages, conf)
+    appendLedgerRows(path, messages.toSeq.map(m =>
+      graft.lineage.LineageRow(snapshotId, m.bucket, m.nSegments, m.nRows,
+        m.nTokens, m.bytesIn, m.bytesOut, m.firstChunk, m.lastChunk, m.codecs,
+        graft.lineage.SegmentStore.Committed)) ++ extraLedger, conf)
     dropStaging(stagingDir, conf)
   }
 
@@ -386,13 +393,6 @@ object GraftWriteCommit {
       Types.optional(BINARY).as(str).named("status"))
   }
 
-  private def writeLineage(path: String, snapshotId: Long,
-                           messages: Array[GraftCommitMessage], conf: Configuration): Unit =
-    appendLedgerRows(path, messages.toSeq.map(m =>
-      graft.lineage.LineageRow(snapshotId, m.bucket, m.nSegments, m.nRows,
-        m.nTokens, m.bytesIn, m.bytesOut, m.firstChunk, m.lastChunk, m.codecs,
-        graft.lineage.SegmentStore.Committed)), conf)
-
   /** Append one ledger file holding `rows` — THE commit point of every
     * write path (one file = visibility flips atomically at the file move).
     * Driver-side (no Spark job): a commit's ledger rows are metadata-scale
@@ -400,8 +400,13 @@ object GraftWriteCommit {
     * replaces was the dominant fixed cost of a streaming micro-batch. */
   def appendLedgerRows(path: String, rows: Seq[graft.lineage.LineageRow],
                        conf: Configuration): Unit = {
-    val file = new HPath(s"$path/lineage/part-graft-${UUID.randomUUID()}.parquet")
-    val writer = ExampleParquetWriter.builder(file)
+    val name = s"part-graft-${UUID.randomUUID()}.parquet"
+    val file = new HPath(s"$path/lineage/$name")
+    // written under a hidden name, then renamed into place: ledger readers
+    // skip `.` files, so a concurrent fold (another append's commit) never
+    // opens a half-written file, and a crash mid-write leaves no ledger row
+    val tmp = new HPath(s"$path/lineage/.$name.tmp")
+    val writer = ExampleParquetWriter.builder(tmp)
       .withConf(conf).withType(LineageSchema)
       .withCompressionCodec(CompressionCodecName.SNAPPY)
       .build()
@@ -423,6 +428,8 @@ object GraftWriteCommit {
         writer.write(g)
       }
     } finally writer.close()
+    if (!file.getFileSystem(conf).rename(tmp, file))
+      throw new java.io.IOException(s"graft commit: ledger rename failed for $file")
   }
 }
 
@@ -445,6 +452,29 @@ object GraftSegmentWriter {
     * granularity (a row group is the coarsest skippable unit; ~8 MiB ≈
     * tens of segments at the default chunk budget). */
   final val RowGroupBytes: Long = 8L * 1024 * 1024
+
+  /** One compaction task: decode every segment of one bucket's `files` to
+    * the stored domain ([[GraftEncoder.decodeSegmentWithMeta]]; a stream a
+    * file lacks decodes as nulls) and re-encode the rows through an
+    * append's writer — same sort, chunking, kernels, file blooms and
+    * staged part-file — returning its commit message. */
+  def rewriteBucket(files: Seq[String], bucket: Int, stagingDir: String,
+                    schema: StructType, tokensPerChunk: Int, codecConf: CodecConf,
+                    conf: Configuration, taskId: Long): GraftCommitMessage = {
+    val w = new GraftSegmentWriter(stagingDir, schema, bucket, taskId,
+      tokensPerChunk, codecConf, conf)
+    val specs = MetaColumns.metaFields(schema).flatMap(MetaColumns.specsFor)
+    try {
+      files.foreach(GraftLayout.foreachSegment(_, conf, bucket) { seg =>
+        GraftEncoder.decodeSegmentWithMeta(seg, specs).foreach { case (r, m) =>
+          w.writeStored(r.doc_id, r.tokens, r.n_tok, r.source, m)
+        }
+      })
+      w.commit()
+    } catch {
+      case e: Throwable => w.abort(); throw e
+    } finally w.close()
+  }
 }
 
 /** Buffers one bucket's rows (the engine's explicit task-memory contract),
@@ -484,31 +514,33 @@ class GraftSegmentWriter(stagingDir: String, schema: StructType,
   private def nBuffered: Int = if (packed != null) packed.length else rows.length
 
   override def write(row: InternalRow): Unit = {
-    if (packed != null) {
-      packed += PackedRow(
-        row.getUTF8String(iDoc).toString,
-        TokenPack.pack(row.getArray(iTok).toIntArray()),
-        row.getInt(iN),
-        row.getUTF8String(iSrc).toString,
-        partitionId)
-      return
-    }
-    rows += BucketedRow(
-      row.getUTF8String(iDoc).toString,
-      row.getArray(iTok).toIntArray(),
-      row.getInt(iN),
-      row.getUTF8String(iSrc).toString,
-      partitionId)
-    if (metas != null) {
-      val m = new Array[AnyRef](metaExtractors.length)
-      var j = 0
-      while (j < metaExtractors.length) {
-        m(j) = metaExtractors(j)(row)
-        j += 1
+    val m =
+      if (metas == null) null
+      else {
+        val m = new Array[AnyRef](metaExtractors.length)
+        var j = 0
+        while (j < metaExtractors.length) {
+          m(j) = metaExtractors(j)(row)
+          j += 1
+        }
+        m
       }
-      metas += m
-    }
+    writeStored(row.getUTF8String(iDoc).toString, row.getArray(iTok).toIntArray(),
+      row.getInt(iN), row.getUTF8String(iSrc).toString, m)
   }
+
+  /** Buffer one row already in the stored domain: `meta` holds one slot
+    * per engine field, shaped as [[GraftEncoder.decodeSegmentWithMeta]]
+    * returns them (ignored on a canonical table). [[write]] converts Spark
+    * rows to this; compaction feeds decoded segments straight in. */
+  private[sources] def writeStored(docId: String, tokens: Array[Int], nTok: Int,
+                                   source: String, meta: Array[AnyRef]): Unit =
+    if (packed != null)
+      packed += PackedRow(docId, TokenPack.pack(tokens), nTok, source, partitionId)
+    else {
+      rows += BucketedRow(docId, tokens, nTok, source, partitionId)
+      metas += meta
+    }
 
   /** Stored-domain list value of `arr` with element kind `et`. */
   private def listOf(arr: org.apache.spark.sql.catalyst.util.ArrayData,
@@ -688,7 +720,7 @@ class GraftSegmentWriter(stagingDir: String, schema: StructType,
     }.toMap
   }
 
-  override def commit(): WriterCommitMessage = {
+  override def commit(): GraftCommitMessage = {
     if (nBuffered == 0)
       return GraftCommitMessage(partitionId, None, 0L, 0L, 0L, 0L, 0L, "", "", "")
     val segments =

@@ -213,4 +213,42 @@ class CodecKernelSpec extends AnyFunSuite {
     // uniform [0,50257): ~1/3 of ids fit 1 byte, rest 2-3 -> well under 4 B/token
     assert(packed.length < vocab.length * 3, s"packed ${packed.length} B for ${vocab.length} tokens")
   }
+
+  test("selector: string encode reusing the trial bytes equals choose + encode + raw guard") {
+    import graft.select.CodecSelector
+    def reference(values: Array[String]): (StringCodec, Array[Byte]) = {
+      val c = CodecSelector.chooseString(values)
+      val enc = StringCodecs.encodeChunk(values, c, CodecConf.Default)
+      if (c.id != RawStringCodec.id) {
+        val raw = StringCodecs.encodeChunk(values, RawStringCodec, CodecConf.Default)
+        if (raw.length < enc.length) return (RawStringCodec, raw)
+      }
+      (c, enc)
+    }
+    val rnd = new scala.util.Random(7L)
+    def randomWord(len: Int): String =
+      new String(Array.fill(len)((33 + rnd.nextInt(94)).toChar))
+    // one generator per intended winner (at 2047+ values): unique
+    // high-entropy words (raw), unique zero-padded ids (FSST), 300 phrases
+    // (dict), 600 ids (dict-FSST); the small chunks exercise the raw guard
+    val words = Seq("the", "quick", "brown", "fox", "jumps", "over", "lazy", "dog")
+    val phrases = Array.fill(300)(Seq.fill(6)(words(rnd.nextInt(words.length))).mkString(" "))
+    def docId(): String = f"doc_${rnd.nextInt(1000000000)}%012d"
+    val ids = Array.fill(600)(docId())
+    val gens: Seq[Int => Array[String]] = Seq(
+      n => Array.fill(n)(randomWord(10)),
+      n => Array.fill(n)(docId()),
+      n => Array.fill(n)(phrases(rnd.nextInt(phrases.length))),
+      n => Array.fill(n)(ids(rnd.nextInt(ids.length))))
+    val winners = scala.collection.mutable.Set.empty[String]
+    for (n <- Seq(1, 2047, 2048, 2049, 5000); gen <- gens) {
+      val values = gen(n)
+      val (c, bytes) = CodecSelector.encodeStringsAuto(values)
+      val (rc, rbytes) = reference(values)
+      assert(c.id === rc.id, s"codec at n=$n")
+      assert(java.util.Arrays.equals(bytes, rbytes), s"bytes at n=$n, codec ${c.name}")
+      winners += c.name
+    }
+    assert(winners === StringCodecs.all.map(_.name).toSet, s"winners seen: $winners")
+  }
 }

@@ -1,5 +1,7 @@
 package graft.lineage
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -218,6 +220,15 @@ class LineageSpec extends AnyFunSuite {
       .collect().map(s => s.segmentId -> s.cols.map(_.payload.toSeq)).toMap
     assert(compacted.keySet === direct.keySet)
     compacted.foreach { case (id, payloads) => assert(payloads === direct(id), id) }
+    // ...and its ledger rows record what a direct commit of the same rows
+    // records (bucket by bucket, empty buckets included)
+    val directDir = tmp()
+    SegmentStore.encodeCommit(input, directDir, 1L, buckets = 4, tokensPerChunk = 4096)
+    def stats(rows: Seq[LineageRow]) = rows.map(r => (r.bucket, r.nSegments, r.nRows,
+      r.nTokens, r.bytesIn, r.bytesOut, r.firstChunk, r.lastChunk, r.codecs)).sortBy(_._1)
+    assert(stats(ledger.filter(r => r.snapshotId == SegmentStore.CompactionBase &&
+      r.status == SegmentStore.Committed).toSeq) ===
+      stats(SegmentStore.readLineage(spark, directDir).collect().toSeq))
 
     // re-compacting the already-compacted horizon is a no-op
     assert(SegmentStore.compact(spark, dir, upTo = 3L, buckets = 4).isEmpty)
@@ -303,5 +314,88 @@ class LineageSpec extends AnyFunSuite {
     // every superseded pair with data had a partition dir to remove
     assert(removed === before.committed.count(p => before.rows(p) > 0L).toLong)
     assert(spark.read.format("graft").load(dir).count() === compactedRows)
+  }
+
+  /** Runs `body` under job group `group` and returns its result with the
+    * number of stages of every job the group submitted: a sentinel job
+    * follows, and listener events arrive in order, so once the sentinel is
+    * seen every earlier job has been too. */
+  private def jobsOf[A](group: String)(body: => A): (A, Seq[Int]) = {
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int)]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")) -> e.stageInfos.size)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, group)
+      val a = try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-sentinel", "sentinel")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      def seen = jobs.iterator().asScala.exists(_._1 == s"$group-sentinel")
+      while (!seen && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(seen, "listener never saw the sentinel job")
+      (a, jobs.iterator().asScala.filter(_._1 == group).map(_._2).toSeq)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("compaction is one shuffle-free Spark job: one stage, one task per bucket") {
+    val input = TokenTables.synthetic(spark, nDocs = 200, seed = 12L)
+    val dir = tmp()
+    for (r <- 0 until 3)
+      SegmentStore.encodeCommit(input.filter(_.n_tok % 3 == r), dir,
+        snapshotId = r + 1L, buckets = 3)
+    val (cid, stages) = jobsOf("graft-compact-probe") {
+      SegmentStore.compact(spark, dir, upTo = 3L, buckets = 3)
+    }
+    assert(cid === Some(SegmentStore.CompactionBase))
+    assert(stages === Seq(1), s"compact ran jobs with stage counts $stages")
+    assert(spark.read.format("graft").load(dir).count() === 200L)
+  }
+
+  test("compaction keeps buckets: a canonical table with another bucket count fails by name") {
+    val input = TokenTables.synthetic(spark, nDocs = 100, seed = 13L)
+    val dir = tmp()
+    SegmentStore.encodeCommit(input, dir, snapshotId = 1L, buckets = 4)
+    val e = intercept[IllegalArgumentException] {
+      SegmentStore.compact(spark, dir, upTo = 1L, buckets = 2)
+    }
+    assert(e.getMessage.contains("bucket count"), e.getMessage)
+    // nothing was published: no compaction rows, no compaction data
+    assert(SegmentStore.readLineage(spark, dir).collect().forall(_.snapshotId == 1L))
+    assert(!new java.io.File(s"$dir/data/snapshotId=${SegmentStore.CompactionBase}").exists())
+  }
+
+  test("crash before the ledger append: a re-run publishes exactly the input rows") {
+    val input = TokenTables.synthetic(spark, nDocs = 240, seed = 14L)
+    val dir = tmp()
+    for (r <- 0 until 2)
+      SegmentStore.encodeCommit(input.filter(_.n_tok % 2 == r), dir,
+        snapshotId = r + 1L, buckets = 3)
+    val cid = SegmentStore.compact(spark, dir, upTo = 2L, buckets = 3).get
+    // simulate the crash: the compaction's data files stay where the move
+    // put them, its ledger file never landed
+    val conf = spark.sessionState.newHadoopConf()
+    val ledgerDir = new org.apache.hadoop.fs.Path(s"$dir/lineage")
+    val fs = ledgerDir.getFileSystem(conf)
+    val compactionLedger = fs.listStatus(ledgerDir).map(_.getPath)
+      .filter(p => p.getName.endsWith(".parquet") && !p.getName.startsWith("."))
+      .filter(p => spark.read.parquet(p.toString).filter(s"snapshotId = $cid").count() > 0L)
+    assert(compactionLedger.length === 1)
+    assert(fs.delete(compactionLedger.head, false))
+    val stale = graft.sources.GraftLayout.listParquetFiles(s"$dir/data/snapshotId=$cid", conf)
+    assert(stale.nonEmpty)
+    assert(spark.read.format("graft").load(dir).count() === 240L)
+
+    assert(SegmentStore.compact(spark, dir, upTo = 2L, buckets = 3) === Some(cid))
+    val rows = spark.read.format("graft").load(dir).collect()
+    assert(rows.length === 240)
+    assert(rows.map(_.getString(0)).sorted.toSeq === input.collect().map(_.doc_id).sorted.toSeq)
+    val republished = graft.sources.GraftLayout.listParquetFiles(s"$dir/data/snapshotId=$cid", conf)
+    assert(republished.intersect(stale).isEmpty, "stale files of the crashed attempt survived")
+    assert(graft.sources.GraftLayout.listDataFiles(dir, conf).forall(
+      graft.sources.GraftLayout.partitionOf(_).exists(_._1 == cid)))
   }
 }

@@ -1469,6 +1469,31 @@ class GraftDataSourceSpec extends AnyFunSuite {
       .filter($"lang" === "l3").count() === total.filter($"lang" === "l3").count())
   }
 
+  test("compaction writes footer file blooms: a point miss prunes compacted files at planning") {
+    val input = TokenTables.synthetic(spark, nDocs = 400, seed = 42L)
+    val dir = tmp()
+    for (r <- 0 until 2)
+      SegmentStore.encodeCommit(input.filter(_.n_tok % 2 == r), dir,
+        snapshotId = r + 1L, buckets = 4)
+    val conf = spark.sessionState.newHadoopConf()
+    // a doc_id inside the files' [min, max] that no row holds: only a file
+    // bloom can skip a file for it
+    val miss = input.collect().map(_.doc_id).sorted.apply(200) + "x"
+    def missPruned(): Long = {
+      val (rows, m) = runWithScanMetrics(
+        spark.read.format("graft").load(dir).filter(col("doc_id") === miss))
+      assert(rows.isEmpty)
+      m.getOrElse("graft files pruned (planning)", 0L)
+    }
+    // the engine path's Spark parquet writer records no file blooms
+    assert(missPruned() === 0L)
+    assert(SegmentStore.compact(spark, dir, upTo = 2L, buckets = 4).isDefined)
+    val files = GraftLayout.listDataFiles(dir, conf)
+    assert(files.nonEmpty)
+    files.foreach(f => assert(GraftLayout.footerInfo(f, conf).blooms.contains("doc_id"), f))
+    assert(missPruned() === files.length.toLong)
+  }
+
   test("graft table schemas are fixed at creation (append with a different column set fails)") {
     import spark.implicits._
     val dir = tmp()

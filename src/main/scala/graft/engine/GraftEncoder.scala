@@ -249,20 +249,6 @@ object GraftEncoder {
       .as[BucketedRow]
   }
 
-  /** Shuffle each bucket to one task. Rows are NOT sorted by Spark here:
-    * a bucket is small by construction (totalTokens/buckets — size buckets
-    * so one fits in task memory, same rule as any hash aggregation), so
-    * the encode task sorts it in-memory itself ([[encodePartition]]),
-    * which skips Spark's external-sorter serialize/spill layer entirely —
-    * stage telemetry showed that layer dominating map-side GC. Chunk
-    * content stays a pure function of the data (determinism contract on
-    * [[Segment]]). */
-  def partitionForEncode(ds: Dataset[BucketedRow], buckets: Int): Dataset[BucketedRow] = {
-    val spark = ds.sparkSession
-    import spark.implicits._
-    ds.repartition(buckets, $"bucket")
-  }
-
   def encode(ds: Dataset[TokenRow],
              buckets: Int,
              tokensPerChunk: Int = DefaultTokensPerChunk,

@@ -1,9 +1,9 @@
 package graft.lineage
 
-import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.engine.{GraftEncoder, Segment, TokenRow}
+import graft.engine.{GraftEncoder, PackedRow, Segment, TokenPack, TokenRow}
 
 /** One committed lineage row per (snapshot, bucket) — the Iceberg-shaped
   * commit record demanded by the north_rule: input snapshot-id, chunk
@@ -27,88 +27,6 @@ final case class LineageRow(
     codecs: String, // "col:codec=nChunks,..." sorted — the per-chunk choice ledger
     status: String)
 
-/** Per-bucket lineage aggregate folded INSIDE the snapshot's write tasks
-  * (round-5 item 4: the separate lineage read-back job was the dominant
-  * fixed cost of a streaming micro-batch — each writer task already knows
-  * every stat the ledger records). Accumulator updates in a result stage
-  * are applied exactly once per successful task, and the commit append
-  * only runs after the write job succeeds, so the folded stats equal what
-  * the old read-back recomputed from the written files. State is
-  * metadata-scale: one entry per bucket plus its codec counts. */
-final class LineageStatsAccumulator
-    extends org.apache.spark.util.AccumulatorV2[
-      graft.engine.Segment, Map[Int, LineageStatsAccumulator.BucketStat]] {
-  import LineageStatsAccumulator.BucketStat
-  private val m = scala.collection.mutable.HashMap.empty[Int, BucketStat]
-  override def isZero: Boolean = m.isEmpty
-  override def copy(): LineageStatsAccumulator = {
-    val c = new LineageStatsAccumulator
-    m.foreach { case (b, s) => c.m.put(b, s.copyOf()) }
-    c
-  }
-  override def reset(): Unit = m.clear()
-  override def add(seg: graft.engine.Segment): Unit = {
-    val s = m.getOrElseUpdate(seg.bucket, BucketStat.empty())
-    s.nSegments += 1
-    s.nRows += seg.nRows.toLong
-    s.nTokens += seg.nTokens
-    s.bytesIn += seg.bytesIn
-    s.bytesOut += seg.bytesOut
-    if (s.firstChunk == null || seg.segmentId < s.firstChunk) s.firstChunk = seg.segmentId
-    if (s.lastChunk == null || seg.segmentId > s.lastChunk) s.lastChunk = seg.segmentId
-    seg.cols.foreach { c =>
-      val k = s"${c.col}:${c.codecName}"
-      s.codecCounts.update(k, s.codecCounts.getOrElse(k, 0L) + 1L)
-    }
-  }
-  override def merge(other: org.apache.spark.util.AccumulatorV2[
-    graft.engine.Segment, Map[Int, BucketStat]]): Unit = other match {
-    case o: LineageStatsAccumulator => o.m.foreach { case (b, s2) =>
-      m.get(b) match {
-        case None => m.put(b, s2.copyOf())
-        case Some(s) =>
-          s.nSegments += s2.nSegments; s.nRows += s2.nRows; s.nTokens += s2.nTokens
-          s.bytesIn += s2.bytesIn; s.bytesOut += s2.bytesOut
-          if (s.firstChunk == null ||
-            (s2.firstChunk != null && s2.firstChunk < s.firstChunk)) s.firstChunk = s2.firstChunk
-          if (s.lastChunk == null ||
-            (s2.lastChunk != null && s2.lastChunk > s.lastChunk)) s.lastChunk = s2.lastChunk
-          s2.codecCounts.foreach { case (k, n) =>
-            s.codecCounts.update(k, s.codecCounts.getOrElse(k, 0L) + n) }
-      }
-    }
-    case _ => throw new UnsupportedOperationException(s"cannot merge $other")
-  }
-  override def value: Map[Int, BucketStat] = m.toMap
-}
-
-object LineageStatsAccumulator {
-  final class BucketStat extends Serializable {
-    var nSegments: Long = 0L
-    var nRows: Long = 0L
-    var nTokens: Long = 0L
-    var bytesIn: Long = 0L
-    var bytesOut: Long = 0L
-    var firstChunk: String = null
-    var lastChunk: String = null
-    val codecCounts: scala.collection.mutable.Map[String, Long] =
-      scala.collection.mutable.Map.empty
-    def copyOf(): BucketStat = {
-      val c = new BucketStat
-      c.nSegments = nSegments; c.nRows = nRows; c.nTokens = nTokens
-      c.bytesIn = bytesIn; c.bytesOut = bytesOut
-      c.firstChunk = firstChunk; c.lastChunk = lastChunk
-      codecCounts.foreach { case (k, n) => c.codecCounts.put(k, n) }
-      c
-    }
-    /** "col:codec=n,..." sorted — the ledger convention
-      * ([[graft.sources.GraftSegmentWriter]] writes the same form). */
-    def codecs: String =
-      codecCounts.toSeq.sorted.map { case (k, n) => s"$k=$n" }.mkString(",")
-  }
-  object BucketStat { def empty(): BucketStat = new BucketStat }
-}
-
 /** Iceberg-shaped segment table over Parquet (no Iceberg runtime jar ships
   * in this sandbox — SURVEY §7.6; the layout keeps the same contract:
   * snapshot id, per-partition commits, an append-only lineage ledger, and
@@ -125,9 +43,10 @@ object LineageStatsAccumulator {
   *  2. pending   = all buckets minus committed
   *  3. encode ONLY pending buckets (input filtered by the deterministic
   *     bucket function — no recompute of finished work)
-  *  4. write with dynamic partition overwrite: only pending bucket dirs are
-  *     replaced; a crashed attempt's partial dir is simply overwritten with
-  *     byte-identical content (Segment determinism contract)
+  *  4. publish ([[graft.sources.GraftWriteCommit.publish]]): each pending
+  *     bucket dir is cleared, then its staged part-file moves in; a crashed
+  *     attempt's files are replaced by byte-identical segments (Segment
+  *     determinism contract), and committed buckets are never touched
   *  5. append lineage rows — the commit point. A crash between 4 and 5
   *     leaves data without a ledger entry; the next run redoes that bucket,
   *     converging to the same bytes. Exactly-once by determinism, not locks.
@@ -166,7 +85,7 @@ object SegmentStore {
       .add("snapshotId", "long").add("bucket", "int")
 
   /** The committed-or-not segment table as a Segment-shaped DataFrame:
-    * both writers store the pivoted v2 layout (one parquet column per
+    * the writer stores the pivoted v2 layout (one parquet column per
     * stream, so Catalyst/parquet prune payload IO natively), and
     * [[graft.sources.SegmentLayoutV2.unflatten]] restores the `cols` array.
     * The read schema carries the UNION of the files' stream sets, not the
@@ -231,6 +150,14 @@ object SegmentStore {
     * committed by THIS call (empty = nothing left to do; the job is
     * restart-complete).
     *
+    * One Spark job, one task per bucket: the pending rows are clustered by
+    * `doc_id` into `buckets` partitions — the hash the DSv2 write declares,
+    * so task i holds exactly bucket i — and each task encodes its bucket
+    * through the append writer
+    * ([[graft.sources.GraftSegmentWriter.writeBucket]]). The driver then
+    * publishes the staged files and the ledger rows in one
+    * [[graft.sources.GraftWriteCommit.publish]].
+    *
     * @param maxBucketsPerRun cap on buckets processed per invocation — the
     *   incremental-processing knob, and the hook the kill-and-resume test
     *   uses to simulate a mid-job failure.
@@ -243,61 +170,42 @@ object SegmentStore {
                    maxBucketsPerRun: Int = Int.MaxValue): Set[Int] = {
     val spark = input.sparkSession
     import spark.implicits._
+    val conf = spark.sessionState.newHadoopConf()
 
     // Version gate (advisor finding): stamp lineage/_meta on a fresh
     // table; fail fast on a ledgered table whose bucket function / id
     // space cannot be verified — the restart filter below keys on the
     // CURRENT bucket function, and resuming a table bucketed under a
     // different one would silently re-encode the wrong buckets.
-    graft.sources.GraftTableMeta.ensureForCommit(
-      tableDir, spark.sessionState.newHadoopConf())
+    graft.sources.GraftTableMeta.ensureForCommit(tableDir, conf)
     val done = committedBuckets(spark, tableDir, snapshotId)
     val pending = (0 until buckets).filterNot(done).take(maxBucketsPerRun)
     if (pending.isEmpty) return Set.empty
 
     val pendingSet = pending.toSet
-    val bucketedPending = GraftEncoder.bucketed(input, buckets)
+    // tokens are varint-packed before the one shuffle (see PackedRow)
+    val rows = GraftEncoder.bucketed(input, buckets)
       .filter($"bucket".isin(pending.map(Int.box): _*))
-    val segments = GraftEncoder.encodeBucketed(bucketedPending, buckets, tokensPerChunk)
-
-    // Write + commit: dynamic partition overwrite of ONLY the bucket dirs
-    // present (previously committed buckets untouched), stored as the
-    // pivoted v2 layout, then ONE driver-side ledger append as the commit
-    // point. Lineage stats fold INSIDE the write tasks (round-5 item 4):
-    // the previous read-back of the new snapshot was a second Spark job
-    // per commit and dominated the streaming sink's per-epoch fixed cost.
-    // A commit is now exactly ONE job + one driver-side ledger append.
-    val acc = new LineageStatsAccumulator
-    spark.sparkContext.register(acc, s"graft lineage snapshot=$snapshotId")
-    implicit val segEnc = org.apache.spark.sql.Encoders.product[Segment]
-    val tracked = segments.mapPartitions(it => it.map { s => acc.add(s); s })
-    graft.sources.SegmentLayoutV2.flattenSegments(tracked)
-      .withColumn("snapshotId", lit(snapshotId))
-      .write
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("snapshotId", "bucket") // snapshot first: one snapshot never clobbers another
-      .mode(SaveMode.Overwrite)
-      .parquet(dataDir(tableDir))
-
-    val dataRows = acc.value.toSeq.sortBy(_._1).map { case (b, st) =>
-      LineageRow(snapshotId, b, st.nSegments, st.nRows, st.nTokens,
-        st.bytesIn, st.bytesOut, st.firstChunk, st.lastChunk, st.codecs, Committed)
+      .map(r => PackedRow(r.doc_id, TokenPack.pack(r.tokens), r.n_tok, r.source, r.bucket))
+      .repartition(buckets, $"doc_id")
+    val stagingDir = s"$tableDir/_staging/commit-$snapshotId-${java.util.UUID.randomUUID()}"
+    val hconf = new org.apache.spark.util.SerializableConfiguration(conf)
+    try {
+      // every bucket's task runs and reports, an empty one with zero stats;
+      // only the pending buckets publish (a committed bucket's dir is never
+      // cleared)
+      val messages = rows.rdd.mapPartitions { it =>
+        Iterator(graft.sources.GraftSegmentWriter.writeBucket(
+          org.apache.spark.TaskContext.getPartitionId(), stagingDir,
+          graft.sources.GraftTable.TokenSchema, tokensPerChunk,
+          graft.codec.CodecConf.Default, hconf.value)(w => it.foreach(w.writePacked)))
+      }.collect().filter(m => pendingSet(m.bucket))
+      graft.sources.GraftWriteCommit.publish(tableDir, stagingDir, snapshotId, messages, conf)
+    } catch {
+      case e: Throwable =>
+        graft.sources.GraftWriteCommit.dropStaging(stagingDir, conf)
+        throw e
     }
-    // A pending bucket with ZERO rows writes no files and yields no
-    // data-derived ledger row — it must still commit (status=committed,
-    // all-zero stats), or every later run re-lists it as pending and the
-    // "empty result = restart-complete" protocol livelocks. The bucket id
-    // set is metadata-scale (== task count), so materializing it on the
-    // driver is bounded by design, not by data volume.
-    val withData = dataRows.map(_.bucket).toSet
-    val emptyRows = (pendingSet -- withData).toSeq.sorted.map { b =>
-      LineageRow(snapshotId, b, 0L, 0L, 0L, 0L, 0L, "", "", "", Committed)
-    }
-    // ONE append = one commit event, written driver-side (the repartition(1)
-    // Spark job this replaces re-computed the read-back and dominated the
-    // streaming sink's per-epoch fixed cost — round-3 judge #10)
-    graft.sources.GraftWriteCommit.appendLedgerRows(
-      tableDir, dataRows ++ emptyRows, spark.sessionState.newHadoopConf())
     pendingSet
   }
 
@@ -325,9 +233,9 @@ object SegmentStore {
     *
     * Atomicity: the compacted snapshot's commit rows and the
     * `superseded@C` markers for the old snapshots land in one ledger
-    * append ([[graft.sources.GraftWriteCommit.publish]]), after the
-    * compaction snapshot's directory is cleared of whatever a crashed
-    * earlier attempt left there. A crash before the append leaves the new
+    * append ([[graft.sources.GraftWriteCommit.publish]]), which first
+    * clears each bucket dir of whatever a crashed earlier attempt left
+    * there. A crash before the append leaves the new
     * data files invisible; there is no window where both generations are
     * readable. Time travel to a snapshot before C still reads the
     * pre-compaction layout ([[SupersededPrefix]]).
@@ -392,8 +300,7 @@ object SegmentStore {
         .parallelize((0 until buckets).map(b => b -> inputs.getOrElse(b, Nil)), buckets)
         .map { case (b, files) =>
           graft.sources.GraftSegmentWriter.rewriteBucket(files, b, stagingDir, schema,
-            tokensPerChunk, codecConf, hconf.value,
-            org.apache.spark.TaskContext.get().taskAttemptId())
+            tokensPerChunk, codecConf, hconf.value)
         }
         .collect()
       // Concurrency guard (advisor finding): compaction is a single-
@@ -416,12 +323,6 @@ object SegmentStore {
         LineageRow(s, b, 0L, 0L, 0L, 0L, 0L, "", "", "",
           s"$SupersededPrefix$compactionId")
       }
-      // a crashed earlier attempt at this id may have moved part-files here
-      // without its ledger append: unread until now, but visible once the
-      // rows below land (compaction ids are this maintainer's alone; a
-      // batch append's claimed id gets no such clear)
-      val target = new org.apache.hadoop.fs.Path(s"${dataDir(tableDir)}/snapshotId=$compactionId")
-      target.getFileSystem(conf).delete(target, true)
       graft.sources.GraftWriteCommit.publish(tableDir, stagingDir, compactionId,
         messages, conf, markers)
     } catch {
@@ -479,11 +380,11 @@ object SegmentStore {
 
   /** Read segments across ALL snapshots (the incremental-encode view: each
     * micro-batch is its own snapshot and the table is their disjoint union,
-    * because a snapshot never clobbers another — partitionBy(snapshotId,
-    * bucket) above). Ledger-aware since r3: only committed, non-superseded
-    * partitions are visible (same read-committed stance as the connector),
-    * so crash-window data and pre-compaction generations never
-    * double-count. */
+    * because a snapshot never clobbers another — its files live under
+    * `snapshotId=S/bucket=B`). Ledger-aware since r3: only committed,
+    * non-superseded partitions are visible (same read-committed stance as
+    * the connector), so crash-window data and pre-compaction generations
+    * never double-count. */
   def readSegmentsAll(spark: SparkSession, tableDir: String): Dataset[Segment] =
     readSegmentsVisible(spark, tableDir, None)
 

@@ -247,8 +247,9 @@ object Encode {
   }
 
   /** Incremental (Structured Streaming) encode surfaced as a query: the
-    * token table lands as 4 input files, StreamingEncode drains them with
-    * maxFilesPerTrigger=1 — one ledgered snapshot per micro-batch — and the
+    * token table lands as 4 input files, `writeStream.format("graft")`
+    * drains them with maxFilesPerTrigger=1 — one ledgered snapshot per
+    * micro-batch (`StreamEpochBase + batchId`) — and the
     * union of all snapshots must decode back to exactly the input
     * (element-for-element token equality, the same contract as the batch
     * round-trip). Output: per-source doc/token totals + mismatches (must be
@@ -262,8 +263,12 @@ object Encode {
     val base = java.nio.file.Files.createTempDirectory("graft-stream-q").toString
     try {
       input.repartition(4).write.parquet(s"$base/input")
-      graft.streaming.StreamingEncode.drain(
-        spark, s"$base/input", s"$base/table", s"$base/ckpt", buckets = 8)
+      spark.readStream.schema(input.schema).option("maxFilesPerTrigger", 1)
+        .parquet(s"$base/input")
+        .writeStream.format("graft")
+        .option("checkpointLocation", s"$base/ckpt").option("buckets", "8")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start(s"$base/table").awaitTermination()
       val nSnapshots = SegmentStore.readLineage(spark, s"$base/table")
         .filter($"status" === SegmentStore.Committed)
         .select($"snapshotId").distinct().count()

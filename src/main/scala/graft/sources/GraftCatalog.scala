@@ -79,8 +79,8 @@ class GraftCatalog extends CatalogPlugin with TableCatalog with FunctionCatalog 
   * `pmod(hash(doc_id), n)` (Murmur3 seed 42) — identical to the engine's
   * shuffle key (GraftEncoder.bucketed) AND to what a
   * `Distributions.clustered(doc_id)` write exchange computes, so the
-  * stored layout of BOTH write paths is a valid KeyGroupedPartitioning
-  * under this function. */
+  * stored layout of every write (`encodeCommit`, the connector's append,
+  * compaction) is a valid KeyGroupedPartitioning under this function. */
 object GraftBucketFunction extends UnboundFunction {
   override def name(): String = "bucket"
   override def description(): String =

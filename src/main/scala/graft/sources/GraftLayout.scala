@@ -457,8 +457,8 @@ object GraftLayout {
   private final case class LedgerEntry(snapshotId: Long, bucket: Int,
                                        status: String, nRows: Long)
   /** Identity of a ledger file's bytes: commits only ever ADD files (a
-    * ledger file is never rewritten in place — both writers name files by
-    * UUID), so (length, mtime) per path is a sound freshness check. */
+    * ledger file is never rewritten in place — every commit names its file
+    * by UUID), so (length, mtime) per path is a sound freshness check. */
   private final case class LedgerFileKey(len: Long, mtime: Long)
 
   private final val LedgerFileCacheMax = 64 * 1024

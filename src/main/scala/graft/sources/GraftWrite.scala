@@ -45,11 +45,12 @@ import graft.engine.{BucketedRow, GraftConf, GraftEncoder, PackedRow, Segment, T
   *    determinism the lineage protocol keys on;
   *  - **encode is the task**: each [[GraftSegmentWriter]] buffers its
   *    bucket (the engine's explicit memory contract: size buckets so one
-  *    fits in task memory), runs the same [[GraftEncoder.encodePartition]]
-  *    kernel as the batch path, and writes its segments as ONE parquet
-  *    part-file via the parquet example API — no Spark session, no second
-  *    job, byte-compatible with files the Spark writer produces (same
-  *    3-level LIST structure the read side walks);
+  *    fits in task memory), runs the engine's
+  *    [[GraftEncoder.encodePartitionPacked]] kernel, and writes its
+  *    segments as ONE parquet part-file via the parquet example API — no
+  *    Spark session, no second job. The same writer serves
+  *    [[graft.lineage.SegmentStore.encodeCommit]] and compaction, so every
+  *    segment file of a table comes from this class;
   *  - **commit is atomic through the lineage ledger**: writers stage under
   *    `dir/_staging/<queryId>/`, the driver's `commit()` moves exactly the
   *    files named in the commit messages into
@@ -62,10 +63,12 @@ import graft.engine.{BucketedRow, GraftConf, GraftEncoder, PackedRow, Segment, T
   *    distinct taskIds and only the attempt the commit coordinator accepted
   *    is moved;
   *  - **streaming is the same writer**: `toStreaming` commits each epoch as
-  *    its own snapshot (`snapshotId = epochId`, the
-  *    [[graft.streaming.StreamingEncode]] convention). A replayed epoch
-  *    finds its snapshot already in the ledger and drops its staged files —
-  *    checkpoint replay + ledger idempotence compose to exactly-once.
+  *    its own snapshot (`snapshotId = StreamEpochBase + epochId`). A
+  *    replayed epoch finds its snapshot already in the ledger and drops its
+  *    staged files; one replayed after a crash between the file move and
+  *    the ledger append republishes into cleared bucket dirs
+  *    ([[GraftWriteCommit.publish]]) — checkpoint replay + ledger
+  *    idempotence compose to exactly-once.
   *
   * Write options: `buckets` (bucket/partition count, default
   * [[GraftWriteBuilder.DefaultBuckets]]), `tokensPerChunk`, and the
@@ -198,9 +201,9 @@ class GraftWrite(path: String, schema: StructType, buckets: Int,
   override def requiredDistribution(): Distribution =
     Distributions.clustered(Array[VExpression](Expressions.column("doc_id")))
   override def requiredNumPartitions(): Int = buckets
-  // No required ordering: encodePartition sorts its bucket in task memory,
-  // skipping Spark's external-sorter serialize/spill layer (measured
-  // map-side GC win, see GraftEncoder.partitionForEncode).
+  // No required ordering: the writer sorts its bucket in task memory
+  // (GraftEncoder.encodePartitionPacked), skipping Spark's external-sorter
+  // serialize/spill layer, which stage telemetry showed dominating GC.
   override def requiredOrdering(): Array[SortOrder] = Array.empty
 
   private def stagingDir = s"$path/_staging/$queryId"
@@ -251,33 +254,26 @@ class GraftBatchWrite(path: String, stagingDir: String, schema: StructType,
         if (batchIds.isEmpty) 0L else batchIds.max
       }) + 1L
     // Concurrent appends are made conflict-safe with CAS semantics on the
-    // filesystem (round-3 judge #3): CLAIM the id by creating
-    // lineage/_commit_<id> with create-no-overwrite — atomic on HDFS and
-    // object stores with preconditions — and move to the next id when
-    // another writer holds it. Two simultaneous appends thus publish two
-    // DISTINCT snapshots instead of silently merging into one. Iceberg
-    // solves the same race with an atomic catalog swap; this is the
-    // catalog-free rendering of that swap.
+    // filesystem: CLAIM the id by creating lineage/_commit_<id> exclusively
+    // and move to the next id when another writer holds it. Two
+    // simultaneous appends thus publish two DISTINCT snapshots (and never
+    // clear each other's bucket dirs at publish). Iceberg solves the same
+    // race with an atomic catalog swap; this is its catalog-free rendering.
     val fs = new HPath(path).getFileSystem(conf)
     val ledgerDir = new HPath(path, "lineage")
     fs.mkdirs(ledgerDir)
-    var claimed = false
     var attempts = 0
-    while (!claimed) {
+    while ({
       require(snapshotId < GraftWriteCommit.StreamEpochBase,
         s"batch snapshot-id space exhausted at $snapshotId")
-      try {
-        fs.create(new HPath(ledgerDir, s"_commit_$snapshotId"), false).close()
-        claimed = true
-      } catch {
-        case e: java.io.IOException =>
-          attempts += 1
-          if (attempts > 1000)
-            throw new java.io.IOException(
-              s"graft commit: could not claim a snapshot id under $ledgerDir " +
-                s"after $attempts attempts (last tried $snapshotId)", e)
-          snapshotId += 1L
-      }
+      !GraftWriteCommit.claim(fs, new HPath(ledgerDir, s"_commit_$snapshotId"))
+    }) {
+      attempts += 1
+      if (attempts > 1000)
+        throw new java.io.IOException(
+          s"graft commit: could not claim a snapshot id under $ledgerDir " +
+            s"after $attempts attempts (last tried $snapshotId)")
+      snapshotId += 1L
     }
     GraftWriteCommit.publish(path, stagingDir, snapshotId,
       messages.map(_.asInstanceOf[GraftCommitMessage]), conf)
@@ -337,16 +333,33 @@ object GraftWriteCommit {
     * commit. */
   final val StreamEpochBase: Long = 1L << 40
 
+  /** Create `marker` exclusively: true for exactly one of any number of
+    * racing callers. Hadoop's local filesystem checks for existence, then
+    * opens, so there the claim is an O_EXCL create of the local file. */
+  def claim(fs: FileSystem, marker: HPath): Boolean =
+    try {
+      fs match {
+        case local: org.apache.hadoop.fs.LocalFileSystem =>
+          java.nio.file.Files.createFile(local.pathToFile(marker).toPath)
+        case _ => fs.create(marker, false).close()
+      }
+      true
+    } catch { case _: java.io.IOException => false }
+
   /** Move the staged files, then ONE ledger append of the messages' rows
     * plus `extraLedger` (compaction's supersede markers) — the commit
-    * point. */
+    * point. Each message's `data/snapshotId=S/bucket=B` dir is cleared
+    * first: a crashed earlier attempt at this (uncommitted) pair may have
+    * moved part-files there without its ledger append, and the rows below
+    * would make them visible. */
   def publish(path: String, stagingDir: String, snapshotId: Long,
               messages: Array[GraftCommitMessage], conf: Configuration,
               extraLedger: Seq[graft.lineage.LineageRow] = Nil): Unit = {
     val fs = new HPath(path).getFileSystem(conf)
     messages.foreach { m =>
+      val dest = new HPath(s"$path/data/snapshotId=$snapshotId/bucket=${m.bucket}")
+      fs.delete(dest, true)
       m.stagedFile.foreach { staged =>
-        val dest = new HPath(s"$path/data/snapshotId=$snapshotId/bucket=${m.bucket}")
         fs.mkdirs(dest)
         val src = new HPath(staged)
         if (!fs.rename(src, new HPath(dest, src.getName)))
@@ -453,33 +466,43 @@ object GraftSegmentWriter {
     * tens of segments at the default chunk budget). */
   final val RowGroupBytes: Long = 8L * 1024 * 1024
 
-  /** One compaction task: decode every segment of one bucket's `files` to
-    * the stored domain ([[GraftEncoder.decodeSegmentWithMeta]]; a stream a
-    * file lacks decodes as nulls) and re-encode the rows through an
-    * append's writer — same sort, chunking, kernels, file blooms and
-    * staged part-file — returning its commit message. */
-  def rewriteBucket(files: Seq[String], bucket: Int, stagingDir: String,
-                    schema: StructType, tokensPerChunk: Int, codecConf: CodecConf,
-                    conf: Configuration, taskId: Long): GraftCommitMessage = {
-    val w = new GraftSegmentWriter(stagingDir, schema, bucket, taskId,
-      tokensPerChunk, codecConf, conf)
-    val specs = MetaColumns.metaFields(schema).flatMap(MetaColumns.specsFor)
+  /** One bucket's write task outside the DSv2 surface (encodeCommit,
+    * compaction): `feed` buffers the bucket's rows into an append's writer
+    * — same sort, chunking, kernels, file blooms and staged part-file. */
+  def writeBucket(bucket: Int, stagingDir: String, schema: StructType,
+                  tokensPerChunk: Int, codecConf: CodecConf, conf: Configuration)(
+      feed: GraftSegmentWriter => Unit): GraftCommitMessage = {
+    val w = new GraftSegmentWriter(stagingDir, schema, bucket,
+      org.apache.spark.TaskContext.get().taskAttemptId(), tokensPerChunk, codecConf, conf)
     try {
-      files.foreach(GraftLayout.foreachSegment(_, conf, bucket) { seg =>
-        GraftEncoder.decodeSegmentWithMeta(seg, specs).foreach { case (r, m) =>
-          w.writeStored(r.doc_id, r.tokens, r.n_tok, r.source, m)
-        }
-      })
+      feed(w)
       w.commit()
     } catch {
       case e: Throwable => w.abort(); throw e
     } finally w.close()
   }
+
+  /** One compaction task: decode every segment of one bucket's `files` to
+    * the stored domain ([[GraftEncoder.decodeSegmentWithMeta]]; a stream a
+    * file lacks decodes as nulls) and re-encode the rows ([[writeBucket]]). */
+  def rewriteBucket(files: Seq[String], bucket: Int, stagingDir: String,
+                    schema: StructType, tokensPerChunk: Int, codecConf: CodecConf,
+                    conf: Configuration): GraftCommitMessage = {
+    val specs = MetaColumns.metaFields(schema).flatMap(MetaColumns.specsFor)
+    writeBucket(bucket, stagingDir, schema, tokensPerChunk, codecConf, conf) { w =>
+      files.foreach(GraftLayout.foreachSegment(_, conf, bucket) { seg =>
+        GraftEncoder.decodeSegmentWithMeta(seg, specs).foreach { case (r, m) =>
+          w.writeStored(r.doc_id, r.tokens, r.n_tok, r.source, m)
+        }
+      })
+    }
+  }
 }
 
 /** Buffers one bucket's rows (the engine's explicit task-memory contract),
-  * encodes them with the shared [[GraftEncoder.encodePartition]] kernel at
-  * commit, and writes the segments as one staged parquet part-file. */
+  * encodes them with the engine's kernels at commit, and writes the
+  * segments as one staged parquet part-file — the only writer of segment
+  * files. */
 class GraftSegmentWriter(stagingDir: String, schema: StructType,
                          partitionId: Int, taskId: Long,
                          tokensPerChunk: Int, codecConf: CodecConf,
@@ -527,6 +550,15 @@ class GraftSegmentWriter(stagingDir: String, schema: StructType,
       }
     writeStored(row.getUTF8String(iDoc).toString, row.getArray(iTok).toIntArray(),
       row.getInt(iN), row.getUTF8String(iSrc).toString, m)
+  }
+
+  /** Buffer one canonical row whose tokens the engine already packed
+    * ([[GraftEncoder.bucketed]] rows shuffled to this bucket's task): the
+    * row's bucket must be the writer's. */
+  private[graft] def writePacked(row: PackedRow): Unit = {
+    require(row.bucket == partitionId,
+      s"a row of bucket ${row.bucket} reached the writer of bucket $partitionId")
+    packed += row
   }
 
   /** Buffer one row already in the stored domain: `meta` holds one slot

@@ -39,10 +39,11 @@ import org.apache.spark.sql.types.{ArrayType, BinaryType, IntegerType, LongType,
   * are `c_<stream>__<field>` (`c_doc_id__payload`, `c_tokens__minV`, ...).
   * The `__` separator is reserved — stream names may not contain it.
   *
-  * BOTH writers emit v2 (the DSv2 [[GraftSegmentWriter]] via the example
-  * API, the engine path via [[flattenSegments]] + Spark's parquet writer),
-  * and it is the only layout the readers accept: a pre-pivot nested file
-  * fails in [[GraftLayout.footerInfo]], naming the file. */
+  * The one segment writer ([[GraftSegmentWriter]], via the example API)
+  * emits v2, and it is the only layout the readers accept: a pre-pivot
+  * nested file fails in [[GraftLayout.footerInfo]], naming the file.
+  * [[flattenSegments]] renders the same layout as a DataFrame, for a bare
+  * (unledgered) dump through Spark's parquet writer. */
 object SegmentLayoutV2 {
 
   /** Canonical streams in Segment.cols order (doc order matters: the
@@ -143,7 +144,7 @@ object SegmentLayoutV2 {
     df.select(others ++ flats: _*)
   }
 
-  /** Object-level twin of [[flatten]] for the engine write path: one pass
+  /** Object-level twin of [[flatten]] for a bare dump: one pass
     * over each Segment's cols, no Catalyst expression tree — the
     * expression version evaluates `filter(cols, …)` once per (stream,
     * field), each materializing a filtered struct array INCLUDING the

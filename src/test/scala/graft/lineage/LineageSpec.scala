@@ -398,4 +398,31 @@ class LineageSpec extends AnyFunSuite {
     assert(graft.sources.GraftLayout.listDataFiles(dir, conf).forall(
       graft.sources.GraftLayout.partitionOf(_).exists(_._1 == cid)))
   }
+
+  test("encodeCommit crash before the ledger append: a re-run publishes exactly the input rows") {
+    val input = TokenTables.synthetic(spark, nDocs = 240, seed = 15L)
+    val dir = tmp()
+    assert(SegmentStore.encodeCommit(input, dir, 1L, buckets = 3) === Set(0, 1, 2))
+    // simulate the crash: the data files stay where the move put them, the
+    // ledger file never landed
+    val conf = spark.sessionState.newHadoopConf()
+    val ledgerDir = new org.apache.hadoop.fs.Path(s"$dir/lineage")
+    val fs = ledgerDir.getFileSystem(conf)
+    val ledgerFiles = fs.listStatus(ledgerDir).map(_.getPath)
+      .filter(p => p.getName.endsWith(".parquet") && !p.getName.startsWith("."))
+    assert(ledgerFiles.length === 1)
+    assert(fs.delete(ledgerFiles.head, false))
+    val stale = graft.sources.GraftLayout.listParquetFiles(s"$dir/data/snapshotId=1", conf)
+    assert(stale.nonEmpty)
+    assert(spark.read.format("graft").load(dir).count() === 0L)
+
+    assert(SegmentStore.encodeCommit(input, dir, 1L, buckets = 3) === Set(0, 1, 2))
+    def key(rows: Seq[(String, Seq[Int], Int, String)]) = rows.sortBy(_._1)
+    val got = spark.read.format("graft").load(dir).collect().toSeq
+      .map(r => (r.getString(0), r.getSeq[Int](1), r.getInt(2), r.getString(3)))
+    assert(key(got) === key(input.collect().toSeq.map(r =>
+      (r.doc_id, r.tokens.toSeq, r.n_tok, r.source))))
+    val republished = graft.sources.GraftLayout.listParquetFiles(s"$dir/data/snapshotId=1", conf)
+    assert(republished.intersect(stale).isEmpty, "stale files of the crashed attempt survived")
+  }
 }

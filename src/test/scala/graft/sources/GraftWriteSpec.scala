@@ -122,23 +122,27 @@ class GraftWriteSpec extends AnyFunSuite {
       e.getMessage.contains("Cannot find data") || e.getMessage.contains("Cannot write"))
   }
 
+  /** Drain `base/in` into `base/table` through the streaming sink, one
+    * input file per epoch, checkpointing under `base/ckpt`. */
+  private def drainStream(base: String): Unit = {
+    implicit val enc = Encoders.product[TokenRow]
+    val q = spark.readStream.schema(enc.schema)
+      .option("maxFilesPerTrigger", 1).parquet(s"$base/in")
+      .writeStream.format("graft")
+      .option("checkpointLocation", s"$base/ckpt")
+      .option("buckets", "4")
+      .trigger(Trigger.AvailableNow())
+      .start(s"$base/table")
+    q.awaitTermination()
+  }
+
   test("streaming sink: one ledgered snapshot per epoch, replay-idempotent") {
     val base = tmp()
     val input = TokenTables.synthetic(spark, nDocs = 200, seed = 7L)
     input.toDF("doc_id", "tokens", "n_tok", "source")
       .repartition(4).write.parquet(s"$base/in")
 
-    implicit val enc = Encoders.product[TokenRow]
-    def drainOnce(): Unit = {
-      val q = spark.readStream.schema(enc.schema)
-        .option("maxFilesPerTrigger", 1).parquet(s"$base/in")
-        .writeStream.format("graft")
-        .option("checkpointLocation", s"$base/ckpt")
-        .option("buckets", "4")
-        .trigger(Trigger.AvailableNow())
-        .start(s"$base/table")
-      q.awaitTermination()
-    }
+    def drainOnce(): Unit = drainStream(base)
     drainOnce()
     val snaps = SegmentStore.readLineage(spark, s"$base/table").collect()
       .filter(_.status == SegmentStore.Committed).map(_.snapshotId).distinct
@@ -153,5 +157,64 @@ class GraftWriteSpec extends AnyFunSuite {
     val snaps2 = SegmentStore.readLineage(spark, s"$base/table").collect()
       .filter(_.status == SegmentStore.Committed).map(_.snapshotId).distinct
     assert(snaps2.sorted === snaps.sorted)
+  }
+
+  test("streaming crash after the data move, before the ledger append: the replayed epoch publishes once") {
+    val base = tmp()
+    val input = TokenTables.synthetic(spark, nDocs = 200, seed = 21L)
+      .toDF("doc_id", "tokens", "n_tok", "source")
+    input.repartition(2).write.parquet(s"$base/in")
+    drainStream(base)
+    val conf = spark.sessionState.newHadoopConf()
+    val last = GraftWriteCommit.StreamEpochBase + 1L
+    assert(GraftLayout.committedSnapshots(s"$base/table", conf).get ===
+      Set(last - 1L, last))
+
+    // simulate the crash: epoch 1's part-files stay where the move put
+    // them, its ledger file and its checkpoint commit never landed
+    val ledgerDir = new org.apache.hadoop.fs.Path(s"$base/table/lineage")
+    val fs = ledgerDir.getFileSystem(conf)
+    val ledgerFile = fs.listStatus(ledgerDir).map(_.getPath)
+      .filter(p => p.getName.endsWith(".parquet") && !p.getName.startsWith("."))
+      .filter(p => spark.read.parquet(p.toString).filter(s"snapshotId = $last").count() > 0L)
+    assert(ledgerFile.length === 1)
+    assert(fs.delete(ledgerFile.head, false))
+    val commit = new org.apache.hadoop.fs.Path(s"$base/ckpt/commits/1")
+    assert(fs.delete(commit, false))
+    fs.delete(new org.apache.hadoop.fs.Path(s"$base/ckpt/commits/.1.crc"), false)
+    val stale = GraftLayout.listParquetFiles(s"$base/table/data/snapshotId=$last", conf)
+    assert(stale.nonEmpty)
+
+    // the restart replays epoch 1 with the same offsets
+    drainStream(base)
+    assert(GraftLayout.committedSnapshots(s"$base/table", conf).get ===
+      Set(last - 1L, last))
+    assert(collectTokens(spark.read.format("graft").load(s"$base/table")) ===
+      collectTokens(input))
+    val republished = GraftLayout.listParquetFiles(s"$base/table/data/snapshotId=$last", conf)
+    assert(republished.intersect(stale).isEmpty, "stale files of the crashed epoch survived")
+  }
+
+  test("snapshot-id claim is exclusive: of racing threads exactly one wins each id") {
+    val dir = new org.apache.hadoop.fs.Path(tmp())
+    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
+    val threads = 8
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
+    try {
+      (1 to 50).foreach { round =>
+        val marker = new org.apache.hadoop.fs.Path(dir, s"_commit_$round")
+        val start = new java.util.concurrent.CyclicBarrier(threads)
+        val claims = (0 until threads).map { _ =>
+          pool.submit(new java.util.concurrent.Callable[Boolean] {
+            override def call(): Boolean = {
+              start.await()
+              GraftWriteCommit.claim(fs, marker)
+            }
+          })
+        }
+        val winners = claims.count(_.get(30, java.util.concurrent.TimeUnit.SECONDS))
+        assert(winners === 1, s"round $round: $winners threads claimed $marker")
+      }
+    } finally pool.shutdownNow()
   }
 }

@@ -1,15 +1,17 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Encoders, SparkSession}
+import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.engine.{GraftEncoder, TokenTables}
+import graft.engine.{GraftEncoder, TokenRow, TokenTables}
 import graft.lineage.SegmentStore
 
-/** Incremental-encode contract: micro-batches commit as per-batch snapshots
-  * through the SAME lineage ledger as the batch path; the union of all
-  * snapshots decodes back to exactly the input; a re-run over a drained
-  * checkpoint processes nothing (exactly-once evidence). */
+/** Incremental-encode contract of `writeStream.format("graft")`:
+  * micro-batches commit as per-batch snapshots through the SAME lineage
+  * ledger as the batch path; the union of all snapshots decodes back to
+  * exactly the input; a re-run over a drained checkpoint processes nothing
+  * (exactly-once evidence). */
 class StreamingEncodeSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -22,13 +24,29 @@ class StreamingEncodeSpec extends AnyFunSuite {
   private def tmp(): String =
     java.nio.file.Files.createTempDirectory("graft-stream-spec").toString
 
+  /** Drain every file under `input` into `table` through the graft
+    * streaming sink, `maxFilesPerTrigger` files per micro-batch, and return
+    * when done. */
+  private def drain(input: String, table: String, checkpoint: String,
+                    buckets: Int, maxFilesPerTrigger: Int): Unit = {
+    implicit val enc = Encoders.product[TokenRow]
+    spark.readStream.schema(enc.schema)
+      .option("maxFilesPerTrigger", maxFilesPerTrigger).parquet(input)
+      .writeStream.format("graft")
+      .option("checkpointLocation", checkpoint)
+      .option("buckets", buckets.toString)
+      .trigger(Trigger.AvailableNow())
+      .start(table)
+      .awaitTermination()
+  }
+
   test("drain encodes every micro-batch as its own ledgered snapshot; union decodes bit-identically") {
     import spark.implicits._
     val input = TokenTables.synthetic(spark, nDocs = 300, seed = 42L)
     val base = tmp()
     input.repartition(3).write.parquet(s"$base/input")
 
-    StreamingEncode.drain(spark, s"$base/input", s"$base/table", s"$base/ckpt",
+    drain(s"$base/input", s"$base/table", s"$base/ckpt",
       buckets = 4, maxFilesPerTrigger = 1)
 
     // one snapshot per micro-batch (3 files x maxFilesPerTrigger=1), every
@@ -58,14 +76,14 @@ class StreamingEncodeSpec extends AnyFunSuite {
     val base = tmp()
     input.repartition(2).write.parquet(s"$base/input")
 
-    StreamingEncode.drain(spark, s"$base/input", s"$base/table", s"$base/ckpt",
+    drain(s"$base/input", s"$base/table", s"$base/ckpt",
       buckets = 4, maxFilesPerTrigger = 1)
     val ledger1 = SegmentStore.readLineage(spark, s"$base/table").collect()
       .sortBy(r => (r.snapshotId, r.bucket))
 
     // second drain with the SAME checkpoint: no new files -> no new batches
     // -> the ledger is byte-for-byte what it was
-    StreamingEncode.drain(spark, s"$base/input", s"$base/table", s"$base/ckpt",
+    drain(s"$base/input", s"$base/table", s"$base/ckpt",
       buckets = 4, maxFilesPerTrigger = 1)
     val ledger2 = SegmentStore.readLineage(spark, s"$base/table").collect()
       .sortBy(r => (r.snapshotId, r.bucket))
@@ -75,16 +93,16 @@ class StreamingEncodeSpec extends AnyFunSuite {
     TokenTables.synthetic(spark, nDocs = 50, seed = 9L)
       .map(r => r.copy(doc_id = "late_" + r.doc_id))
       .repartition(1).write.mode("append").parquet(s"$base/input")
-    StreamingEncode.drain(spark, s"$base/input", s"$base/table", s"$base/ckpt",
+    drain(s"$base/input", s"$base/table", s"$base/ckpt",
       buckets = 4, maxFilesPerTrigger = 1)
     val ledger3 = SegmentStore.readLineage(spark, s"$base/table").collect()
     val newSnaps = ledger3.map(_.snapshotId).distinct.length - ledger1.map(_.snapshotId).distinct.length
     assert(newSnaps === 1, s"late file must land as exactly one new snapshot, got $newSnaps")
     assert(ledger3.map(_.nRows).sum === 250L)
 
-    // a batch-replay after "crash between data write and ledger append" is
-    // encodeCommit's own tested domain (LineageSpec); here we assert the
-    // composition: total decoded rows match total input rows exactly
+    // an epoch replay after "crash between data move and ledger append" is
+    // GraftWriteSpec's tested domain; here we assert the composition: total
+    // decoded rows match total input rows exactly
     assert(GraftEncoder.decode(SegmentStore.readSegmentsAll(spark, s"$base/table")).count() === 250L)
   }
 }

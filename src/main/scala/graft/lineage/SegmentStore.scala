@@ -150,10 +150,11 @@ object SegmentStore {
     * committed by THIS call (empty = nothing left to do; the job is
     * restart-complete).
     *
-    * One Spark job, one task per bucket: the pending rows are clustered by
+    * One task per pending bucket: the pending rows are clustered by
     * `doc_id` into `buckets` partitions — the hash the DSv2 write declares,
-    * so task i holds exactly bucket i — and each task encodes its bucket
-    * through the append writer
+    * so partition i holds exactly bucket i — only the pending partitions
+    * are scheduled, and each task encodes its bucket through the append
+    * writer
     * ([[graft.sources.GraftSegmentWriter.writeBucket]]). The driver then
     * publishes the staged files and the ledger rows in one
     * [[graft.sources.GraftWriteCommit.publish]].
@@ -189,17 +190,17 @@ object SegmentStore {
       .map(r => PackedRow(r.doc_id, TokenPack.pack(r.tokens), r.n_tok, r.source, r.bucket))
       .repartition(buckets, $"doc_id")
     val stagingDir = s"$tableDir/_staging/commit-$snapshotId-${java.util.UUID.randomUUID()}"
-    val hconf = new org.apache.spark.util.SerializableConfiguration(conf)
+    val hconf = spark.sparkContext.broadcast(new org.apache.spark.util.SerializableConfiguration(conf))
     try {
-      // every bucket's task runs and reports, an empty one with zero stats;
-      // only the pending buckets publish (a committed bucket's dir is never
-      // cleared)
-      val messages = rows.rdd.mapPartitions { it =>
-        Iterator(graft.sources.GraftSegmentWriter.writeBucket(
-          org.apache.spark.TaskContext.getPartitionId(), stagingDir,
-          graft.sources.GraftTable.TokenSchema, tokensPerChunk,
-          graft.codec.CodecConf.Default, hconf.value)(w => it.foreach(w.writePacked)))
-      }.collect().filter(m => pendingSet(m.bucket))
+      // only the pending buckets' partitions are scheduled: the pruned
+      // RDD keeps them in parent order, so its partition i is bucket
+      // pending(i) (`pending` ascends)
+      val messages = org.apache.spark.rdd.PartitionPruningRDD.create(rows.rdd, pendingSet)
+        .mapPartitionsWithIndex { (i, it) =>
+          Iterator(graft.sources.GraftSegmentWriter.writeBucket(
+            pending(i), stagingDir, graft.sources.GraftTable.TokenSchema, tokensPerChunk,
+            graft.codec.CodecConf.Default, hconf.value.value)(w => it.foreach(w.writePacked)))
+        }.collect()
       graft.sources.GraftWriteCommit.publish(tableDir, stagingDir, snapshotId, messages, conf)
     } catch {
       case e: Throwable =>
@@ -292,7 +293,7 @@ object SegmentStore {
       .flatMap(f => graft.sources.GraftLayout.partitionOf(f).filter(visible).map(_._2 -> f))
       .groupMap(_._1)(_._2)
     val stagingDir = s"$tableDir/_staging/compact-$compactionId-${java.util.UUID.randomUUID()}"
-    val hconf = new org.apache.spark.util.SerializableConfiguration(conf)
+    val hconf = spark.sparkContext.broadcast(new org.apache.spark.util.SerializableConfiguration(conf))
     try {
       // one element per slice: task i is bucket i, so the partition id the
       // encoder records is the bucket's, as in an append
@@ -300,7 +301,7 @@ object SegmentStore {
         .parallelize((0 until buckets).map(b => b -> inputs.getOrElse(b, Nil)), buckets)
         .map { case (b, files) =>
           graft.sources.GraftSegmentWriter.rewriteBucket(files, b, stagingDir, schema,
-            tokensPerChunk, codecConf, hconf.value)
+            tokensPerChunk, codecConf, hconf.value.value)
         }
         .collect()
       // Concurrency guard (advisor finding): compaction is a single-

@@ -6,9 +6,8 @@ import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.parquet.example.data.Group
-import org.apache.parquet.hadoop.ParquetReader
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
@@ -68,8 +67,8 @@ import graft.codec.{IntCodecs, SegmentBloom, StringCodecs}
   *  - **scan opener** (§2.A.5/7): one InputPartition per segment part-file;
   *    each reader streams Groups straight from parquet with no Spark
   *    session on the executor path, under the session's Hadoop conf
-  *    (credentials/filesystem settings reach executors via
-  *    [[SerializableConfiguration]]);
+  *    (credentials/filesystem settings reach executors as one broadcast
+  *    [[SerializableConfiguration]] per scan);
   *  - **bloom-filter pushdown**: point predicates (EqualTo/In on id
   *    columns, `array_contains` token lookups) consult the per-chunk
   *    split-block bloom filters ([[graft.codec.SegmentBloom]], the ORC
@@ -933,14 +932,19 @@ class GraftScan(
     }
   }
 
+  /** The session's Hadoop conf reaches the tasks as a broadcast, as in
+    * Spark's own `ParquetScan`: an executor deserializes it once per scan,
+    * not once per task, and every task of the scan opens its file under
+    * the same Configuration object ([[GraftLayout.RecordCursor]]). */
   override def createReaderFactory(): PartitionReaderFactory =
-    new GraftReaderFactory(required, effectiveFilters, limit, tokenRange, hconf,
+    new GraftReaderFactory(required, effectiveFilters, limit, tokenRange,
+      org.apache.spark.SparkContext.getOrCreate().broadcast(hconf),
       tokenPoints, batchRows, elemRanges, elemPoints, toggles.bloom)
 }
 
 class GraftReaderFactory(required: StructType, pushed: Array[Filter],
                          limit: Option[Int], tokenRange: Option[(Long, Long)],
-                         hconf: SerializableConfiguration,
+                         hconf: Broadcast[SerializableConfiguration],
                          tokenPoints: Seq[Long] = Nil,
                          batchRows: Int = Int.MaxValue,
                          elemRanges: Map[String, (Long, Long)] = Map.empty,
@@ -953,7 +957,7 @@ class GraftReaderFactory(required: StructType, pushed: Array[Filter],
   override def supportColumnarReads(partition: InputPartition): Boolean = true
   override def createColumnarReader(partition: InputPartition): PartitionReader[ColumnarBatch] =
     new GraftColumnarPartitionReader(GraftInputPartition.fileOf(partition),
-      required, pushed, limit, tokenRange, hconf.value, tokenPoints, batchRows,
+      required, pushed, limit, tokenRange, hconf.value.value, tokenPoints, batchRows,
       elemRanges, elemPoints, bloomEnabled)
 }
 
@@ -1248,21 +1252,17 @@ private[sources] final class SegmentScanCore(
       elemPoints.keySet
   }
 
-  private val reader: ParquetReader[Group] = {
+  private val records: GraftLayout.RecordCursor = {
     val statSuffixes = Seq("minV", "maxV", "minS", "maxS", "bytesOut", "nValues")
     val wanted: Set[String] = Set("nRows") ++
       footer.streams.flatMap(s => statSuffixes.map(f => SegmentLayoutV2.field(s, f))) ++
       payloadStreams.map(s => SegmentLayoutV2.field(s, "payload")) ++
       bloomStreams.map(s => SegmentLayoutV2.field(s, "bloom"))
-    val b = ParquetReader
-      .builder(new NameFilterReadSupport(wanted.contains _), new HPath(file))
-      .withConf(conf)
-    SegmentLayoutV2.statFilter(pushed.toSeq, tokenRange, tokenPoints,
-      footer.fieldNames.contains _, elemRanges, elemPoints) match {
-      case Some(p) =>
-        b.withFilter(org.apache.parquet.filter2.compat.FilterCompat.get(p)).build()
-      case None => b.build()
-    }
+    val c = new GraftLayout.RecordCursor(file, conf,
+      SegmentLayoutV2.statFilter(pushed.toSeq, tokenRange, tokenPoints,
+        footer.fieldNames.contains _, elemRanges, elemPoints))
+    try c.select(wanted.contains)
+    catch { case e: Throwable => c.close(); throw e }
   }
 
   // per-task scan counters, reported to Spark as DSv2 custom task metrics
@@ -1275,16 +1275,16 @@ private[sources] final class SegmentScanCore(
 
   /** Next matching segment, decoded; null at end of file. */
   def nextSegment(): DecodedSegment = {
-    var g = reader.read()
+    var g = records.next()
     while (g != null) {
       val seg = decodeGroup(g)
       if (seg != null) return seg
-      g = reader.read()
+      g = records.next()
     }
     null
   }
 
-  def close(): Unit = reader.close()
+  def close(): Unit = records.close()
 
   def metricsValues(rowsEmitted: Long): Array[CustomTaskMetric] = Array(
     GraftTaskMetric("graft segments decoded", mSegsDecoded),
@@ -1304,10 +1304,10 @@ private[sources] final class SegmentScanCore(
       def has(f: String): Boolean = g.getFieldRepetitionCount(fld(f)) > 0
       def bin(f: String): Array[Byte] =
         if (has(f)) g.getBinary(fld(f), 0).getBytes else Array.emptyByteArray
-      // flattenSegments writes NULL stream fields for a segment that lacks
-      // a footer-listed stream (schema-evolved or foreign files): treat an
-      // absent stream as "no chunk" — the read path then degrades soundly
-      // (unknown stats, decode-as-null) instead of crashing on a stat read.
+      // a segment that lacks a footer-listed stream (schema-evolved or
+      // foreign files) has NULL fields for it: treat an absent stream as
+      // "no chunk" — the read path then degrades soundly (unknown stats,
+      // decode-as-null) instead of crashing on a stat read.
       if (!has("nValues")) None
       else {
         val payload = if (payloadStreams(s)) bin("payload") else Array.emptyByteArray

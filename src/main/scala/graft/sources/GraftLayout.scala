@@ -8,11 +8,11 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path => HPath}
 import org.apache.parquet.{HadoopReadOptions, ParquetReadOptions}
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
+import org.apache.parquet.filter2.compat.FilterCompat
+import org.apache.parquet.filter2.predicate.FilterPredicate
 import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.api.ReadSupport.ReadContext
-import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.parquet.hadoop.util.{HadoopCodecs, HadoopInputFile}
-import org.apache.parquet.io.ColumnIOFactory
+import org.apache.parquet.io.{ColumnIOFactory, MessageColumnIO, RecordReader}
 import org.apache.parquet.schema.MessageType
 
 /** Driver-side knowledge of the segment-table layout shared by planning,
@@ -69,15 +69,15 @@ object GraftLayout {
     }
 
   /** The read options of the last Configuration files were opened with.
-    * `ParquetFileReader.open(HadoopInputFile)` and `ParquetReader.builder
-    * (...).withConf` build fresh options from the Configuration on every
-    * call (they copy every property — a few ms per file), so a listing
-    * that opens N files under one Configuration pays that N times. One
-    * slot is enough: the callers that open many files (header prefetch,
-    * the ledger fold, compaction's input sniff) hold one Configuration
-    * for the whole listing. The options are path-free, which only matters
-    * for parquet modular encryption (per-file decryption properties) —
-    * graft never writes encrypted parquet. */
+    * Building options from a Configuration copies every property (a few
+    * ms per file), so [[RecordCursor]] builds them once per Configuration
+    * and copies them per open. One slot is enough: the callers that open
+    * many files hold one Configuration for the whole batch — the header
+    * prefetch, the ledger fold and compaction's input reads on the driver,
+    * and every task of a scan, whose Configuration is the scan's broadcast
+    * value (one object per executor). The options are path-free, which
+    * only matters for parquet modular encryption (per-file decryption
+    * properties) — graft never writes encrypted parquet. */
   @volatile private var lastReadOptions: (Configuration, ParquetReadOptions) = null
 
   private def readOptions(conf: Configuration): ParquetReadOptions = {
@@ -90,47 +90,93 @@ object GraftLayout {
     }
   }
 
-  /** Opens `file` with the shared [[readOptions]] and a codec factory of
-    * its own: a factory caches one decompressor per codec, which is not
-    * thread-safe ([[prefetchHeaders]] reads files in parallel), and
-    * closing a reader releases its factory. */
-  private def withReader[A](file: String, conf: Configuration)(f: ParquetFileReader => A): A = {
-    val shared = readOptions(conf)
-    val opts = ParquetReadOptions.builder(shared.getConfiguration).copy(shared)
-      .withCodecFactory(HadoopCodecs.newFactory(conf, 0)).build()
-    val r = ParquetFileReader.open(HadoopInputFile.fromPath(new HPath(file), conf), opts)
-    try f(r) finally r.close()
+  /** Pull-style cursor over the records of one parquet file — the one way
+    * graft reads parquet: header, ledger, compaction and scan readers all
+    * go through it.
+    *
+    * The file opens with the shared [[readOptions]], a codec factory of
+    * its own (a factory caches one decompressor per codec, which is not
+    * thread-safe — [[prefetchHeaders]] reads files in parallel — and
+    * closing the reader releases it) and `filter` as the record filter.
+    * Parquet then drops the row groups whose statistics, dictionaries or
+    * blooms cannot match when the file opens, and the pages whose column
+    * indexes cannot match in `readNextFilteredRowGroup`; the cursor skips
+    * the records the filter drops, as parquet's `InternalParquetRecordReader`
+    * does. */
+  final class RecordCursor(file: String, conf: Configuration,
+                           filter: Option[FilterPredicate] = None) extends AutoCloseable {
+    private[GraftLayout] val reader: ParquetFileReader = {
+      val shared = readOptions(conf)
+      val b = ParquetReadOptions.builder(shared.getConfiguration).copy(shared)
+        .withCodecFactory(HadoopCodecs.newFactory(conf, 0))
+      filter.foreach(p => b.withRecordFilter(FilterCompat.get(p)))
+      ParquetFileReader.open(HadoopInputFile.fromPath(new HPath(file), conf), b.build())
+    }
+    private val recordFilter = filter.fold(FilterCompat.NOOP)(FilterCompat.get)
+    private val md = reader.getFooter.getFileMetaData
+    private var requested: MessageType = md.getSchema
+    private var io: MessageColumnIO = null
+    private var converter: GroupRecordConverter = null
+    private var records: RecordReader[Group] = null
+    private var left = 0L
+
+    /** Projects to the top-level fields `keep` accepts: parquet reads only
+      * those fields' column chunks, so a dropped `c_<s>__payload` field's
+      * pages are never fetched. Call before the first [[next]]; without it
+      * every field is read. */
+    def select(keep: String => Boolean): this.type = {
+      val schema = md.getSchema
+      requested = new MessageType(schema.getName,
+        schema.getFields.asScala.filter(t => keep(t.getName)).asJava)
+      reader.setRequestedSchema(requested)
+      this
+    }
+
+    /** The next record the filter keeps; null at the end of the file. */
+    def next(): Group = {
+      if (io == null) {
+        io = new ColumnIOFactory(md.getCreatedBy).getColumnIO(requested, md.getSchema, true)
+        converter = new GroupRecordConverter(requested)
+      }
+      while (true) {
+        if (left == 0L) {
+          val pages = reader.readNextFilteredRowGroup()
+          if (pages == null) return null
+          records = io.getRecordReader(pages, converter, recordFilter)
+          left = pages.getRowCount
+        } else {
+          left -= 1
+          val g = records.read()
+          // null: the filter dropped this record
+          if (g != null) return g
+        }
+      }
+      null
+    }
+
+    def foreach(f: Group => Unit): Unit = {
+      var g = next()
+      while (g != null) { f(g); g = next() }
+    }
+
+    override def close(): Unit = reader.close()
   }
 
-  /** Every record of an open file, projected to the top-level fields
-    * `keep` accepts: parquet reads only those fields' column chunks, so a
-    * dropped `c_<s>__payload` field's pages are never fetched. */
-  private def foreachRecord(r: ParquetFileReader, keep: String => Boolean)(f: Group => Unit): Unit = {
-    val md = r.getFooter.getFileMetaData
-    val schema = md.getSchema
-    val requested = new MessageType(schema.getName,
-      schema.getFields.asScala.filter(t => keep(t.getName)).asJava)
-    r.setRequestedSchema(requested)
-    val io = new ColumnIOFactory(md.getCreatedBy).getColumnIO(requested, schema, true)
-    var pages = r.readNextRowGroup()
-    while (pages != null) {
-      val records = io.getRecordReader(pages, new GroupRecordConverter(requested))
-      var i = 0L
-      while (i < pages.getRowCount) { f(records.read()); i += 1 }
-      pages = r.readNextRowGroup()
-    }
+  private def withRecords[A](file: String, conf: Configuration)(f: RecordCursor => A): A = {
+    val c = new RecordCursor(file, conf)
+    try f(c) finally c.close()
   }
 
   /** Every segment of a v2 part-file, payloads included, in file order —
     * the compaction input reader. `bucket` comes from the file's partition
     * directory (the layout does not store it). A stream whose fields are
     * null in a record (absent from that segment: a stream added by schema
-    * evolution, written by the engine path's flatten) is left out of
+    * evolution, or a foreign dump that left it null) is left out of
     * `cols`, as [[SegmentLayoutV2.unflatten]] does. */
   def foreachSegment(file: String, conf: Configuration, bucket: Int)(
-      f: graft.engine.Segment => Unit): Unit = withReader(file, conf) { r =>
-    val streams = footerOf(file, r).streams
-    foreachRecord(r, _ => true) { g =>
+      f: graft.engine.Segment => Unit): Unit = withRecords(file, conf) { c =>
+    val streams = footerOf(file, c.reader).streams
+    c.foreach { g =>
       def has(n: String): Boolean = g.getFieldRepetitionCount(n) > 0
       def str(n: String): String = if (has(n)) g.getString(n, 0) else ""
       def long(n: String): Long = if (has(n)) g.getLong(n, 0) else 0L
@@ -153,7 +199,7 @@ object GraftLayout {
     * in particular one in the pre-v2 nested `cols` layout — fails here,
     * naming the file, before a reader can misread it. */
   def footerInfo(file: String, conf: Configuration): FooterInfo =
-    cachedFooter(file).getOrElse(withReader(file, conf)(footerOf(file, _)))
+    cachedFooter(file).getOrElse(withRecords(file, conf)(c => footerOf(file, c.reader)))
 
   private def cachedFooter(file: String): Option[FooterInfo] =
     footerCache.synchronized(Option(footerCache.get(file)))
@@ -256,8 +302,8 @@ object GraftLayout {
 
   /** Per-stream stat COLUMNS — the requested schema keeps only nRows + the
     * stat fields, so parquet's column pruning never reads payload pages. */
-  private def readHeader(file: String, conf: Configuration): FileHeader = withReader(file, conf) { reader =>
-    val fi = footerOf(file, reader)
+  private def readHeader(file: String, conf: Configuration): FileHeader = withRecords(file, conf) { c =>
+    val fi = footerOf(file, c.reader)
     val statSuffixes = Set("minV", "maxV", "minS", "maxS", "bytesIn", "nValues")
     val wanted: Set[String] = Set("nRows") ++
       fi.streams.flatMap(s => statSuffixes.map(f => SegmentLayoutV2.field(s, f)))
@@ -265,14 +311,14 @@ object GraftLayout {
     val bytes = scala.collection.mutable.Map.empty[String, Long]
     val ranges = scala.collection.mutable.Map.empty[String, ColRange]
     val nVals = scala.collection.mutable.Map.empty[String, Long]
-    foreachRecord(reader, wanted.contains) { g =>
+    c.select(wanted.contains).foreach { g =>
       rows += g.getInteger("nRows", 0)
       fi.streams.foreach { s =>
         def has(f: String): Boolean =
           g.getFieldRepetitionCount(SegmentLayoutV2.field(s, f)) > 0
-        // a segment missing this stream entirely (flattenSegments writes
-        // NULL stream fields then) contributes nothing — same soundness
-        // stance as the chunk reader's absent-stream guard
+        // a segment missing this stream entirely (NULL stream fields)
+        // contributes nothing — same soundness stance as the chunk
+        // reader's absent-stream guard
         if (has("nValues")) {
           bytes.updateWith(s)(v => Some(v.getOrElse(0L) +
             (if (has("bytesIn")) g.getLong(SegmentLayoutV2.field(s, "bytesIn"), 0) else 0L)))
@@ -542,7 +588,7 @@ object GraftLayout {
     ledgerFilesRead.incrementAndGet()
     val out = ArrayBuffer.empty[LedgerEntry]
     val top = Set("snapshotId", "bucket", "status", "nRows")
-    withReader(file, conf)(foreachRecord(_, top.contains) { g =>
+    withRecords(file, conf)(_.select(top.contains).foreach { g =>
       out += LedgerEntry(g.getLong("snapshotId", 0), g.getInteger("bucket", 0),
         g.getString("status", 0), g.getLong("nRows", 0))
     })
@@ -556,27 +602,4 @@ object GraftLayout {
     * the streaming sink uses membership for epoch-replay idempotence. */
   def committedSnapshots(path: String, conf: Configuration): Option[Set[Long]] =
     committedPairs(path, conf).map(_.committed.map(_._1))
-}
-
-/** GroupReadSupport keeping only top-level fields satisfying a name
-  * predicate — the v2-layout projection: dropping a `c_<s>__payload`
-  * field here is what makes parquet skip that stream's pages at the IO
-  * layer.
-  *
-  * BOTH `init` overloads are overridden: on parquet 1.16 (this classpath)
-  * `ReadSupport.init(InitContext)` delegates to the `ParquetConfiguration`
-  * overload, so a subclass overriding only the Hadoop-`Configuration` one
-  * is silently never called — the projection becomes a no-op and every
-  * column chunk is read (the bug this class's IO spec caught). */
-class NameFilterReadSupport(keep: String => Boolean) extends GroupReadSupport {
-  private def prune(fileSchema: MessageType): ReadContext = {
-    val kept = fileSchema.getFields.asScala.filter(f => keep(f.getName))
-    new ReadContext(new MessageType(fileSchema.getName, kept.asJava))
-  }
-  override def init(configuration: Configuration,
-                    keyValueMetaData: java.util.Map[String, String],
-                    fileSchema: MessageType): ReadContext = prune(fileSchema)
-  override def init(configuration: org.apache.parquet.conf.ParquetConfiguration,
-                    keyValueMetaData: java.util.Map[String, String],
-                    fileSchema: MessageType): ReadContext = prune(fileSchema)
 }

@@ -15,6 +15,8 @@ import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{BINARY, INT32, INT64}
+import org.apache.spark.SparkContext
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
 import org.apache.spark.sql.connector.expressions.{Expressions, SortOrder, Expression => VExpression}
@@ -225,7 +227,8 @@ class GraftBatchWrite(path: String, stagingDir: String, schema: StructType,
     extends BatchWrite {
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    GraftWriterFactory(stagingDir, schema, tokensPerChunk, codecConf, hconf)
+    GraftWriterFactory(stagingDir, schema, tokensPerChunk, codecConf,
+      SparkContext.getOrCreate().broadcast(hconf))
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val conf = hconf.value
@@ -298,7 +301,8 @@ class GraftStreamingWrite(path: String, stagingDir: String, schema: StructType,
     extends StreamingWrite {
 
   override def createStreamingWriterFactory(info: PhysicalWriteInfo): StreamingDataWriterFactory =
-    GraftWriterFactory(stagingDir, schema, tokensPerChunk, codecConf, hconf)
+    GraftWriterFactory(stagingDir, schema, tokensPerChunk, codecConf,
+      SparkContext.getOrCreate().broadcast(hconf))
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
     val conf = hconf.value
@@ -447,14 +451,16 @@ object GraftWriteCommit {
 }
 
 /** Serves both the batch and streaming writer surfaces (the epoch id is
-  * commit-time information; the writer itself is identical). */
+  * commit-time information; the writer itself is identical). The session's
+  * Hadoop conf rides as a broadcast: an executor deserializes it once per
+  * write, not once per task. */
 final case class GraftWriterFactory(stagingDir: String, schema: StructType,
                                     tokensPerChunk: Int, codecConf: CodecConf,
-                                    hconf: SerializableConfiguration)
+                                    hconf: Broadcast[SerializableConfiguration])
     extends DataWriterFactory with StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     new GraftSegmentWriter(stagingDir, schema, partitionId, taskId,
-      tokensPerChunk, codecConf, hconf.value)
+      tokensPerChunk, codecConf, hconf.value.value)
   override def createWriter(partitionId: Int, taskId: Long, epochId: Long): DataWriter[InternalRow] =
     createWriter(partitionId, taskId)
 }

@@ -6,7 +6,7 @@ import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{BINARY, INT32, INT64}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources.{And => SAnd, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, IsNotNull, LessThan, LessThanOrEqual, Or => SOr, StringStartsWith}
 import org.apache.spark.sql.types.{ArrayType, BinaryType, IntegerType, LongType, StringType, StructField, StructType}
@@ -41,9 +41,7 @@ import org.apache.spark.sql.types.{ArrayType, BinaryType, IntegerType, LongType,
   *
   * The one segment writer ([[GraftSegmentWriter]], via the example API)
   * emits v2, and it is the only layout the readers accept: a pre-pivot
-  * nested file fails in [[GraftLayout.footerInfo]], naming the file.
-  * [[flattenSegments]] renders the same layout as a DataFrame, for a bare
-  * (unledgered) dump through Spark's parquet writer. */
+  * nested file fails in [[GraftLayout.footerInfo]], naming the file. */
 object SegmentLayoutV2 {
 
   /** Canonical streams in Segment.cols order (doc order matters: the
@@ -130,60 +128,6 @@ object SegmentLayoutV2 {
   }
 
   // ---- engine-path conversions ---------------------------------------
-
-  /** Segment-shaped DataFrame (with its `cols` array) -> flat v2 columns.
-    * Non-cols columns (incl. `bucket`) pass through unchanged. `streams`
-    * names the stream set to pivot (canonical only by default; a metadata
-    * table's writer/compactor passes canonical ++ its metadata names). */
-  def flatten(df: DataFrame, streams: Seq[String] = CanonicalStreams): DataFrame = {
-    val others = df.columns.filterNot(_ == "cols").map(col).toSeq
-    val flats: Seq[Column] = streams.flatMap { s =>
-      val c = element_at(filter(col("cols"), x => x.getField("col") === lit(s)), 1)
-      StreamFields.map(f => c.getField(f).as(field(s, f)))
-    }
-    df.select(others ++ flats: _*)
-  }
-
-  /** Object-level twin of [[flatten]] for a bare dump: one pass
-    * over each Segment's cols, no Catalyst expression tree — the
-    * expression version evaluates `filter(cols, …)` once per (stream,
-    * field), each materializing a filtered struct array INCLUDING the
-    * multi-MB payload bytes (55 copies of the row's payloads per segment
-    * with the canonical five streams). A stream absent from a segment
-    * yields null fields, matching `element_at(…, 1)` on an empty filter. */
-  def flattenSegments(ds: org.apache.spark.sql.Dataset[graft.engine.Segment],
-                      streams: Seq[String] = CanonicalStreams): DataFrame = {
-    val schema = StructType(sparkSchema(streams) :+ StructField("bucket", IntegerType))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    val nTop = 8
-    ds.map { seg =>
-      val by = seg.cols.iterator.map(c => c.col -> c).toMap
-      val vals = new Array[Any](nTop + streams.length * StreamFields.length + 1)
-      vals(0) = seg.segmentId
-      vals(1) = seg.source
-      vals(2) = seg.partitionId
-      vals(3) = seg.chunkIdx
-      vals(4) = seg.nRows
-      vals(5) = seg.nTokens
-      vals(6) = seg.bytesIn
-      vals(7) = seg.bytesOut
-      var i = nTop
-      streams.foreach { s =>
-        by.get(s) match {
-          case Some(c) =>
-            vals(i) = c.codecId; vals(i + 1) = c.codecName; vals(i + 2) = c.nValues
-            vals(i + 3) = c.bytesIn; vals(i + 4) = c.bytesOut
-            vals(i + 5) = c.minV; vals(i + 6) = c.maxV
-            vals(i + 7) = c.minS; vals(i + 8) = c.maxS
-            vals(i + 9) = c.payload; vals(i + 10) = c.bloom
-          case None => // leave the 11 slots null
-        }
-        i += StreamFields.length
-      }
-      vals(i) = seg.bucket
-      org.apache.spark.sql.Row.fromSeq(vals.toIndexedSeq)
-    }(enc)
-  }
 
   /** Flat v2 DataFrame -> Segment-shaped (cols array restored in canonical
     * order). `withPayload = false` substitutes empty payload/bloom bytes so

@@ -2,6 +2,7 @@ package graft.lineage
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.scheduler.{SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -317,14 +318,17 @@ class LineageSpec extends AnyFunSuite {
   }
 
   /** Runs `body` under job group `group` and returns its result with the
-    * number of stages of every job the group submitted: a sentinel job
-    * follows, and listener events arrive in order, so once the sentinel is
-    * seen every earlier job has been too. */
-  private def jobsOf[A](group: String)(body: => A): (A, Seq[Int]) = {
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int)]()
+    * start events of the group's jobs and the end events of their tasks:
+    * a sentinel job follows, and listener events arrive in order, so once
+    * the sentinel is seen every earlier event has been too. */
+  private def eventsOf[A](group: String)(body: => A)
+      : (A, Seq[SparkListenerJobStart], Seq[SparkListenerTaskEnd]) = {
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, SparkListenerJobStart)]()
+    val tasks = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerTaskEnd]()
     val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")) -> e.stageInfos.size)
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")) -> e)
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = tasks.add(e)
     }
     val sc = spark.sparkContext
     sc.addSparkListener(listener)
@@ -337,8 +341,16 @@ class LineageSpec extends AnyFunSuite {
       def seen = jobs.iterator().asScala.exists(_._1 == s"$group-sentinel")
       while (!seen && System.nanoTime() < deadline) Thread.sleep(10)
       assert(seen, "listener never saw the sentinel job")
-      (a, jobs.iterator().asScala.filter(_._1 == group).map(_._2).toSeq)
+      val mine = jobs.iterator().asScala.filter(_._1 == group).map(_._2).toSeq
+      val stages = mine.flatMap(_.stageIds).toSet
+      (a, mine, tasks.iterator().asScala.filter(t => stages(t.stageId)).toSeq)
     } finally sc.removeSparkListener(listener)
+  }
+
+  /** [[eventsOf]] reduced to the number of stages of every job. */
+  private def jobsOf[A](group: String)(body: => A): (A, Seq[Int]) = {
+    val (a, jobs, _) = eventsOf(group)(body)
+    (a, jobs.map(_.stageInfos.size))
   }
 
   test("compaction is one shuffle-free Spark job: one stage, one task per bucket") {
@@ -424,5 +436,25 @@ class LineageSpec extends AnyFunSuite {
       (r.doc_id, r.tokens.toSeq, r.n_tok, r.source))))
     val republished = graft.sources.GraftLayout.listParquetFiles(s"$dir/data/snapshotId=1", conf)
     assert(republished.intersect(stale).isEmpty, "stale files of the crashed attempt survived")
+  }
+
+  test("encodeCommit runs one writer task per pending bucket") {
+    val input = TokenTables.synthetic(spark, nDocs = 200, seed = 16L)
+    val dir = tmp()
+    // writer tasks are the result tasks; the shuffle before them runs
+    // shuffle-map tasks
+    def run(maxBuckets: Int): (Set[Int], Int) = {
+      val (done, _, tasks) = eventsOf("graft-encode-probe") {
+        SegmentStore.encodeCommit(input, dir, 1L, buckets = 16, maxBucketsPerRun = maxBuckets)
+      }
+      (done, tasks.count(_.taskType == "ResultTask"))
+    }
+    val (run1, tasks1) = run(3)
+    assert(run1 === Set(0, 1, 2))
+    assert(tasks1 === 3, s"$tasks1 writer tasks for 3 pending of 16 buckets")
+    val (run2, tasks2) = run(Int.MaxValue)
+    assert(run2 === (3 until 16).toSet)
+    assert(tasks2 === 13, s"$tasks2 writer tasks for 13 pending of 16 buckets")
+    assert(spark.read.format("graft").load(dir).count() === 200L)
   }
 }

@@ -29,7 +29,7 @@ class GraftDataSourceSpec extends AnyFunSuite {
   private lazy val bare: String = {
     val dir = tmp()
     val input = TokenTables.synthetic(spark, nDocs = 400, seed = 42L)
-    SegmentLayoutV2.flattenSegments(GraftEncoder.encode(input, buckets = 4))
+    FlatSegments.flattenSegments(GraftEncoder.encode(input, buckets = 4))
       .write.parquet(s"$dir/segs")
     s"$dir/segs"
   }
@@ -46,7 +46,7 @@ class GraftDataSourceSpec extends AnyFunSuite {
       val b = math.min(rangeBuckets - 1, (id * rangeBuckets / 400L).toInt)
       graft.engine.BucketedRow(r.doc_id, r.tokens, r.n_tok, r.source, b)
     }
-    SegmentLayoutV2.flattenSegments(
+    FlatSegments.flattenSegments(
       GraftEncoder.encodeBucketed(bucketed, rangeBuckets, tokensPerChunk = 4096))
       .write.parquet(s"$dir/segs")
     s"$dir/segs"
@@ -182,7 +182,7 @@ class GraftDataSourceSpec extends AnyFunSuite {
     // crash-window data: a bucket written WITHOUT a ledger commit must stay
     // invisible (read-committed), and not double-count rows
     val orphan = TokenTables.synthetic(spark, nDocs = 50, seed = 9L)
-    SegmentLayoutV2.flattenSegments(GraftEncoder.encode(orphan, buckets = 1)).drop("bucket")
+    FlatSegments.flattenSegments(GraftEncoder.encode(orphan, buckets = 1)).drop("bucket")
       .write.mode("append").parquet(s"$dir/data/snapshotId=99/bucket=0")
     assert(spark.read.format("graft").load(dir).count() === 200L,
       "uncommitted snapshot leaked into the scan")
@@ -701,7 +701,7 @@ class GraftDataSourceSpec extends AnyFunSuite {
     }
     val dir = tmp()
     val conf = graft.codec.CodecConf(bloomColumns = Set("doc_id", "tokens"))
-    SegmentLayoutV2.flattenSegments(GraftEncoder.encode(spark.createDataset(rows), buckets = 8,
+    FlatSegments.flattenSegments(GraftEncoder.encode(spark.createDataset(rows), buckets = 8,
       tokensPerChunk = 4096, codecConf = conf)).write.parquet(s"$dir/segs")
     val df = spark.read.format("graft").load(s"$dir/segs")
       .filter(array_contains($"tokens", probe))
@@ -716,7 +716,7 @@ class GraftDataSourceSpec extends AnyFunSuite {
     // without the opt-in, the same lookup decodes every segment (correct,
     // just unpruned) — pinning that the knob is the difference
     val dir2 = tmp()
-    SegmentLayoutV2.flattenSegments(GraftEncoder.encode(spark.createDataset(rows), buckets = 8,
+    FlatSegments.flattenSegments(GraftEncoder.encode(spark.createDataset(rows), buckets = 8,
       tokensPerChunk = 4096)).write.parquet(s"$dir2/segs")
     val (got2, m2) = runWithScanMetrics(
       spark.read.format("graft").load(s"$dir2/segs")
@@ -737,7 +737,7 @@ class GraftDataSourceSpec extends AnyFunSuite {
       graft.engine.TokenRow("d3", Array(1, 2), 2, "s"))
     val dir = tmp()
     val conf = graft.codec.CodecConf(bloomColumns = Set("doc_id", "tokens"))
-    SegmentLayoutV2.flattenSegments(GraftEncoder.encode(spark.createDataset(rows), buckets = 2,
+    FlatSegments.flattenSegments(GraftEncoder.encode(spark.createDataset(rows), buckets = 2,
       tokensPerChunk = 4, codecConf = conf)).write.parquet(s"$dir/segs")
     val df = spark.read.format("graft").load(s"$dir/segs")
       .filter(expr("exists(tokens, x -> x >= 7)") && expr("exists(tokens, x -> x <= 7)"))
@@ -813,7 +813,7 @@ class GraftDataSourceSpec extends AnyFunSuite {
       val b = math.min(rangeBuckets - 1, (id * rangeBuckets / 400L).toInt)
       graft.engine.BucketedRow(r.doc_id, r.tokens, r.n_tok, r.source, b)
     }
-    SegmentLayoutV2.flattenSegments(
+    FlatSegments.flattenSegments(
       GraftEncoder.encodeBucketed(bucketed, rangeBuckets, tokensPerChunk = 4096))
       .write.parquet(s"$dir/segs")
     // dim categories are CONTIGUOUS id ranges (cat = id / 50), so a
@@ -1514,5 +1514,22 @@ class GraftDataSourceSpec extends AnyFunSuite {
       metaDf(10).write.format("graft").option("buckets", "2").mode("append").save(dir2)
     }
     assert(e2.getMessage.contains("schema"), e2.getMessage)
+  }
+
+  test("the reader factory ships the Hadoop conf as a broadcast, not inside every task") {
+    import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
+    // a session whose Hadoop conf is large: the conf must not travel in
+    // the factory Spark serializes into each task
+    val padded = spark.newSession()
+    (0 until 2000).foreach(i => padded.conf.set(s"graft.test.pad.$i", s"padding-value-$i"))
+    SparkSession.setActiveSession(padded)
+    val factory = try {
+      padded.read.format("graft").load(bare).queryExecution.optimizedPlan.collectFirst {
+        case r: DataSourceV2ScanRelation => r.scan.toBatch.createReaderFactory()
+      }.get
+    } finally SparkSession.setActiveSession(spark)
+    val bytes = org.apache.spark.SparkEnv.get.closureSerializer.newInstance()
+      .serialize(factory).limit()
+    assert(bytes < 16 * 1024, s"reader factory serializes to $bytes B")
   }
 }

@@ -4,7 +4,6 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
-import org.apache.parquet.hadoop.ParquetReader
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.io.api.Binary
@@ -13,12 +12,11 @@ import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{BINARY, INT64}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Regression pin for the parquet-1.16 dead-overload trap: a
-  * `ReadSupport` subclass overriding only the Hadoop-`Configuration`
-  * `init` is silently never consulted (`ReadSupport.init(InitContext)`
-  * delegates to the `ParquetConfiguration` overload), turning every
-  * "pruned" read into a full-file read. These tests measure ACTUAL
-  * filesystem bytes, so a reintroduction fails loudly. */
+/** Regression pin for projected reads: a requested schema that silently
+  * stops reaching parquet (as a `ReadSupport` overriding only the dead
+  * parquet-1.16 `init` overload once did) turns every "pruned" read into a
+  * full-file read. These tests measure ACTUAL filesystem bytes through
+  * [[GraftLayout.RecordCursor]], so a reintroduction fails loudly. */
 class ReadSupportIOSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = {
@@ -38,7 +36,7 @@ class ReadSupportIOSpec extends AnyFunSuite {
     org.apache.hadoop.fs.FileSystem.getAllStatistics.asScala
       .filter(_.getScheme == "file").map(_.getBytesRead).sum
 
-  test("NameFilterReadSupport prunes column-chunk IO (both init overloads live)") {
+  test("GraftLayout.RecordCursor projection prunes column-chunk IO") {
     val conf = spark.sessionState.newHadoopConf()
     val dir = java.nio.file.Files.createTempDirectory("pq-proj-pin").toString
     val file = s"$dir/two-col.parquet"
@@ -63,12 +61,9 @@ class ReadSupportIOSpec extends AnyFunSuite {
 
     def countedRead(keep: String => Boolean): Long = {
       val b0 = fsBytesRead()
-      val r = ParquetReader
-        .builder(new NameFilterReadSupport(keep), new Path(file))
-        .withConf(conf).build()
+      val c = new GraftLayout.RecordCursor(file, conf).select(keep)
       var n = 0
-      while (r.read() != null) n += 1
-      r.close()
+      try c.foreach(_ => n += 1) finally c.close()
       assert(n === 200)
       fsBytesRead() - b0
     }
@@ -76,13 +71,13 @@ class ReadSupportIOSpec extends AnyFunSuite {
     val smallOnly = countedRead(_ == "small")
     // `big` is ~1.6 MB of the ~1.65 MB file; a live projection must skip it
     assert(smallOnly < full / 10,
-      s"projected read counted $smallOnly B vs full $full B — init override dead again?")
+      s"projected read counted $smallOnly B vs full $full B — projection not reaching parquet")
   }
 
   test("v2 header read (GraftLayout.header) skips payload pages") {
     val input = graft.engine.TokenTables.synthetic(spark, nDocs = 1500, seed = 3L)
     val dir = java.nio.file.Files.createTempDirectory("pq-header-pin").toString
-    SegmentLayoutV2.flattenSegments(graft.engine.GraftEncoder.encode(input, buckets = 2))
+    FlatSegments.flattenSegments(graft.engine.GraftEncoder.encode(input, buckets = 2))
       .withColumn("snapshotId", org.apache.spark.sql.functions.lit(1L))
       .write.partitionBy("snapshotId", "bucket").parquet(s"$dir/data")
     val conf = spark.sessionState.newHadoopConf()

@@ -90,8 +90,8 @@ class SegmentLayoutV2Spec extends AnyFunSuite {
         case c => c
       }: _*).collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq
     }
-    assert(key(SegmentLayoutV2.flattenSegments(segs, streams)) ===
-      key(SegmentLayoutV2.flatten(segs.toDF(), streams)))
+    assert(key(FlatSegments.flattenSegments(segs, streams)) ===
+      key(FlatSegments.flatten(segs.toDF(), streams)))
   }
 
   test("v2 stat pruning saves parquet IO: filtered scan reads less than full scan") {
@@ -107,7 +107,7 @@ class SegmentLayoutV2Spec extends AnyFunSuite {
         graft.engine.BucketedRow(r.doc_id, r.tokens, r.n_tok, r.source,
           math.min(rangeBuckets - 1, (id * rangeBuckets / 2000L).toInt))
       }, rangeBuckets, tokensPerChunk = 4096)
-    SegmentLayoutV2.flatten(segs.toDF())
+    FlatSegments.flatten(segs.toDF())
       .withColumn("snapshotId", lit(1L))
       .write.partitionBy("snapshotId", "bucket").parquet(s"$dir/data")
 

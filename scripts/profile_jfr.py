@@ -3,7 +3,7 @@ Flight Recorder recording and prints where the samples fall.
 
 Usage (from the repository root):
   python3 scripts/profile_jfr.py --workload read --seed 4245 \\
-      [--seconds 70] [--delay 40] [--duration S] [--top 25] \\
+      [--seconds 70] [--delay 40] \\
       [--frame Configuration.loadResources ...] [--jfr out.jfr]
 
 The benchmark itself runs unchanged; the recording comes from
@@ -12,15 +12,15 @@ duration=…`. The duration is fixed because perfbench's `Main` leaves through
 `Runtime.halt`, which skips the JVM's exit hooks: a recording that waits for
 exit to dump comes out empty. `--delay` (seconds after JVM start) skips
 start-up and the workload's set-up (three set-up repetitions, about 30 s
-for `read` under the recording on a 4-CPU host); `--duration` defaults to `--seconds - 15` so
-that the recording ends, and is written, before the run does. A warning is
-printed when the set-up the run reports outlasted the delay. The benchmark
-is built first without the recording, so the compiler's JVM is not
-profiled.
+for `read` under the recording on a 4-CPU host). The recording lasts
+`--seconds - 15` s, so that it ends, and is written, before the run does.
+A warning is printed when the set-up the run reports outlasted the delay.
+The benchmark is built first without the recording, so the compiler's JVM
+is not profiled.
 
 Printed, for executor-task threads (`Executor task launch worker …`) and
 for all other (driver) threads separately: the sample count, the top
-`--top` frames by self samples (the frame on top of the stack) and by
+25 frames by self samples (the frame on top of the stack) and by
 inclusive samples (the frame anywhere on the stack, counted once per
 sample), each with its share of that thread group's samples. Every
 `--frame` substring gets its inclusive share in both groups, 0 included.
@@ -40,6 +40,7 @@ EXECUTOR_THREAD = "Executor task launch worker"
 FRAME_RE = re.compile(r"^\s+([\w$.<>/-]+)\(")
 SETUP_RE = re.compile(r"^\[setup\] rep \d+: ([\d.]+) s", re.M)
 JVM_START_S = 2.0
+TOP = 25
 
 
 def samples(jfr_file):
@@ -65,13 +66,13 @@ def samples(jfr_file):
         raise SystemExit(f"profile_jfr: jfr print failed on {jfr_file}")
 
 
-def report(name, n, self_counts, incl_counts, top, wanted):
+def report(name, n, self_counts, incl_counts, wanted):
     print(f"\n== {name}: {n} samples")
     if n == 0:
         return
     for title, counts in (("self", self_counts), ("inclusive", incl_counts)):
-        print(f"-- top {top} by {title} samples")
-        for frame, c in counts.most_common(top):
+        print(f"-- top {TOP} by {title} samples")
+        for frame, c in counts.most_common(TOP):
             print(f"{c / n:7.1%} {c:7d}  {frame}")
     if wanted:
         print("-- requested frames (inclusive)")
@@ -87,13 +88,11 @@ def main():
     ap.add_argument("--seed", required=True, type=int)
     ap.add_argument("--seconds", type=float, default=70.0)
     ap.add_argument("--delay", type=float, default=40.0)
-    ap.add_argument("--duration", type=float, default=None)
-    ap.add_argument("--top", type=int, default=25)
     ap.add_argument("--frame", action="append", default=[],
                     help="frame substring whose inclusive share to print (repeatable)")
     ap.add_argument("--jfr", default=None, help="where to keep the recording")
     a = ap.parse_args()
-    duration = a.duration if a.duration is not None else max(1.0, a.seconds - 15.0)
+    duration = max(1.0, a.seconds - 15.0)
     jfr_file = os.path.abspath(a.jfr or os.path.join(
         ROOT, ".bench_out", f"profile-{a.workload}-seed{a.seed}.jfr"))
     os.makedirs(os.path.dirname(jfr_file), exist_ok=True)
@@ -133,7 +132,7 @@ def main():
     print(f"recording: {os.path.relpath(jfr_file, ROOT)} "
           f"({a.workload}, seed {a.seed}, {int(a.delay)} s delay, {int(duration)} s)")
     for name, (n, self_counts, incl_counts) in groups.items():
-        report(name, n, self_counts, incl_counts, a.top, a.frame)
+        report(name, n, self_counts, incl_counts, a.frame)
 
 
 if __name__ == "__main__":

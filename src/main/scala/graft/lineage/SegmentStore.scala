@@ -206,7 +206,7 @@ object SegmentStore {
       case e: Throwable =>
         graft.sources.GraftWriteCommit.dropStaging(stagingDir, conf)
         throw e
-    }
+    } finally hconf.destroy() // the job is done; free every block manager's copy
     pendingSet
   }
 
@@ -330,7 +330,7 @@ object SegmentStore {
       case e: Throwable =>
         graft.sources.GraftWriteCommit.dropStaging(stagingDir, conf)
         throw e
-    }
+    } finally hconf.destroy()
     Some(compactionId)
   }
 

@@ -938,7 +938,7 @@ class GraftScan(
     * the same Configuration object ([[GraftLayout.RecordCursor]]). */
   override def createReaderFactory(): PartitionReaderFactory =
     new GraftReaderFactory(required, effectiveFilters, limit, tokenRange,
-      org.apache.spark.SparkContext.getOrCreate().broadcast(hconf),
+      org.apache.spark.sql.SparkSession.active.sparkContext.broadcast(hconf),
       tokenPoints, batchRows, elemRanges, elemPoints, toggles.bloom)
 }
 

@@ -15,8 +15,8 @@ import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{BINARY, INT32, INT64}
-import org.apache.spark.SparkContext
 import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
 import org.apache.spark.sql.connector.expressions.{Expressions, SortOrder, Expression => VExpression}
@@ -228,7 +228,7 @@ class GraftBatchWrite(path: String, stagingDir: String, schema: StructType,
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
     GraftWriterFactory(stagingDir, schema, tokensPerChunk, codecConf,
-      SparkContext.getOrCreate().broadcast(hconf))
+      SparkSession.active.sparkContext.broadcast(hconf))
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val conf = hconf.value
@@ -302,7 +302,7 @@ class GraftStreamingWrite(path: String, stagingDir: String, schema: StructType,
 
   override def createStreamingWriterFactory(info: PhysicalWriteInfo): StreamingDataWriterFactory =
     GraftWriterFactory(stagingDir, schema, tokensPerChunk, codecConf,
-      SparkContext.getOrCreate().broadcast(hconf))
+      SparkSession.active.sparkContext.broadcast(hconf))
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
     val conf = hconf.value

@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
 import org.apache.spark.TaskContext
 
@@ -278,14 +278,19 @@ object GraftEncoder {
       .mapPartitions(rows => encodePartitionPacked(rows, tokensPerChunk, codecConf))
   }
 
-  /** Per-partition encode over still-PACKED rows: sort and chunk on the
-    * varint packs (token counts derived from the packs), then unpack each
-    * chunk's tokens STRAIGHT into its flat column array. Vs the unpack-
-    * then-[[encodePartition]] path this allocates zero per-row token
-    * arrays and keeps the partition buffered at wire size (~2.3 B/token)
-    * instead of 4 B/token until each chunk is assembled. Chunk boundaries,
-    * sort order and segment bytes are identical (pinned by
-    * EnginePipelineSpec round-trips). */
+  /** Pure per-partition encode: buffer the partition (≈ one bucket by
+    * construction), sort it in-memory by (bucket, source, doc_id) for the
+    * determinism contract, then greedily chunk by token budget, cutting at
+    * bucket boundaries (a partition may hold several buckets — bucket
+    * values hash onto partitions). chunkIdx counts within a bucket.
+    *
+    * Rows stay varint-PACKED: sort and chunk on the packs (token counts
+    * derived from the packs), then unpack each chunk's tokens STRAIGHT into
+    * its flat column array — zero per-row token arrays, and the partition
+    * stays buffered at wire size (~2.3 B/token) instead of 4 B/token until
+    * each chunk is assembled. Each chunk's segment is byte-identical to
+    * [[encodeChunk]] over the same sorted rows (pinned by
+    * EnginePipelineSpec). */
   def encodePartitionPacked(rows: Iterator[PackedRow],
                             tokensPerChunk: Int,
                             codecConf: CodecConf = CodecConf.Default): Iterator[Segment] = {
@@ -336,46 +341,6 @@ object GraftEncoder {
         while (k < n) { pos += TokenPack.unpackInto(buf(start + k).pack, flat, pos); k += 1 }
         val seg = encodeColumns(docIds, sources, nToks, tokLens, flat, tokenCount,
           pid, chunkIdx, bucket, codecConf, Nil)
-        chunkIdx += 1
-        seg
-      }
-    }
-  }
-
-  /** Pure per-partition encode: buffer the partition (≈ one bucket by
-    * construction), sort it in-memory by (bucket, source, doc_id) for the
-    * determinism contract, then greedily chunk by token budget, cutting at
-    * bucket boundaries (a partition may hold several buckets — bucket
-    * values hash onto partitions). chunkIdx counts within a bucket. */
-  def encodePartition(rows: Iterator[BucketedRow],
-                      tokensPerChunk: Int,
-                      codecConf: CodecConf = CodecConf.Default): Iterator[Segment] = {
-    val pid = Option(TaskContext.get()).map(_.partitionId()).getOrElse(0)
-    val buf = rows.toArray
-    java.util.Arrays.sort(buf, new java.util.Comparator[BucketedRow] {
-      def compare(a: BucketedRow, b: BucketedRow): Int = {
-        if (a.bucket != b.bucket) return Integer.compare(a.bucket, b.bucket)
-        val s = a.source.compareTo(b.source)
-        if (s != 0) s else a.doc_id.compareTo(b.doc_id)
-      }
-    })
-    val in = buf.iterator.buffered
-    new Iterator[Segment] {
-      private var curBucket = Int.MinValue
-      private var chunkIdx = 0
-      def hasNext: Boolean = in.hasNext
-      def next(): Segment = {
-        val bucket = in.head.bucket
-        if (bucket != curBucket) { curBucket = bucket; chunkIdx = 0 }
-        val buf = scala.collection.mutable.ArrayBuffer.empty[TokenRow]
-        var tokenCount = 0L
-        while (in.hasNext && in.head.bucket == bucket &&
-          tokenCount < tokensPerChunk && buf.length < MaxRowsPerChunk) {
-          val r = in.next()
-          buf += TokenRow(r.doc_id, r.tokens, r.n_tok, r.source)
-          tokenCount += r.tokens.length
-        }
-        val seg = encodeChunk(buf.toArray, pid, chunkIdx, bucket, codecConf)
         chunkIdx += 1
         seg
       }
@@ -716,13 +681,13 @@ object GraftEncoder {
         payload.length.toLong, 0L, 0L, "", "", payload, Array.emptyByteArray)
   }
 
-  /** [[encodePartition]] with metadata columns riding beside each row:
-    * same sort, same chunk boundaries, same determinism contract — the
+  /** [[encodePartitionPacked]] with metadata columns riding beside each
+    * row: same sort, same chunk boundaries, same determinism contract — the
     * meta arrays are gathered per chunk and encoded as [[ExtraCol]]
-    * streams. `meta(i)` slots are java.lang.Long (stored 64-bit domain)
-    * or String, null = SQL null, aligned with `specs`. Kept separate from
-    * the canonical-only [[encodePartition]] so the no-metadata hot path
-    * pays no per-row wrapper. */
+    * streams through [[encodeChunk]]. `meta(i)` slots are java.lang.Long
+    * (stored 64-bit domain) or String, null = SQL null, aligned with
+    * `specs`. Kept separate from the canonical-only packed kernel so the
+    * no-metadata hot path pays no per-row wrapper. */
   def encodePartitionWithMeta(rows: Iterator[(BucketedRow, Array[AnyRef])],
                               specs: Seq[MetaColSpec],
                               tokensPerChunk: Int,
@@ -914,123 +879,6 @@ object GraftEncoder {
     val spark = segments.sparkSession
     import spark.implicits._
     segments.flatMap(decodeSegment _)
-  }
-
-  /** Column-pruned decode — the native-engine half of projection pushdown
-    * (the reference gets its half free from DataFusion's projected scan,
-    * /root/reference/src/source.rs; Catalyst prunes OUR parquet scan the
-    * same way, but once a Segment row is materialized [[decodeSegment]]
-    * would still inflate and decode all five streams). A projection that
-    * skips `tokens` skips inflating the token payload — ~95% of stored
-    * bytes — so `SELECT doc_id, n_tok`-shaped scans over the segment table
-    * decode only the few-KB metadata streams. Column order in the result
-    * follows the canonical (doc_id, tokens, n_tok, source) order. */
-  def decodeProjected(segments: Dataset[Segment], columns: Seq[String]): DataFrame = {
-    val spark = segments.sparkSession
-    import spark.implicits._
-    val canonical = Seq("doc_id", "tokens", "n_tok", "source")
-    require(columns.nonEmpty && columns.forall(canonical.contains),
-      s"projectable columns are $canonical, got $columns")
-    val cols = canonical.filter(columns.contains)
-    val needDoc = cols.contains("doc_id")
-    val needTok = cols.contains("tokens")
-    val needN = cols.contains("n_tok")
-    val needSrc = cols.contains("source")
-    // Emit through the TokenRow product encoder — its Array[Int] field
-    // serializes via the primitive-array fast path (no per-token boxing,
-    // unlike a generic Row whose array field boxes every element);
-    // unprojected fields carry constant placeholders that the trailing
-    // Project drops. Placeholder cost is a few bytes per row vs the token
-    // payload the projection exists to skip.
-    segments.flatMap { seg =>
-      val byCol = seg.cols.map(c => c.col -> c).toMap
-      val docIds = if (needDoc) StringCodecs.decodeChunk(byCol("doc_id").payload) else null
-      val sources = if (needSrc) StringCodecs.decodeChunk(byCol("source").payload) else null
-      val nToks = if (needN) IntCodecs.decodeChunkInt(byCol("n_tok").payload) else null
-      val tokLens = if (needTok) IntCodecs.decodeChunkInt(byCol("tok_len").payload) else null
-      val flat = if (needTok) IntCodecs.decodeChunkInt(byCol("tokens").payload) else null
-      var pos = 0
-      (0 until seg.nRows).iterator.map { i =>
-        val tokens = if (needTok) {
-          val len = tokLens(i)
-          val t = java.util.Arrays.copyOfRange(flat, pos, pos + len)
-          pos += len
-          t
-        } else Array.emptyIntArray
-        TokenRow(
-          if (needDoc) docIds(i) else "",
-          tokens,
-          if (needN) nToks(i) else 0,
-          if (needSrc) sources(i) else "")
-      }
-    }.toDF("doc_id", "tokens", "n_tok", "source")
-      .select(cols.map(org.apache.spark.sql.functions.col): _*)
-  }
-
-  /** Decode only segments whose `tokens` chunk [minV, maxV] intersects
-    * [lo, hi] — the chunk-skipping analog of the reference's stripe pruning
-    * via ORC row-index stats (/root/reference/src/predicate.rs:53-245).
-    * INEXACT by the same contract the reference pins (src/source.rs:279-281
-    * reports PushedDown::No): a surviving segment may contain no matching
-    * token; callers re-filter exactly. Payload bytes of skipped segments are
-    * never inflated or decoded. */
-  def decodeWhereTokenRange(segments: Dataset[Segment], lo: Long, hi: Long): Dataset[TokenRow] = {
-    val spark = segments.sparkSession
-    import spark.implicits._
-    segments
-      .filter(exists($"cols", c =>
-        c.getField("col") === lit("tokens") &&
-          c.getField("minV") <= lit(hi) && c.getField("maxV") >= lit(lo)))
-      .flatMap(decodeSegment _)
-  }
-
-  /** String-predicate chunk skipping: decode only segments whose `doc_id`
-    * chunk prefix range intersects [lo, hi] — the string analog of
-    * [[decodeWhereTokenRange]] (the reference converts utf8 predicates into
-    * its stripe pruning the same way, /root/reference/src/predicate.rs:218-221).
-    * INEXACT by contract: [min,max] overlap does not imply a matching row
-    * exists in the chunk; callers re-filter exactly. */
-  def decodeWhereDocIdRange(segments: Dataset[Segment], lo: String, hi: String): Dataset[TokenRow] = {
-    val spark = segments.sparkSession
-    import spark.implicits._
-    segments
-      .filter(exists($"cols", c =>
-        c.getField("col") === lit("doc_id") &&
-          c.getField("minS") <= lit(hi) && c.getField("maxS") >= lit(lo)))
-      .flatMap(decodeSegment _)
-  }
-
-  /** Point-lookup decode via the per-chunk bloom filters: decode only
-    * segments whose `col` chunk bloom may contain the value (the ORC
-    * BLOOM_FILTER pushdown shape — min/max interval stats prune point
-    * predicates ~never on hash-distributed ids, a 1%-FPP bloom prunes them
-    * ~always). INEXACT like every chunk skip: bloom false-positives (and
-    * pre-bloom chunks, which answer may-contain) survive, callers
-    * re-filter exactly. Min/max is checked first — it is free and proves
-    * the definite misses the bloom could false-positive on. */
-  def decodeWhereTokenEquals(segments: Dataset[Segment], v: Long): Dataset[TokenRow] = {
-    val spark = segments.sparkSession
-    import spark.implicits._
-    segments.flatMap { seg =>
-      val ok = seg.cols.find(_.col == "tokens").forall { c =>
-        c.minV <= v && v <= c.maxV && SegmentBloom.mightContainLong(c.bloom, v)
-      }
-      if (ok) decodeSegment(seg) else Iterator.empty
-    }
-  }
-
-  /** String point-lookup via the doc_id chunk blooms (see
-    * [[decodeWhereTokenEquals]]); same inexact contract. */
-  def decodeWhereDocIdEquals(segments: Dataset[Segment], v: String): Dataset[TokenRow] = {
-    val spark = segments.sparkSession
-    import spark.implicits._
-    segments.flatMap { seg =>
-      val ok = seg.cols.find(_.col == "doc_id").forall { c =>
-        compareUtf8(c.minS, v) <= 0 && compareUtf8(v, c.maxS) <= 0 &&
-          SegmentBloom.mightContainString(c.bloom, v)
-      }
-      if (ok) decodeSegment(seg) else Iterator.empty
-    }
   }
 
   /** Pure segment decode (unit-tested without Spark). Int streams decode

@@ -375,10 +375,6 @@ object SegmentStore {
       .as[Segment]
   }
 
-  /** Full decode of a committed snapshot. */
-  def readDecoded(spark: SparkSession, tableDir: String, snapshotId: Long): Dataset[TokenRow] =
-    GraftEncoder.decode(readSegments(spark, tableDir, snapshotId))
-
   /** Read segments across ALL snapshots (the incremental-encode view: each
     * micro-batch is its own snapshot and the table is their disjoint union,
     * because a snapshot never clobbers another — its files live under

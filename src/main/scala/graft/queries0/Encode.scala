@@ -1,6 +1,6 @@
 package graft.queries0
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.engine.{GraftEncoder, TokenTables}
@@ -158,6 +158,22 @@ object Encode {
   private def pruneInput(spark: SparkSession) =
     TokenTables.synthetic(spark, nDocs = 2000, seed = 42L)
 
+  /** Header predicate of the token-range chunk skip: the segment's `tokens`
+    * chunk [minV, maxV] intersects [lo, hi]. INEXACT by the reference
+    * reader's contract (source.rs:279-281): a surviving segment may hold no
+    * matching token, so callers re-filter exactly; skipped payloads are
+    * never decoded. */
+  private def tokenRangeHit(lo: Long, hi: Long): Column =
+    exists(col("cols"), c => c.getField("col") === lit("tokens") &&
+      c.getField("minV") <= lit(hi) && c.getField("maxV") >= lit(lo))
+
+  /** scanned / (scanned + pruned) payload bytes; 1.0 when both are 0 (the
+    * reference's "1.0 = full read" convention, metrics.rs:203-217). */
+  private[graft] def scanEfficiency(scanned: Long, pruned: Long): Double = {
+    val total = scanned + pruned
+    if (total == 0L) 1.0 else scanned.toDouble / total
+  }
+
   /** Chunk skipping by min/max (the reference's stripe-pruning contract,
     * /root/reference/src/source.rs:279-281: prune inexactly, re-filter
     * exactly): scan for rare high token ids, report how many segments the
@@ -168,13 +184,11 @@ object Encode {
     val input = pruneInput(spark)
     val segs = GraftEncoder.encode(input, buckets = 16, tokensPerChunk = 4096).persist()
     try {
+      val hit = tokenRangeHit(lo, hi)
       val seg = segs.agg(
         count(lit(1)).as("n_segments_total"),
-        coalesce(sum(when(exists($"cols", c =>
-          c.getField("col") === lit("tokens") &&
-            c.getField("minV") <= lit(hi) && c.getField("maxV") >= lit(lo)),
-          1L).otherwise(0L)), lit(0L)).as("n_segments_scanned")).collect()(0)
-      val doc = GraftEncoder.decodeWhereTokenRange(segs, lo, hi)
+        coalesce(sum(when(hit, 1L).otherwise(0L)), lit(0L)).as("n_segments_scanned")).collect()(0)
+      val doc = GraftEncoder.decode(segs.filter(hit))
         .agg(
           count(lit(1)).as("n_docs_scanned"),
           coalesce(sum(when(exists(col("tokens"), t => t >= lit(lo.toInt) && t <= lit(hi.toInt)),
@@ -208,13 +222,12 @@ object Encode {
     }
     val segs = GraftEncoder.encodeBucketed(bucketed, rangeBuckets, tokensPerChunk = 4096).persist()
     try {
+      val hit = exists($"cols", c => c.getField("col") === lit("doc_id") &&
+        c.getField("minS") <= lit(target) && c.getField("maxS") >= lit(target))
       val seg = segs.agg(
         count(lit(1)).as("n_segments_total"),
-        coalesce(sum(when(exists($"cols", c =>
-          c.getField("col") === lit("doc_id") &&
-            c.getField("minS") <= lit(target) && c.getField("maxS") >= lit(target)),
-          1L).otherwise(0L)), lit(0L)).as("n_segments_scanned")).collect()(0)
-      val doc = GraftEncoder.decodeWhereDocIdRange(segs, target, target)
+        coalesce(sum(when(hit, 1L).otherwise(0L)), lit(0L)).as("n_segments_scanned")).collect()(0)
+      val doc = GraftEncoder.decode(segs.filter(hit))
         .agg(
           count(lit(1)).as("n_docs_scanned"),
           coalesce(sum(when(col("doc_id") === lit(target), 1L).otherwise(0L)), lit(0L)).as("n_docs_matched"))
@@ -225,22 +238,28 @@ object Encode {
   }
 
   /** Read-side scan metrics surfaced as a query — the reference's 12-counter
-    * metrics surface on OUR decode path (/root/reference/src/metrics.rs:57-218):
-    * run a metered pruned scan, report matched/pruned segments, scanned vs
-    * pruned payload bytes, rows+tokens decoded, and scan_efficiency. */
+    * metrics surface (metrics.rs:57-218) for the token-range pruned scan:
+    * matched/pruned segments, scanned vs pruned payload bytes, rows+tokens
+    * decoded, and scan_efficiency. Exact, not
+    * accumulator-counted: the segment and byte columns are one header
+    * aggregate split by the skip predicate, the row and token columns come
+    * from decoding the matched segments. */
   def scanMetrics(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val input = pruneInput(spark)
     val segs = GraftEncoder.encode(input, buckets = 16, tokensPerChunk = 4096).persist()
     try {
-      val m = new graft.engine.DecodeMetrics(spark.sparkContext)
-      val decoded = graft.engine.DecodeMetrics
-        .decodeWhereTokenRange(segs, PruneLo, PruneHi, m)
-      decoded.count() // the action that populates the accumulators
-      Seq((m.segmentsMatched.value: Long, m.segmentsPruned.value: Long,
-        m.bytesScanned.value: Long, m.bytesPruned.value: Long,
-        m.rowsDecoded.value: Long, m.tokensDecoded.value: Long,
-        m.scanEfficiency))
+      val hit = tokenRangeHit(PruneLo, PruneHi)
+      val h = segs.agg(
+        coalesce(sum(when(hit, 1L).otherwise(0L)), lit(0L)),
+        coalesce(sum(when(hit, 0L).otherwise(1L)), lit(0L)),
+        coalesce(sum(when(hit, $"bytesOut").otherwise(0L)), lit(0L)),
+        coalesce(sum(when(hit, 0L).otherwise($"bytesOut")), lit(0L))).collect()(0)
+      val d = GraftEncoder.decode(segs.filter(hit))
+        .agg(count(lit(1)), coalesce(sum(size($"tokens").cast("long")), lit(0L))).collect()(0)
+      val (scanned, pruned) = (h.getLong(2), h.getLong(3))
+      Seq((h.getLong(0), h.getLong(1), scanned, pruned, d.getLong(0), d.getLong(1),
+        scanEfficiency(scanned, pruned)))
         .toDF("segments_matched", "segments_pruned", "bytes_scanned",
           "bytes_pruned", "rows_decoded", "tokens_decoded", "scan_efficiency")
     } finally segs.unpersist()
@@ -334,29 +353,31 @@ object Encode {
     spark.createDataFrame(spark.sparkContext.parallelize(rows.toSeq, 1), out.schema)
   }
 
-  /** Projection-pruned decode: a `SELECT doc_id, n_tok`-shaped scan decodes
-    * only the metadata streams — the tokens/tok_len payloads (~95% of
-    * stored bytes) are never inflated. Output: row totals from the
-    * projected scan + the payload bytes decoded vs skipped under this
-    * projection (from the chunk ledger, deterministic). */
+  /** Projection-pruned scan: a `SELECT doc_id, n_tok` through the
+    * connector's projection pushdown decodes only those streams — the
+    * tokens/tok_len payloads (~95% of stored bytes) are never read or
+    * inflated. Output: row totals from the projected scan + the payload
+    * bytes decoded vs skipped under this projection (from the committed
+    * segment headers, deterministic). */
   def projectedScan(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val input = TokenTables.fromDocuments(spark, dir)
-    val segs = GraftEncoder.encode(input, buckets = 16).persist()
+    val base = java.nio.file.Files.createTempDirectory("graft-projected-q").toString
     try {
-      val needed = Set("doc_id", "n_tok")
-      val projected = GraftEncoder.decodeProjected(segs, needed.toSeq)
+      SegmentStore.encodeCommit(input, base, 1L, buckets = 16)
+      val needed = Seq("doc_id", "n_tok")
+      val projected = spark.read.format("graft").load(base).select(needed.map(col): _*)
         .agg(count(lit(1)).as("n_docs"), sum($"n_tok").cast("long").as("sum_tokens"))
         .collect()(0)
-      val bytes = segs.select(explode($"cols").as("c"))
+      val bytes = SegmentStore.readSegments(spark, base, 1L).select(explode($"cols").as("c"))
         .groupBy()
         .agg(
-          sum(when($"c.col".isin(needed.toSeq: _*), $"c.bytesOut").otherwise(0L)).as("bytes_decoded"),
-          sum(when($"c.col".isin(needed.toSeq: _*), 0L).otherwise($"c.bytesOut")).as("bytes_skipped"))
+          sum(when($"c.col".isin(needed: _*), $"c.bytesOut").otherwise(0L)).as("bytes_decoded"),
+          sum(when($"c.col".isin(needed: _*), 0L).otherwise($"c.bytesOut")).as("bytes_skipped"))
         .collect()(0)
       Seq((projected.getLong(0), projected.getLong(1), bytes.getLong(0), bytes.getLong(1)))
         .toDF("n_docs", "sum_tokens", "bytes_decoded", "bytes_skipped")
-    } finally segs.unpersist()
+    } finally deleteRecursively(new java.io.File(base))
   }
 
   /** End-to-end through the DSv2 connector: encode the documents-derived

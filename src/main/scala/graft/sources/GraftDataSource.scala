@@ -375,11 +375,10 @@ object GraftScan {
   /** Stats-prunable filter shapes: string/int-kind comparisons on
     * stats-bearing columns (canonical doc_id/source/n_tok AND metadata
     * columns, [[MetaColumns]]), composed under AND/OR (the reference's
-    * predicate-tree conversion, predicate.rs:53-166 — same semantics as
-    * the engine's [[graft.engine.ChunkPredicate]]: AND/OR of may-match
-    * upper bounds is an upper bound, so composition stays sound). NOT is
-    * rejected, as in ChunkPredicate: interval stats cannot prove a
-    * complement empty. */
+    * predicate-tree conversion, predicate.rs:53-166: AND/OR of may-match
+    * upper bounds is an upper bound, so composition stays sound;
+    * [[StatPredicate]] evaluates the tree). NOT is rejected: interval
+    * stats cannot prove a complement empty. */
   def prunable(typeOf: String => Option[org.apache.spark.sql.types.DataType])(f: Filter): Boolean = {
     import org.apache.spark.sql.types.StringType
     def cmp(a: String, v: Any): Boolean = typeOf(a) match {
@@ -1368,9 +1367,9 @@ private[sources] final class SegmentScanCore(
       mBytesPruned += payloadBytes(byCol)
       return null
     }
-    // token-range skip on the tokens chunk min/max — the engine's flagship
-    // chunk skip (GraftEncoder.decodeWhereTokenRange), reachable from SQL
-    // through GraftTokenRangePushdown; inexact, Spark re-filters.
+    // token-range skip on the tokens chunk min/max — the flagship chunk
+    // skip, reachable from SQL through GraftTokenRangePushdown; inexact,
+    // Spark re-filters.
     tokenRange match {
       case Some((lo, hi)) if byCol.contains("tokens") &&
         (byCol("tokens").minV > hi || byCol("tokens").maxV < lo) =>

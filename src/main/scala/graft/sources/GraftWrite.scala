@@ -47,8 +47,10 @@ import graft.engine.{BucketedRow, GraftConf, GraftEncoder, PackedRow, Segment, T
   *    determinism the lineage protocol keys on;
   *  - **encode is the task**: each [[GraftSegmentWriter]] buffers its
   *    bucket (the engine's explicit memory contract: size buckets so one
-  *    fits in task memory), runs the engine's
-  *    [[GraftEncoder.encodePartitionPacked]] kernel, and writes its
+  *    fits in task memory), runs the engine's per-partition kernel —
+  *    [[GraftEncoder.encodePartitionPacked]] for canonical tables,
+  *    [[GraftEncoder.encodePartitionWithMeta]] for tables with metadata
+  *    columns, both chunking through the same column encoder — and writes its
   *    segments as ONE parquet part-file via the parquet example API — no
   *    Spark session, no second job. The same writer serves
   *    [[graft.lineage.SegmentStore.encodeCommit]] and compaction, so every

@@ -1,7 +1,12 @@
 package graft.engine
 
-import org.apache.spark.sql.SparkSession
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.sources.ScanMetrics
 
 /** End-to-end engine correctness: the reference's decode-correctness
   * contract (golden batch equality, /root/reference/tests/basic_reading.rs)
@@ -15,6 +20,15 @@ class EnginePipelineSpec extends AnyFunSuite {
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
+
+  /** `rows` appended to a fresh graft table through the connector. */
+  private def graftTable(rows: Dataset[TokenRow], buckets: Int,
+                         tokensPerChunk: Int = GraftEncoder.DefaultTokensPerChunk): String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-pipeline-spec").toString
+    rows.write.format("graft").option("buckets", buckets.toString)
+      .option("tokensPerChunk", tokensPerChunk.toString).mode(SaveMode.Append).save(dir)
+    dir
+  }
 
   private def assertRoundTrip(input: org.apache.spark.sql.Dataset[TokenRow]): Unit = {
     val segments = GraftEncoder.encode(input, buckets = 4)
@@ -64,14 +78,32 @@ class EnginePipelineSpec extends AnyFunSuite {
       val tokens = Array.fill(n)(rnd.nextInt(50257))
       BucketedRow(f"doc_$i%09d", tokens, n, s"src_${i % 3}", bucket = i % 4)
     }
-    // shuffle input order: both paths must sort to the same layout
+    val tokensPerChunk = 20000
+    // the row path: sort by (bucket, source, doc_id), cut greedy
+    // token-budget chunks (at most MaxRowsPerChunk rows, never across a
+    // bucket) and encode each through encodeChunk
+    val viaRows = rows.sortBy(r => (r.bucket, r.source, r.doc_id)).groupBy(_.bucket)
+      .toSeq.sortBy(_._1).flatMap { case (bucket, inBucket) =>
+        val chunks = ArrayBuffer(ArrayBuffer.empty[TokenRow])
+        var tokens = 0L
+        inBucket.foreach { r =>
+          if (tokens >= tokensPerChunk || chunks.last.length >= GraftEncoder.MaxRowsPerChunk) {
+            chunks += ArrayBuffer.empty[TokenRow]
+            tokens = 0L
+          }
+          chunks.last += TokenRow(r.doc_id, r.tokens, r.n_tok, r.source)
+          tokens += r.tokens.length
+        }
+        chunks.zipWithIndex.map { case (c, i) =>
+          GraftEncoder.encodeChunk(c.toArray, pid = 0, chunkIdx = i, bucket = bucket)
+        }
+      }
+    // shuffle input order: the packed kernel must sort to the same layout
     val shuffled = rnd.shuffle(rows.toSeq).toArray
-    val viaRows = GraftEncoder.encodePartition(
-      shuffled.iterator, tokensPerChunk = 20000).toArray
     val viaPacked = GraftEncoder.encodePartitionPacked(
       shuffled.iterator.map(r =>
         PackedRow(r.doc_id, TokenPack.pack(r.tokens), r.n_tok, r.source, r.bucket)),
-      tokensPerChunk = 20000).toArray
+      tokensPerChunk).toArray
     assert(viaPacked.length === viaRows.length, "same chunk boundaries")
     viaRows.zip(viaPacked).foreach { case (a, b) =>
       assert(a.segmentId === b.segmentId)
@@ -158,19 +190,16 @@ class EnginePipelineSpec extends AnyFunSuite {
   test("doc_id range pruning: skips segments, never loses a matching row") {
     import spark.implicits._
     val input = TokenTables.synthetic(spark, nDocs = 600, seed = 5L)
-    val segs = GraftEncoder.encode(input, buckets = 8, tokensPerChunk = 4096).cache()
+    val table = spark.read.format("graft").load(graftTable(input, buckets = 8, tokensPerChunk = 4096))
     val target = "doc_000000000123"
     val expected = input.filter($"doc_id" === target).collect()
     assert(expected.length === 1)
-    val survivors = GraftEncoder.decodeWhereDocIdRange(segs, target, target)
-    val got = survivors.filter(_.doc_id == target).collect()
-    assert(got.length === 1 && got(0).tokens.toSeq === expected(0).tokens.toSeq)
+    val (got, m) = ScanMetrics.collect(
+      table.filter($"doc_id" >= target && $"doc_id" <= target))
+    assert(got.length === 1 && got(0).getSeq[Int](1) === expected(0).tokens.toSeq)
     // the stat index must actually prune (inexact is fine, useless is not)
-    val total = segs.count()
-    val scanned = survivors.count()
-    val fullDecode = GraftEncoder.decode(segs).count()
-    assert(scanned < fullDecode, s"pruning must skip rows: $scanned of $fullDecode (from $total segments)")
-    segs.unpersist()
+    val scanned = m.getOrElse("graft rows emitted", Long.MaxValue)
+    assert(scanned < 600L, s"pruning must skip rows: $scanned of 600 ($m)")
   }
 
   test("chunking is by token count: no chunk greatly exceeds the budget") {
@@ -186,32 +215,32 @@ class EnginePipelineSpec extends AnyFunSuite {
 
   test("projected decode equals full decode on every projection subset") {
     val input = TokenTables.synthetic(spark, nDocs = 300, seed = 42L)
-    val segs = GraftEncoder.encode(input, buckets = 4)
-    val full = GraftEncoder.decode(segs).collect().map(r => r.doc_id -> r).toMap
+    val table = spark.read.format("graft").load(graftTable(input, buckets = 4))
+    val (fullRows, mFull) = ScanMetrics.collect(table)
+    val full = fullRows.map(r => r.getString(0) -> r).toMap
+    val fullBytes = mFull.getOrElse("graft payload bytes decoded", -1L)
     val subsets = Seq(
       Seq("doc_id"), Seq("doc_id", "n_tok"), Seq("doc_id", "source"),
       Seq("doc_id", "tokens"), Seq("doc_id", "tokens", "n_tok", "source"))
     subsets.foreach { cols =>
-      val rows = GraftEncoder.decodeProjected(segs, cols).collect()
+      val (rows, m) = ScanMetrics.collect(table.select(cols.map(col): _*))
       assert(rows.length === full.size, s"projection $cols row count")
-      assert(rows.head.schema.fieldNames.toSeq ===
-        Seq("doc_id", "tokens", "n_tok", "source").filter(cols.contains))
+      assert(rows.head.schema.fieldNames.toSeq === cols)
       rows.foreach { r =>
-        val exp = full(r.getString(r.fieldIndex("doc_id")))
-        if (cols.contains("tokens"))
-          assert(r.getSeq[Int](r.fieldIndex("tokens")) === exp.tokens.toSeq)
-        if (cols.contains("n_tok"))
-          assert(r.getInt(r.fieldIndex("n_tok")) === exp.n_tok)
-        if (cols.contains("source"))
-          assert(r.getString(r.fieldIndex("source")) === exp.source)
+        val exp = full(r.getString(0))
+        cols.zipWithIndex.foreach { case (c, i) =>
+          assert(r.get(i) === exp.get(exp.fieldIndex(c)), s"$c of ${r.getString(0)}")
+        }
       }
+      // only the projected streams' payloads are decoded
+      val bytes = m.getOrElse("graft payload bytes decoded", -1L)
+      if (cols.contains("tokens")) assert(bytes > 0L)
+      else assert(bytes < fullBytes / 10, s"projection $cols decoded $bytes of $fullBytes bytes")
     }
-    // an unknown column and an empty projection must be rejected
-    intercept[IllegalArgumentException] {
-      GraftEncoder.decodeProjected(segs, Seq("nope"))
+    // an unknown column is rejected; an empty projection still counts rows
+    intercept[org.apache.spark.sql.AnalysisException] {
+      table.select("nope")
     }
-    intercept[IllegalArgumentException] {
-      GraftEncoder.decodeProjected(segs, Seq.empty)
-    }
+    assert(table.select().count() === full.size.toLong)
   }
 }

@@ -1,10 +1,16 @@
 package graft.engine
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.{array_contains, col, expr}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Read-side surfaces: decode metrics (the reference's scan-counter layer,
-  * metrics.rs:57-218) and multi-file schema merge (file_format.rs:146-161). */
+import graft.lineage.SegmentStore
+import graft.sources.ScanMetrics
+
+/** Read-side surfaces: scan metrics and chunk pruning through
+  * `format("graft")` (the reference's scan-counter layer,
+  * metrics.rs:57-218, and predicate pruning, predicate.rs:53-245) and
+  * multi-file schema merge (file_format.rs:146-161). */
 class ReadSideSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -14,57 +20,84 @@ class ReadSideSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
+  private def tmp(): String =
+    java.nio.file.Files.createTempDirectory("graft-readside-spec").toString
+
+  /** `rows` appended to a fresh graft table through the connector. */
+  private def graftTable(rows: Dataset[TokenRow], buckets: Int, tokensPerChunk: Int,
+                         options: Map[String, String] = Map.empty): String = {
+    val dir = tmp()
+    rows.write.format("graft").option("buckets", buckets.toString)
+      .option("tokensPerChunk", tokensPerChunk.toString).options(options)
+      .mode(SaveMode.Append).save(dir)
+    dir
+  }
+
   test("decode metrics: counters reconcile with the unmetered decode") {
     val input = TokenTables.synthetic(spark, nDocs = 400, seed = 5L)
-    val segs = GraftEncoder.encode(input, buckets = 4, tokensPerChunk = 2048).persist()
-    val lo = 50000L
-    val hi = 50256L
-    val m = new DecodeMetrics(spark.sparkContext)
-    val decoded = DecodeMetrics.decodeWhereTokenRange(segs, lo, hi, m)
-    val rows = decoded.collect()
-    val total = segs.count()
-    assert(m.segmentsMatched.value + m.segmentsPruned.value === total)
-    assert(m.segmentsPruned.value > 0, "zipf data must let stats prune something")
-    assert(m.rowsDecoded.value === rows.length.toLong)
-    assert(m.tokensDecoded.value === rows.map(_.tokens.length.toLong).sum)
-    assert(m.bytesScanned.value > 0 && m.bytesPruned.value > 0)
-    assert(m.scanEfficiency > 0.0 && m.scanEfficiency < 1.0)
-    // metered output == declarative pruned decode output
-    val plain = GraftEncoder.decodeWhereTokenRange(segs, lo, hi).collect()
-    assert(rows.map(_.doc_id).sorted.toSeq === plain.map(_.doc_id).sorted.toSeq)
-    segs.unpersist()
+    val dir = graftTable(input, buckets = 4, tokensPerChunk = 2048)
+    val (lo, hi) = (50000, 50256)
+    val scan = spark.read.format("graft").load(dir)
+      .filter(expr(s"exists(tokens, x -> x >= $lo AND x <= $hi)"))
+    val (rows, m) = ScanMetrics.collect(scan)
+    // header truth: every committed segment, split by the token-range skip
+    val segs = SegmentStore.readSegmentsAll(spark, dir).collect()
+    val (matched, pruned) = segs.partition(
+      _.cols.find(_.col == "tokens").exists(c => c.minV <= hi && c.maxV >= lo))
+    val planned = ScanMetrics.segmentsPlanned(scan)
+    val decoded = m.getOrElse("graft segments decoded", -1L)
+    val prunedTok = ScanMetrics.segmentsPrunedBy(scan, m, "graft segments pruned (token range)")
+    assert(planned === segs.length.toLong)
+    assert(decoded + prunedTok === planned, s"$m")
+    assert(decoded === matched.length.toLong, s"$m")
+    assert(prunedTok > 0L, "zipf data must let stats prune something")
+    assert(m.getOrElse("graft rows emitted", -1L) === matched.map(_.nRows.toLong).sum)
+    // payload bytes: decoded = the survivors' header bytesOut; the pruned
+    // side never reaches a decoder (parquet's record filter drops what the
+    // token range rules out before the reader counts it)
+    val bytesDecoded = m.getOrElse("graft payload bytes decoded", -1L)
+    val bytesPruned = pruned.map(_.bytesOut).sum
+    assert(bytesDecoded === matched.map(_.bytesOut).sum)
+    assert(bytesDecoded + bytesPruned === segs.map(_.bytesOut).sum)
+    assert(m.getOrElse("graft payload bytes pruned", 0L) <= bytesPruned)
+    assert(bytesDecoded > 0 && bytesPruned > 0)
+    val efficiency = graft.queries0.Encode.scanEfficiency(bytesDecoded, bytesPruned)
+    assert(efficiency > 0.0 && efficiency < 1.0)
+    // pruned scan output == the exact filter over the unpruned decode
+    val exact = GraftEncoder.decode(SegmentStore.readSegmentsAll(spark, dir)).collect()
+      .filter(_.tokens.exists(t => t >= lo && t <= hi)).map(_.doc_id).sorted.toSeq
+    assert(rows.map(_.getString(0)).sorted === exact)
   }
 
   test("decode metrics: empty scan reports efficiency 1.0 (reference's div-by-zero stance)") {
-    val m = new DecodeMetrics(spark.sparkContext)
-    assert(m.scanEfficiency === 1.0)
+    assert(graft.queries0.Encode.scanEfficiency(0L, 0L) === 1.0)
   }
 
   test("composed chunk predicates prune soundly (AND/OR of may-match is may-match)") {
-    import spark.implicits._
     val input = TokenTables.synthetic(spark, nDocs = 400, seed = 5L)
-    val segs = GraftEncoder.encode(input, buckets = 4, tokensPerChunk = 2048).cache()
-    import ChunkPredicate._
-    val rare = TokenRange(50000L, 50256L)
-    val web = SourceEquals("web")
-    val pred = And(rare, web)
-    val total = GraftEncoder.decode(segs).count()
-    val survivors = decodeWhere(segs, pred).cache()
-    assert(survivors.count() < total, "composition must prune")
+    val dir = graftTable(input, buckets = 4, tokensPerChunk = 2048)
+    val table = spark.read.format("graft").load(dir)
+    val rare = expr("exists(tokens, x -> x >= 50000 AND x <= 50256)")
+    val web = col("source") === "web"
+    def emitted(c: Column): (Set[String], Long) = {
+      val (rows, m) = ScanMetrics.collect(table.filter(c).select("doc_id"))
+      (rows.map(_.getString(0)).toSet, m.getOrElse("graft rows emitted", 0L))
+    }
+    val all = input.collect()
+    val (viaPruned, andEmitted) = emitted(rare && web)
+    assert(andEmitted < all.length.toLong, "composition must prune")
     // soundness: every truly-matching row survives
-    val exact = GraftEncoder.decode(segs)
+    val exact = all
       .filter(r => r.source == "web" && r.tokens.exists(t => t >= 50000 && t <= 50256))
-      .collect().map(_.doc_id).toSet
-    val viaPruned = survivors
-      .filter(r => r.source == "web" && r.tokens.exists(t => t >= 50000 && t <= 50256))
-      .collect().map(_.doc_id).toSet
+      .map(_.doc_id).toSet
     assert(viaPruned === exact)
     // OR prunes no more than either branch alone
-    val orCount = decodeWhere(segs, Or(rare, web)).count()
-    assert(orCount >= decodeWhere(segs, rare).count())
-    assert(orCount >= decodeWhere(segs, web).count())
-    survivors.unpersist()
-    segs.unpersist()
+    val (orRows, orEmitted) = emitted(rare || web)
+    assert(orEmitted >= emitted(rare)._2)
+    assert(orEmitted >= emitted(web)._2)
+    assert(orRows === all
+      .filter(r => r.source == "web" || r.tokens.exists(t => t >= 50000 && t <= 50256))
+      .map(_.doc_id).toSet)
   }
 
   test("schema merge: appended nullable field unions; order is first-seen") {
@@ -110,23 +143,24 @@ class ReadSideSpec extends AnyFunSuite {
       val tokens = if (i == 9) base :+ probe else base
       TokenRow(f"doc_$i%04d", tokens, tokens.length, "s")
     }
-    val conf = graft.codec.CodecConf(bloomColumns = Set("doc_id", "tokens"))
-    val segs = GraftEncoder.encode(spark.createDataset(rows), buckets = 4,
-      tokensPerChunk = 2048, codecConf = conf).persist()
-    try {
-      // exactness: survivors re-filtered by the caller (inexact contract)
-      val hits = GraftEncoder.decodeWhereTokenEquals(segs, probe.toLong)
-        .collect().filter(_.tokens.contains(probe)).map(_.doc_id)
-      assert(hits.toSeq === Seq("doc_0009"))
-      // the skip is real: bloom-filtered decode touches fewer segments than
-      // a full decode (count docs emitted before the exact re-filter)
-      val decodedDocs = GraftEncoder.decodeWhereTokenEquals(segs, probe.toLong).count()
-      assert(decodedDocs < 32L, s"bloom skipped nothing: decoded $decodedDocs of 32 docs")
-      // doc_id point lookup on the hash layout (ranges overlap, blooms don't)
-      val byId = GraftEncoder.decodeWhereDocIdEquals(segs, "doc_0017")
-      assert(byId.collect().map(_.doc_id).contains("doc_0017"))
-      assert(GraftEncoder.decodeWhereDocIdEquals(segs, "doc_0017x").count() === 0L,
-        "absent mid-range key should decode nothing")
-    } finally segs.unpersist()
+    def table(buckets: Int) = spark.read.format("graft").load(
+      graftTable(spark.createDataset(rows), buckets, tokensPerChunk = 2048,
+        Map(GraftConf.BloomColumns -> "doc_id,tokens")))
+    // one part-file: its file bloom holds the probe, so only the chunk
+    // blooms can skip; exactness: survivors re-filtered by Spark
+    val (hits, m) = ScanMetrics.collect(
+      table(buckets = 1).filter(array_contains($"tokens", probe)).select("doc_id"))
+    assert(hits.map(_.getString(0)) === Seq("doc_0009"))
+    // the skip is real: the bloom-filtered scan decodes fewer docs than a
+    // full scan (rows the scan emitted before Spark's exact re-filter)
+    val decodedDocs = m.getOrElse("graft rows emitted", Long.MaxValue)
+    assert(decodedDocs < 32L, s"bloom skipped nothing: decoded $decodedDocs of 32 docs")
+    // doc_id point lookup on the hash layout (ranges overlap, blooms don't)
+    val hashed = table(buckets = 4)
+    val byId = hashed.filter($"doc_id" === "doc_0017").select("doc_id").collect()
+    assert(byId.map(_.getString(0)).contains("doc_0017"))
+    val (absent, mAbsent) = ScanMetrics.collect(hashed.filter($"doc_id" === "doc_0017x"))
+    assert(absent.isEmpty && mAbsent.getOrElse("graft segments decoded", 0L) === 0L,
+      s"absent mid-range key should decode nothing: $mAbsent")
   }
 }

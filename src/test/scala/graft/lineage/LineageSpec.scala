@@ -52,7 +52,7 @@ class LineageSpec extends AnyFunSuite {
     assert(ledger.map(_.nRows).sum === 400L)
 
     // decode of the committed table is bit-identical to the input
-    val decoded = SegmentStore.readDecoded(spark, dir, snap)
+    val decoded = GraftEncoder.decode(SegmentStore.readSegments(spark, dir, snap))
       .collect().map(r => r.doc_id -> r).toMap
     val expected = input.collect().map(r => r.doc_id -> r).toMap
     assert(decoded.keySet === expected.keySet)
@@ -86,8 +86,8 @@ class LineageSpec extends AnyFunSuite {
     val dir = tmp()
     SegmentStore.encodeCommit(in1, dir, 10L, buckets = 3)
     SegmentStore.encodeCommit(in2, dir, 11L, buckets = 3)
-    assert(SegmentStore.readDecoded(spark, dir, 10L).count() === 100L)
-    assert(SegmentStore.readDecoded(spark, dir, 11L).count() === 120L)
+    assert(GraftEncoder.decode(SegmentStore.readSegments(spark, dir, 10L)).count() === 100L)
+    assert(GraftEncoder.decode(SegmentStore.readSegments(spark, dir, 11L)).count() === 120L)
   }
 
   test("empty buckets commit too: restart converges when buckets outnumber docs") {
@@ -108,29 +108,24 @@ class LineageSpec extends AnyFunSuite {
     assert(ledger.map(_.nRows).sum === 5L)
     assert(ledger.count(_.nSegments == 0L) === 64 - ledger.count(_.nSegments > 0L))
     // decode still exact
-    assert(SegmentStore.readDecoded(spark, dir, 1L).count() === 5L)
+    assert(GraftEncoder.decode(SegmentStore.readSegments(spark, dir, 1L)).count() === 5L)
   }
 
   test("min/max chunk skipping prunes segments and never loses a match") {
-    import spark.implicits._
     val input = TokenTables.synthetic(spark, nDocs = 400, seed = 5L)
-    val segs = GraftEncoder.encode(input, buckets = 4, tokensPerChunk = 2048).persist()
-    val lo = 50000L
-    val hi = 50256L
-    val total = segs.count()
-    val scanned = GraftEncoder.decodeWhereTokenRange(segs, lo, hi)
-    val scannedSegIds = segs.filter(
-      org.apache.spark.sql.functions.exists($"cols", c =>
-        c.getField("col") === org.apache.spark.sql.functions.lit("tokens") &&
-          c.getField("minV") <= hi && c.getField("maxV") >= lo)).count()
-    assert(scannedSegIds < total, "pruning must actually skip segments on zipf data")
+    val dir = tmp()
+    SegmentStore.encodeCommit(input, dir, 1L, buckets = 4, tokensPerChunk = 2048)
+    val (lo, hi) = (50000, 50256)
+    val scan = spark.read.format("graft").load(dir)
+      .filter(org.apache.spark.sql.functions.expr(s"exists(tokens, x -> x >= $lo AND x <= $hi)"))
+    val (rows, m) = graft.sources.ScanMetrics.collect(scan)
+    val skipped = graft.sources.ScanMetrics.segmentsPrunedBy(scan, m,
+      "graft segments pruned (token range)")
+    assert(skipped > 0L, s"pruning must actually skip segments on zipf data: $m")
     // exactness: every truly-matching doc survives pruning
-    val exact = GraftEncoder.decode(segs)
-      .filter(_.tokens.exists(t => t >= lo && t <= hi)).collect().map(_.doc_id).toSet
-    val viaPruned = scanned
-      .filter(_.tokens.exists(t => t >= lo && t <= hi)).collect().map(_.doc_id).toSet
-    assert(viaPruned === exact, "pruning is inexact-but-superset by contract")
-    segs.unpersist()
+    val exact = input.collect()
+      .filter(_.tokens.exists(t => t >= lo && t <= hi)).map(_.doc_id).toSet
+    assert(rows.map(_.getString(0)).toSet === exact, "pruning is inexact-but-superset by contract")
   }
 
   test("compaction of a METADATA table preserves every stream (stored-domain re-chunk)") {

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -50,49 +50,6 @@ class GraftDataSourceSpec extends AnyFunSuite {
       GraftEncoder.encodeBucketed(bucketed, rangeBuckets, tokensPerChunk = 4096))
       .write.parquet(s"$dir/segs")
     s"$dir/segs"
-  }
-
-  /** Collect `df` and return (rows, the graft custom scan metrics of the
-    * executions this action ran), read back from the SQL status store —
-    * the same per-query, UI-visible path a user sees (reference
-    * metrics.rs:57-218 analog; replaces the r2 static LongAdders). */
-  private def runWithScanMetrics(df: DataFrame): (Seq[Row], Map[String, Long]) = {
-    val store = spark.sharedState.statusStore
-    val before = store.executionsList().map(_.executionId).foldLeft(-1L)(math.max)
-    val rows = df.collect().toSeq
-    val deadline = System.currentTimeMillis() + 20000
-    var metrics = Map.empty[String, Long]
-    var settled = false
-    while (!settled && System.currentTimeMillis() < deadline) {
-      val execs = store.executionsList().filter(_.executionId > before)
-      settled = execs.nonEmpty && execs.forall(_.completionTime.isDefined)
-      if (settled) {
-        metrics = execs.flatMap { e =>
-          val vals = store.executionMetrics(e.executionId)
-          e.metrics.filter(_.name.startsWith("graft"))
-            .flatMap(m => vals.get(m.accumulatorId).map(v => m.name -> v.replaceAll("[^0-9-]", "")))
-        }.filter(_._2.nonEmpty)
-          .groupBy(_._1).view.mapValues(_.map(_._2.toLong).sum).toMap
-      } else Thread.sleep(100)
-    }
-    (rows, metrics)
-  }
-
-  /** Segments of the part-files `df`'s scan planned that the stat prune
-    * behind `counter` skipped (`m`: the scan's metrics). The pushed stat
-    * predicates ride to parquet as a record filter over the v2 stat
-    * columns, and the segments parquet skips never reach the reader-side
-    * counters: they are the planned segments no reader counter saw. */
-  private def segmentsPrunedBy(df: DataFrame, m: Map[String, Long], counter: String): Long = {
-    val files = df.queryExecution.executedPlan.collect {
-      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-        b.inputPartitions.map(GraftInputPartition.fileOf)
-    }.flatten
-    val planned = if (files.isEmpty) 0L else spark.read.parquet(files: _*).count()
-    val seen = Seq("graft segments decoded", "graft segments pruned (filter stats)",
-      "graft segments pruned (token range)", "graft segments pruned (bloom)")
-      .map(m.getOrElse(_, 0L)).sum
-    planned - seen + m.getOrElse(counter, 0L)
   }
 
   /** `df` executes a graft scan (it was not answered from headers); the
@@ -201,9 +158,9 @@ class GraftDataSourceSpec extends AnyFunSuite {
     val input = TokenTables.synthetic(spark, nDocs = 400, seed = 42L)
     val target = input.collect().head.doc_id
     val lookup = spark.read.format("graft").load(clustered).filter($"doc_id" === target)
-    val (rows, m) = runWithScanMetrics(lookup)
+    val (rows, m) = ScanMetrics.collect(lookup)
     assert(rows.length === 1 && rows.head.getString(0) === target)
-    assert(segmentsPrunedBy(lookup, m, "graft segments pruned (filter stats)") > 0L,
+    assert(ScanMetrics.segmentsPrunedBy(lookup, m, "graft segments pruned (filter stats)") > 0L,
       s"expected pruned segments, metrics=$m")
     // the plan advertises the negotiation
     val desc = spark.read.format("graft").load(clustered)
@@ -244,16 +201,16 @@ class GraftDataSourceSpec extends AnyFunSuite {
     val (a, b) = (ids.head, ids.last)
     val either = spark.read.format("graft").load(clustered)
       .filter($"doc_id" === a || $"doc_id" === b)
-    val (rows, m) = runWithScanMetrics(either)
+    val (rows, m) = ScanMetrics.collect(either)
     assert(rows.map(_.getString(0)).toSet === Set(a, b))
-    assert(segmentsPrunedBy(either, m, "graft segments pruned (filter stats)") > 0L,
+    assert(ScanMetrics.segmentsPrunedBy(either, m, "graft segments pruned (filter stats)") > 0L,
       "OR of two point lookups must still prune middle segments")
 
     // IN-list prunes like OR-of-equalities
     val in = spark.read.format("graft").load(clustered).filter($"doc_id".isin(a, b))
-    val (inRows, m2) = runWithScanMetrics(in)
+    val (inRows, m2) = ScanMetrics.collect(in)
     assert(inRows.map(_.getString(0)).toSet === Set(a, b))
-    assert(segmentsPrunedBy(in, m2, "graft segments pruned (filter stats)") > 0L,
+    assert(ScanMetrics.segmentsPrunedBy(in, m2, "graft segments pruned (filter stats)") > 0L,
       "IN-list must prune")
   }
 
@@ -261,7 +218,7 @@ class GraftDataSourceSpec extends AnyFunSuite {
     import spark.implicits._
     val df = spark.read.format("graft").load(bare)
     val counted = df.agg(org.apache.spark.sql.functions.count(org.apache.spark.sql.functions.lit(1)))
-    val (rows, m) = runWithScanMetrics(counted)
+    val (rows, m) = ScanMetrics.collect(counted)
     assert(rows.head.getLong(0) === 400L)
     val plan = counted.queryExecution.executedPlan
     assert(GraftStatsAggPushdown.answeredOnDriver(plan), s"count not answered from headers:\n$plan")
@@ -282,7 +239,7 @@ class GraftDataSourceSpec extends AnyFunSuite {
     val fused = df.agg(min("n_tok"), max("n_tok"), min("doc_id"), max("source"), count(lit(1)))
     val plan = fused.queryExecution.executedPlan
     assert(GraftStatsAggPushdown.answeredOnDriver(plan), s"min/max not answered from headers:\n$plan")
-    val (rows, m) = runWithScanMetrics(fused)
+    val (rows, m) = ScanMetrics.collect(fused)
     assert(m.getOrElse("graft segments decoded", 0L) === 0L,
       s"pushed min/max must not decode rows: $m")
     // values equal the unfused query (computed through the row-decoding path)
@@ -302,7 +259,7 @@ class GraftDataSourceSpec extends AnyFunSuite {
     val df = spark.read.format("graft").load(bare).limit(5)
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("PushedLimit: 5"), s"limit not pushed:\n$plan")
-    val (rows, m) = runWithScanMetrics(df)
+    val (rows, m) = ScanMetrics.collect(df)
     assert(rows.length === 5)
     val totalSegments = spark.read.parquet(bare).count()
     assert(m.getOrElse("graft segments decoded", Long.MaxValue) < totalSegments,
@@ -325,8 +282,8 @@ class GraftDataSourceSpec extends AnyFunSuite {
       .filter(expr(s"exists(tokens, x -> x >= $lo AND x <= $hi)"))
     val plan = exists.queryExecution.executedPlan.toString
     assert(plan.contains(s"PushedTokenRange: [$lo, $hi]"), s"range not pushed:\n$plan")
-    val (rows, m) = runWithScanMetrics(exists)
-    assert(segmentsPrunedBy(exists, m, "graft segments pruned (token range)") > 0L,
+    val (rows, m) = ScanMetrics.collect(exists)
+    assert(ScanMetrics.segmentsPrunedBy(exists, m, "graft segments pruned (token range)") > 0L,
       s"zipf layout must let the token range prune segments: $m")
     // exactness: residual re-filter keeps only true matches
     val expected = TokenTables.synthetic(spark, nDocs = 400, seed = 42L)
@@ -364,7 +321,7 @@ class GraftDataSourceSpec extends AnyFunSuite {
     val plan = q.queryExecution.executedPlan.toString
     assert(plan.contains("PushedElemRanges: [tags:[2000, 2000]]"), s"no elem range:\n$plan")
     assert(plan.contains("PushedElemPoints: [tags:[2000]]"), s"no elem point:\n$plan")
-    val (rows, m) = runWithScanMetrics(q.select("doc_id"))
+    val (rows, m) = ScanMetrics.collect(q.select("doc_id"))
     assert(rows.map(_.getString(0)).toSeq === Seq("doc_000000000200"))
     // the element predicate rides to parquet as a FilterPredicate over the
     // tags stat columns, so non-matching segments are skipped at the IO
@@ -497,9 +454,9 @@ class GraftDataSourceSpec extends AnyFunSuite {
     // the scan schema carries ONLY the projected member
     assert(plan.contains("struct<score:double>") && !plan.contains("blob"),
       s"member subset not pruned in scan schema:\n$plan")
-    val (rows, m) = runWithScanMetrics(pruned)
+    val (rows, m) = ScanMetrics.collect(pruned)
     // whole-struct projection (nothing to prune) as the byte baseline
-    val (fullRows, mFull) = runWithScanMetrics(table.select($"doc_id", $"info"))
+    val (fullRows, mFull) = ScanMetrics.collect(table.select($"doc_id", $"info"))
     val expect = input.select($"doc_id", $"info.score".as("score"))
       .collect().map(r => r.getString(0) -> Option(r.get(1))).toMap
     assert(rows.length === 300 && fullRows.length === 300)
@@ -580,7 +537,7 @@ class GraftDataSourceSpec extends AnyFunSuite {
     val off = q(spark.read.format("graft").option("pushdown", "false").load(bare))
     val planOff = off.queryExecution.executedPlan.toString
     assert(planOff.contains("PushedFilters: []"), s"pushdown still on:\n$planOff")
-    val (rowsOff, mOff) = runWithScanMetrics(off)
+    val (rowsOff, mOff) = ScanMetrics.collect(off)
     assert(rowsOff === expected, "results must be identical with pushdown off")
     assert(mOff.getOrElse("graft segments pruned (filter stats)", -1L) === 0L &&
       mOff.getOrElse("graft segments pruned (bloom)", -1L) === 0L &&
@@ -589,7 +546,7 @@ class GraftDataSourceSpec extends AnyFunSuite {
     // bloom off (stats stay on): same results, zero bloom prunes, and the
     // hash layout means stats alone can't prune this mid-range point
     val noBloom = q(spark.read.format("graft").option("bloom", "false").load(bare))
-    val (rowsNb, mNb) = runWithScanMetrics(noBloom)
+    val (rowsNb, mNb) = ScanMetrics.collect(noBloom)
     assert(rowsNb === expected)
     assert(mNb.getOrElse("graft segments pruned (bloom)", -1L) === 0L,
       s"bloom off must not bloom-prune: $mNb")
@@ -603,7 +560,7 @@ class GraftDataSourceSpec extends AnyFunSuite {
     // limitPlanning off: LIMIT still correct, but every file stays planned
     val lim = spark.read.format("graft").option("limitPlanning", "false")
       .load(bare).limit(5)
-    val (rowsLim, mLim) = runWithScanMetrics(lim)
+    val (rowsLim, mLim) = ScanMetrics.collect(lim)
     assert(rowsLim.length === 5)
     val allFiles = new java.io.File(bare).listFiles().count(_.getName.endsWith(".parquet"))
     assert(mLim.getOrElse("graft files planned", -1L) === allFiles.toLong,
@@ -617,7 +574,7 @@ class GraftDataSourceSpec extends AnyFunSuite {
     // ids 30..39 live in range-bucket 0 of `clustered` — every other
     // bucket's [minS, maxS] lies outside the prefix interval
     val pre = "doc_00000000003"
-    val (rows, m) = runWithScanMetrics(
+    val (rows, m) = ScanMetrics.collect(
       spark.read.format("graft").load(clustered).filter($"doc_id".startsWith(pre)))
     val expect = input.filter(_.doc_id.startsWith(pre)).collect().map(_.doc_id).toSet
     assert(rows.map(_.getString(0)).toSet === expect && expect.size === 10)
@@ -630,20 +587,20 @@ class GraftDataSourceSpec extends AnyFunSuite {
     // a prefix stored nowhere prunes every stats-bearing file at planning
     // (the fixture's one EMPTY part-file has no stats and soundly answers
     // may-match — absent stats never prune)
-    val (none, mNone) = runWithScanMetrics(
+    val (none, mNone) = ScanMetrics.collect(
       spark.read.format("graft").load(clustered).filter($"doc_id".startsWith("zzz")))
     assert(none.isEmpty && mNone.getOrElse("graft files planned", -1L) <= 1L &&
       mNone.getOrElse("graft files pruned (planning)", 0L) >= 5L,
       s"absent prefix should prune all stats-bearing files: $mNone")
     // null-safe equality: non-null value prunes like EqualTo
     val target = input.collect().head.doc_id
-    val (eqRows, mEq) = runWithScanMetrics(
+    val (eqRows, mEq) = ScanMetrics.collect(
       spark.read.format("graft").load(clustered).filter($"doc_id" <=> target))
     assert(eqRows.length === 1 && eqRows.head.getString(0) === target)
     assert(mEq.getOrElse("graft segments pruned (filter stats)", 0L) +
       mEq.getOrElse("graft files pruned (planning)", 0L) > 0L, s"<=> pruned nothing: $mEq")
     // <=> NULL on a non-nullable canonical column plans zero files
-    val (nullRows, mNull) = runWithScanMetrics(
+    val (nullRows, mNull) = ScanMetrics.collect(
       spark.read.format("graft").load(clustered)
         .filter($"doc_id" <=> (null: String)))
     assert(nullRows.isEmpty)
@@ -673,14 +630,14 @@ class GraftDataSourceSpec extends AnyFunSuite {
     // chunk's doc_id [min,max] and interval stats prune it ~never — the
     // exact gap the default doc_id bloom (ORC BLOOM_FILTER analog) closes.
     val target = "doc_000000000200"
-    val (rows, m) = runWithScanMetrics(
+    val (rows, m) = ScanMetrics.collect(
       spark.read.format("graft").load(bare).filter($"doc_id" === target))
     assert(rows.length === 1 && rows.head.getString(0) === target)
     assert(m.getOrElse("graft segments pruned (bloom)", 0L) > 0L,
       s"expected bloom-pruned segments on the hash layout, metrics=$m")
     // absent mid-range key (sorts between two live ids, inside chunk
     // ranges): bloom prunes everything, zero rows, zero decodes
-    val (none, m2) = runWithScanMetrics(
+    val (none, m2) = ScanMetrics.collect(
       spark.read.format("graft").load(bare).filter($"doc_id" === "doc_000000000200x"))
     assert(none.isEmpty)
     assert(m2.getOrElse("graft segments decoded", Long.MaxValue) === 0L,
@@ -707,7 +664,7 @@ class GraftDataSourceSpec extends AnyFunSuite {
       .filter(array_contains($"tokens", probe))
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains(s"PushedTokenRange: [$probe, $probe]"), plan)
-    val (got, m) = runWithScanMetrics(df)
+    val (got, m) = ScanMetrics.collect(df)
     assert(got.map(_.getString(0)) === Seq("doc_0017"))
     assert(m.getOrElse("graft segments pruned (bloom)", 0L) > 0L,
       s"expected tokens-bloom pruning, metrics=$m")
@@ -718,7 +675,7 @@ class GraftDataSourceSpec extends AnyFunSuite {
     val dir2 = tmp()
     FlatSegments.flattenSegments(GraftEncoder.encode(spark.createDataset(rows), buckets = 8,
       tokensPerChunk = 4096)).write.parquet(s"$dir2/segs")
-    val (got2, m2) = runWithScanMetrics(
+    val (got2, m2) = ScanMetrics.collect(
       spark.read.format("graft").load(s"$dir2/segs")
         .filter(array_contains($"tokens", probe)))
     assert(got2.map(_.getString(0)) === Seq("doc_0017"))
@@ -761,7 +718,7 @@ class GraftDataSourceSpec extends AnyFunSuite {
     // via the driver metrics
     val input = TokenTables.synthetic(spark, nDocs = 400, seed = 42L)
     val target = input.collect()(123).doc_id
-    val (rows, m) = runWithScanMetrics(
+    val (rows, m) = ScanMetrics.collect(
       spark.read.format("graft").load(clustered).filter($"doc_id" === target))
     assert(rows.length === 1 && rows.head.getString(0) === target)
     assert(m.getOrElse("graft files pruned (planning)", 0L) > 0L,
@@ -769,7 +726,7 @@ class GraftDataSourceSpec extends AnyFunSuite {
     assert(m.getOrElse("graft files planned", 0L) >= 1L,
       s"the matching file must still be planned: $m")
     // unfiltered scan plans every file, prunes none
-    val (_, m2) = runWithScanMetrics(spark.read.format("graft").load(clustered))
+    val (_, m2) = ScanMetrics.collect(spark.read.format("graft").load(clustered))
     assert(m2.getOrElse("graft files pruned (planning)", -1L) === 0L, s"$m2")
   }
 
@@ -823,7 +780,7 @@ class GraftDataSourceSpec extends AnyFunSuite {
     val fact = spark.read.format("graft").load(s"$dir/segs")
     val sel = spark.read.parquet(s"$dir/dim").filter($"cat" === 3)
     val j = fact.join(sel, Seq("doc_id")).select($"doc_id", $"n_tok", $"cat")
-    val (rows, m) = runWithScanMetrics(j)
+    val (rows, m) = ScanMetrics.collect(j)
     assert(rows.length === 50)
     assert(rows.forall(_.getInt(2) === 3))
     // Spark planned the dynamic filter onto OUR scan...
@@ -920,7 +877,7 @@ class GraftDataSourceSpec extends AnyFunSuite {
       count($"tags"), count(lit(1))).collect()(0)
     assert(got === want, s"folded element aggregate diverged: got $got want $want")
     // header-only: payload pages never read
-    val (_, m) = runWithScanMetrics(fused)
+    val (_, m) = ScanMetrics.collect(fused)
     assert(m.getOrElse("graft payload bytes decoded", -1L) <= 0L,
       s"element fold decoded payload: $m")
     // lexicographic MIN over the array column itself must NOT fold
@@ -988,9 +945,9 @@ class GraftDataSourceSpec extends AnyFunSuite {
     // the v2 layout the stat predicate rides to parquet as a record-level
     // FilterPredicate, so pruned segments are never materialized at all —
     // they show up as FEWER decoded segments, not in the pruned counters.
-    val (_, mFull) = runWithScanMetrics(table)
+    val (_, mFull) = ScanMetrics.collect(table)
     val totalSegs = mFull.getOrElse("graft segments decoded", 0L)
-    val (rows, m) = runWithScanMetrics(table.filter($"views" === 123000L))
+    val (rows, m) = ScanMetrics.collect(table.filter($"views" === 123000L))
     assert(rows.length === 1 && rows.head.getAs[String]("doc_id") === "doc00123")
     val decoded = m.getOrElse("graft segments decoded", 0L) +
       m.getOrElse("graft segments pruned (filter stats)", 0L)
@@ -1048,14 +1005,14 @@ class GraftDataSourceSpec extends AnyFunSuite {
       .option("graft.codec.bloomColumns", "uid")
       .mode("append").save(dir)
     val table = spark.read.format("graft").load(dir)
-    val (rows, m) = runWithScanMetrics(table.filter($"uid" === uid(123)))
+    val (rows, m) = ScanMetrics.collect(table.filter($"uid" === uid(123)))
     assert(rows.length === 1 && rows.head.getAs[String]("doc_id") === "doc00123")
     assert(m.getOrElse("graft segments pruned (bloom)", 0L) > 0L,
       s"metadata bloom did not prune: $m")
     // absent key INSIDE the value range: bloom prunes everything
     val present = (0 until 400).map(uid).toSet
     val absent = Iterator.from(1).map(uid(123) + _).find(!present.contains(_)).get
-    val (none, m2) = runWithScanMetrics(table.filter($"uid" === absent))
+    val (none, m2) = ScanMetrics.collect(table.filter($"uid" === absent))
     assert(none.isEmpty)
     // the file-level folded bloom prunes at PLANNING: zero tasks scheduled
     // (no task metrics at all), both part-files skipped
@@ -1081,14 +1038,14 @@ class GraftDataSourceSpec extends AnyFunSuite {
       .option("graft.codec.bloomColumns", "info.uid")
       .mode("append").save(dir)
     val table = spark.read.format("graft").load(dir)
-    val (rows, m) = runWithScanMetrics(table.filter($"info.uid" === uid(123)))
+    val (rows, m) = ScanMetrics.collect(table.filter($"info.uid" === uid(123)))
     assert(rows.length === 1 && rows.head.getAs[String]("doc_id") === "doc00123")
     assert(m.getOrElse("graft segments pruned (bloom)", 0L) > 0L,
       s"member bloom did not prune: $m")
     // absent key inside the range: file-level folded bloom plans nothing
     val present = (0 until 400).map(uid).toSet
     val absent = Iterator.from(1).map(uid(123) + _).find(!present.contains(_)).get
-    val (none, m2) = runWithScanMetrics(table.filter($"info.uid" === absent))
+    val (none, m2) = ScanMetrics.collect(table.filter($"info.uid" === absent))
     assert(none.isEmpty)
     assert(m2.getOrElse("graft segments decoded", 0L) === 0L &&
       m2.getOrElse("graft files pruned (planning)", 0L) > 0L,
@@ -1106,17 +1063,17 @@ class GraftDataSourceSpec extends AnyFunSuite {
     input.write.format("graft").option("buckets", "2")
       .option("tokensPerChunk", "32").mode("append").save(dir)
     val table = spark.read.format("graft").load(dir)
-    val (_, mFull) = runWithScanMetrics(table)
+    val (_, mFull) = ScanMetrics.collect(table)
     val total = mFull.getOrElse("graft segments decoded", 0L)
     // IS NOT NULL: all-null chunks drop at the parquet record filter
     // (never materialized => fewer decoded), results exact
-    val (nn, m1) = runWithScanMetrics(table.filter($"quality".isNotNull))
+    val (nn, m1) = ScanMetrics.collect(table.filter($"quality".isNotNull))
     assert(nn.length === 200)
     assert(m1.getOrElse("graft segments decoded", 0L) +
       m1.getOrElse("graft segments pruned (filter stats)", 0L) < total,
       s"IS NOT NULL did not skip all-null chunks: $m1 vs total $total")
     // IS NULL: null-free chunks prune reader-side (stats counter visible)
-    val (nl, m2) = runWithScanMetrics(table.filter($"quality".isNull))
+    val (nl, m2) = ScanMetrics.collect(table.filter($"quality".isNull))
     assert(nl.length === 200)
     assert(m2.getOrElse("graft segments pruned (filter stats)", 0L) > 0L,
       s"IS NULL did not prune null-free chunks: $m2")
@@ -1146,7 +1103,7 @@ class GraftDataSourceSpec extends AnyFunSuite {
       count($"quality"), count($"lang")).collect()(0)
     assert(got === want, s"pushed aggregate diverged: got $got want $want")
     // and the scan is header-only: no payload decode at all
-    val (_, m) = runWithScanMetrics(fused)
+    val (_, m) = ScanMetrics.collect(fused)
     assert(m.getOrElse("graft payload bytes decoded", -1L) <= 0L,
       s"aggregate scan decoded payload: $m")
   }
@@ -1181,7 +1138,7 @@ class GraftDataSourceSpec extends AnyFunSuite {
     val wantC = input.agg(count($"attrs"), count($"info"),
       count($"tags"), count($"blob")).collect()(0)
     assert(gotC === wantC, s"folded counts diverged: got $gotC want $wantC")
-    val (_, mC) = runWithScanMetrics(counted)
+    val (_, mC) = ScanMetrics.collect(counted)
     assert(mC.getOrElse("graft payload bytes decoded", -1L) <= 0L,
       s"non-scalar COUNT decoded payload: $mC")
     // MIN/MAX over a struct column must NOT push — the header has no
@@ -1218,7 +1175,7 @@ class GraftDataSourceSpec extends AnyFunSuite {
     val plan = q.queryExecution.executedPlan.toString
     assert(plan.contains("info__f_rank"),
       s"member predicate not rewritten onto the member stream:\n$plan")
-    val (rows, m) = runWithScanMetrics(q)
+    val (rows, m) = ScanMetrics.collect(q)
     assert(rows.map(_.getString(0)).toSeq === Seq("doc_000000000200"))
     val totalSegments = spark.read.parquet(s"$dir/data").count()
     val decoded = m.getOrElse("graft segments decoded", Long.MaxValue)
@@ -1268,7 +1225,7 @@ class GraftDataSourceSpec extends AnyFunSuite {
       count($"info.score"), count($"info.kind")).collect()(0)
     assert(got === want, s"pushed member aggregate diverged: got $got want $want")
     // header-only: payload pages never read
-    val (_, m) = runWithScanMetrics(fused)
+    val (_, m) = ScanMetrics.collect(fused)
     assert(m.getOrElse("graft payload bytes decoded", -1L) <= 0L,
       s"member aggregate decoded payload: $m")
     // mixed with a table-level aggregate in one pass
@@ -1302,7 +1259,7 @@ class GraftDataSourceSpec extends AnyFunSuite {
     val plan = q.queryExecution.executedPlan.toString
     assert(plan.contains("PushedMapStats") && plan.contains("attrs__k") &&
       plan.contains("attrs__v"), s"map access not pushed onto pseudo-streams:\n$plan")
-    val (rows, m) = runWithScanMetrics(q)
+    val (rows, m) = ScanMetrics.collect(q)
     assert(rows.map(_.getString(0)).toSeq === Seq("doc_000000000200"))
     val totalSegments = spark.read.parquet(s"$dir/data").count()
     val decoded = m.getOrElse("graft segments decoded", Long.MaxValue)
@@ -1312,7 +1269,7 @@ class GraftDataSourceSpec extends AnyFunSuite {
     // every segment (and every file, at planning) prunes
     val none = table.filter($"attrs"("zz").isNotNull)
     assert(none.queryExecution.executedPlan.toString.contains("PushedMapStats"))
-    val (noneRows, mNone) = runWithScanMetrics(none)
+    val (noneRows, mNone) = ScanMetrics.collect(none)
     assert(noneRows.isEmpty)
     // the __k stats exclude 'zz' in every FILE header, so planning prunes
     // all part-files — no task runs, no segment decodes (the metric is
@@ -1410,7 +1367,7 @@ class GraftDataSourceSpec extends AnyFunSuite {
     // predicate rides to parquet as a record filter), so clustering shows
     // up as FEWER decoded segments for the same filtered result
     def decodedOn(dir: String): (Long, Long) = {
-      val (rows, m) = runWithScanMetrics(
+      val (rows, m) = ScanMetrics.collect(
         spark.read.format("graft").load(dir).filter($"lang" === "l3"))
       (rows.length.toLong, m.getOrElse("graft segments decoded", Long.MaxValue) +
         m.getOrElse("graft segments pruned (filter stats)", 0L))
@@ -1480,7 +1437,7 @@ class GraftDataSourceSpec extends AnyFunSuite {
     // bloom can skip a file for it
     val miss = input.collect().map(_.doc_id).sorted.apply(200) + "x"
     def missPruned(): Long = {
-      val (rows, m) = runWithScanMetrics(
+      val (rows, m) = ScanMetrics.collect(
         spark.read.format("graft").load(dir).filter(col("doc_id") === miss))
       assert(rows.isEmpty)
       m.getOrElse("graft files pruned (planning)", 0L)

@@ -195,6 +195,55 @@ class GraftWriteSpec extends AnyFunSuite {
     assert(republished.intersect(stale).isEmpty, "stale files of the crashed epoch survived")
   }
 
+  test("batch append crash after the data move, before the ledger append: the claimed id stays invisible") {
+    import org.apache.spark.sql.functions.{col, concat, lit}
+    val dir = tmp()
+    val conf = spark.sessionState.newHadoopConf()
+    def rows(prefix: String, nDocs: Int, seed: Long) =
+      TokenTables.synthetic(spark, nDocs = nDocs, seed = seed)
+        .toDF("doc_id", "tokens", "n_tok", "source")
+        .withColumn("doc_id", concat(lit(prefix), col("doc_id")))
+    def append(df: org.apache.spark.sql.DataFrame): Unit =
+      df.write.format("graft").option("buckets", "4").mode(SaveMode.Append).save(dir)
+    def table() = collectTokens(spark.read.format("graft").load(dir))
+    val first = rows("a_", 200, 42L)
+    val crashed = rows("b_", 150, 7L)
+    val next = rows("c_", 120, 9L)
+    append(first)
+    append(crashed)
+
+    // simulate the crash: snapshot 2 claimed lineage/_commit_2 and moved
+    // its part-files into data/snapshotId=2, its ledger file never landed
+    val ledgerDir = new org.apache.hadoop.fs.Path(s"$dir/lineage")
+    val fs = ledgerDir.getFileSystem(conf)
+    val ledgerFile = fs.listStatus(ledgerDir).map(_.getPath)
+      .filter(p => p.getName.endsWith(".parquet") && !p.getName.startsWith("."))
+      .filter(p => spark.read.parquet(p.toString).filter("snapshotId = 2").count() > 0L)
+    assert(ledgerFile.length === 1)
+    assert(fs.delete(ledgerFile.head, false))
+    assert(fs.exists(new org.apache.hadoop.fs.Path(ledgerDir, "_commit_2")))
+    assert(GraftLayout.listParquetFiles(s"$dir/data/snapshotId=2", conf).nonEmpty)
+
+    // readers never see the crashed append's files
+    assert(GraftLayout.committedSnapshots(dir, conf).get === Set(1L))
+    assert(table() === collectTokens(first))
+
+    // the next append skips the claimed id and publishes exactly its rows
+    append(next)
+    assert(GraftLayout.committedSnapshots(dir, conf).get === Set(1L, 3L))
+    val ledger3 = SegmentStore.readLineage(spark, dir).collect()
+      .filter(r => r.snapshotId == 3L && r.status == SegmentStore.Committed)
+    assert(ledger3.map(_.nRows).sum === 120L)
+    val expected = collectTokens(first.union(next))
+    assert(table() === expected)
+
+    // compaction and expiry keep the table exact
+    assert(SegmentStore.compact(spark, dir, upTo = 3L, buckets = 4).isDefined)
+    assert(table() === expected)
+    assert(SegmentStore.expireSuperseded(spark, dir) > 0L)
+    assert(table() === expected)
+  }
+
   test("snapshot-id claim is exclusive: of racing threads exactly one wins each id") {
     val dir = new org.apache.hadoop.fs.Path(tmp())
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())

@@ -979,8 +979,8 @@ private[sources] object StatPredicate {
   /** Rewrite pushed filters into the STAT DOMAIN once, at plan time: every
     * int-kind leaf value (Int n_tok, metadata int/long/date/timestamp/
     * double — [[MetaColumns.statLong]]) becomes a `Long`, so the pruning
-    * walks below ([[mayMatch]]/[[bloomMayMatch]]/[[mustMatchAll]]/
-    * [[SegmentLayoutV2.statFilter]]) match on exactly two value shapes —
+    * walks below ([[mayMatch]]/[[bloomMayMatch]]/[[mustMatchAll]]) match
+    * on exactly two value shapes —
     * String and Long — with no Spark type knowledge on the executors.
     * String leaves pass through; an unconvertible leaf (shouldn't survive
     * [[GraftScan.prunable]]) degrades to the whole filter dropping out of
@@ -1200,13 +1200,15 @@ private[sources] final class DecodedSegment(
   * (pushed filters AND the optional token range), decodes ONLY the
   * projected streams, and keeps the task-level scan counters.
   *
-  * The requested parquet schema omits every unprojected stream's payload
-  * column (pages never read), and the pushed stat predicates ride to
-  * parquet as a `FilterPredicate` over the stat columns, so row groups /
-  * pages whose folded stats can't match are skipped before any payload
-  * IO. Records that parquet's record-level stat filter drops are never
-  * materialized here (they don't appear in the pruned-segment counters —
-  * their IO simply never happened). */
+  * A filtered scan reads each row group in two phases. The stat phase
+  * reads only the per-segment stat columns (plus the blooms a point
+  * predicate probes) and decides every segment; the payload phase reads
+  * the projected payload columns, and only for a row group that kept a
+  * segment. So an unprojected payload is never read, a row group whose
+  * segments are all pruned costs its stat columns alone, and every
+  * segment of the file lands in exactly one counter: decoded, or pruned
+  * by stats, token range or bloom. An unfiltered scan reads both in one
+  * pass. */
 private[sources] final class SegmentScanCore(
     file: String, required: StructType, pushed: Array[Filter],
     tokenRange: Option[(Long, Long)], conf: Configuration,
@@ -1251,18 +1253,24 @@ private[sources] final class SegmentScanCore(
       elemPoints.keySet
   }
 
-  private val records: GraftLayout.RecordCursor = {
-    val statSuffixes = Seq("minV", "maxV", "minS", "maxS", "bytesOut", "nValues")
-    val wanted: Set[String] = Set("nRows") ++
-      footer.streams.flatMap(s => statSuffixes.map(f => SegmentLayoutV2.field(s, f))) ++
-      payloadStreams.map(s => SegmentLayoutV2.field(s, "payload")) ++
-      bloomStreams.map(s => SegmentLayoutV2.field(s, "bloom"))
-    val c = new GraftLayout.RecordCursor(file, conf,
-      SegmentLayoutV2.statFilter(pushed.toSeq, tokenRange, tokenPoints,
-        footer.fieldNames.contains _, elemRanges, elemPoints))
-    try c.select(wanted.contains)
-    catch { case e: Throwable => c.close(); throw e }
-  }
+  private val cursor = new GraftLayout.RecordCursor(file, conf)
+  // the stat phase reads each row group's nRows, stat and bloom columns;
+  // the payload phase only the projected payloads of a row group that
+  // kept a segment. An unfiltered scan keeps every segment, so it reads
+  // both in one pass (payloadPhase null).
+  private val (statPhase, payloadPhase) =
+    try {
+      val statSuffixes = Seq("minV", "maxV", "minS", "maxS", "bytesOut", "nValues")
+      val stats: Set[String] = Set("nRows") ++
+        footer.streams.flatMap(s => statSuffixes.map(f => SegmentLayoutV2.field(s, f))) ++
+        bloomStreams.map(s => SegmentLayoutV2.field(s, "bloom"))
+      val payloads: Set[String] = Set("nRows") ++
+        payloadStreams.map(s => SegmentLayoutV2.field(s, "payload"))
+      val filtered = pushed.nonEmpty || tokenRange.isDefined || tokenPoints.nonEmpty ||
+        elemRanges.nonEmpty || elemPoints.nonEmpty
+      if (filtered) (cursor.project(stats.contains), cursor.project(payloads.contains))
+      else (cursor.project(f => stats(f) || payloads(f)), null)
+    } catch { case e: Throwable => cursor.close(); throw e }
 
   // per-task scan counters, reported to Spark as DSv2 custom task metrics
   var mSegsDecoded = 0L
@@ -1272,18 +1280,41 @@ private[sources] final class SegmentScanCore(
   var mBytesDecoded = 0L
   var mBytesPruned = 0L
 
-  /** Next matching segment, decoded; null at end of file. */
+  private var group = -1
+  // the current row group's chunk stats per segment, null where pruned,
+  // and its payload records, consumed in step
+  private var kept: Array[Map[String, ChunkStats]] = Array.empty
+  private var pos = 0
+  private var payloads: Iterator[Group] = Iterator.empty
+
+  /** Next matching segment, decoded; null at end of file. Every segment
+    * passes [[keep]] (and so reaches exactly one counter) before any
+    * payload of its row group is read. */
   def nextSegment(): DecodedSegment = {
-    var g = records.next()
-    while (g != null) {
-      val seg = decodeGroup(g)
-      if (seg != null) return seg
-      g = records.next()
+    while (true) {
+      while (pos < kept.length) {
+        val c = kept(pos)
+        pos += 1
+        val g = payloads.next()
+        if (c != null) return decode(withPayloads(c, g), g.getInteger("nRows", 0))
+      }
+      group += 1
+      if (group >= cursor.rowGroups) return null
+      val records = cursor.rowGroup(group, statPhase).toArray
+      kept = records.map { g =>
+        val c = chunks(g)
+        if (keep(c, g.getInteger("nRows", 0))) c else null
+      }
+      pos = 0
+      payloads =
+        if (payloadPhase == null) records.iterator
+        else if (kept.exists(_ != null)) cursor.rowGroup(group, payloadPhase)
+        else Iterator.fill(kept.length)(null)
     }
     null
   }
 
-  def close(): Unit = records.close()
+  def close(): Unit = cursor.close()
 
   def metricsValues(rowsEmitted: Long): Array[CustomTaskMetric] = Array(
     GraftTaskMetric("graft segments decoded", mSegsDecoded),
@@ -1294,9 +1325,9 @@ private[sources] final class SegmentScanCore(
     GraftTaskMetric("graft payload bytes pruned", mBytesPruned),
     GraftTaskMetric("graft rows emitted", rowsEmitted))
 
-  /** Stats from the flat stat columns; payload/bloom bytes ONLY for
-    * streams the projection / point predicates put in the requested
-    * schema — everything else was never read from parquet. */
+  /** Stats from the flat stat columns of a stat-phase record; bloom bytes
+    * ONLY for streams a point predicate probes (no bloom column is read
+    * otherwise). Payloads come later, from [[withPayloads]]. */
   private def chunks(g: Group): Map[String, ChunkStats] = {
     footer.streams.flatMap { s =>
       def fld(f: String) = SegmentLayoutV2.field(s, f)
@@ -1309,14 +1340,13 @@ private[sources] final class SegmentScanCore(
       // decode-as-null) instead of crashing on a stat read.
       if (!has("nValues")) None
       else {
-        val payload = if (payloadStreams(s)) bin("payload") else Array.emptyByteArray
         val bloom = if (bloomStreams(s)) bin("bloom") else Array.emptyByteArray
         Some(s -> ChunkStats(
           if (has("minV")) g.getLong(fld("minV"), 0) else 0L,
           if (has("maxV")) g.getLong(fld("maxV"), 0) else 0L,
           if (has("minS")) g.getString(fld("minS"), 0) else "",
           if (has("maxS")) g.getString(fld("maxS"), 0) else "",
-          payload, bloom,
+          Array.emptyByteArray, bloom,
           if (has("bytesOut")) g.getLong(fld("bytesOut"), 0) else 0L,
           g.getLong(fld("nValues"), 0)))
       }
@@ -1354,18 +1384,19 @@ private[sources] final class SegmentScanCore(
   private def payloadBytes(c: Map[String, ChunkStats]): Long =
     c.valuesIterator.map(_.storedBytes).sum
 
-  private def decodeGroup(g: Group): DecodedSegment = {
-    val byCol = chunks(g)
-    val segRows = g.getInteger("nRows", 0)
+  /** Does the segment survive every chunk skip? A pruned segment counts
+    * once, under the first skip that rules it out, with its stored bytes
+    * (all streams, projected or not). */
+  private def keep(byCol: Map[String, ChunkStats], segRows: Int): Boolean = {
     if (!mayMatch(byCol, segRows)) {
       mSegsPruned += 1
       mBytesPruned += payloadBytes(byCol)
-      return null
+      return false
     }
     if (!bloomMayMatch(byCol)) {
       mSegsPrunedBloom += 1
       mBytesPruned += payloadBytes(byCol)
-      return null
+      return false
     }
     // token-range skip on the tokens chunk min/max — the flagship chunk
     // skip, reachable from SQL through GraftTokenRangePushdown; inexact,
@@ -1375,7 +1406,7 @@ private[sources] final class SegmentScanCore(
         (byCol("tokens").minV > hi || byCol("tokens").maxV < lo) =>
         mSegsPrunedTok += 1
         mBytesPruned += payloadBytes(byCol)
-        return null
+        return false
       case _ => ()
     }
     // token POINT skip: each point is a value some conjunct REQUIRES the
@@ -1391,12 +1422,12 @@ private[sources] final class SegmentScanCore(
         if (p < c.minV || p > c.maxV) {
           mSegsPrunedTok += 1
           mBytesPruned += payloadBytes(byCol)
-          return null
+          return false
         }
         if (!SegmentBloom.mightContainLong(c.bloom, p)) {
           mSegsPrunedBloom += 1
           mBytesPruned += payloadBytes(byCol)
-          return null
+          return false
         }
         i += 1
       }
@@ -1409,7 +1440,7 @@ private[sources] final class SegmentScanCore(
       if (c.nValues == 0L || c.minV > hi || c.maxV < lo) {
         mSegsPrunedTok += 1
         mBytesPruned += payloadBytes(byCol)
-        return null
+        return false
       }
     }
     for ((col, ps) <- elemPoints) byCol.get(col).foreach { c =>
@@ -1419,18 +1450,30 @@ private[sources] final class SegmentScanCore(
         if (c.nValues == 0L || p < c.minV || p > c.maxV) {
           mSegsPrunedTok += 1
           mBytesPruned += payloadBytes(byCol)
-          return null
+          return false
         }
         if (!SegmentBloom.mightContainLong(c.bloom, p)) {
           mSegsPrunedBloom += 1
           mBytesPruned += payloadBytes(byCol)
-          return null
+          return false
         }
         i += 1
       }
     }
+    true
+  }
+
+  /** `c` with the projected payloads of the segment's payload-phase record. */
+  private def withPayloads(c: Map[String, ChunkStats], g: Group): Map[String, ChunkStats] =
+    c.map { case (s, st) =>
+      val f = SegmentLayoutV2.field(s, "payload")
+      if (payloadStreams(s) && g.getFieldRepetitionCount(f) > 0)
+        s -> st.copy(payload = g.getBinary(f, 0).getBytes)
+      else s -> st
+    }
+
+  private def decode(byCol: Map[String, ChunkStats], nRows: Int): DecodedSegment = {
     mSegsDecoded += 1
-    val nRows = segRows
     // strings decode to ONE UTF-8 blob + offsets (never java.lang.String:
     // Spark wants UTF8String/byte[] anyway — the String path decoded AND
     // re-encoded every value in the hot loop)

@@ -8,11 +8,9 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path => HPath}
 import org.apache.parquet.{HadoopReadOptions, ParquetReadOptions}
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
-import org.apache.parquet.filter2.compat.FilterCompat
-import org.apache.parquet.filter2.predicate.FilterPredicate
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.{HadoopCodecs, HadoopInputFile}
-import org.apache.parquet.io.{ColumnIOFactory, MessageColumnIO, RecordReader}
+import org.apache.parquet.io.{ColumnIOFactory, MessageColumnIO}
 import org.apache.parquet.schema.MessageType
 
 /** Driver-side knowledge of the segment-table layout shared by planning,
@@ -90,73 +88,78 @@ object GraftLayout {
     }
   }
 
-  /** Pull-style cursor over the records of one parquet file — the one way
-    * graft reads parquet: header, ledger, compaction and scan readers all
-    * go through it.
+  /** Cursor over the records of one parquet file — the one way graft
+    * reads parquet: header, ledger, compaction and scan readers all go
+    * through it.
     *
-    * The file opens with the shared [[readOptions]], a codec factory of
+    * The file opens with the shared [[readOptions]] and a codec factory of
     * its own (a factory caches one decompressor per codec, which is not
     * thread-safe — [[prefetchHeaders]] reads files in parallel — and
-    * closing the reader releases it) and `filter` as the record filter.
-    * Parquet then drops the row groups whose statistics, dictionaries or
-    * blooms cannot match when the file opens, and the pages whose column
-    * indexes cannot match in `readNextFilteredRowGroup`; the cursor skips
-    * the records the filter drops, as parquet's `InternalParquetRecordReader`
-    * does. */
-  final class RecordCursor(file: String, conf: Configuration,
-                           filter: Option[FilterPredicate] = None) extends AutoCloseable {
+    * closing the reader releases it). Records come either in file order
+    * ([[select]], [[next]]) or one row group at a time under a projection
+    * ([[project]], [[rowGroup]]); only the projected fields' column chunks
+    * are ever read. */
+  final class RecordCursor(file: String, conf: Configuration) extends AutoCloseable {
     private[GraftLayout] val reader: ParquetFileReader = {
       val shared = readOptions(conf)
-      val b = ParquetReadOptions.builder(shared.getConfiguration).copy(shared)
-        .withCodecFactory(HadoopCodecs.newFactory(conf, 0))
-      filter.foreach(p => b.withRecordFilter(FilterCompat.get(p)))
-      ParquetFileReader.open(HadoopInputFile.fromPath(new HPath(file), conf), b.build())
+      ParquetFileReader.open(HadoopInputFile.fromPath(new HPath(file), conf),
+        ParquetReadOptions.builder(shared.getConfiguration).copy(shared)
+          .withCodecFactory(HadoopCodecs.newFactory(conf, 0)).build())
     }
-    private val recordFilter = filter.fold(FilterCompat.NOOP)(FilterCompat.get)
     private val md = reader.getFooter.getFileMetaData
-    private var requested: MessageType = md.getSchema
-    private var io: MessageColumnIO = null
-    private var converter: GroupRecordConverter = null
-    private var records: RecordReader[Group] = null
-    private var left = 0L
+    private var seq: Projection = null
+    private var group = 0
+    private var records: Iterator[Group] = Iterator.empty
 
-    /** Projects to the top-level fields `keep` accepts: parquet reads only
-      * those fields' column chunks, so a dropped `c_<s>__payload` field's
-      * pages are never fetched. Call before the first [[next]]; without it
-      * every field is read. */
-    def select(keep: String => Boolean): this.type = {
+    /** The top-level fields `keep` accepts, as a read schema for [[rowGroup]]. */
+    final class Projection private[RecordCursor] (private[RecordCursor] val schema: MessageType) {
+      private[RecordCursor] val io: MessageColumnIO =
+        new ColumnIOFactory(md.getCreatedBy).getColumnIO(schema, md.getSchema, true)
+    }
+
+    def project(keep: String => Boolean): Projection = {
       val schema = md.getSchema
-      requested = new MessageType(schema.getName,
-        schema.getFields.asScala.filter(t => keep(t.getName)).asJava)
-      reader.setRequestedSchema(requested)
+      new Projection(new MessageType(schema.getName,
+        schema.getFields.asScala.filter(t => keep(t.getName)).asJava))
+    }
+
+    /** Projects [[next]] to the top-level fields `keep` accepts: parquet
+      * reads only those fields' column chunks, so a dropped
+      * `c_<s>__payload` field's pages are never fetched. Call before the
+      * first [[next]]; without it every field is read. */
+    def select(keep: String => Boolean): this.type = {
+      seq = project(keep)
       this
     }
 
-    /** The next record the filter keeps; null at the end of the file. */
+    /** The next record in file order; null at the end of the file. */
     def next(): Group = {
-      if (io == null) {
-        io = new ColumnIOFactory(md.getCreatedBy).getColumnIO(requested, md.getSchema, true)
-        converter = new GroupRecordConverter(requested)
+      if (seq == null) seq = project(_ => true)
+      while (!records.hasNext) {
+        if (group == rowGroups) return null
+        records = rowGroup(group, seq)
+        group += 1
       }
-      while (true) {
-        if (left == 0L) {
-          val pages = reader.readNextFilteredRowGroup()
-          if (pages == null) return null
-          records = io.getRecordReader(pages, converter, recordFilter)
-          left = pages.getRowCount
-        } else {
-          left -= 1
-          val g = records.read()
-          // null: the filter dropped this record
-          if (g != null) return g
-        }
-      }
-      null
+      records.next()
     }
 
     def foreach(f: Group => Unit): Unit = {
       var g = next()
       while (g != null) { f(g); g = next() }
+    }
+
+    /** Row groups in the file. */
+    def rowGroups: Int = reader.getRowGroups.size
+
+    /** Every record of row group `i` under `p`, in file order, reading
+      * only p's column chunks: a reader can look at a row group's small
+      * columns first and fetch the large ones only when a record needs
+      * them. */
+    def rowGroup(i: Int, p: Projection): Iterator[Group] = {
+      reader.setRequestedSchema(p.schema)
+      val pages = reader.readRowGroup(i)
+      val rr = p.io.getRecordReader(pages, new GroupRecordConverter(p.schema))
+      Iterator.fill(pages.getRowCount.toInt)(rr.read())
     }
 
     override def close(): Unit = reader.close()

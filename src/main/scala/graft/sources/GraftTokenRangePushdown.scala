@@ -8,9 +8,9 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
 /** Token-range predicate pushdown for the graft connector.
   *
   * The flagship chunk skip — decode only segments whose tokens chunk
-  * [minV, maxV] intersects the queried range (the scan's `tokenRange`, which
-  * rides to parquet as a record filter over the tokens stat columns and is
-  * re-checked per segment in [[SegmentScanCore]]) — is not reachable
+  * [minV, maxV] intersects the queried range (the scan's `tokenRange`,
+  * checked per segment against the tokens stat columns in
+  * [[SegmentScanCore]]) — is not reachable
   * through Spark's standard DSv2 filter negotiation: an
   * `array_contains(tokens, v)` or `exists(tokens, x -> lo <= x AND x <= hi)`
   * predicate never becomes a `sources.Filter`, and Spark 4.1's

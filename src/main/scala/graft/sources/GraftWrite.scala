@@ -469,8 +469,8 @@ final case class GraftWriterFactory(stagingDir: String, schema: StructType,
 
 object GraftSegmentWriter {
   /** Row-group size of v2 part-files: smaller than parquet's 128 MiB
-    * default so the stat-predicate FilterCompat skip has useful
-    * granularity (a row group is the coarsest skippable unit; ~8 MiB ≈
+    * default so the scan's payload skip has useful granularity (it reads
+    * a row group's payloads when any of its segments may match; ~8 MiB ≈
     * tens of segments at the default chunk budget). */
   final val RowGroupBytes: Long = 8L * 1024 * 1024
 

@@ -2,13 +2,10 @@ package graft.sources
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
-import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{BINARY, INT32, INT64}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.sources.{And => SAnd, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, IsNotNull, LessThan, LessThanOrEqual, Or => SOr, StringStartsWith}
 import org.apache.spark.sql.types.{ArrayType, BinaryType, IntegerType, LongType, StringType, StructField, StructType}
 
 /** The v2 ("pivoted") segment-file layout: ONE PARQUET COLUMN PER STREAM
@@ -25,15 +22,12 @@ import org.apache.spark.sql.types.{ArrayType, BinaryType, IntegerType, LongType,
   *    token pages (~95% of stored bytes) from disk at all — the
   *    `ProjectionMask` contract of the reference's opener
   *    (/root/reference/src/opener.rs:139-153), now at the IO layer;
-  *  - PRUNING saves real IO: the pushed stat predicates translate to
-  *    parquet `FilterPredicate`s over the per-segment stat columns
-  *    ([[statFilter]]), so parquet's row-group stats, column indexes and
-  *    dictionary filters skip whole row groups / pages of payload before
-  *    they are read — the stripe-skipping the reference gets from ORC row
-  *    indexes, rendered onto parquet's native machinery;
-  *  - the per-segment stat re-check and bloom probes still run reader-side
-  *    (blooms are not expressible as parquet predicates), unchanged in
-  *    semantics: every skip remains inexact-but-sound.
+  *  - PRUNING saves real IO: the scan reads a row group's small
+  *    per-segment stat (and bloom) columns first and its payload columns
+  *    only when some segment there may match ([[SegmentScanCore]]), so a
+  *    row group whose segments are all pruned never has a payload page
+  *    read — the stripe-skipping the reference gets from ORC row indexes;
+  *    every skip is inexact-but-sound.
   *
   * Field naming: top-level segment fields keep their names; stream fields
   * are `c_<stream>__<field>` (`c_doc_id__payload`, `c_tokens__minV`, ...).
@@ -157,116 +151,5 @@ object SegmentLayoutV2 {
     // null-field ColChunks (decoders treat an absent stream as all-null)
     val presentCols = filter(colsArr, x => x.getField("codecId").isNotNull)
     df.select(keep :+ presentCols.as("cols"): _*)
-  }
-
-  // ---- pushed filters -> parquet FilterPredicate ----------------------
-
-  /** Translate the scan's pushed stat predicates into a parquet
-    * [[FilterPredicate]] over the per-segment stat COLUMNS — each segment
-    * row carries its own chunk min/max, so the predicate is record-exact
-    * for the stat phase AND prunable by parquet at row-group/page
-    * granularity from those columns' own statistics (min of minS, max of
-    * maxS, ...). Conversion is sound-or-absent: an untranslatable shape
-    * contributes nothing (AND drops it, OR gives up), because a missing
-    * conjunct only loses pruning while the reader-side re-check keeps
-    * exactness.
-    *
-    * `hasCol` guards every referenced column against the actual FILE
-    * schema: parquet rejects predicates naming absent columns, and schema
-    * evolution (extra metadata streams) makes per-file presence real. */
-  def statFilter(pushed: Seq[Filter], tokenRange: Option[(Long, Long)],
-                 tokenPoints: Seq[Long], hasCol: String => Boolean,
-                 elemRanges: Map[String, (Long, Long)] = Map.empty,
-                 elemPoints: Map[String, Seq[Long]] = Map.empty): Option[FilterPredicate] = {
-    def sCol(a: String, f: String) = FilterApi.binaryColumn(field(a, f))
-    def iCol(a: String, f: String) = FilterApi.longColumn(field(a, f))
-    def strStatsPresent(a: String) = hasCol(field(a, "minS")) && hasCol(field(a, "maxS"))
-    def intStatsPresent(a: String) = hasCol(field(a, "minV")) && hasCol(field(a, "maxV"))
-    def bin(v: String) = Binary.fromString(v)
-
-    def strEq(a: String, v: String): FilterPredicate = FilterApi.and(
-      FilterApi.ltEq(sCol(a, "minS"), bin(v)), FilterApi.gtEq(sCol(a, "maxS"), bin(v)))
-    def intEq(a: String, v: Long): FilterPredicate = FilterApi.and(
-      FilterApi.ltEq(iCol(a, "minV"), java.lang.Long.valueOf(v)),
-      FilterApi.gtEq(iCol(a, "maxV"), java.lang.Long.valueOf(v)))
-
-    def conv(f: Filter): Option[FilterPredicate] = f match {
-      case EqualTo(a, v: String) if strStatsPresent(a) => Some(strEq(a, v))
-      case GreaterThan(a, v: String) if strStatsPresent(a) =>
-        Some(FilterApi.gt(sCol(a, "maxS"), bin(v)))
-      case GreaterThanOrEqual(a, v: String) if strStatsPresent(a) =>
-        Some(FilterApi.gtEq(sCol(a, "maxS"), bin(v)))
-      case LessThan(a, v: String) if strStatsPresent(a) =>
-        Some(FilterApi.lt(sCol(a, "minS"), bin(v)))
-      case LessThanOrEqual(a, v: String) if strStatsPresent(a) =>
-        Some(FilterApi.ltEq(sCol(a, "minS"), bin(v)))
-      // int-kind leaves arrive in the stat domain as Longs
-      // ([[graft.sources.StatPredicate.normalize]]); the Int cases keep
-      // direct (un-normalized) callers working
-      case EqualTo(a, v: Long) if intStatsPresent(a) => Some(intEq(a, v))
-      case GreaterThan(a, v: Long) if intStatsPresent(a) =>
-        Some(FilterApi.gt(iCol(a, "maxV"), java.lang.Long.valueOf(v)))
-      case GreaterThanOrEqual(a, v: Long) if intStatsPresent(a) =>
-        Some(FilterApi.gtEq(iCol(a, "maxV"), java.lang.Long.valueOf(v)))
-      case LessThan(a, v: Long) if intStatsPresent(a) =>
-        Some(FilterApi.lt(iCol(a, "minV"), java.lang.Long.valueOf(v)))
-      case LessThanOrEqual(a, v: Long) if intStatsPresent(a) =>
-        Some(FilterApi.ltEq(iCol(a, "minV"), java.lang.Long.valueOf(v)))
-      case EqualTo(a, v: Int) if intStatsPresent(a) => Some(intEq(a, v.toLong))
-      case GreaterThan(a, v: Int) if intStatsPresent(a) =>
-        Some(FilterApi.gt(iCol(a, "maxV"), java.lang.Long.valueOf(v.toLong)))
-      case GreaterThanOrEqual(a, v: Int) if intStatsPresent(a) =>
-        Some(FilterApi.gtEq(iCol(a, "maxV"), java.lang.Long.valueOf(v.toLong)))
-      case LessThan(a, v: Int) if intStatsPresent(a) =>
-        Some(FilterApi.lt(iCol(a, "minV"), java.lang.Long.valueOf(v.toLong)))
-      case LessThanOrEqual(a, v: Int) if intStatsPresent(a) =>
-        Some(FilterApi.ltEq(iCol(a, "minV"), java.lang.Long.valueOf(v.toLong)))
-      case In(a, vs) if vs.nonEmpty && vs.forall(_.isInstanceOf[String]) && strStatsPresent(a) =>
-        Some(vs.map(v => strEq(a, v.asInstanceOf[String])).reduce(FilterApi.or))
-      case In(a, vs) if vs.nonEmpty && vs.forall(_.isInstanceOf[Long]) && intStatsPresent(a) =>
-        Some(vs.map(v => intEq(a, v.asInstanceOf[Long])).reduce(FilterApi.or))
-      // IS NOT NULL: records (segments) whose chunk has zero non-null
-      // values can't contribute (nValues is the NON-NULL count). IS NULL
-      // needs nValues < nRows — a cross-column compare parquet predicates
-      // can't express — so it stays a reader-side prune only.
-      case IsNotNull(a) if a != "tokens" && hasCol(field(a, "nValues")) =>
-        Some(FilterApi.gt(iCol(a, "nValues"), java.lang.Long.valueOf(0L)))
-      // LIKE 'p%': p is the least p-prefixed string, so maxS >= p is a
-      // necessary condition (the min-side needs byte truncation parquet
-      // predicates can't express; the reader-side mayMatch adds it)
-      case StringStartsWith(a, p) if strStatsPresent(a) =>
-        Some(FilterApi.gtEq(sCol(a, "maxS"), bin(p)))
-      case SAnd(l, r) => (conv(l), conv(r)) match {
-        case (Some(a), Some(b)) => Some(FilterApi.and(a, b))
-        case (a, b) => a.orElse(b) // dropping one AND side is sound (less pruning)
-      }
-      case SOr(l, r) =>
-        for { a <- conv(l); b <- conv(r) } yield FilterApi.or(a, b)
-      case _ => None
-    }
-
-    val tokenParts: Seq[FilterPredicate] =
-      if (!intStatsPresent("tokens")) Nil
-      else tokenRange.map { case (lo, hi) =>
-        FilterApi.and(
-          FilterApi.ltEq(iCol("tokens", "minV"), java.lang.Long.valueOf(hi)),
-          FilterApi.gtEq(iCol("tokens", "maxV"), java.lang.Long.valueOf(lo)))
-      }.toSeq ++ tokenPoints.map(p => intEq("tokens", p))
-
-    // element predicates on LIST metadata columns: the tokenParts shape
-    // per column (range intersect + per-point containment over the
-    // element stream's stat columns)
-    val elemParts: Seq[FilterPredicate] =
-      elemRanges.toSeq.collect {
-        case (c, (lo, hi)) if intStatsPresent(c) =>
-          FilterApi.and(
-            FilterApi.ltEq(iCol(c, "minV"), java.lang.Long.valueOf(hi)),
-            FilterApi.gtEq(iCol(c, "maxV"), java.lang.Long.valueOf(lo)))
-      } ++ elemPoints.toSeq.flatMap { case (c, ps) =>
-        if (!intStatsPresent(c)) Nil else ps.map(p => intEq(c, p))
-      }
-
-    val parts = pushed.flatMap(conv) ++ tokenParts ++ elemParts
-    parts.reduceOption(FilterApi.and)
   }
 }

@@ -46,20 +46,20 @@ class ReadSideSpec extends AnyFunSuite {
       _.cols.find(_.col == "tokens").exists(c => c.minV <= hi && c.maxV >= lo))
     val planned = ScanMetrics.segmentsPlanned(scan)
     val decoded = m.getOrElse("graft segments decoded", -1L)
-    val prunedTok = ScanMetrics.segmentsPrunedBy(scan, m, "graft segments pruned (token range)")
+    val prunedTok = m.getOrElse("graft segments pruned (token range)", -1L)
     assert(planned === segs.length.toLong)
     assert(decoded + prunedTok === planned, s"$m")
     assert(decoded === matched.length.toLong, s"$m")
+    assert(prunedTok === pruned.length.toLong, s"$m")
     assert(prunedTok > 0L, "zipf data must let stats prune something")
     assert(m.getOrElse("graft rows emitted", -1L) === matched.map(_.nRows.toLong).sum)
-    // payload bytes: decoded = the survivors' header bytesOut; the pruned
-    // side never reaches a decoder (parquet's record filter drops what the
-    // token range rules out before the reader counts it)
+    // payload bytes: decoded = the survivors' header bytesOut, pruned = the
+    // skipped segments' (every stream is projected here)
     val bytesDecoded = m.getOrElse("graft payload bytes decoded", -1L)
-    val bytesPruned = pruned.map(_.bytesOut).sum
+    val bytesPruned = m.getOrElse("graft payload bytes pruned", -1L)
     assert(bytesDecoded === matched.map(_.bytesOut).sum)
+    assert(bytesPruned === pruned.map(_.bytesOut).sum)
     assert(bytesDecoded + bytesPruned === segs.map(_.bytesOut).sum)
-    assert(m.getOrElse("graft payload bytes pruned", 0L) <= bytesPruned)
     assert(bytesDecoded > 0 && bytesPruned > 0)
     val efficiency = graft.queries0.Encode.scanEfficiency(bytesDecoded, bytesPruned)
     assert(efficiency > 0.0 && efficiency < 1.0)

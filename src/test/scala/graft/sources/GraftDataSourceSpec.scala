@@ -323,16 +323,15 @@ class GraftDataSourceSpec extends AnyFunSuite {
     assert(plan.contains("PushedElemPoints: [tags:[2000]]"), s"no elem point:\n$plan")
     val (rows, m) = ScanMetrics.collect(q.select("doc_id"))
     assert(rows.map(_.getString(0)).toSeq === Seq("doc_000000000200"))
-    // the element predicate rides to parquet as a FilterPredicate over the
-    // tags stat columns, so non-matching segments are skipped at the IO
-    // layer — they never reach the reader-side counters. Evidence is the
-    // decode count: a full scan decodes every segment, this must not.
+    // the element predicate is checked against the tags stat columns
+    // before any payload is read: a full scan decodes every segment, this
+    // must decode fewer than half and count the rest as pruned
     val totalSegments = spark.read.parquet(s"$dir/data").count()
-    val decoded = m.getOrElse("graft segments decoded", Long.MaxValue) +
-      m.getOrElse("graft segments pruned (token range)", 0L) +
-      m.getOrElse("graft segments pruned (bloom)", 0L)
+    val decoded = m.getOrElse("graft segments decoded", Long.MaxValue)
     assert(decoded < totalSegments / 2,
       s"element predicate must skip most of the $totalSegments segments: $m")
+    assert(ScanMetrics.segmentsPrunedBy(q.select("doc_id"), m,
+      "graft segments pruned (token range)") > totalSegments / 2, s"$m")
     // exists with bounds -> interval on the element stream
     val r = table.filter(expr("exists(tags, x -> x >= 3000 and x <= 3010)"))
     val plan2 = r.queryExecution.executedPlan.toString
@@ -941,18 +940,19 @@ class GraftDataSourceSpec extends AnyFunSuite {
     input.write.format("graft").option("buckets", "2")
       .option("tokensPerChunk", "64").mode("append").save(dir)
     val table = spark.read.format("graft").load(dir)
-    // long column: monotonic in doc_id => chunk stats discriminate. Under
-    // the v2 layout the stat predicate rides to parquet as a record-level
-    // FilterPredicate, so pruned segments are never materialized at all —
-    // they show up as FEWER decoded segments, not in the pruned counters.
+    // long column: monotonic in doc_id => chunk stats discriminate, so
+    // the filtered scan decodes FEWER segments and counts the rest as
+    // pruned by stats
     val (_, mFull) = ScanMetrics.collect(table)
     val totalSegs = mFull.getOrElse("graft segments decoded", 0L)
-    val (rows, m) = ScanMetrics.collect(table.filter($"views" === 123000L))
+    val views = table.filter($"views" === 123000L)
+    val (rows, m) = ScanMetrics.collect(views)
     assert(rows.length === 1 && rows.head.getAs[String]("doc_id") === "doc00123")
-    val decoded = m.getOrElse("graft segments decoded", 0L) +
-      m.getOrElse("graft segments pruned (filter stats)", 0L)
+    val decoded = m.getOrElse("graft segments decoded", 0L)
     assert(decoded < totalSegs,
       s"expected meta-stat pruning (decoded $decoded of $totalSegs), metrics=$m")
+    assert(ScanMetrics.segmentsPrunedBy(views, m, "graft segments pruned (filter stats)") > 0L,
+      s"$m")
     val desc = table.filter($"views" === 123000L).queryExecution.executedPlan.toString
     assert(desc.contains("PushedFilters: [EqualTo(views,"), desc)
     // double column through the sortable-bits stat domain, negatives included
@@ -1065,13 +1065,15 @@ class GraftDataSourceSpec extends AnyFunSuite {
     val table = spark.read.format("graft").load(dir)
     val (_, mFull) = ScanMetrics.collect(table)
     val total = mFull.getOrElse("graft segments decoded", 0L)
-    // IS NOT NULL: all-null chunks drop at the parquet record filter
-    // (never materialized => fewer decoded), results exact
-    val (nn, m1) = ScanMetrics.collect(table.filter($"quality".isNotNull))
+    // IS NOT NULL: all-null chunks prune on their non-null count (fewer
+    // decoded, the rest counted as pruned by stats), results exact
+    val notNull = table.filter($"quality".isNotNull)
+    val (nn, m1) = ScanMetrics.collect(notNull)
     assert(nn.length === 200)
-    assert(m1.getOrElse("graft segments decoded", 0L) +
-      m1.getOrElse("graft segments pruned (filter stats)", 0L) < total,
+    assert(m1.getOrElse("graft segments decoded", 0L) < total,
       s"IS NOT NULL did not skip all-null chunks: $m1 vs total $total")
+    assert(ScanMetrics.segmentsPrunedBy(notNull, m1, "graft segments pruned (filter stats)") > 0L,
+      s"$m1")
     // IS NULL: null-free chunks prune reader-side (stats counter visible)
     val (nl, m2) = ScanMetrics.collect(table.filter($"quality".isNull))
     assert(nl.length === 200)
@@ -1363,14 +1365,12 @@ class GraftDataSourceSpec extends AnyFunSuite {
       .option("tokensPerChunk", "8192")
       .mode(org.apache.spark.sql.SaveMode.Append).save(plainDir)
     val expect = input.filter($"lang" === "l3").count()
-    // under the v2 layout pruned segments are never materialized (the stat
-    // predicate rides to parquet as a record filter), so clustering shows
-    // up as FEWER decoded segments for the same filtered result
+    // clustering shows up as FEWER decoded segments for the same filtered
+    // result
     def decodedOn(dir: String): (Long, Long) = {
       val (rows, m) = ScanMetrics.collect(
         spark.read.format("graft").load(dir).filter($"lang" === "l3"))
-      (rows.length.toLong, m.getOrElse("graft segments decoded", Long.MaxValue) +
-        m.getOrElse("graft segments pruned (filter stats)", 0L))
+      (rows.length.toLong, m.getOrElse("graft segments decoded", Long.MaxValue))
     }
     val (nSorted, decodedSorted) = decodedOn(sortedDir)
     val (nPlain, decodedPlain) = decodedOn(plainDir)

@@ -40,15 +40,16 @@ object ScanMetrics {
     if (files.isEmpty) 0L else df.sparkSession.read.parquet(files: _*).count()
   }
 
-  /** Segments of the part-files `df`'s scan planned that the stat prune
-    * behind `counter` skipped (`m`: the scan's metrics). The pushed stat
-    * predicates ride to parquet as a record filter over the v2 stat
-    * columns, and the segments parquet skips never reach the reader-side
-    * counters: they are the planned segments no reader counter saw. */
+  /** The scan's `counter` (`m`: its metrics), once its four segment
+    * counters are checked to account for every segment of the part-files
+    * it planned: each one is decoded or pruned exactly once. */
   def segmentsPrunedBy(df: DataFrame, m: Map[String, Long], counter: String): Long = {
-    val seen = Seq("graft segments decoded", "graft segments pruned (filter stats)",
+    import org.scalatest.Assertions._
+    val counted = Seq("graft segments decoded", "graft segments pruned (filter stats)",
       "graft segments pruned (token range)", "graft segments pruned (bloom)")
       .map(m.getOrElse(_, 0L)).sum
-    segmentsPlanned(df) - seen + m.getOrElse(counter, 0L)
+    assert(counted === segmentsPlanned(df),
+      s"segment counters must cover every planned segment: $m")
+    m.getOrElse(counter, 0L)
   }
 }

@@ -23,7 +23,8 @@ for all other (driver) threads separately: the sample count, the top
 25 frames by self samples (the frame on top of the stack) and by
 inclusive samples (the frame anywhere on the stack, counted once per
 sample), each with its share of that thread group's samples. Every
-`--frame` substring gets its inclusive share in both groups, 0 included.
+`--frame` substring gets its inclusive share in both groups, 0 included: a
+sample counts once for a substring when any of its frames contains it.
 The recording is kept at `--jfr` (default `.bench_out/profile-<workload>-
 seed<seed>.jfr`) for `jfr print` or JDK Mission Control.
 """
@@ -66,7 +67,23 @@ def samples(jfr_file):
         raise SystemExit(f"profile_jfr: jfr print failed on {jfr_file}")
 
 
-def report(name, n, self_counts, incl_counts, wanted):
+def tally(sampled, wanted):
+    """Per thread group: [samples, self counts, inclusive counts, counts per
+    wanted substring]. Inclusive and wanted counts take each sample once."""
+    groups = {g: [0, collections.Counter(), collections.Counter(), collections.Counter()]
+              for g in ("executor tasks", "driver")}
+    for thread, frames in sampled:
+        if not frames:
+            continue
+        g = groups["executor tasks" if thread.startswith(EXECUTOR_THREAD) else "driver"]
+        g[0] += 1
+        g[1][frames[0]] += 1
+        g[2].update(set(frames))
+        g[3].update(w for w in wanted if any(w in f for f in frames))
+    return groups
+
+
+def report(name, n, self_counts, incl_counts, wanted_counts, wanted):
     print(f"\n== {name}: {n} samples")
     if n == 0:
         return
@@ -77,7 +94,7 @@ def report(name, n, self_counts, incl_counts, wanted):
     if wanted:
         print("-- requested frames (inclusive)")
         for w in wanted:
-            c = sum(v for f, v in incl_counts.items() if w in f)
+            c = wanted_counts[w]
             print(f"{c / n:7.1%} {c:7d}  {w}")
 
 
@@ -120,19 +137,11 @@ def main():
         raise SystemExit(f"profile_jfr: no recording at {jfr_file}; the run ended before "
                          f"delay + duration ({int(a.delay)} s + {int(duration)} s)")
 
-    groups = {g: [0, collections.Counter(), collections.Counter()]
-              for g in ("executor tasks", "driver")}
-    for thread, frames in samples(jfr_file):
-        if not frames:
-            continue
-        g = groups["executor tasks" if thread.startswith(EXECUTOR_THREAD) else "driver"]
-        g[0] += 1
-        g[1][frames[0]] += 1
-        g[2].update(set(frames))
+    groups = tally(samples(jfr_file), a.frame)
     print(f"recording: {os.path.relpath(jfr_file, ROOT)} "
           f"({a.workload}, seed {a.seed}, {int(a.delay)} s delay, {int(duration)} s)")
-    for name, (n, self_counts, incl_counts) in groups.items():
-        report(name, n, self_counts, incl_counts, a.frame)
+    for name, counts in groups.items():
+        report(name, *counts, a.frame)
 
 
 if __name__ == "__main__":

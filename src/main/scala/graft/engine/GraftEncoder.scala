@@ -881,26 +881,10 @@ object GraftEncoder {
     segments.flatMap(decodeSegment _)
   }
 
-  /** Pure segment decode (unit-tested without Spark). Int streams decode
-    * straight to Array[Int] — no chunk-sized Array[Long] transient on the
-    * hottest loop (round-3 judge #7). */
-  def decodeSegment(seg: Segment): Iterator[TokenRow] = {
-    val byCol = seg.cols.map(c => c.col -> c).toMap
-    val docIds = StringCodecs.decodeChunk(byCol("doc_id").payload)
-    val sources = StringCodecs.decodeChunk(byCol("source").payload)
-    val nToks = IntCodecs.decodeChunkInt(byCol("n_tok").payload)
-    val tokLens = IntCodecs.decodeChunkInt(byCol("tok_len").payload)
-    val flat = IntCodecs.decodeChunkInt(byCol("tokens").payload)
-    val out = new Array[TokenRow](seg.nRows)
-    var pos = 0
-    var i = 0
-    while (i < seg.nRows) {
-      val len = tokLens(i)
-      val tokens = java.util.Arrays.copyOfRange(flat, pos, pos + len)
-      pos += len
-      out(i) = TokenRow(docIds(i), tokens, nToks(i), sources(i))
-      i += 1
+  /** Pure segment decode (unit-tested without Spark): the canonical
+    * columns of [[decodeSegmentWithMeta]], no metadata streams. */
+  def decodeSegment(seg: Segment): Iterator[TokenRow] =
+    decodeSegmentWithMeta(seg, Nil).map { case (r, _) =>
+      TokenRow(r.doc_id, r.tokens, r.n_tok, r.source)
     }
-    out.iterator
-  }
 }

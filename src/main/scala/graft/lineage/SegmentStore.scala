@@ -1,7 +1,6 @@
 package graft.lineage
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.functions._
 
 import graft.engine.{GraftEncoder, PackedRow, Segment, TokenPack, TokenRow}
 
@@ -37,6 +36,10 @@ final case class LineageRow(
   *   tableDir/data/snapshotId=S/bucket=N/  (parquet)  // encoded segments
   *   tableDir/lineage/                     (parquet)  // append-only commit ledger
   * }}}
+  *
+  * Both are read through the connector's one parquet reader
+  * ([[graft.sources.GraftLayout.RecordCursor]]): [[readSegmentsAll]] over
+  * the visible part-files, [[readLineage]] over the ledger.
   *
   * Restart protocol (north_rule "idempotent checkpoint-restart"):
   *  1. committed = lineage rows for this snapshotId with status=committed
@@ -76,49 +79,6 @@ object SegmentStore {
   def dataDir(tableDir: String): String = s"$tableDir/data"
   def lineageDir(tableDir: String): String = s"$tableDir/lineage"
 
-  /** Explicit read schema of the stored v2 layout
-    * ([[graft.sources.SegmentLayoutV2]]) plus the on-disk partition columns.
-    * Reading with an explicit schema keeps empty data dirs from failing
-    * inference. */
-  private def segmentTableSchema(streams: Seq[String]): org.apache.spark.sql.types.StructType =
-    graft.sources.SegmentLayoutV2.sparkSchema(streams)
-      .add("snapshotId", "long").add("bucket", "int")
-
-  /** The committed-or-not segment table as a Segment-shaped DataFrame:
-    * the writer stores the pivoted v2 layout (one parquet column per
-    * stream, so Catalyst/parquet prune payload IO natively), and
-    * [[graft.sources.SegmentLayoutV2.unflatten]] restores the `cols` array.
-    * The read schema carries the UNION of the files' stream sets, not the
-    * canonical five: a metadata table's extra chunks must survive into
-    * `cols` (a canonical-only schema would silently drop them), and under
-    * schema evolution older files lack later-added streams (unflatten
-    * drops the absent streams per segment). Footer info is memoized per
-    * immutable file; a file in any other layout fails there, by name.
-    * Visibility filtering stays with the callers. */
-  private def segmentsDF(spark: SparkSession, tableDir: String): org.apache.spark.sql.DataFrame = {
-    import graft.sources.SegmentLayoutV2.CanonicalStreams
-    val dd = dataDir(tableDir)
-    val conf = spark.sessionState.newHadoopConf()
-    val files = graft.sources.GraftLayout.listParquetFiles(dd, conf)
-    val found = files.flatMap(f => graft.sources.GraftLayout.footerInfo(f, conf).streams).toSet
-    val streams =
-      if (found.isEmpty) CanonicalStreams
-      else CanonicalStreams.filter(found) ++ (found -- CanonicalStreams).toSeq.sorted
-    val schema = segmentTableSchema(streams)
-    graft.sources.SegmentLayoutV2.unflatten(
-      if (files.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      else spark.read.schema(schema).option("basePath", dd).parquet(files: _*))
-  }
-
-  /** Hadoop-FS existence check — `java.io.File` would be blind to any
-    * non-local filesystem (hdfs://, s3a://) and silently skip ledger
-    * awareness there. */
-  private def hExists(spark: SparkSession, dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
-  }
-
   /** The ledger's visibility facts through the memoized driver-side fold
     * ([[graft.sources.GraftLayout.committedPairs]]) — no Spark job; a
     * table without a ledger has no pairs. */
@@ -127,11 +87,14 @@ object SegmentStore {
     graft.sources.GraftLayout.committedPairs(tableDir, conf)
       .getOrElse(graft.sources.GraftLayout.LedgerPairs(Set.empty, Map.empty, Map.empty))
 
+  /** Every ledger row, all fields, read on the driver through the one
+    * parquet reader ([[graft.sources.GraftLayout.readLedger]]) and handed
+    * back as a local Dataset — no Spark job. A table without a ledger
+    * gives an empty Dataset. */
   def readLineage(spark: SparkSession, tableDir: String): Dataset[LineageRow] = {
     import spark.implicits._
-    if (!hExists(spark, lineageDir(tableDir)))
-      spark.emptyDataset[LineageRow]
-    else spark.read.parquet(lineageDir(tableDir)).as[LineageRow]
+    spark.createDataset(
+      graft.sources.GraftLayout.readLedger(tableDir, spark.sessionState.newHadoopConf()))
   }
 
   /** Buckets already committed for a snapshot — read through the MEMOIZED
@@ -366,55 +329,24 @@ object SegmentStore {
     removed
   }
 
-  /** Read the committed segment table back as typed segments. */
-  def readSegments(spark: SparkSession, tableDir: String, snapshotId: Long): Dataset[Segment] = {
-    import spark.implicits._
-    segmentsDF(spark, tableDir)
-      .filter($"snapshotId" === snapshotId)
-      .drop($"snapshotId")
-      .as[Segment]
-  }
-
-  /** Read segments across ALL snapshots (the incremental-encode view: each
-    * micro-batch is its own snapshot and the table is their disjoint union,
-    * because a snapshot never clobbers another — its files live under
-    * `snapshotId=S/bucket=B`). Ledger-aware since r3: only committed,
-    * non-superseded partitions are visible (same read-committed stance as
-    * the connector), so crash-window data and pre-compaction generations
-    * never double-count. */
-  def readSegmentsAll(spark: SparkSession, tableDir: String): Dataset[Segment] =
-    readSegmentsVisible(spark, tableDir, None)
-
-  /** Segments of an EXPLICIT (snapshot, bucket) pair set. */
-  private def readSegmentsOf(spark: SparkSession, tableDir: String,
-                             pairs: Set[(Long, Int)]): Dataset[Segment] = {
-    import spark.implicits._
-    val wanted = spark.createDataset(pairs.toSeq).toDF("snapshotId", "bucket")
-    segmentsDF(spark, tableDir)
-      .join(broadcast(wanted), Seq("snapshotId", "bucket"), "left_semi")
-      .drop($"snapshotId")
-      .as[Segment]
-  }
-
-  /** Segments of every (snapshot, bucket) partition VISIBLE at `asOf`
-    * (None = now): committed in the ledger, minus partitions superseded by
-    * a compaction at or before the bound — the connector's rule
-    * ([[graft.sources.GraftLayout.LedgerPairs.visibleAt]]), over the
-    * memoized ledger fold. A data dir without a ledger is read whole. */
-  def readSegmentsVisible(spark: SparkSession, tableDir: String,
-                          asOf: Option[Long]): Dataset[Segment] = {
+  /** The visible segments of a table as typed segments: committed,
+    * non-superseded partitions only — the connector's rule
+    * ([[graft.sources.GraftLayout.listDataFiles]], which also reads a bare
+    * dump whole) — so crash-window data and pre-compaction generations
+    * never double-count. One task per visible part-file reads it through
+    * [[graft.sources.GraftLayout.foreachSegment]]; `bucket` comes from the
+    * file's partition directory (-1 for a bare dump's file outside one). */
+  def readSegmentsAll(spark: SparkSession, tableDir: String): Dataset[Segment] = {
     import spark.implicits._
     val conf = spark.sessionState.newHadoopConf()
-    graft.sources.GraftLayout.committedPairs(tableDir, conf) match {
-      case None => segmentsDF(spark, tableDir).drop($"snapshotId").as[Segment]
-      case Some(lp) =>
-        // Time-travel reads must fail fast when the requested snapshot's
-        // data files were reclaimed by expireSuperseded, not silently
-        // return the partial history that happens to remain. The
-        // connector's listing implements that check; run it for its
-        // validation side effect — it throws by snapshot name.
-        if (asOf.isDefined) graft.sources.GraftLayout.listDataFiles(tableDir, conf, asOf)
-        readSegmentsOf(spark, tableDir, lp.visibleAt(asOf.getOrElse(Long.MaxValue)))
-    }
+    val files = graft.sources.GraftLayout.listDataFiles(tableDir, conf)
+    val hconf = new org.apache.spark.util.SerializableConfiguration(conf)
+    spark.createDataset(spark.sparkContext.parallelize(files, math.max(1, files.length))
+      .flatMap { f =>
+        val segs = scala.collection.mutable.ArrayBuffer.empty[Segment]
+        graft.sources.GraftLayout.foreachSegment(f, hconf.value,
+          graft.sources.GraftLayout.partitionOf(f).fold(-1)(_._2))(segs += _)
+        segs
+      })
   }
 }

@@ -241,9 +241,9 @@ object Encode {
     * metrics surface (metrics.rs:57-218) for the token-range pruned scan:
     * matched/pruned segments, scanned vs pruned payload bytes, rows+tokens
     * decoded, and scan_efficiency. Exact, not
-    * accumulator-counted: the segment and byte columns are one header
-    * aggregate split by the skip predicate, the row and token columns come
-    * from decoding the matched segments. */
+    * accumulator-counted: every column is one header aggregate split by the
+    * skip predicate — a decode of the matched segments emits their `nRows`
+    * rows holding their `nTokens` tokens. */
   def scanMetrics(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val input = pruneInput(spark)
@@ -254,11 +254,11 @@ object Encode {
         coalesce(sum(when(hit, 1L).otherwise(0L)), lit(0L)),
         coalesce(sum(when(hit, 0L).otherwise(1L)), lit(0L)),
         coalesce(sum(when(hit, $"bytesOut").otherwise(0L)), lit(0L)),
-        coalesce(sum(when(hit, 0L).otherwise($"bytesOut")), lit(0L))).collect()(0)
-      val d = GraftEncoder.decode(segs.filter(hit))
-        .agg(count(lit(1)), coalesce(sum(size($"tokens").cast("long")), lit(0L))).collect()(0)
+        coalesce(sum(when(hit, 0L).otherwise($"bytesOut")), lit(0L)),
+        coalesce(sum(when(hit, $"nRows".cast("long")).otherwise(0L)), lit(0L)),
+        coalesce(sum(when(hit, $"nTokens").otherwise(0L)), lit(0L))).collect()(0)
       val (scanned, pruned) = (h.getLong(2), h.getLong(3))
-      Seq((h.getLong(0), h.getLong(1), scanned, pruned, d.getLong(0), d.getLong(1),
+      Seq((h.getLong(0), h.getLong(1), scanned, pruned, h.getLong(4), h.getLong(5),
         scanEfficiency(scanned, pruned)))
         .toDF("segments_matched", "segments_pruned", "bytes_scanned",
           "bytes_pruned", "rows_decoded", "tokens_decoded", "scan_efficiency")
@@ -369,7 +369,8 @@ object Encode {
       val projected = spark.read.format("graft").load(base).select(needed.map(col): _*)
         .agg(count(lit(1)).as("n_docs"), sum($"n_tok").cast("long").as("sum_tokens"))
         .collect()(0)
-      val bytes = SegmentStore.readSegments(spark, base, 1L).select(explode($"cols").as("c"))
+      // the table holds snapshot 1 only, so its visible segments are snapshot 1's
+      val bytes = SegmentStore.readSegmentsAll(spark, base).select(explode($"cols").as("c"))
         .groupBy()
         .agg(
           sum(when($"c.col".isin(needed: _*), $"c.bytesOut").otherwise(0L)).as("bytes_decoded"),

@@ -13,6 +13,8 @@ import org.apache.parquet.hadoop.util.{HadoopCodecs, HadoopInputFile}
 import org.apache.parquet.io.{ColumnIOFactory, MessageColumnIO}
 import org.apache.parquet.schema.MessageType
 
+import graft.lineage.LineageRow
+
 /** Driver-side knowledge of the segment-table layout shared by planning,
   * statistics and the header-only readers.
   *
@@ -171,11 +173,12 @@ object GraftLayout {
   }
 
   /** Every segment of a v2 part-file, payloads included, in file order —
-    * the compaction input reader. `bucket` comes from the file's partition
-    * directory (the layout does not store it). A stream whose fields are
-    * null in a record (absent from that segment: a stream added by schema
-    * evolution, or a foreign dump that left it null) is left out of
-    * `cols`, as [[SegmentLayoutV2.unflatten]] does. */
+    * the reader behind compaction and
+    * [[graft.lineage.SegmentStore.readSegmentsAll]]. `bucket` comes from the
+    * file's partition directory (the layout does not store it). A stream
+    * whose fields are null in a record (absent from that segment: a stream
+    * added by schema evolution, or a foreign dump that left it null) is
+    * left out of `cols`. */
   def foreachSegment(file: String, conf: Configuration, bucket: Int)(
       f: graft.engine.Segment => Unit): Unit = withRecords(file, conf) { c =>
     val streams = footerOf(file, c.reader).streams
@@ -502,7 +505,8 @@ object GraftLayout {
         superseded.iterator.collect { case (sb, c) if c <= bound => sb }
   }
 
-  /** One parsed lineage row (the 4 columns visibility needs). */
+  /** The fold's per-file cache entry: the 4 columns visibility needs
+    * (a cached [[LineageRow]] would carry 7 fields the fold never reads). */
   private final case class LedgerEntry(snapshotId: Long, bucket: Int,
                                        status: String, nRows: Long)
   /** Identity of a ledger file's bytes: commits only ever ADD files (a
@@ -525,9 +529,49 @@ object GraftLayout {
         size() > 1024
     }
 
-  /** Ledger parquet files physically read (cache misses) — the test hook
-    * asserting that repeated scans of an unchanged table re-read nothing. */
+  /** Ledger parquet files physically read by the fold (cache misses) — the
+    * test hook asserting that repeated scans of an unchanged table re-read
+    * nothing. */
   val ledgerFilesRead = new java.util.concurrent.atomic.AtomicLong(0L)
+
+  /** The ledger's files, sorted, or None when the table has no ledger. The
+    * ledger dir is flat (every writer appends files directly under it), so
+    * one listStatus call is the whole listing. */
+  private def ledgerFiles(path: String, conf: Configuration): Option[Seq[FileStatus]] = {
+    val ldir = new HPath(path, "lineage")
+    val fs = ldir.getFileSystem(conf)
+    if (!fs.exists(ldir)) None
+    else Some(fs.listStatus(ldir).iterator
+      .filter(f => f.isFile && isDataFile(f.getPath.getName))
+      .toSeq.sortBy(_.getPath.toString))
+  }
+
+  /** The columns visibility needs — the fold reads only these. */
+  private val LedgerPairFields = Set("snapshotId", "bucket", "status", "nRows")
+
+  /** Every ledger row of one file, reading only the fields `keep` accepts;
+    * the others come back as 0 / null. */
+  private def readLedgerFile(file: String, conf: Configuration,
+                             keep: String => Boolean): Array[LineageRow] = {
+    val out = ArrayBuffer.empty[LineageRow]
+    withRecords(file, conf)(_.select(keep).foreach { g =>
+      val t = g.getType
+      def has(n: String) = t.containsField(n) && g.getFieldRepetitionCount(n) > 0
+      def long(n: String) = if (has(n)) g.getLong(n, 0) else 0L
+      def str(n: String) = if (has(n)) g.getString(n, 0) else null
+      out += LineageRow(long("snapshotId"), if (has("bucket")) g.getInteger("bucket", 0) else 0,
+        long("nSegments"), long("nRows"), long("nTokens"), long("bytesIn"), long("bytesOut"),
+        str("firstChunk"), str("lastChunk"), str("codecs"), str("status"))
+    })
+    out.toArray
+  }
+
+  /** Every row of a table's ledger, all fields, in file order — read on the
+    * driver through [[RecordCursor]], no Spark job; empty without a
+    * ledger. Not memoized: the fold's cache holds only its projection. */
+  def readLedger(path: String, conf: Configuration): Seq[LineageRow] =
+    ledgerFiles(path, conf).getOrElse(Nil)
+      .flatMap(f => readLedgerFile(f.getPath.toString, conf, _ => true))
 
   /** Committed/superseded (snapshotId, bucket) pairs from the lineage
     * ledger, read driver-side with a plain parquet reader (4 projected
@@ -541,15 +585,8 @@ object GraftLayout {
     * table until the file set changes. The only per-call cost on an
     * unchanged table is one directory listing. */
   def committedPairs(path: String, conf: Configuration): Option[LedgerPairs] = {
-    val ldir = new HPath(path, "lineage")
-    val fs = ldir.getFileSystem(conf)
-    if (!fs.exists(ldir)) return None
-    // the ledger dir is flat (every writer appends files directly under
-    // it), so one listStatus call is the whole listing
-    val sig = fs.listStatus(ldir).iterator
-      .filter(f => f.isFile && isDataFile(f.getPath.getName))
+    val sig = ledgerFiles(path, conf).getOrElse(return None)
       .map(f => f.getPath.toString -> LedgerFileKey(f.getLen, f.getModificationTime))
-      .toSeq.sortBy(_._1)
     ledgerPairsCache.synchronized {
       val hit = ledgerPairsCache.get(path)
       if (hit != null && hit._1 == sig) return Some(hit._2)
@@ -565,7 +602,9 @@ object GraftLayout {
         }
         if (hit != null) hit
         else {
-          val parsed = readLedgerFile(file, conf)
+          ledgerFilesRead.incrementAndGet()
+          val parsed = readLedgerFile(file, conf, LedgerPairFields)
+            .map(r => LedgerEntry(r.snapshotId, r.bucket, r.status, r.nRows))
           ledgerFileCache.synchronized { ledgerFileCache.put(file, (key, parsed)) }
           parsed
         }
@@ -585,17 +624,6 @@ object GraftLayout {
     val lp = LedgerPairs(pairs.toSet, sup.toMap, rows.toMap)
     ledgerPairsCache.synchronized { ledgerPairsCache.put(path, (sig, lp)) }
     Some(lp)
-  }
-
-  private def readLedgerFile(file: String, conf: Configuration): Array[LedgerEntry] = {
-    ledgerFilesRead.incrementAndGet()
-    val out = ArrayBuffer.empty[LedgerEntry]
-    val top = Set("snapshotId", "bucket", "status", "nRows")
-    withRecords(file, conf)(_.select(top.contains).foreach { g =>
-      out += LedgerEntry(g.getLong("snapshotId", 0), g.getInteger("bucket", 0),
-        g.getString("status", 0), g.getLong("nRows", 0))
-    })
-    out.toArray
   }
 
   /** Committed snapshot ids from the ledger (None = no ledger) — a

@@ -394,8 +394,8 @@ object GraftWriteCommit {
   }
 
   /** Flat lineage schema — parquet-level twin of
-    * [[graft.lineage.LineageRow]], so Spark's `readLineage` sees one merged
-    * table across ledger files written by either path. */
+    * [[graft.lineage.LineageRow]], field for field, so the ledger reader
+    * ([[GraftLayout.readLedger]]) parses every ledger file the same way. */
   private val LineageSchema: MessageType = {
     val str = LogicalTypeAnnotation.stringType()
     new MessageType("graft_lineage",

@@ -4,9 +4,6 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{BINARY, INT32, INT64}
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, BinaryType, IntegerType, LongType, StringType, StructField, StructType}
 
 /** The v2 ("pivoted") segment-file layout: ONE PARQUET COLUMN PER STREAM
   * FIELD instead of round-1..3's nested `cols` LIST of structs.
@@ -34,8 +31,10 @@ import org.apache.spark.sql.types.{ArrayType, BinaryType, IntegerType, LongType,
   * The `__` separator is reserved — stream names may not contain it.
   *
   * The one segment writer ([[GraftSegmentWriter]], via the example API)
-  * emits v2, and it is the only layout the readers accept: a pre-pivot
-  * nested file fails in [[GraftLayout.footerInfo]], naming the file. */
+  * emits v2, and it is the only layout the readers accept. Every reader
+  * opens the files through [[GraftLayout.RecordCursor]]; there is no Spark
+  * mirror of this schema. A pre-pivot nested file fails in
+  * [[GraftLayout.footerInfo]], naming the file. */
 object SegmentLayoutV2 {
 
   /** Canonical streams in Segment.cols order (doc order matters: the
@@ -65,11 +64,11 @@ object SegmentLayoutV2 {
   /** Footer key of a file-level folded bloom (base64 payload). */
   def bloomMetaKey(stream: String): String = s"graft.filebloom.$stream"
 
-  // ---- schemas --------------------------------------------------------
-
-  /** Parquet schema for the example-API writer (all optional, matching
-    * what Spark's writer produces for [[sparkSchema]] — the two writers
-    * stay byte-compatible at the layout level). */
+  /** Parquet schema of the layout, as the one segment writer
+    * ([[GraftSegmentWriter]], via the example API) writes it. Every field
+    * is optional, which is also what Spark's parquet writer produces for
+    * this schema's Spark conversion, so a bare dump written through Spark
+    * reads the same. */
   def messageType(streams: Seq[String]): MessageType = {
     val str = LogicalTypeAnnotation.stringType()
     val b = Types.buildMessage()
@@ -95,61 +94,5 @@ object SegmentLayoutV2 {
       b.addField(Types.optional(BINARY).named(field(s, "bloom")))
     }
     b.named("spark_schema")
-  }
-
-  /** Spark StructType of the flat layout (no partition columns). */
-  def sparkSchema(streams: Seq[String]): StructType = {
-    val top = Seq(
-      StructField("segmentId", StringType), StructField("source", StringType),
-      StructField("partitionId", IntegerType), StructField("chunkIdx", IntegerType),
-      StructField("nRows", IntegerType), StructField("nTokens", LongType),
-      StructField("bytesIn", LongType), StructField("bytesOut", LongType))
-    val per = streams.flatMap { s =>
-      Seq(
-        StructField(field(s, "codecId"), IntegerType),
-        StructField(field(s, "codecName"), StringType),
-        StructField(field(s, "nValues"), LongType),
-        StructField(field(s, "bytesIn"), LongType),
-        StructField(field(s, "bytesOut"), LongType),
-        StructField(field(s, "minV"), LongType),
-        StructField(field(s, "maxV"), LongType),
-        StructField(field(s, "minS"), StringType),
-        StructField(field(s, "maxS"), StringType),
-        StructField(field(s, "payload"), BinaryType),
-        StructField(field(s, "bloom"), BinaryType))
-    }
-    StructType(top ++ per)
-  }
-
-  // ---- engine-path conversions ---------------------------------------
-
-  /** Flat v2 DataFrame -> Segment-shaped (cols array restored in canonical
-    * order). `withPayload = false` substitutes empty payload/bloom bytes so
-    * stats-only consumers (lineage aggregation) never read the payload
-    * parquet columns — the engine-path rendering of projection pushdown. */
-  def unflatten(df: DataFrame, withPayload: Boolean = true): DataFrame = {
-    val streams = streamsOf(df.columns.toSeq)
-    val empty = lit(Array.emptyByteArray)
-    val colsArr = array(streams.map { s =>
-      struct(
-        lit(s).as("col"),
-        col(field(s, "codecId")).as("codecId"),
-        col(field(s, "codecName")).as("codecName"),
-        col(field(s, "nValues")).as("nValues"),
-        col(field(s, "bytesIn")).as("bytesIn"),
-        col(field(s, "bytesOut")).as("bytesOut"),
-        col(field(s, "minV")).as("minV"),
-        col(field(s, "maxV")).as("maxV"),
-        col(field(s, "minS")).as("minS"),
-        col(field(s, "maxS")).as("maxS"),
-        (if (withPayload) col(field(s, "payload")) else empty).as("payload"),
-        (if (withPayload) col(field(s, "bloom")) else empty).as("bloom"))
-    }: _*)
-    val keep = df.columns.filterNot(_.startsWith("c_")).map(col).toSeq
-    // schema evolution: a segment from an older generation has NULL fields
-    // for streams added later — drop those entries instead of materializing
-    // null-field ColChunks (decoders treat an absent stream as all-null)
-    val presentCols = filter(colsArr, x => x.getField("codecId").isNotNull)
-    df.select(keep :+ presentCols.as("cols"): _*)
   }
 }

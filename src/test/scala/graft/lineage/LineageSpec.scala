@@ -52,7 +52,7 @@ class LineageSpec extends AnyFunSuite {
     assert(ledger.map(_.nRows).sum === 400L)
 
     // decode of the committed table is bit-identical to the input
-    val decoded = GraftEncoder.decode(SegmentStore.readSegments(spark, dir, snap))
+    val decoded = GraftEncoder.decode(StoredSegments.ofSnapshot(spark, dir, snap))
       .collect().map(r => r.doc_id -> r).toMap
     val expected = input.collect().map(r => r.doc_id -> r).toMap
     assert(decoded.keySet === expected.keySet)
@@ -72,7 +72,7 @@ class LineageSpec extends AnyFunSuite {
     SegmentStore.encodeCommit(input, dirB, 1L, buckets = 5)
 
     def fingerprint(dir: String): Map[String, (Int, Long, Seq[(String, Long)])] =
-      SegmentStore.readSegments(spark, dir, 1L).collect().map { s =>
+      StoredSegments.ofSnapshot(spark, dir, 1L).collect().map { s =>
         s.segmentId -> ((s.nRows, s.bytesOut,
           s.cols.map(c => c.col -> java.util.Arrays.hashCode(c.payload).toLong)))
       }.toMap
@@ -86,8 +86,8 @@ class LineageSpec extends AnyFunSuite {
     val dir = tmp()
     SegmentStore.encodeCommit(in1, dir, 10L, buckets = 3)
     SegmentStore.encodeCommit(in2, dir, 11L, buckets = 3)
-    assert(GraftEncoder.decode(SegmentStore.readSegments(spark, dir, 10L)).count() === 100L)
-    assert(GraftEncoder.decode(SegmentStore.readSegments(spark, dir, 11L)).count() === 120L)
+    assert(GraftEncoder.decode(StoredSegments.ofSnapshot(spark, dir, 10L)).count() === 100L)
+    assert(GraftEncoder.decode(StoredSegments.ofSnapshot(spark, dir, 11L)).count() === 120L)
   }
 
   test("empty buckets commit too: restart converges when buckets outnumber docs") {
@@ -108,7 +108,7 @@ class LineageSpec extends AnyFunSuite {
     assert(ledger.map(_.nRows).sum === 5L)
     assert(ledger.count(_.nSegments == 0L) === 64 - ledger.count(_.nSegments > 0L))
     // decode still exact
-    assert(GraftEncoder.decode(SegmentStore.readSegments(spark, dir, 1L)).count() === 5L)
+    assert(GraftEncoder.decode(StoredSegments.ofSnapshot(spark, dir, 1L)).count() === 5L)
   }
 
   test("min/max chunk skipping prunes segments and never loses a match") {
@@ -212,7 +212,7 @@ class LineageSpec extends AnyFunSuite {
     // produces (segment determinism contract survives the maintenance op)
     val direct = GraftEncoder.encode(input, buckets = 4, tokensPerChunk = 4096)
       .collect().map(s => s.segmentId -> s.cols.map(_.payload.toSeq)).toMap
-    val compacted = SegmentStore.readSegments(spark, dir, SegmentStore.CompactionBase)
+    val compacted = StoredSegments.ofSnapshot(spark, dir, SegmentStore.CompactionBase)
       .collect().map(s => s.segmentId -> s.cols.map(_.payload.toSeq)).toMap
     assert(compacted.keySet === direct.keySet)
     compacted.foreach { case (id, payloads) => assert(payloads === direct(id), id) }
@@ -244,10 +244,10 @@ class LineageSpec extends AnyFunSuite {
       spark.read.format("graft").option("snapshotId", "2").load(dir).count()
     }
     assert(e.getMessage.contains("expired"))
-    // the ENGINE-path as-of read fails fast too (round-3 advisor: the
-    // semi-join path used to silently return whatever partitions remained)
+    // an as-of segment read fails fast too: it lists through the same
+    // rule, never silently returning whatever partitions remained
     val e2 = intercept[IllegalStateException] {
-      SegmentStore.readSegmentsVisible(spark, dir, asOf = Some(2L)).count()
+      StoredSegments.asOf(spark, dir, 2L).count()
     }
     assert(e2.getMessage.contains("expired"))
     // expire is idempotent
@@ -346,6 +346,41 @@ class LineageSpec extends AnyFunSuite {
   private def jobsOf[A](group: String)(body: => A): (A, Seq[Int]) = {
     val (a, jobs, _) = eventsOf(group)(body)
     (a, jobs.map(_.stageInfos.size))
+  }
+
+  test("readLineage returns the rows of a parquet read of the ledger and runs no Spark job") {
+    import spark.implicits._
+    val input = TokenTables.synthetic(spark, nDocs = 240, seed = 17L)
+    val base = tmp()
+    val dir = s"$base/table"
+    // two batch appends, one streaming epoch, a compaction and an expire
+    for (r <- 0 until 2)
+      SegmentStore.encodeCommit(input.filter(_.n_tok % 3 == r), dir,
+        snapshotId = r + 1L, buckets = 3)
+    input.filter(_.n_tok % 3 == 2).write.parquet(s"$base/input")
+    spark.readStream.schema(input.schema).parquet(s"$base/input")
+      .writeStream.format("graft")
+      .option("checkpointLocation", s"$base/ckpt").option("buckets", "3")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start(dir).awaitTermination()
+    val cid = SegmentStore.compact(spark, dir, upTo = Long.MaxValue, buckets = 3).get
+    assert(SegmentStore.expireSuperseded(spark, dir) > 0L)
+
+    val (got, stages) = jobsOf("graft-read-lineage-probe") {
+      SegmentStore.readLineage(spark, dir).collect().toSeq
+    }
+    assert(stages.isEmpty, s"readLineage ran jobs with stage counts $stages")
+    val viaParquet = spark.read.parquet(SegmentStore.lineageDir(dir)).as[LineageRow]
+      .collect().toSeq
+    def multiset(rows: Seq[LineageRow]) = rows.groupBy(identity).view.mapValues(_.size).toMap
+    assert(multiset(got) === multiset(viaParquet))
+    // every kind of ledger row is there
+    assert(got.exists(r => r.snapshotId >= graft.sources.GraftWriteCommit.StreamEpochBase &&
+      r.snapshotId < SegmentStore.CompactionBase))
+    assert(got.exists(_.status == s"${SegmentStore.SupersededPrefix}$cid"))
+    assert(got.exists(r => r.snapshotId == cid && r.status == SegmentStore.Committed))
+    // a table without a ledger has no rows
+    assert(SegmentStore.readLineage(spark, tmp()).collect().isEmpty)
   }
 
   test("compaction is one shuffle-free Spark job: one stage, one task per bucket") {

@@ -1,11 +1,12 @@
 package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
 import graft.engine.Segment
-import graft.sources.SegmentLayoutV2.{CanonicalStreams, StreamFields, field, sparkSchema}
+import graft.sources.SegmentLayoutV2.{CanonicalStreams, StreamFields, field, messageType}
 
 /** Engine segments rendered as flat [[SegmentLayoutV2]] rows, for specs
   * that write a bare (unledgered) dump through Spark's parquet writer —
@@ -32,7 +33,9 @@ object FlatSegments {
     * empty filter. */
   def flattenSegments(ds: Dataset[Segment],
                       streams: Seq[String] = CanonicalStreams): DataFrame = {
-    val schema = StructType(sparkSchema(streams) :+ StructField("bucket", IntegerType))
+    // the layout's Spark schema is Spark's own conversion of its parquet schema
+    val schema = StructType(new ParquetToSparkSchemaConverter().convert(messageType(streams)) :+
+      StructField("bucket", IntegerType))
     val nTop = 8
     ds.map { seg =>
       val by = seg.cols.iterator.map(c => c.col -> c).toMap

@@ -91,8 +91,8 @@ object GraftLayout {
   }
 
   /** Cursor over the records of one parquet file — the one way graft
-    * reads parquet: header, ledger, compaction and scan readers all go
-    * through it.
+    * reads its own files: the header, footer, ledger, segment, compaction
+    * and scan readers all go through it.
     *
     * The file opens with the shared [[readOptions]] and a codec factory of
     * its own (a factory caches one decompressor per codec, which is not

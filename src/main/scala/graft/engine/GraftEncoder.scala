@@ -95,7 +95,7 @@ final case class ExtraListLongs(name: String, lists: Array[ListLongs],
 final case class ExtraListStrings(name: String, lists: Array[ListStrings]) extends ExtraCol
 
 /** Engine-facing spec of one metadata column for
-  * [[GraftEncoder.encodePartitionWithMeta]]. `isList` columns use
+  * [[GraftEncoder.encodePartition]]. `isList` columns use
   * `isString` for the ELEMENT kind and occupy TWO disk streams (the
   * element stream plus `<name>__len`). */
 final case class MetaColSpec(name: String, isString: Boolean,
@@ -107,15 +107,16 @@ final case class MetaColSpec(name: String, isString: Boolean,
 }
 
 /** Shuffle wire form of a [[BucketedRow]]: the token array varint-packed
-  * map-side, BEFORE the bucket exchange. Vocab ids are zipf-heavy small
-  * ints, so this moves ~2 B/token through the shuffle instead of the 4 B/
-  * token of a raw Array[Int] — stage telemetry attributes the encode job's
-  * 16-core efficiency sag to shuffle write/serialization bandwidth
+  * map-side, BEFORE the bucket exchange ([[GraftEncoder.encodeBucketed]],
+  * [[graft.lineage.SegmentStore.encodeCommit]]). Vocab ids are zipf-heavy
+  * small ints, so this moves ~2 B/token through the shuffle instead of the
+  * 4 B/token of a raw Array[Int] — stage telemetry attributes the encode
+  * job's 16-core efficiency sag to shuffle write/serialization bandwidth
   * (BASELINE.md), and at the 10^12-sequence scale the exchange is the
-  * single largest data movement of the whole pipeline. Pack/unpack are
-  * branch-light single passes (~1 ns/token), invisible next to the deflate
-  * work on the reduce side; unpacked tokens are bit-identical, so segment
-  * bytes and the determinism/restart contract are untouched. */
+  * single largest data movement of the whole pipeline. The reduce side
+  * unpacks each row once, into its [[RowBuffer]]'s token arena
+  * ([[RowBuffer.appendPacked]]); unpacked tokens are bit-identical, so
+  * segment bytes and the determinism/restart contract are untouched. */
 final case class PackedRow(
     doc_id: String, pack: Array[Byte], n_tok: Int, source: String, bucket: Int)
 
@@ -144,24 +145,14 @@ object TokenPack {
     out
   }
 
-  /** The value count is derived from the pack itself (one value per byte
-    * with the continuation bit clear) — NOT from a denormalized field like
-    * n_tok, which a caller-constructed TokenRow could set inconsistently
-    * with tokens.length; trusting it would silently truncate (or index
-    * past) the array while the pre-pack shuffle encoded such rows
-    * faithfully. */
-  /** Value count of a pack without unpacking (continuation-bit-clear
-    * bytes). */
-  def count(pack: Array[Byte]): Int = {
-    var n = 0
-    var i = 0
-    while (i < pack.length) { if ((pack(i) & 0x80) == 0) n += 1; i += 1 }
-    n
-  }
-
-  /** Unpack straight into `dest` at `destPos`; returns the value count.
-    * Lets the per-partition encoder fill a chunk's flat token array with
-    * ZERO per-row Array[Int] allocations (the post-shuffle hot loop). */
+  /** Unpack straight into `dest` at `destPos` (room for `pack.length`
+    * values always suffices: each value takes at least one byte); returns
+    * the value count. The count is derived from the pack itself (one value
+    * per byte with the continuation bit clear) — NOT from a denormalized
+    * field like n_tok, which a caller-constructed TokenRow could set
+    * inconsistently with tokens.length; trusting it would silently
+    * truncate (or index past) the array while the pre-pack shuffle encoded
+    * such rows faithfully. */
   def unpackInto(pack: Array[Byte], dest: Array[Int], destPos: Int): Int = {
     var o = destPos
     var i = 0
@@ -177,27 +168,6 @@ object TokenPack {
       dest(o) = v.toInt; o += 1
     }
     o - destPos
-  }
-
-  def unpack(pack: Array[Byte]): Array[Int] = {
-    var n = 0
-    var i = 0
-    while (i < pack.length) { if ((pack(i) & 0x80) == 0) n += 1; i += 1 }
-    val out = new Array[Int](n)
-    var o = 0
-    i = 0
-    while (o < n) {
-      var v = 0L
-      var shift = 0
-      var b = pack(i); i += 1
-      while ((b & 0x80) != 0) {
-        v |= (b & 0x7FL) << shift; shift += 7
-        b = pack(i); i += 1
-      }
-      v |= (b & 0xFFL) << shift
-      out(o) = v.toInt; o += 1
-    }
-    out
   }
 }
 
@@ -271,81 +241,108 @@ object GraftEncoder {
     import spark.implicits._
     // Varint-pack the token payload in the SAME narrow map stage that feeds
     // the exchange (see [[PackedRow]]): the one shuffle of the job moves
-    // ~half the bytes. Unpack on the reduce side restores bit-identical
-    // token arrays before chunking, so segments are unchanged.
+    // ~half the bytes. The reduce side unpacks each row once into its
+    // partition's buffer, restoring bit-identical tokens before chunking.
     ds.map(r => PackedRow(r.doc_id, TokenPack.pack(r.tokens), r.n_tok, r.source, r.bucket))
       .repartition(buckets, $"bucket")
-      .mapPartitions(rows => encodePartitionPacked(rows, tokensPerChunk, codecConf))
+      .mapPartitions { rows =>
+        val buf = new RowBuffer(0)
+        rows.foreach(buf.appendPacked)
+        encodePartition(buf, Nil, tokensPerChunk, codecConf)
+      }
   }
 
-  /** Pure per-partition encode: buffer the partition (≈ one bucket by
-    * construction), sort it in-memory by (bucket, source, doc_id) for the
-    * determinism contract, then greedily chunk by token budget, cutting at
-    * bucket boundaries (a partition may hold several buckets — bucket
-    * values hash onto partitions). chunkIdx counts within a bucket.
+  /** The per-partition encoder behind every write: sort the buffered rows
+    * by (bucket, the [[CodecConf.sortBy]] keys, source, doc_id), cut greedy
+    * token-budget chunks (fewer than [[MaxRowsPerChunk]] rows, never across
+    * a bucket — a partition may hold several buckets, bucket values hash
+    * onto partitions) and encode each through [[encodeColumns]]: the
+    * arena's slices as the tokens stream, the metadata slots as
+    * [[ExtraCol]]s aligned with `specs` (a canonical table has none).
+    * chunkIdx counts within a bucket. Each chunk's segment is
+    * byte-identical to [[encodeChunk]] over the same sorted rows (pinned by
+    * EnginePipelineSpec).
     *
-    * Rows stay varint-PACKED: sort and chunk on the packs (token counts
-    * derived from the packs), then unpack each chunk's tokens STRAIGHT into
-    * its flat column array — zero per-row token arrays, and the partition
-    * stays buffered at wire size (~2.3 B/token) instead of 4 B/token until
-    * each chunk is assembled. Each chunk's segment is byte-identical to
-    * [[encodeChunk]] over the same sorted rows (pinned by
-    * EnginePipelineSpec). */
-  def encodePartitionPacked(rows: Iterator[PackedRow],
-                            tokensPerChunk: Int,
-                            codecConf: CodecConf = CodecConf.Default): Iterator[Segment] = {
+    * The sortBy keys (ENGINE-stream names in key order) compare by stored
+    * value: nulls before values, Long numerically, String in UTF-8 byte
+    * order — the stats' own order, so per-chunk [min,max] comes out tight.
+    * The (source, doc_id) tiebreak keeps equal-key runs deterministic and
+    * segment bytes reproducible. */
+  def encodePartition(buf: RowBuffer, specs: Seq[MetaColSpec], tokensPerChunk: Int,
+                      codecConf: CodecConf = CodecConf.Default): Iterator[Segment] = {
     val pid = Option(TaskContext.get()).map(_.partitionId()).getOrElse(0)
-    val buf = rows.toArray
-    java.util.Arrays.sort(buf, new java.util.Comparator[PackedRow] {
-      def compare(a: PackedRow, b: PackedRow): Int = {
-        if (a.bucket != b.bucket) return Integer.compare(a.bucket, b.bucket)
-        val s = a.source.compareTo(b.source)
-        if (s != 0) s else a.doc_id.compareTo(b.doc_id)
+    val sortIdxs: Array[Int] = codecConf.sortBy.map { name =>
+      val i = specs.indexWhere(_.name == name)
+      require(i >= 0 && !specs(i).isList && !specs(i).isBinary,
+        s"sortBy '$name' must name a scalar (non-list, non-binary) " +
+          s"metadata stream of this table; streams: ${specs.map(_.name).mkString(",")}")
+      i
+    }.toArray
+    val boxed = Array.tabulate[Integer](buf.size)(Int.box)
+    java.util.Arrays.sort(boxed, new java.util.Comparator[Integer] {
+      def compare(x: Integer, y: Integer): Int = {
+        val (a, b) = (x.intValue, y.intValue)
+        if (buf.bucket(a) != buf.bucket(b)) return Integer.compare(buf.bucket(a), buf.bucket(b))
+        var k = 0
+        while (k < sortIdxs.length) {
+          val va = buf.meta(sortIdxs(k), a)
+          val vb = buf.meta(sortIdxs(k), b)
+          val c =
+            if (va == null && vb == null) 0
+            else if (va == null) -1
+            else if (vb == null) 1
+            else va match {
+              case l: java.lang.Long =>
+                java.lang.Long.compare(l.longValue(), vb.asInstanceOf[java.lang.Long].longValue())
+              case s: String => compareUtf8(s, vb.asInstanceOf[String])
+              case other => throw new IllegalStateException(
+                s"unreachable: sortBy value shape ${other.getClass}")
+            }
+          if (c != 0) return c
+          k += 1
+        }
+        val s = buf.source(a).compareTo(buf.source(b))
+        if (s != 0) s else buf.docId(a).compareTo(buf.docId(b))
       }
     })
-    val counts = new Array[Int](buf.length)
-    var i = 0
-    while (i < buf.length) { counts(i) = TokenPack.count(buf(i).pack); i += 1 }
+    val order = boxed.map(_.intValue)
     new Iterator[Segment] {
       private var idx = 0
       private var curBucket = Int.MinValue
       private var chunkIdx = 0
-      def hasNext: Boolean = idx < buf.length
+      def hasNext: Boolean = idx < order.length
       def next(): Segment = {
-        val bucket = buf(idx).bucket
+        val bucket = buf.bucket(order(idx))
         if (bucket != curBucket) { curBucket = bucket; chunkIdx = 0 }
         val start = idx
         var tokenCount = 0L
-        while (idx < buf.length && buf(idx).bucket == bucket &&
+        while (idx < order.length && buf.bucket(order(idx)) == bucket &&
           tokenCount < tokensPerChunk && (idx - start) < MaxRowsPerChunk) {
-          tokenCount += counts(idx)
+          tokenCount += buf.tokLen(order(idx))
           idx += 1
         }
-        val n = idx - start
-        val docIds = new Array[String](n)
-        val sources = new Array[String](n)
-        val nToks = new Array[Int](n)
-        val tokLens = new Array[Int](n)
-        var k = 0
-        while (k < n) {
-          val p = buf(start + k)
-          docIds(k) = p.doc_id
-          sources(k) = p.source
-          nToks(k) = p.n_tok
-          tokLens(k) = counts(start + k)
-          k += 1
-        }
-        val flat = new Array[Int](tokenCount.toInt)
-        var pos = 0
-        k = 0
-        while (k < n) { pos += TokenPack.unpackInto(buf(start + k).pack, flat, pos); k += 1 }
-        val seg = encodeColumns(docIds, sources, nToks, tokLens, flat, tokenCount,
-          pid, chunkIdx, bucket, codecConf, Nil)
+        val rows = java.util.Arrays.copyOfRange(order, start, idx)
+        val extras = specs.indices.map(j => extraCol(specs(j), rows.map(buf.meta(j, _))))
+        val seg = encodeColumns(rows.map(buf.docId), rows.map(buf.source),
+          rows.map(buf.nTok), rows.map(buf.tokLen), buf.gather(rows, tokenCount.toInt),
+          tokenCount, pid, chunkIdx, bucket, codecConf, extras)
         chunkIdx += 1
         seg
       }
     }
   }
+
+  /** One chunk's slots of metadata column `spec` as its [[ExtraCol]]. */
+  private def extraCol(spec: MetaColSpec, slots: Array[AnyRef]): ExtraCol =
+    if (spec.isList && spec.isString)
+      ExtraListStrings(spec.name, slots.map(_.asInstanceOf[ListStrings]))
+    else if (spec.isList)
+      ExtraListLongs(spec.name, slots.map(_.asInstanceOf[ListLongs]), spec.bytesInPerValue)
+    else if (spec.isBinary) ExtraBinary(spec.name, slots.map(_.asInstanceOf[Array[Byte]]))
+    else if (spec.isString) ExtraStrings(spec.name, slots.map(_.asInstanceOf[String]))
+    else ExtraLongs(spec.name,
+      slots.map(v => if (v == null) 0L else v.asInstanceOf[java.lang.Long].longValue()),
+      slots.map(_ != null), spec.bytesInPerValue, spec.statMap)
 
   /** UTF-8 byte-order string comparison — MUST match Spark SQL's
     * UTF8String binary comparison, because the decode-side skip filter
@@ -416,8 +413,8 @@ object GraftEncoder {
   }
 
   /** Column-level encode core shared by [[encodeChunk]] (row arrays) and
-    * [[encodePartitionPacked]] (which fills these arrays straight from the
-    * shuffle's varint packs, no per-row token array). */
+    * [[encodePartition]] (which gathers these arrays from a [[RowBuffer]],
+    * the tokens as slices of its arena). */
   private[engine] def encodeColumns(docIds: Array[String], sources: Array[String],
                                     nToks: Array[Int], tokLens: Array[Int],
                                     flat: Array[Int], totalTokens: Long,
@@ -681,129 +678,14 @@ object GraftEncoder {
         payload.length.toLong, 0L, 0L, "", "", payload, Array.emptyByteArray)
   }
 
-  /** [[encodePartitionPacked]] with metadata columns riding beside each
-    * row: same sort, same chunk boundaries, same determinism contract — the
-    * meta arrays are gathered per chunk and encoded as [[ExtraCol]]
-    * streams through [[encodeChunk]]. `meta(i)` slots are java.lang.Long
-    * (stored 64-bit domain) or String, null = SQL null, aligned with
-    * `specs`. Kept separate from the canonical-only packed kernel so the
-    * no-metadata hot path pays no per-row wrapper. */
-  def encodePartitionWithMeta(rows: Iterator[(BucketedRow, Array[AnyRef])],
-                              specs: Seq[MetaColSpec],
-                              tokensPerChunk: Int,
-                              codecConf: CodecConf = CodecConf.Default): Iterator[Segment] = {
-    val pid = Option(TaskContext.get()).map(_.partitionId()).getOrElse(0)
-    val buf = rows.toArray
-    // optional clustering ([[CodecConf.sortBy]], ENGINE-stream names in
-    // key order): rows sort by each key's stored-domain value in turn
-    // (nulls before values, Long numerically, String in UTF-8 byte order —
-    // the stats' own order, so per-chunk [min,max] comes out tight), then
-    // by the canonical (source, doc_id) key so equal-key runs stay
-    // deterministic and segment bytes reproduce
-    val sortIdxs: Array[Int] = codecConf.sortBy.map { name =>
-      val i = specs.indexWhere(_.name == name)
-      require(i >= 0 && !specs(i).isList && !specs(i).isBinary,
-        s"sortBy '$name' must name a scalar (non-list, non-binary) " +
-          s"metadata stream of this table; streams: ${specs.map(_.name).mkString(",")}")
-      i
-    }.toArray
-    java.util.Arrays.sort(buf, new java.util.Comparator[(BucketedRow, Array[AnyRef])] {
-      def compare(x: (BucketedRow, Array[AnyRef]), y: (BucketedRow, Array[AnyRef])): Int = {
-        val a = x._1
-        val b = y._1
-        if (a.bucket != b.bucket) return Integer.compare(a.bucket, b.bucket)
-        var k = 0
-        while (k < sortIdxs.length) {
-          val va = x._2(sortIdxs(k))
-          val vb = y._2(sortIdxs(k))
-          val c =
-            if (va == null && vb == null) 0
-            else if (va == null) -1
-            else if (vb == null) 1
-            else va match {
-              case l: java.lang.Long =>
-                java.lang.Long.compare(l.longValue(), vb.asInstanceOf[java.lang.Long].longValue())
-              case s: String => compareUtf8(s, vb.asInstanceOf[String])
-              case other => throw new IllegalStateException(
-                s"unreachable: sortBy value shape ${other.getClass}")
-            }
-          if (c != 0) return c
-          k += 1
-        }
-        val s = a.source.compareTo(b.source)
-        if (s != 0) s else a.doc_id.compareTo(b.doc_id)
-      }
-    })
-    val in = buf.iterator.buffered
-    new Iterator[Segment] {
-      private var curBucket = Int.MinValue
-      private var chunkIdx = 0
-      def hasNext: Boolean = in.hasNext
-      def next(): Segment = {
-        val bucket = in.head._1.bucket
-        if (bucket != curBucket) { curBucket = bucket; chunkIdx = 0 }
-        val rowBuf = scala.collection.mutable.ArrayBuffer.empty[TokenRow]
-        val metaBuf = scala.collection.mutable.ArrayBuffer.empty[Array[AnyRef]]
-        var tokenCount = 0L
-        while (in.hasNext && in.head._1.bucket == bucket &&
-          tokenCount < tokensPerChunk && rowBuf.length < MaxRowsPerChunk) {
-          val (r, m) = in.next()
-          rowBuf += TokenRow(r.doc_id, r.tokens, r.n_tok, r.source)
-          metaBuf += m
-          tokenCount += r.tokens.length
-        }
-        val n = rowBuf.length
-        val extras: Seq[ExtraCol] = specs.zipWithIndex.map { case (spec, j) =>
-          if (spec.isList && spec.isString) {
-            val values = new Array[ListStrings](n)
-            var i = 0
-            while (i < n) { values(i) = metaBuf(i)(j).asInstanceOf[ListStrings]; i += 1 }
-            ExtraListStrings(spec.name, values)
-          } else if (spec.isList) {
-            val values = new Array[ListLongs](n)
-            var i = 0
-            while (i < n) { values(i) = metaBuf(i)(j).asInstanceOf[ListLongs]; i += 1 }
-            ExtraListLongs(spec.name, values, spec.bytesInPerValue)
-          } else if (spec.isBinary) {
-            val values = new Array[Array[Byte]](n)
-            var i = 0
-            while (i < n) { values(i) = metaBuf(i)(j).asInstanceOf[Array[Byte]]; i += 1 }
-            ExtraBinary(spec.name, values)
-          } else if (spec.isString) {
-            val values = new Array[String](n)
-            var i = 0
-            while (i < n) { values(i) = metaBuf(i)(j).asInstanceOf[String]; i += 1 }
-            ExtraStrings(spec.name, values)
-          } else {
-            val values = new Array[Long](n)
-            val present = new Array[Boolean](n)
-            var i = 0
-            while (i < n) {
-              val v = metaBuf(i)(j)
-              if (v != null) {
-                present(i) = true
-                values(i) = v.asInstanceOf[java.lang.Long].longValue()
-              }
-              i += 1
-            }
-            ExtraLongs(spec.name, values, present, spec.bytesInPerValue, spec.statMap)
-          }
-        }
-        val seg = encodeChunk(rowBuf.toArray, pid, chunkIdx, bucket, codecConf, extras)
-        chunkIdx += 1
-        seg
-      }
-    }
-  }
-
   /** Decode one segment INCLUDING its metadata streams, in the STORED
     * domain: per row a [[BucketedRow]] (bucket = the segment's own — valid
     * while the table's bucket count is unchanged, since bucket is a pure
     * function of doc_id) plus one slot per `specs` entry holding
     * java.lang.Long (int-kind stored 64-bit value) or String, null = SQL
-    * null. This is EXACTLY the shape [[encodePartitionWithMeta]] consumes,
-    * so compaction's decode -> re-chunk -> re-encode round-trips metadata
-    * without ever rendering external Spark types. */
+    * null. This is EXACTLY the shape a [[RowBuffer]] holds for
+    * [[encodePartition]], so compaction's decode -> re-chunk -> re-encode
+    * round-trips metadata without ever rendering external Spark types. */
   def decodeSegmentWithMeta(seg: Segment,
                             specs: Seq[MetaColSpec]): Iterator[(BucketedRow, Array[AnyRef])] = {
     val byCol = seg.cols.map(c => c.col -> c).toMap

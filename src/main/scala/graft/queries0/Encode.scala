@@ -369,14 +369,12 @@ object Encode {
       val projected = spark.read.format("graft").load(base).select(needed.map(col): _*)
         .agg(count(lit(1)).as("n_docs"), sum($"n_tok").cast("long").as("sum_tokens"))
         .collect()(0)
-      // the table holds snapshot 1 only, so its visible segments are snapshot 1's
-      val bytes = SegmentStore.readSegmentsAll(spark, base).select(explode($"cols").as("c"))
-        .groupBy()
-        .agg(
-          sum(when($"c.col".isin(needed: _*), $"c.bytesOut").otherwise(0L)).as("bytes_decoded"),
-          sum(when($"c.col".isin(needed: _*), 0L).otherwise($"c.bytesOut")).as("bytes_skipped"))
-        .collect()(0)
-      Seq((projected.getLong(0), projected.getLong(1), bytes.getLong(0), bytes.getLong(1)))
+      // per-stream encoded bytes from the header fold (no payload read);
+      // the table holds snapshot 1 only, so its visible files are snapshot 1's
+      val conf = spark.sessionState.newHadoopConf()
+      val (decoded, skipped) = GraftLayout.foldHeaders(GraftLayout.listDataFiles(base, conf), conf)
+        .bytesOut.partition { case (c, _) => needed.contains(c) }
+      Seq((projected.getLong(0), projected.getLong(1), decoded.values.sum, skipped.values.sum))
         .toDF("n_docs", "sum_tokens", "bytes_decoded", "bytes_skipped")
     } finally deleteRecursively(new java.io.File(base))
   }

@@ -43,15 +43,18 @@ object GraftLayout {
   /** Payload-free per-file header sums. `bytesIn` is the header-recorded
     * UNENCODED byte count per column stream — i.e. the measured decoded
     * size of this very file, which planning uses instead of a constant
-    * expansion factor. `ranges` lets the planner skip WHOLE part-files
-    * before scheduling a task for them (the file-granularity analog of the
-    * reference's per-file stripe pruning — at 10^12 rows most of the win
-    * is tasks never launched, not segments skipped inside a task).
+    * expansion factor; `bytesOut` is the ENCODED payload byte count per
+    * stream, so stored sizes need no payload read. `ranges` lets the
+    * planner skip WHOLE part-files before scheduling a task for them (the
+    * file-granularity analog of the reference's per-file stripe pruning —
+    * at 10^12 rows most of the win is tasks never launched, not segments
+    * skipped inside a task).
     * `blooms` are the FILE-level folded split-block blooms the writers
     * record in the parquet footer metadata — the planner consults them
     * for point predicates min/max can't discriminate (round-3 judge #5);
     * a file written without blooms has none (sound: may-match). */
   final case class FileHeader(rows: Long, bytesIn: Map[String, Long],
+                              bytesOut: Map[String, Long],
                               ranges: Map[String, ColRange],
                               blooms: Map[String, Array[Byte]],
                               nValues: Map[String, Long])
@@ -294,27 +297,30 @@ object GraftLayout {
     prefetchHeaders(files, conf)
     var rows = 0L
     val bytes = scala.collection.mutable.Map.empty[String, Long]
+    val bytesOut = scala.collection.mutable.Map.empty[String, Long]
     val ranges = scala.collection.mutable.Map.empty[String, ColRange]
     val nVals = scala.collection.mutable.Map.empty[String, Long]
     files.foreach { f =>
       val h = header(f, conf)
       rows += h.rows
       h.bytesIn.foreach { case (c, n) => bytes(c) = bytes.getOrElse(c, 0L) + n }
+      h.bytesOut.foreach { case (c, n) => bytesOut(c) = bytesOut.getOrElse(c, 0L) + n }
       h.nValues.foreach { case (c, n) => nVals(c) = nVals.getOrElse(c, 0L) + n }
       h.ranges.foreach { case (c, r) => ranges(c) = ranges.get(c).fold(r)(_.union(r)) }
     }
-    FileHeader(rows, bytes.toMap, ranges.toMap, Map.empty, nVals.toMap)
+    FileHeader(rows, bytes.toMap, bytesOut.toMap, ranges.toMap, Map.empty, nVals.toMap)
   }
 
   /** Per-stream stat COLUMNS — the requested schema keeps only nRows + the
     * stat fields, so parquet's column pruning never reads payload pages. */
   private def readHeader(file: String, conf: Configuration): FileHeader = withRecords(file, conf) { c =>
     val fi = footerOf(file, c.reader)
-    val statSuffixes = Set("minV", "maxV", "minS", "maxS", "bytesIn", "nValues")
+    val statSuffixes = Set("minV", "maxV", "minS", "maxS", "bytesIn", "bytesOut", "nValues")
     val wanted: Set[String] = Set("nRows") ++
       fi.streams.flatMap(s => statSuffixes.map(f => SegmentLayoutV2.field(s, f)))
     var rows = 0L
     val bytes = scala.collection.mutable.Map.empty[String, Long]
+    val bytesOut = scala.collection.mutable.Map.empty[String, Long]
     val ranges = scala.collection.mutable.Map.empty[String, ColRange]
     val nVals = scala.collection.mutable.Map.empty[String, Long]
     c.select(wanted.contains).foreach { g =>
@@ -326,8 +332,11 @@ object GraftLayout {
         // contributes nothing — same soundness stance as the chunk
         // reader's absent-stream guard
         if (has("nValues")) {
-          bytes.updateWith(s)(v => Some(v.getOrElse(0L) +
-            (if (has("bytesIn")) g.getLong(SegmentLayoutV2.field(s, "bytesIn"), 0) else 0L)))
+          def add(m: scala.collection.mutable.Map[String, Long], f: String): Unit =
+            m.updateWith(s)(v => Some(v.getOrElse(0L) +
+              (if (has(f)) g.getLong(SegmentLayoutV2.field(s, f), 0) else 0L)))
+          add(bytes, "bytesIn")
+          add(bytesOut, "bytesOut")
           val nv = g.getLong(SegmentLayoutV2.field(s, "nValues"), 0)
           nVals.updateWith(s)(v => Some(v.getOrElse(0L) + nv))
           // a VALUE-LESS chunk stream (empty token flat, or an all-null
@@ -348,7 +357,7 @@ object GraftLayout {
         }
       }
     }
-    FileHeader(rows, bytes.toMap, ranges.toMap, fi.blooms, nVals.toMap)
+    FileHeader(rows, bytes.toMap, bytesOut.toMap, ranges.toMap, fi.blooms, nVals.toMap)
   }
 
   /** Every file under `root` (recursive), by `listStatus`, skipping

@@ -2,7 +2,6 @@ package graft.sources
 
 import java.util.UUID
 
-import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
@@ -26,7 +25,7 @@ import org.apache.spark.sql.types.{ArrayType, IntegerType, StringType, StructTyp
 import org.apache.spark.util.SerializableConfiguration
 
 import graft.codec.CodecConf
-import graft.engine.{BucketedRow, GraftConf, GraftEncoder, PackedRow, Segment, TokenPack}
+import graft.engine.{GraftConf, GraftEncoder, PackedRow, RowBuffer, Segment}
 
 /** The write half of the graft connector: `df.write.format("graft")
   * .mode("append").save(dir)` and `df.writeStream.format("graft")` run the
@@ -46,13 +45,13 @@ import graft.engine.{BucketedRow, GraftConf, GraftEncoder, PackedRow, Segment, T
   *    of doc_id (Spark's deterministic hash clustering), preserving the
   *    determinism the lineage protocol keys on;
   *  - **encode is the task**: each [[GraftSegmentWriter]] buffers its
-  *    bucket (the engine's explicit memory contract: size buckets so one
-  *    fits in task memory), runs the engine's per-partition kernel —
-  *    [[GraftEncoder.encodePartitionPacked]] for canonical tables,
-  *    [[GraftEncoder.encodePartitionWithMeta]] for tables with metadata
-  *    columns, both chunking through the same column encoder — and writes its
-  *    segments as ONE parquet part-file via the parquet example API — no
-  *    Spark session, no second job. The same writer serves
+  *    bucket in one [[graft.engine.RowBuffer]] (the engine's explicit
+  *    memory contract: size buckets so one fits in task memory), runs the
+  *    engine's one per-partition encoder
+  *    ([[GraftEncoder.encodePartition]]; a canonical table is the case
+  *    with no metadata columns) and writes its segments as ONE parquet
+  *    part-file via the parquet example API — no Spark session, no second
+  *    job. The same writer serves
   *    [[graft.lineage.SegmentStore.encodeCommit]] and compaction, so every
   *    segment file of a table comes from this class;
   *  - **commit is atomic through the lineage ledger**: writers stage under
@@ -206,7 +205,7 @@ class GraftWrite(path: String, schema: StructType, buckets: Int,
     Distributions.clustered(Array[VExpression](Expressions.column("doc_id")))
   override def requiredNumPartitions(): Int = buckets
   // No required ordering: the writer sorts its bucket in task memory
-  // (GraftEncoder.encodePartitionPacked), skipping Spark's external-sorter
+  // (GraftEncoder.encodePartition), skipping Spark's external-sorter
   // serialize/spill layer, which stage telemetry showed dominating GC.
   override def requiredOrdering(): Array[SortOrder] = Array.empty
 
@@ -524,49 +523,27 @@ class GraftSegmentWriter(stagingDir: String, schema: StructType,
   private val stagedFile = s"$stagingDir/part-$partitionId-$taskId.parquet"
 
   // metadata columns ([[MetaColumns]]): ENGINE fields (maps expand to two
-  // list pseudo-fields), engine specs, one extractor per engine field, and
-  // a buffer parallel to `rows` holding each row's stored-domain values
+  // list pseudo-fields), engine specs and one extractor per engine field;
+  // the buffer holds one stored-domain slot per engine field and row
   private val metaFields = MetaColumns.metaFields(schema)
   private val metaEngineFields: Seq[org.apache.spark.sql.types.StructField] =
     metaFields.flatMap(MetaColumns.engineFields)
   private val metaSpecs: Seq[graft.engine.MetaColSpec] =
     metaFields.flatMap(MetaColumns.specsFor)
-  private val metas: ArrayBuffer[Array[AnyRef]] =
-    if (metaFields.isEmpty) null else ArrayBuffer.empty[Array[AnyRef]]
-  // canonical tables buffer VARINT-PACKED rows (~2.3 B/token live in task
-  // memory instead of 4 B + array headers — the same trade the engine's
-  // shuffle makes) and encode via [[GraftEncoder.encodePartitionPacked]];
-  // metadata tables keep the unpacked row+meta buffer
-  private val packed: ArrayBuffer[PackedRow] =
-    if (metaFields.isEmpty) ArrayBuffer.empty else null
-  private val rows: ArrayBuffer[BucketedRow] =
-    if (metaFields.isEmpty) null else ArrayBuffer.empty
+  // the bucket's rows, tokens in one block arena (4 B/token); dropped at close
+  private var buf = new RowBuffer(metaSpecs.length)
 
-  private def nBuffered: Int = if (packed != null) packed.length else rows.length
-
-  override def write(row: InternalRow): Unit = {
-    val m =
-      if (metas == null) null
-      else {
-        val m = new Array[AnyRef](metaExtractors.length)
-        var j = 0
-        while (j < metaExtractors.length) {
-          m(j) = metaExtractors(j)(row)
-          j += 1
-        }
-        m
-      }
+  override def write(row: InternalRow): Unit =
     writeStored(row.getUTF8String(iDoc).toString, row.getArray(iTok).toIntArray(),
-      row.getInt(iN), row.getUTF8String(iSrc).toString, m)
-  }
+      row.getInt(iN), row.getUTF8String(iSrc).toString, metaExtractors.map(_(row)))
 
-  /** Buffer one canonical row whose tokens the engine already packed
-    * ([[GraftEncoder.bucketed]] rows shuffled to this bucket's task): the
-    * row's bucket must be the writer's. */
+  /** Buffer one canonical row whose tokens the engine packed for the
+    * shuffle ([[GraftEncoder.bucketed]] rows shuffled to this bucket's
+    * task), unpacking them once: the row's bucket must be the writer's. */
   private[graft] def writePacked(row: PackedRow): Unit = {
     require(row.bucket == partitionId,
       s"a row of bucket ${row.bucket} reached the writer of bucket $partitionId")
-    packed += row
+    buf.appendPacked(row)
   }
 
   /** Buffer one row already in the stored domain: `meta` holds one slot
@@ -575,12 +552,7 @@ class GraftSegmentWriter(stagingDir: String, schema: StructType,
     * rows to this; compaction feeds decoded segments straight in. */
   private[sources] def writeStored(docId: String, tokens: Array[Int], nTok: Int,
                                    source: String, meta: Array[AnyRef]): Unit =
-    if (packed != null)
-      packed += PackedRow(docId, TokenPack.pack(tokens), nTok, source, partitionId)
-    else {
-      rows += BucketedRow(docId, tokens, nTok, source, partitionId)
-      metas += meta
-    }
+    buf.append(docId, tokens, nTok, source, partitionId, meta)
 
   /** Stored-domain list value of `arr` with element kind `et`. */
   private def listOf(arr: org.apache.spark.sql.catalyst.util.ArrayData,
@@ -682,75 +654,54 @@ class GraftSegmentWriter(stagingDir: String, schema: StructType,
     * ever scheduled ([[GraftScan.planInputPartitions]]). */
   private def fileBloomMeta(): Map[String, String] = {
     import graft.codec.SegmentBloom
-    if (codecConf.fileBloomBytes <= 0 || nBuffered == 0) return Map.empty
+    val n = buf.size
+    if (codecConf.fileBloomBytes <= 0 || n == 0) return Map.empty
     val cap = codecConf.fileBloomBytes
-    // per-field views over whichever buffer is live (packed canonical /
-    // unpacked meta); token values unpack transiently per row, never all
-    def docIds: Iterator[String] =
-      if (packed != null) packed.iterator.map(_.doc_id) else rows.iterator.map(_.doc_id)
-    def srcs: Iterator[String] =
-      if (packed != null) packed.iterator.map(_.source) else rows.iterator.map(_.source)
-    def nToks: Iterator[Int] =
-      if (packed != null) packed.iterator.map(_.n_tok) else rows.iterator.map(_.n_tok)
-    def tokLens: Iterator[Int] =
-      if (packed != null) packed.iterator.map(p => TokenPack.count(p.pack))
-      else rows.iterator.map(_.tokens.length)
-    def tokens: Iterator[Int] =
-      if (packed != null) packed.iterator.flatMap(p => TokenPack.unpack(p.pack).iterator)
-      else rows.iterator.flatMap(_.tokens.iterator)
+    def rows: Iterator[Int] = Iterator.range(0, n)
     codecConf.bloomColumns.toSeq.sorted.flatMap { col =>
       val (hashes, ndv): (Iterator[Long], Int) = col match {
-        case "doc_id" => (docIds.map(SegmentBloom.hashString), nBuffered)
-        case "source" => (srcs.map(SegmentBloom.hashString), nBuffered)
-        case "n_tok" => (nToks.map(v => SegmentBloom.hashLong(v.toLong)), nBuffered)
-        case "tok_len" => (tokLens.map(v => SegmentBloom.hashLong(v.toLong)), nBuffered)
+        case "doc_id" => (rows.map(i => SegmentBloom.hashString(buf.docId(i))), n)
+        case "source" => (rows.map(i => SegmentBloom.hashString(buf.source(i))), n)
+        case "n_tok" => (rows.map(i => SegmentBloom.hashLong(buf.nTok(i).toLong)), n)
+        case "tok_len" => (rows.map(i => SegmentBloom.hashLong(buf.tokLen(i).toLong)), n)
         case "tokens" =>
-          val total = math.min(Int.MaxValue.toLong,
-            tokLens.map(_.toLong).sum).toInt
-          (tokens.map(t => SegmentBloom.hashLong(t.toLong)), total)
+          (buf.tokens.map(t => SegmentBloom.hashLong(t.toLong)),
+            math.min(Int.MaxValue.toLong, rows.map(buf.tokLen(_).toLong).sum).toInt)
         // metadata columns: non-null values, int-kinds hashed in the STAT
         // domain (statMap) to match the normalized point predicates.
         // Binary columns are excluded — their predicates never normalize,
         // so a bloom would never be probed. Indexed over the ENGINE fields
-        // (metas slots align with the expanded specs).
-        case m if metas != null && metaEngineFields.exists(_.name == m) &&
+        // (the buffer's slots align with the expanded specs).
+        case m if metaEngineFields.exists(_.name == m) &&
           !metaSpecs(metaEngineFields.indexWhere(_.name == m)).isBinary =>
           val j = metaEngineFields.indexWhere(_.name == m)
           val spec = metaSpecs(j)
+          def slots: Iterator[AnyRef] = rows.map(buf.meta(j, _))
           if (spec.isList) {
             // list columns: file bloom over non-null ELEMENTS (the
             // array_contains membership domain, like the tokens bloom)
             var nElems = 0L
-            metas.foreach { a =>
-              a(j) match {
-                case l: graft.engine.ListLongs => nElems += l.present.count(identity)
-                case l: graft.engine.ListStrings => nElems += l.values.count(_ != null)
-                case _ => ()
-              }
+            slots.foreach {
+              case l: graft.engine.ListLongs => nElems += l.present.count(identity)
+              case l: graft.engine.ListStrings => nElems += l.values.count(_ != null)
+              case _ => ()
             }
-            val hs = metas.iterator.flatMap { a =>
-              a(j) match {
-                case l: graft.engine.ListLongs =>
-                  l.values.indices.iterator.collect {
-                    case k if l.present(k) => SegmentBloom.hashLong(l.values(k)) }
-                case l: graft.engine.ListStrings =>
-                  l.values.iterator.collect {
-                    case v if v != null => SegmentBloom.hashString(v) }
-                case _ => Iterator.empty
-              }
+            val hs = slots.flatMap {
+              case l: graft.engine.ListLongs =>
+                l.values.indices.iterator.collect {
+                  case k if l.present(k) => SegmentBloom.hashLong(l.values(k)) }
+              case l: graft.engine.ListStrings =>
+                l.values.iterator.collect {
+                  case v if v != null => SegmentBloom.hashString(v) }
+              case _ => Iterator.empty
             }
             (hs, math.min(Int.MaxValue.toLong, nElems).toInt)
           } else {
-          val nonNull = metas.count(_(j) != null)
-          val hs =
-            if (spec.isString)
-              metas.iterator.collect { case a if a(j) != null =>
-                SegmentBloom.hashString(a(j).asInstanceOf[String]) }
-            else
-              metas.iterator.collect { case a if a(j) != null =>
-                SegmentBloom.hashLong(spec.statMap(
-                  a(j).asInstanceOf[java.lang.Long].longValue())) }
-          (hs, nonNull)
+            val hs = slots.collect {
+              case v: String => SegmentBloom.hashString(v)
+              case v: java.lang.Long => SegmentBloom.hashLong(spec.statMap(v.longValue()))
+            }
+            (hs, slots.count(_ != null))
           }
         case _ => (Iterator.empty, 0)
       }
@@ -761,15 +712,17 @@ class GraftSegmentWriter(stagingDir: String, schema: StructType,
   }
 
   override def commit(): GraftCommitMessage = {
-    if (nBuffered == 0)
+    if (buf.size == 0)
       return GraftCommitMessage(partitionId, None, 0L, 0L, 0L, 0L, 0L, "", "", "")
-    val segments =
-      if (packed != null)
-        GraftEncoder.encodePartitionPacked(packed.iterator, tokensPerChunk, codecConf)
-      else GraftEncoder.encodePartitionWithMeta(
-        rows.iterator.zip(metas.iterator), metaSpecs, tokensPerChunk, codecConf)
+    val segments = GraftEncoder.encodePartition(buf, metaSpecs, tokensPerChunk, codecConf)
     val s = SegmentLayoutV2.messageType(
       SegmentLayoutV2.CanonicalStreams ++ metaFields.flatMap(MetaColumns.streamsFor))
+    // a concurrent append's commit removes `_staging` while it looks empty
+    // (GraftWriteCommit.dropStaging), which can land between the local
+    // filesystem's mkdir and chmod of it here: create the dir again
+    val dir = new HPath(stagedFile).getParent
+    (0 until 3).exists(_ =>
+      try dir.getFileSystem(conf).mkdirs(dir) catch { case _: java.io.IOException => false })
     val writer: ParquetWriter[Group] = ExampleParquetWriter.builder(new HPath(stagedFile))
       .withConf(conf).withType(s)
       .withCompressionCodec(CompressionCodecName.SNAPPY)
@@ -840,9 +793,5 @@ class GraftSegmentWriter(stagingDir: String, schema: StructType,
     fs.delete(p, false)
   }
 
-  override def close(): Unit = {
-    if (packed != null) packed.clear()
-    if (rows != null) rows.clear()
-    if (metas != null) metas.clear()
-  }
+  override def close(): Unit = buf = null
 }

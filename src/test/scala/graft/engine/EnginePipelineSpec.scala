@@ -73,49 +73,94 @@ class EnginePipelineSpec extends AnyFunSuite {
 
   test("packed-partition encode emits byte-identical segments to the row path") {
     val rnd = new scala.util.Random(11)
-    val rows = Array.tabulate(500) { i =>
-      val n = 1 + rnd.nextInt(400)
-      val tokens = Array.fill(n)(rnd.nextInt(50257))
-      BucketedRow(f"doc_$i%09d", tokens, n, s"src_${i % 3}", bucket = i % 4)
-    }
     val tokensPerChunk = 20000
-    // the row path: sort by (bucket, source, doc_id), cut greedy
-    // token-budget chunks (at most MaxRowsPerChunk rows, never across a
-    // bucket) and encode each through encodeChunk
-    val viaRows = rows.sortBy(r => (r.bucket, r.source, r.doc_id)).groupBy(_.bucket)
-      .toSeq.sortBy(_._1).flatMap { case (bucket, inBucket) =>
-        val chunks = ArrayBuffer(ArrayBuffer.empty[TokenRow])
+    def tokenRows(n: Int) = Array.tabulate(n) { i =>
+      // one row longer than an arena block: it gets a block of its own
+      val len = if (i == 7) RowBuffer.BlockInts + 1 else 1 + rnd.nextInt(400)
+      val tokens = Array.fill(len)(rnd.nextInt(50257))
+      BucketedRow(f"doc_$i%09d", tokens, len, s"src_${i % 3}", bucket = i % 4)
+    }
+    // the row path: rows in `sorted` order, cut greedy token-budget chunks
+    // (at most MaxRowsPerChunk rows, never across a bucket) and encode each
+    // through encodeChunk with the chunk's metadata as `extras`
+    def viaRows(sorted: Seq[(BucketedRow, Array[AnyRef])],
+                extras: Seq[Array[AnyRef]] => Seq[ExtraCol]): Seq[Segment] =
+      sorted.groupBy(_._1.bucket).toSeq.sortBy(_._1).flatMap { case (bucket, _) =>
+        val chunks = ArrayBuffer(ArrayBuffer.empty[(BucketedRow, Array[AnyRef])])
         var tokens = 0L
-        inBucket.foreach { r =>
+        sorted.filter(_._1.bucket == bucket).foreach { rm =>
           if (tokens >= tokensPerChunk || chunks.last.length >= GraftEncoder.MaxRowsPerChunk) {
-            chunks += ArrayBuffer.empty[TokenRow]
+            chunks += ArrayBuffer.empty
             tokens = 0L
           }
-          chunks.last += TokenRow(r.doc_id, r.tokens, r.n_tok, r.source)
-          tokens += r.tokens.length
+          chunks.last += rm
+          tokens += rm._1.tokens.length
         }
         chunks.zipWithIndex.map { case (c, i) =>
-          GraftEncoder.encodeChunk(c.toArray, pid = 0, chunkIdx = i, bucket = bucket)
+          GraftEncoder.encodeChunk(c.map { case (r, _) =>
+            TokenRow(r.doc_id, r.tokens, r.n_tok, r.source) }.toArray,
+            pid = 0, chunkIdx = i, bucket = bucket, extras = extras(c.map(_._2).toSeq))
         }
       }
-    // shuffle input order: the packed kernel must sort to the same layout
-    val shuffled = rnd.shuffle(rows.toSeq).toArray
-    val viaPacked = GraftEncoder.encodePartitionPacked(
-      shuffled.iterator.map(r =>
-        PackedRow(r.doc_id, TokenPack.pack(r.tokens), r.n_tok, r.source, r.bucket)),
-      tokensPerChunk).toArray
-    assert(viaPacked.length === viaRows.length, "same chunk boundaries")
-    viaRows.zip(viaPacked).foreach { case (a, b) =>
-      assert(a.segmentId === b.segmentId)
-      assert(a.nRows === b.nRows)
-      assert(a.nTokens === b.nTokens)
-      assert(a.cols.map(_.col) === b.cols.map(_.col))
-      a.cols.zip(b.cols).foreach { case (ca, cb) =>
-        assert(java.util.Arrays.equals(ca.payload, cb.payload), s"payload of ${ca.col}")
-        assert(ca.minV === cb.minV); assert(ca.maxV === cb.maxV)
-        assert(ca.minS === cb.minS); assert(ca.maxS === cb.maxS)
+    def assertSame(viaRows: Seq[Segment], viaBuffer: Seq[Segment]): Unit = {
+      assert(viaBuffer.length === viaRows.length, "same chunk boundaries")
+      viaRows.zip(viaBuffer).foreach { case (a, b) =>
+        assert(a.segmentId === b.segmentId)
+        assert(a.nRows === b.nRows)
+        assert(a.nTokens === b.nTokens)
+        assert(a.cols.map(_.col) === b.cols.map(_.col))
+        a.cols.zip(b.cols).foreach { case (ca, cb) =>
+          assert(java.util.Arrays.equals(ca.payload, cb.payload), s"payload of ${ca.col}")
+          assert(ca.nValues === cb.nValues, s"nValues of ${ca.col}")
+          assert(ca.minV === cb.minV); assert(ca.maxV === cb.maxV)
+          assert(ca.minS === cb.minS); assert(ca.maxS === cb.maxS)
+        }
       }
     }
+
+    // canonical rows, shuffled, through the shuffle's packs: the encoder
+    // must sort them to the (bucket, source, doc_id) layout
+    val rows = tokenRows(500)
+    val packed = new RowBuffer(0)
+    rnd.shuffle(rows.toSeq).foreach(r =>
+      packed.appendPacked(PackedRow(r.doc_id, TokenPack.pack(r.tokens), r.n_tok, r.source, r.bucket)))
+    assertSame(
+      viaRows(rows.sortBy(r => (r.bucket, r.source, r.doc_id)).map(_ -> Array.empty[AnyRef]).toSeq,
+        _ => Nil),
+      GraftEncoder.encodePartition(packed, Nil, tokensPerChunk).toSeq)
+
+    // rows with metadata slots: sortBy a nullable Long key, then a String
+    // key (nulls first, UTF-8 byte order), plus a list and a binary column
+    val specs = Seq(MetaColSpec("score", isString = false), MetaColSpec("lang", isString = true),
+      MetaColSpec("nums", isString = false, isList = true),
+      MetaColSpec("blob", isString = false, isBinary = true))
+    val withMeta = tokenRows(400).map { r =>
+      def maybe(v: => AnyRef): AnyRef = if (rnd.nextInt(4) == 0) null else v
+      r -> Array[AnyRef](
+        maybe(java.lang.Long.valueOf(rnd.nextInt(6) - 2L)),
+        maybe(Seq("en", "de", "és", "🤔")(rnd.nextInt(4))),
+        maybe(ListLongs(Array.fill(3)(rnd.nextInt(9).toLong), Array(true, rnd.nextBoolean(), true))),
+        maybe(Array.fill(rnd.nextInt(5))(rnd.nextInt(256).toByte)))
+    }
+    val utf8 = Ordering.fromLessThan[String](GraftEncoder.compareUtf8(_, _) < 0)
+    val sorted = withMeta.sortBy { case (r, m) =>
+      (r.bucket, Option(m(0).asInstanceOf[java.lang.Long]).map(_.longValue),
+        Option(m(1).asInstanceOf[String]), r.source, r.doc_id)
+    }(Ordering.Tuple5(Ordering.Int, Ordering.Option(Ordering.Long), Ordering.Option(utf8),
+      Ordering.String, Ordering.String))
+    def extras(slots: Seq[Array[AnyRef]]): Seq[ExtraCol] = Seq(
+      ExtraLongs("score", slots.map(m => Option(m(0).asInstanceOf[java.lang.Long]).fold(0L)(_.longValue)).toArray,
+        slots.map(_(0) != null).toArray),
+      ExtraStrings("lang", slots.map(_(1).asInstanceOf[String]).toArray),
+      ExtraListLongs("nums", slots.map(_(2).asInstanceOf[ListLongs]).toArray),
+      ExtraBinary("blob", slots.map(_(3).asInstanceOf[Array[Byte]]).toArray))
+    val buf = new RowBuffer(specs.length)
+    rnd.shuffle(withMeta.toSeq).foreach { case (r, m) =>
+      buf.append(r.doc_id, r.tokens, r.n_tok, r.source, r.bucket, m)
+    }
+    assertSame(viaRows(sorted.toSeq, extras),
+      GraftEncoder.encodePartition(buf, specs, tokensPerChunk,
+        graft.codec.CodecConf(sortBy = Seq("score", "lang"))).toSeq)
   }
 
   test("empty and single-row chunks") {

@@ -80,7 +80,7 @@ class GraftTableBridgeSpec extends AnyFunSuite {
     assert(out.filter(col("l").isNull).count() === 1L)
     assert(out.filter(size(col("nums")) === 0).count() === 1L)
     // compaction re-encodes list columns through the stored-domain path
-    // (decodeSegmentWithMeta -> encodePartitionWithMeta) without rendering
+    // (decodeSegmentWithMeta -> encodePartition) without rendering
     val compacted = graft.lineage.SegmentStore.compact(
       spark, s"$root/maplist", upTo = Long.MaxValue, buckets = 2)
     assert(compacted.isDefined)

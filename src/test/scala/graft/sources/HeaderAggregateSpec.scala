@@ -200,4 +200,16 @@ class HeaderAggregateSpec extends AnyFunSuite {
     assert(q.collect().toSeq ===
       Seq(Row.fromSeq(100L +: gen2.agg(count($"lang"), min($"lang"), max($"lang")).collect().head.toSeq)))
   }
+
+  test("the header fold sums each stream's encoded bytes as the segments record them") {
+    val conf = spark.sessionState.newHadoopConf()
+    val files = GraftLayout.listDataFiles(table, conf)
+    val fromSegments = scala.collection.mutable.Map.empty[String, Long]
+    files.foreach(f => GraftLayout.foreachSegment(f, conf, GraftLayout.partitionOf(f).get._2) { seg =>
+      seg.cols.foreach(c => fromSegments(c.col) = fromSegments.getOrElse(c.col, 0L) + c.bytesOut)
+    })
+    val folded = GraftLayout.foldHeaders(files, conf).bytesOut
+    assert(folded === fromSegments.toMap)
+    assert(folded("tokens") > 0L && folded.contains("tags") && folded.contains("info__f_kind"))
+  }
 }

@@ -25,6 +25,16 @@ inclusive samples (the frame anywhere on the stack, counted once per
 sample), each with its share of that thread group's samples. Every
 `--frame` substring gets its inclusive share in both groups, 0 included: a
 sample counts once for a substring when any of its frames contains it.
+Then the processes the JVM started (`jdk.ProcessStart`; Hadoop's local
+filesystem without its native library forks `chmod` and `ls`): their count
+by command, with path arguments dropped, and by thread group.
+
+`jdk.ExecutionSample` records Java frames only: time spent in native code
+does not show. For example, the token stream's level-6 deflate takes about
+4.8 ms of the 6.2 ms one 64k-token chunk costs to encode, yet `Deflater`
+frames appear in about 0.1% of the samples. Time a native-heavy kernel
+directly instead (perfbench's `codec.*_mb_s` per-layer metrics).
+
 The recording is kept at `--jfr` (default `.bench_out/profile-<workload>-
 seed<seed>.jfr`) for `jfr print` or JDK Mission Control.
 """
@@ -67,6 +77,42 @@ def samples(jfr_file):
         raise SystemExit(f"profile_jfr: jfr print failed on {jfr_file}")
 
 
+def group_of(thread):
+    return "executor tasks" if thread.startswith(EXECUTOR_THREAD) else "driver"
+
+
+def process_starts(jfr_file):
+    """Yields (thread name, command with path arguments dropped) per
+    `jdk.ProcessStart` event."""
+    p = subprocess.Popen(["jfr", "print", "--events", "jdk.ProcessStart",
+                          "--stack-depth", "1", jfr_file],
+                         stdout=subprocess.PIPE, text=True)
+    command = None
+    for line in p.stdout:
+        s = line.strip()
+        if s.startswith("command = "):
+            args = s[len("command = "):].strip('"').split()
+            command = " ".join(a for a in args if not a.startswith("/"))
+        elif s.startswith("eventThread = ") and command is not None:
+            yield s[len("eventThread = "):].split('" (')[0].strip('"'), command
+            command = None
+    if p.wait() != 0:
+        raise SystemExit(f"profile_jfr: jfr print failed on {jfr_file}")
+
+
+def report_processes(started):
+    """Prints the process starts by command and by thread group."""
+    by_command, by_group = collections.Counter(), collections.Counter()
+    for thread, command in started:
+        by_command[command] += 1
+        by_group[group_of(thread)] += 1
+    print(f"\n== process starts: {sum(by_command.values())}")
+    for group in ("executor tasks", "driver"):
+        print(f"{by_group[group]:7d}  {group}")
+    for command, c in by_command.most_common():
+        print(f"{c:7d}  {command}")
+
+
 def tally(sampled, wanted):
     """Per thread group: [samples, self counts, inclusive counts, counts per
     wanted substring]. Inclusive and wanted counts take each sample once."""
@@ -75,7 +121,7 @@ def tally(sampled, wanted):
     for thread, frames in sampled:
         if not frames:
             continue
-        g = groups["executor tasks" if thread.startswith(EXECUTOR_THREAD) else "driver"]
+        g = groups[group_of(thread)]
         g[0] += 1
         g[1][frames[0]] += 1
         g[2].update(set(frames))
@@ -142,6 +188,7 @@ def main():
           f"({a.workload}, seed {a.seed}, {int(a.delay)} s delay, {int(duration)} s)")
     for name, counts in groups.items():
         report(name, *counts, a.frame)
+    report_processes(process_starts(jfr_file))
 
 
 if __name__ == "__main__":

@@ -24,9 +24,11 @@ object BitPack {
     bitWidth(acc)
   }
 
-  /** Pack len values at the given width into the writer. */
+  /** Pack len values at the given width into the writer: exactly
+    * [[packedBytes]]`(len, width)` bytes, reserved once up front. */
   def pack(values: Array[Long], from: Int, len: Int, width: Int, out: ByteWriter): Unit = {
     if (width == 0) return
+    out.reserve(packedBytes(len, width))
     var acc = 0L     // bit accumulator, little-endian: lowest bits are earliest
     var nbits = 0
     var i = from
@@ -38,7 +40,7 @@ object BitPack {
       if (width >= used) {
         // accumulator full (or exactly full): flush 8 bytes
         var k = 0
-        while (k < 8) { out.writeByte((acc >>> (8 * k)).toInt & 0xff); k += 1 }
+        while (k < 8) { out.putByte((acc >>> (8 * k)).toInt); k += 1 }
         acc = if (used == 64) 0L else v >>> used
         nbits = width - used
       } else {
@@ -48,7 +50,7 @@ object BitPack {
     }
     // flush remainder
     var k = 0
-    while (k * 8 < nbits) { out.writeByte((acc >>> (8 * k)).toInt & 0xff); k += 1 }
+    while (k * 8 < nbits) { out.putByte((acc >>> (8 * k)).toInt); k += 1 }
   }
 
   /** Pack len values of width <= 32 from an Int array, treated as UNSIGNED
@@ -58,6 +60,7 @@ object BitPack {
   def packInt(values: Array[Int], from: Int, len: Int, width: Int, out: ByteWriter): Unit = {
     require(width <= 32, s"packInt supports widths <= 32, got $width")
     if (width == 0) return
+    out.reserve(packedBytes(len, width))
     var acc = 0L
     var nbits = 0
     var i = from
@@ -68,7 +71,7 @@ object BitPack {
       val used = 64 - nbits
       if (width >= used) {
         var k = 0
-        while (k < 8) { out.writeByte((acc >>> (8 * k)).toInt & 0xff); k += 1 }
+        while (k < 8) { out.putByte((acc >>> (8 * k)).toInt); k += 1 }
         acc = v >>> used // width <= 32 -> used > 32 here, so no used==64 case
         nbits = width - used
       } else {
@@ -77,7 +80,7 @@ object BitPack {
       i += 1
     }
     var k = 0
-    while (k * 8 < nbits) { out.writeByte((acc >>> (8 * k)).toInt & 0xff); k += 1 }
+    while (k * 8 < nbits) { out.putByte((acc >>> (8 * k)).toInt); k += 1 }
   }
 
   /** Unpack len values of the given width into out[from, from+len). */

@@ -24,6 +24,13 @@ final class ByteWriter(initialCapacity: Int = 64) {
 
   def writeByte(b: Int): Unit = { ensure(1); buf(pos) = b.toByte; pos += 1 }
 
+  /** Make room for `n` more bytes, so the next `n` [[putByte]]s need no
+    * capacity check (kernels whose output size is known up front). */
+  def reserve(n: Int): Unit = ensure(n)
+
+  /** Append one byte into room made by [[reserve]]. */
+  def putByte(b: Int): Unit = { buf(pos) = b.toByte; pos += 1 }
+
   def writeBytes(src: Array[Byte], from: Int, len: Int): Unit = {
     ensure(len); System.arraycopy(src, from, buf, pos, len); pos += len
   }

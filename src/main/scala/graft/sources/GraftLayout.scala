@@ -4,13 +4,14 @@ import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileStatus, FileSystem, Path => HPath}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, LocalFileSystem, RawLocalFileSystem, Path => HPath}
+import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.parquet.{HadoopReadOptions, ParquetReadOptions}
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
 import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.{HadoopCodecs, HadoopInputFile}
-import org.apache.parquet.io.{ColumnIOFactory, MessageColumnIO}
+import org.apache.parquet.hadoop.util.{HadoopCodecs, HadoopInputFile, HadoopOutputFile, HadoopStreams}
+import org.apache.parquet.io.{ColumnIOFactory, MessageColumnIO, OutputFile, PositionOutputStream}
 import org.apache.parquet.schema.MessageType
 
 import graft.lineage.LineageRow
@@ -383,6 +384,53 @@ object GraftLayout {
     out.toSeq
   }
 
+  /** The filesystem graft creates, renames and deletes its files through.
+    * Where `path` resolves to a `LocalFileSystem`, that is one JVM-wide
+    * `LocalFileSystem` over [[InProcessChmodFs]]: without Hadoop's native
+    * library the stock one forks a `chmod` process for every file it
+    * creates (the `.crc` side file too) and for every directory level
+    * `mkdirs` makes, milliseconds each. Modes and `.crc` side files stay
+    * the same. On Spark's classpath the `file` scheme resolves to Hive's
+    * `ProxyLocalFileSystem`, whose rename refuses a destination that is an
+    * existing file; graft never renames onto an existing file, so its
+    * creates, renames and deletes come out the same. Any other filesystem
+    * is returned as is, and reads keep the stock filesystem. Like Hadoop's
+    * own filesystem cache, the local instance keeps the configuration of
+    * its first caller. */
+  def writeFs(path: HPath, conf: Configuration): FileSystem = {
+    val fs = path.getFileSystem(conf)
+    if (!fs.isInstanceOf[LocalFileSystem]) fs
+    else {
+      if (localWriteFs == null) synchronized {
+        if (localWriteFs == null) {
+          val lfs = new LocalFileSystem(new InProcessChmodFs)
+          lfs.setConf(conf)
+          lfs.initialize(java.net.URI.create("file:///"), conf)
+          localWriteFs = lfs
+        }
+      }
+      localWriteFs
+    }
+  }
+  @volatile private var localWriteFs: LocalFileSystem = _
+
+  /** Where a parquet writer writes `path`: through [[writeFs]] on the local
+    * filesystem (no block alignment there, as with `HadoopOutputFile`), and
+    * through `HadoopOutputFile` anywhere else. */
+  def outputFile(path: HPath, conf: Configuration): OutputFile = writeFs(path, conf) match {
+    case fs: LocalFileSystem if fs.getRaw.isInstanceOf[InProcessChmodFs] =>
+      new OutputFile {
+        private def open(overwrite: Boolean): PositionOutputStream =
+          HadoopStreams.wrap(fs.create(path, overwrite))
+        override def create(blockSizeHint: Long): PositionOutputStream = open(false)
+        override def createOrOverwrite(blockSizeHint: Long): PositionOutputStream = open(true)
+        override def supportsBlockSize(): Boolean = false
+        override def defaultBlockSize(): Long = fs.getDefaultBlockSize(path)
+        override def getPath: String = fs.makeQualified(path).toString
+      }
+    case _ => HadoopOutputFile.fromPath(path, conf)
+  }
+
   /** A `_`/`.`-prefixed name: a side file (`_SUCCESS`, `.crc`) or the
     * directory of an in-flight write (`_temporary/`, `.spark-staging-*`). */
   private def isHidden(name: String): Boolean =
@@ -642,4 +690,37 @@ object GraftLayout {
     * the streaming sink uses membership for epoch-replay idempotence. */
   def committedSnapshots(path: String, conf: Configuration): Option[Set[Long]] =
     committedPairs(path, conf).map(_.committed.map(_._1))
+}
+
+/** The local filesystem's raw layer with one change: `setPermission` is
+  * chmod(2) through `java.nio` instead of a forked `chmod` process. Hadoop
+  * applies the umask before it calls this, so files and directories get
+  * the stock modes. A file store without POSIX attributes, and a mode with
+  * the sticky bit (which `java.nio` cannot set), take the stock call. */
+private[sources] final class InProcessChmodFs extends RawLocalFileSystem {
+  override def setPermission(p: HPath, permission: FsPermission): Unit =
+    if (permission.getStickyBit) super.setPermission(p, permission)
+    else
+      try java.nio.file.Files.setPosixFilePermissions(pathToFile(p).toPath,
+        InProcessChmodFs.posix(permission.toShort))
+      catch { case _: UnsupportedOperationException => super.setPermission(p, permission) }
+}
+
+private[sources] object InProcessChmodFs {
+  import java.nio.file.attribute.PosixFilePermission
+
+  // OWNER_READ (0400) first, OTHERS_EXECUTE (0001) last
+  private val Bits = PosixFilePermission.values
+
+  /** The permission set of the low nine bits of `mode` (from the mode
+    * bits: `FsPermission.toString` is not always the `rwx` form). */
+  def posix(mode: Int): java.util.Set[PosixFilePermission] = {
+    val s = java.util.EnumSet.noneOf(classOf[PosixFilePermission])
+    var k = 0
+    while (k < Bits.length) {
+      if ((mode & (0x100 >> k)) != 0) s.add(Bits(k))
+      k += 1
+    }
+    s
+  }
 }

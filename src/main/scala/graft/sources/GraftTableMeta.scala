@@ -199,7 +199,7 @@ object GraftTableMeta {
         s"the current one.\n  current: [$curDdl]\n  new:     [$newDdl]")
     val next = cur.schemaVersion + 1
     val p = versionPath(tableDir, next)
-    val fs = p.getFileSystem(conf)
+    val fs = GraftLayout.writeFs(p, conf)
     try {
       val out = fs.create(p, false)
       try out.write(s"schema=$newDdl\n".getBytes(StandardCharsets.UTF_8))
@@ -276,7 +276,7 @@ object GraftTableMeta {
               "or double-publish replayed epochs. Re-create the table (or decode " +
               "and re-encode it) with the current build.")
         val p = metaPath(tableDir)
-        val fs = p.getFileSystem(conf)
+        val fs = GraftLayout.writeFs(p, conf)
         fs.mkdirs(p.getParent)
         try {
           // create-no-overwrite = the CAS: exactly one racing first commit

@@ -233,8 +233,8 @@ class GraftBatchWrite(path: String, stagingDir: String, schema: StructType,
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val conf = hconf.value
+    val fs = GraftLayout.writeFs(new HPath(path), conf)
     if (truncateFirst) {
-      val fs = new HPath(path).getFileSystem(conf)
       fs.delete(new HPath(path, "data"), true)
       fs.delete(new HPath(path, "lineage"), true)
       GraftTableMeta.invalidate(path) // _meta was deleted; restamped below
@@ -263,7 +263,6 @@ class GraftBatchWrite(path: String, stagingDir: String, schema: StructType,
     // simultaneous appends thus publish two DISTINCT snapshots (and never
     // clear each other's bucket dirs at publish). Iceberg solves the same
     // race with an atomic catalog swap; this is its catalog-free rendering.
-    val fs = new HPath(path).getFileSystem(conf)
     val ledgerDir = new HPath(path, "lineage")
     fs.mkdirs(ledgerDir)
     var attempts = 0
@@ -360,7 +359,7 @@ object GraftWriteCommit {
   def publish(path: String, stagingDir: String, snapshotId: Long,
               messages: Array[GraftCommitMessage], conf: Configuration,
               extraLedger: Seq[graft.lineage.LineageRow] = Nil): Unit = {
-    val fs = new HPath(path).getFileSystem(conf)
+    val fs = GraftLayout.writeFs(new HPath(path), conf)
     messages.foreach { m =>
       val dest = new HPath(s"$path/data/snapshotId=$snapshotId/bucket=${m.bucket}")
       fs.delete(dest, true)
@@ -424,7 +423,7 @@ object GraftWriteCommit {
     // skip `.` files, so a concurrent fold (another append's commit) never
     // opens a half-written file, and a crash mid-write leaves no ledger row
     val tmp = new HPath(s"$path/lineage/.$name.tmp")
-    val writer = ExampleParquetWriter.builder(tmp)
+    val writer = ExampleParquetWriter.builder(GraftLayout.outputFile(tmp, conf))
       .withConf(conf).withType(LineageSchema)
       .withCompressionCodec(CompressionCodecName.SNAPPY)
       .build()
@@ -446,7 +445,7 @@ object GraftWriteCommit {
         writer.write(g)
       }
     } finally writer.close()
-    if (!file.getFileSystem(conf).rename(tmp, file))
+    if (!GraftLayout.writeFs(file, conf).rename(tmp, file))
       throw new java.io.IOException(s"graft commit: ledger rename failed for $file")
   }
 }
@@ -719,11 +718,13 @@ class GraftSegmentWriter(stagingDir: String, schema: StructType,
       SegmentLayoutV2.CanonicalStreams ++ metaFields.flatMap(MetaColumns.streamsFor))
     // a concurrent append's commit removes `_staging` while it looks empty
     // (GraftWriteCommit.dropStaging), which can land between the local
-    // filesystem's mkdir and chmod of it here: create the dir again
-    val dir = new HPath(stagedFile).getParent
+    // filesystem's mkdir and its (in-process) chmod of the dir here, so
+    // the chmod finds no dir: create the dir again
+    val file = new HPath(stagedFile)
+    val fs = GraftLayout.writeFs(file, conf)
     (0 until 3).exists(_ =>
-      try dir.getFileSystem(conf).mkdirs(dir) catch { case _: java.io.IOException => false })
-    val writer: ParquetWriter[Group] = ExampleParquetWriter.builder(new HPath(stagedFile))
+      try fs.mkdirs(file.getParent) catch { case _: java.io.IOException => false })
+    val writer: ParquetWriter[Group] = ExampleParquetWriter.builder(GraftLayout.outputFile(file, conf))
       .withConf(conf).withType(s)
       .withCompressionCodec(CompressionCodecName.SNAPPY)
       .withRowGroupSize(GraftSegmentWriter.RowGroupBytes)
@@ -789,8 +790,7 @@ class GraftSegmentWriter(stagingDir: String, schema: StructType,
 
   override def abort(): Unit = {
     val p = new HPath(stagedFile)
-    val fs = p.getFileSystem(conf)
-    fs.delete(p, false)
+    GraftLayout.writeFs(p, conf).delete(p, false)
   }
 
   override def close(): Unit = buf = null

@@ -61,9 +61,18 @@ object BlockCompression {
     inf.reset()
     inf.setInput(data, from, len)
     val out = new Array[Byte](rawLen)
+    val spare = new Array[Byte](1)
     var pos = 0
-    while (pos < rawLen && !inf.finished()) {
-      pos += inf.inflate(out, pos, rawLen - pos)
+    // run to the stream's end: a stream cut short stalls with the inflater
+    // asking for input or a dictionary (inflate returns 0 forever), and one
+    // cut after its last literal can still fill `out` exactly
+    while (!inf.finished()) {
+      val n = if (pos < rawLen) inf.inflate(out, pos, rawLen - pos) else inf.inflate(spare)
+      if (n == 0 && !inf.finished())
+        throw new IllegalArgumentException(s"truncated deflate block: $pos of $rawLen bytes" +
+          s" (needs input: ${inf.needsInput()}, dictionary: ${inf.needsDictionary()})")
+      require(pos + n <= rawLen, s"deflate block inflates past its $rawLen bytes")
+      pos += n
     }
     require(pos == rawLen, s"inflate produced $pos of $rawLen bytes")
     out

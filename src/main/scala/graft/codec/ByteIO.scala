@@ -59,7 +59,11 @@ final class ByteReader(val buf: Array[Byte], private var pos: Int = 0) {
 
   def readByte(): Int = { val b = buf(pos) & 0xff; pos += 1; b }
 
+  /** The next `len` bytes; a length past the end fails instead of padding
+    * with zeros (a truncated payload must never decode to values). */
   def readBytes(len: Int): Array[Byte] = {
+    if (len < 0 || len > remaining)
+      throw new IllegalArgumentException(s"read of $len bytes at $pos, $remaining remain")
     val out = java.util.Arrays.copyOfRange(buf, pos, pos + len)
     pos += len
     out

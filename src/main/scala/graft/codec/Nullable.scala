@@ -12,9 +12,9 @@ package graft.codec
   *  - flag 1 (sparse): `[n varint][bitpacked present bits][chunk(non-null
   *    values, compacted)]`.
   *
-  * The engine's Segment layout doesn't carry PRESENT streams today because
-  * input_hint pins a non-null schema; these kernels are the tested seam a
-  * nullable schema widening plugs into (instead of failing silently).
+  * Metadata columns ([[graft.sources.MetaColumns]]) ride this framing: the
+  * engine encodes the non-null values through the selector and wraps the
+  * chunk with [[frame]].
   */
 object Nullable {
 
@@ -26,14 +26,21 @@ object Nullable {
     var n = 0
     var i = 0
     while (i < present.length) { if (present(i)) n += 1; i += 1 }
-    compact(values, present, n)
+    val out = new Array[Long](n)
+    i = 0
+    var j = 0
+    while (i < values.length) {
+      if (present(i)) { out(j) = values(i); j += 1 }
+      i += 1
+    }
+    out
   }
 
   /** Frame an ALREADY-ENCODED chunk of the non-null values with the
     * PRESENT bitmap — lets callers choose the inner codec with the
     * selector's full auto logic (raw-fallback guard included) and reuse
     * the encoded bytes without a second kernel pass. Decodes with
-    * [[decodeInts]]/[[decodeStrings]]. */
+    * [[decodeInts]]/[[decodeStringsBytes]]. */
   def frame(present: Array[Boolean], encodedCompacted: Array[Byte]): Array[Byte] = {
     var nPresent = 0
     var i = 0
@@ -52,44 +59,6 @@ object Nullable {
       w.writeVarLong(present.length.toLong)
       BitPack.pack(bits, 0, present.length, 1, w)
       w.writeBytes(encodedCompacted)
-      w.toArray
-    }
-  }
-
-  private def compact(values: Array[Long], present: Array[Boolean], nPresent: Int): Array[Long] = {
-    val out = new Array[Long](nPresent)
-    var i = 0
-    var j = 0
-    while (i < values.length) {
-      if (present(i)) { out(j) = values(i); j += 1 }
-      i += 1
-    }
-    out
-  }
-
-  def encodeInts(values: Array[Long], present: Array[Boolean], codec: IntCodec,
-                 conf: CodecConf = CodecConf.Default): Array[Byte] = {
-    require(values.length == present.length,
-      s"values/present length mismatch: ${values.length} vs ${present.length}")
-    var nPresent = 0
-    var i = 0
-    while (i < present.length) { if (present(i)) nPresent += 1; i += 1 }
-    if (nPresent == present.length) {
-      val chunk = IntCodecs.encodeChunk(values, codec, conf)
-      val out = new Array[Byte](chunk.length + 1)
-      out(0) = FlagDense.toByte
-      System.arraycopy(chunk, 0, out, 1, chunk.length)
-      out
-    } else {
-      val bits = new Array[Long](present.length)
-      i = 0
-      while (i < present.length) { bits(i) = if (present(i)) 1L else 0L; i += 1 }
-      val chunk = IntCodecs.encodeChunk(compact(values, present, nPresent), codec, conf)
-      val w = new ByteWriter(chunk.length + present.length / 8 + 16)
-      w.writeByte(FlagSparse)
-      w.writeVarLong(present.length.toLong)
-      BitPack.pack(bits, 0, present.length, 1, w)
-      w.writeBytes(chunk)
       w.toArray
     }
   }
@@ -119,39 +88,9 @@ object Nullable {
     }
   }
 
-  def encodeStrings(values: Array[String], codec: StringCodec,
-                    conf: CodecConf = CodecConf.Default): Array[Byte] = {
-    var nPresent = 0
-    var i = 0
-    while (i < values.length) { if (values(i) != null) nPresent += 1; i += 1 }
-    if (nPresent == values.length) {
-      val chunk = StringCodecs.encodeChunk(values, codec, conf)
-      val out = new Array[Byte](chunk.length + 1)
-      out(0) = FlagDense.toByte
-      System.arraycopy(chunk, 0, out, 1, chunk.length)
-      out
-    } else {
-      val bits = new Array[Long](values.length)
-      val compacted = new Array[String](nPresent)
-      var j = 0
-      i = 0
-      while (i < values.length) {
-        if (values(i) != null) { bits(i) = 1L; compacted(j) = values(i); j += 1 }
-        i += 1
-      }
-      val chunk = StringCodecs.encodeChunk(compacted, codec, conf)
-      val w = new ByteWriter(chunk.length + values.length / 8 + 16)
-      w.writeByte(FlagSparse)
-      w.writeVarLong(values.length.toLong)
-      BitPack.pack(bits, 0, values.length, 1, w)
-      w.writeBytes(chunk)
-      w.toArray
-    }
-  }
-
-  /** Zero-copy variant: the COMPACTED non-null values as a [[Utf8Chunk]]
-    * plus the PRESENT mask and a row -> compacted-index map (identity for
-    * dense chunks, represented as null). */
+  /** String and binary streams: the COMPACTED non-null values as a
+    * [[Utf8Chunk]] plus the PRESENT mask and a row -> compacted-index map
+    * (identity for dense chunks, represented as null). */
   def decodeStringsBytes(bytes: Array[Byte]): (Utf8Chunk, Array[Boolean], Array[Int]) = {
     val in = new ByteReader(bytes)
     in.readByte() match {
@@ -172,57 +111,6 @@ object Nullable {
           i += 1
         }
         (chunk, present, toCompact)
-      case other => throw new IllegalStateException(s"bad nullable flag $other")
-    }
-  }
-
-  /** Byte-domain decode (BINARY metadata columns): per-value byte arrays,
-    * absent slots null. Same framing as the string path; the inner chunk
-    * decodes through [[StringCodecs.decodeChunkBytes]]'s byte-exact
-    * blob+offsets view and is sliced per value. */
-  def decodeBinary(bytes: Array[Byte]): Array[Array[Byte]] = {
-    def slice(c: Utf8Chunk, i: Int): Array[Byte] =
-      java.util.Arrays.copyOfRange(c.blob, c.offsets(i), c.offsets(i) + c.lens(i))
-    val in = new ByteReader(bytes)
-    in.readByte() match {
-      case FlagDense =>
-        val chunk = StringCodecs.decodeChunkBytes(in.readBytes(in.remaining))
-        Array.tabulate(chunk.size)(slice(chunk, _))
-      case FlagSparse =>
-        val n = in.readVarLong().toInt
-        val bits = new Array[Long](n)
-        BitPack.unpack(in, n, 1, bits, 0)
-        val chunk = StringCodecs.decodeChunkBytes(in.readBytes(in.remaining))
-        val values = new Array[Array[Byte]](n)
-        var i = 0
-        var j = 0
-        while (i < n) {
-          if (bits(i) == 1L) { values(i) = slice(chunk, j); j += 1 }
-          i += 1
-        }
-        values
-      case other => throw new IllegalStateException(s"bad nullable flag $other")
-    }
-  }
-
-  /** Absent slots decode to null. */
-  def decodeStrings(bytes: Array[Byte]): Array[String] = {
-    val in = new ByteReader(bytes)
-    in.readByte() match {
-      case FlagDense => StringCodecs.decodeChunk(in.readBytes(in.remaining))
-      case FlagSparse =>
-        val n = in.readVarLong().toInt
-        val bits = new Array[Long](n)
-        BitPack.unpack(in, n, 1, bits, 0)
-        val compacted = StringCodecs.decodeChunk(in.readBytes(in.remaining))
-        val values = new Array[String](n)
-        var i = 0
-        var j = 0
-        while (i < n) {
-          if (bits(i) == 1L) { values(i) = compacted(j); j += 1 }
-          i += 1
-        }
-        values
       case other => throw new IllegalStateException(s"bad nullable flag $other")
     }
   }

@@ -2,32 +2,28 @@ package graft.codec
 
 import java.nio.charset.StandardCharsets
 
-/** Per-chunk string codecs for `doc_id` / `source` columns.
+/** Per-chunk string codecs for `doc_id` / `source` and the string and
+  * binary metadata columns.
   *
   * The dict variant mirrors ORC DICTIONARY_V2: sorted symbol table with a
   * LENGTH stream + RLE-encoded indexes (SURVEY §1.4 item 4; fixture dump
   * shows utf8 cols as DATA+LENGTH streams). FSST targets high-cardinality
   * strings where dictionaries lose (doc ids with shared prefixes).
+  *
+  * Every codec works on byte strings only: one encoder over per-value
+  * byte arrays and one decoder to a [[Utf8Chunk]] (one blob plus offsets,
+  * the shape of an Arrow `Utf8` column). Text is UTF-8 encoded once, at
+  * [[StringCodecs.encodeChunk]] or the selector's
+  * `encodeStringsAuto`; callers build a `String` (or a Spark `UTF8String`)
+  * only where they need one. Arbitrary bytes (BINARY columns, UTF-8-invalid
+  * values) round-trip bit-exactly. Dictionary variants order their table
+  * by unsigned bytes, which for UTF-8 is code-point order.
   */
 trait StringCodec extends Serializable {
   def id: Int
   def name: String
-  def encode(values: Array[String]): Array[Byte]
-  def decode(bytes: Array[Byte]): Array[String]
-  /** Zero-copy decode: values stay in one UTF-8 blob. Default derives from
-    * [[decode]]; codecs override with a native path that never builds
-    * java.lang.Strings (the connector scan's hot path — Spark wants UTF-8
-    * bytes anyway, so String round-trips decode + re-encode every value). */
-  def decodeBytes(bytes: Array[Byte]): Utf8Chunk = Utf8Chunk.fromStrings(decode(bytes))
-
-  /** Encode RAW byte values (BINARY metadata columns): identical payload
-    * framing to [[encode]], but the values never render through
-    * java.lang.String — arbitrary (UTF-8-invalid) bytes round-trip
-    * bit-exactly via [[decodeBytes]], whose blob+offsets view is
-    * byte-domain already. Dictionary variants order the symbol table by
-    * unsigned byte order instead of String order (order is a layout
-    * detail; values are index-addressed). */
   def encodeBytes(values: Array[Array[Byte]]): Array[Byte]
+  def decodeBytes(bytes: Array[Byte]): Utf8Chunk
 }
 
 /** A decoded string chunk as one UTF-8 blob + per-value (offset, len) —
@@ -38,26 +34,28 @@ final class Utf8Chunk(val blob: Array[Byte], val offsets: Array[Int],
   def size: Int = lens.length
   def string(i: Int): String =
     new String(blob, offsets(i), lens(i), StandardCharsets.UTF_8)
+  /** A copy of value i's bytes. */
+  def bytes(i: Int): Array[Byte] =
+    java.util.Arrays.copyOfRange(blob, offsets(i), offsets(i) + lens(i))
 }
 
 object Utf8Chunk {
-  def fromStrings(values: Array[String]): Utf8Chunk = {
-    val (blob, lens) = StrUtil.concat(values)
-    fromBlob(blob, lens)
-  }
-
-  /** Consecutive values: offsets are the prefix sums of `lens`. */
+  /** Consecutive values: offsets are the prefix sums of `lens`, which must
+    * cover the blob exactly (a short or padded payload fails here). */
   def fromBlob(blob: Array[Byte], lens: Array[Long]): Utf8Chunk = {
     val offs = new Array[Int](lens.length)
     val ls = new Array[Int](lens.length)
-    var pos = 0
+    var pos = 0L
     var i = 0
     while (i < lens.length) {
-      offs(i) = pos
+      require(lens(i) >= 0 && pos + lens(i) <= blob.length,
+        s"string lengths overrun a ${blob.length}-byte blob at value $i")
+      offs(i) = pos.toInt
       ls(i) = lens(i).toInt
       pos += ls(i)
       i += 1
     }
+    require(pos == blob.length, s"string lengths sum to $pos, blob holds ${blob.length} bytes")
     new Utf8Chunk(blob, offs, ls)
   }
 
@@ -77,29 +75,7 @@ object Utf8Chunk {
 }
 
 private[codec] object StrUtil {
-  def concat(values: Array[String]): (Array[Byte], Array[Long]) = {
-    val lens = new Array[Long](values.length)
-    var total = 0
-    var i = 0
-    val utf8 = new Array[Array[Byte]](values.length)
-    while (i < values.length) {
-      utf8(i) = values(i).getBytes(StandardCharsets.UTF_8)
-      lens(i) = utf8(i).length.toLong
-      total += utf8(i).length
-      i += 1
-    }
-    val blob = new Array[Byte](total)
-    var pos = 0
-    i = 0
-    while (i < values.length) {
-      System.arraycopy(utf8(i), 0, blob, pos, utf8(i).length)
-      pos += utf8(i).length
-      i += 1
-    }
-    (blob, lens)
-  }
-
-  /** Byte-domain twin of [[concat]]. */
+  /** One blob of the values back to back, plus their lengths. */
   def concatBytes(values: Array[Array[Byte]]): (Array[Byte], Array[Long]) = {
     val lens = new Array[Long](values.length)
     var total = 0
@@ -120,37 +96,30 @@ private[codec] object StrUtil {
     (blob, lens)
   }
 
-  /** Distinct values sorted by unsigned byte order + per-value dict index
-    * (the byte-domain analog of the TreeSet the string dicts build). */
+  /** Distinct values sorted by unsigned byte order (code-point order for
+    * UTF-8, the order ORC's dictionary writer uses) + per-value dict index. */
   def dictBytes(values: Array[Array[Byte]]): (Array[Array[Byte]], Array[Long]) = {
-    val cmp = new java.util.Comparator[Array[Byte]] {
-      def compare(a: Array[Byte], b: Array[Byte]): Int =
-        java.util.Arrays.compareUnsigned(a, b)
-    }
-    val distinct = new java.util.TreeMap[Array[Byte], Integer](cmp)
+    val firstSeen = new java.util.HashMap[java.nio.ByteBuffer, Integer]()
+    val keys = new java.util.ArrayList[Array[Byte]]()
+    val seenId = new Array[Int](values.length)
     var i = 0
-    while (i < values.length) { distinct.put(values(i), 0); i += 1 }
-    val dict = new Array[Array[Byte]](distinct.size)
-    val it = distinct.keySet().iterator()
-    i = 0
-    while (it.hasNext) { val k = it.next(); dict(i) = k; distinct.put(k, i); i += 1 }
-    val idx = new Array[Long](values.length)
-    i = 0
-    while (i < values.length) { idx(i) = distinct.get(values(i)).toLong; i += 1 }
-    (dict, idx)
-  }
-
-  def split(blob: Array[Byte], lens: Array[Long]): Array[String] = {
-    val out = new Array[String](lens.length)
-    var pos = 0
-    var i = 0
-    while (i < lens.length) {
-      val l = lens(i).toInt
-      out(i) = new String(blob, pos, l, StandardCharsets.UTF_8)
-      pos += l
+    while (i < values.length) {
+      val k = java.nio.ByteBuffer.wrap(values(i))
+      val id = firstSeen.putIfAbsent(k, keys.size)
+      if (id == null) { seenId(i) = keys.size; keys.add(values(i)) } else seenId(i) = id
       i += 1
     }
-    out
+    val order = Array.tabulate[Integer](keys.size)(Integer.valueOf)
+    java.util.Arrays.sort(order,
+      (a: Integer, b: Integer) => java.util.Arrays.compareUnsigned(keys.get(a), keys.get(b)))
+    val dict = new Array[Array[Byte]](order.length)
+    val rank = new Array[Int](order.length)
+    i = 0
+    while (i < order.length) { dict(i) = keys.get(order(i)); rank(order(i)) = i; i += 1 }
+    val idx = new Array[Long](values.length)
+    i = 0
+    while (i < values.length) { idx(i) = rank(seenId(i)).toLong; i += 1 }
+    (dict, idx)
   }
 }
 
@@ -158,28 +127,6 @@ private[codec] object StrUtil {
 object RawStringCodec extends StringCodec {
   val id = 10
   val name = "raw_str"
-  def encode(values: Array[String]): Array[Byte] = {
-    val (blob, lens) = StrUtil.concat(values)
-    val lenBytes = RleV2.encode(lens)
-    val out = new ByteWriter(blob.length + lenBytes.length + 16)
-    out.writeVarLong(lenBytes.length.toLong)
-    out.writeBytes(lenBytes)
-    out.writeBytes(blob)
-    out.toArray
-  }
-  def decode(bytes: Array[Byte]): Array[String] = {
-    val in = new ByteReader(bytes)
-    val lenLen = in.readVarLong().toInt
-    val lens = RleV2.decode(new ByteReader(in.readBytes(lenLen)))
-    val blob = in.readBytes(in.remaining)
-    StrUtil.split(blob, lens)
-  }
-  override def decodeBytes(bytes: Array[Byte]): Utf8Chunk = {
-    val in = new ByteReader(bytes)
-    val lenLen = in.readVarLong().toInt
-    val lens = RleV2.decode(new ByteReader(in.readBytes(lenLen)))
-    Utf8Chunk.fromBlob(in.readBytes(in.remaining), lens)
-  }
   def encodeBytes(values: Array[Array[Byte]]): Array[Byte] = {
     val (blob, lens) = StrUtil.concatBytes(values)
     val lenBytes = RleV2.encode(lens)
@@ -189,6 +136,12 @@ object RawStringCodec extends StringCodec {
     out.writeBytes(blob)
     out.toArray
   }
+  def decodeBytes(bytes: Array[Byte]): Utf8Chunk = {
+    val in = new ByteReader(bytes)
+    val lenLen = in.readVarLong().toInt
+    val lens = RleV2.decode(new ByteReader(in.readBytes(lenLen)))
+    Utf8Chunk.fromBlob(in.readBytes(in.remaining), lens)
+  }
 }
 
 /** Sorted dictionary + RLE v2 indexes (sorted table keeps index streams
@@ -196,57 +149,6 @@ object RawStringCodec extends StringCodec {
 object DictStringCodec extends StringCodec {
   val id = 11
   val name = "dict_str"
-  def encode(values: Array[String]): Array[Byte] = {
-    val distinct = new java.util.TreeSet[String]()
-    var i = 0
-    while (i < values.length) { distinct.add(values(i)); i += 1 }
-    val dict = new Array[String](distinct.size)
-    val it = distinct.iterator()
-    i = 0
-    while (it.hasNext) { dict(i) = it.next(); i += 1 }
-    val index = new java.util.HashMap[String, Integer](dict.length * 2)
-    i = 0
-    while (i < dict.length) { index.put(dict(i), i); i += 1 }
-    val idx = new Array[Long](values.length)
-    i = 0
-    while (i < values.length) { idx(i) = index.get(values(i)).toLong; i += 1 }
-    val (dictBlob, dictLens) = StrUtil.concat(dict)
-    val dictLenBytes = RleV2.encode(dictLens)
-    val idxBytes = RleV2.encode(idx)
-    val out = new ByteWriter(dictBlob.length + dictLenBytes.length + idxBytes.length + 24)
-    out.writeVarLong(dict.length.toLong)
-    out.writeVarLong(dictLenBytes.length.toLong)
-    out.writeBytes(dictLenBytes)
-    out.writeVarLong(dictBlob.length.toLong)
-    out.writeBytes(dictBlob)
-    out.writeVarLong(idxBytes.length.toLong)
-    out.writeBytes(idxBytes)
-    out.toArray
-  }
-  def decode(bytes: Array[Byte]): Array[String] = {
-    val in = new ByteReader(bytes)
-    in.readVarLong() // dict size
-    val dictLenLen = in.readVarLong().toInt
-    val dictLens = RleV2.decode(new ByteReader(in.readBytes(dictLenLen)))
-    val dictBlobLen = in.readVarLong().toInt
-    val dict = StrUtil.split(in.readBytes(dictBlobLen), dictLens)
-    val idxLen = in.readVarLong().toInt
-    val idx = RleV2.decode(new ByteReader(in.readBytes(idxLen)))
-    val out = new Array[String](idx.length)
-    var i = 0
-    while (i < idx.length) { out(i) = dict(idx(i).toInt); i += 1 }
-    out
-  }
-  override def decodeBytes(bytes: Array[Byte]): Utf8Chunk = {
-    val in = new ByteReader(bytes)
-    in.readVarLong() // dict size
-    val dictLenLen = in.readVarLong().toInt
-    val dictLens = RleV2.decode(new ByteReader(in.readBytes(dictLenLen)))
-    val dictBlobLen = in.readVarLong().toInt
-    val dict = Utf8Chunk.fromBlob(in.readBytes(dictBlobLen), dictLens)
-    val idxLen = in.readVarLong().toInt
-    Utf8Chunk.fromDict(dict, RleV2.decode(new ByteReader(in.readBytes(idxLen))))
-  }
   def encodeBytes(values: Array[Array[Byte]]): Array[Byte] = {
     val (dict, idx) = StrUtil.dictBytes(values)
     val (dictBlob, dictLens) = StrUtil.concatBytes(dict)
@@ -262,6 +164,16 @@ object DictStringCodec extends StringCodec {
     out.writeBytes(idxBytes)
     out.toArray
   }
+  def decodeBytes(bytes: Array[Byte]): Utf8Chunk = {
+    val in = new ByteReader(bytes)
+    in.readVarLong() // dict size
+    val dictLenLen = in.readVarLong().toInt
+    val dictLens = RleV2.decode(new ByteReader(in.readBytes(dictLenLen)))
+    val dictBlobLen = in.readVarLong().toInt
+    val dict = Utf8Chunk.fromBlob(in.readBytes(dictBlobLen), dictLens)
+    val idxLen = in.readVarLong().toInt
+    Utf8Chunk.fromDict(dict, RleV2.decode(new ByteReader(in.readBytes(idxLen))))
+  }
 }
 
 /** [rle(lengths)][fsst(blob)] — symbol compression over the concatenated
@@ -269,29 +181,6 @@ object DictStringCodec extends StringCodec {
 object FsstStringCodec extends StringCodec {
   val id = 12
   val name = "fsst_str"
-  def encode(values: Array[String]): Array[Byte] = {
-    val (blob, lens) = StrUtil.concat(values)
-    val lenBytes = RleV2.encode(lens)
-    val fsst = Fsst.compress(blob)
-    val out = new ByteWriter(fsst.length + lenBytes.length + 16)
-    out.writeVarLong(lenBytes.length.toLong)
-    out.writeBytes(lenBytes)
-    out.writeBytes(fsst)
-    out.toArray
-  }
-  def decode(bytes: Array[Byte]): Array[String] = {
-    val in = new ByteReader(bytes)
-    val lenLen = in.readVarLong().toInt
-    val lens = RleV2.decode(new ByteReader(in.readBytes(lenLen)))
-    val blob = Fsst.decompress(in)
-    StrUtil.split(blob, lens)
-  }
-  override def decodeBytes(bytes: Array[Byte]): Utf8Chunk = {
-    val in = new ByteReader(bytes)
-    val lenLen = in.readVarLong().toInt
-    val lens = RleV2.decode(new ByteReader(in.readBytes(lenLen)))
-    Utf8Chunk.fromBlob(Fsst.decompress(in), lens)
-  }
   def encodeBytes(values: Array[Array[Byte]]): Array[Byte] = {
     val (blob, lens) = StrUtil.concatBytes(values)
     val lenBytes = RleV2.encode(lens)
@@ -302,6 +191,12 @@ object FsstStringCodec extends StringCodec {
     out.writeBytes(fsst)
     out.toArray
   }
+  def decodeBytes(bytes: Array[Byte]): Utf8Chunk = {
+    val in = new ByteReader(bytes)
+    val lenLen = in.readVarLong().toInt
+    val lens = RleV2.decode(new ByteReader(in.readBytes(lenLen)))
+    Utf8Chunk.fromBlob(Fsst.decompress(in), lens)
+  }
 }
 
 /** Dictionary whose blob is additionally FSST-compressed: wins on
@@ -309,47 +204,6 @@ object FsstStringCodec extends StringCodec {
 object DictFsstStringCodec extends StringCodec {
   val id = 13
   val name = "dict_fsst_str"
-  def encode(values: Array[String]): Array[Byte] = {
-    val distinct = new java.util.TreeSet[String]()
-    var i = 0
-    while (i < values.length) { distinct.add(values(i)); i += 1 }
-    val dict = new Array[String](distinct.size)
-    val it = distinct.iterator()
-    i = 0
-    while (it.hasNext) { dict(i) = it.next(); i += 1 }
-    val index = new java.util.HashMap[String, Integer](dict.length * 2)
-    i = 0
-    while (i < dict.length) { index.put(dict(i), i); i += 1 }
-    val idx = new Array[Long](values.length)
-    i = 0
-    while (i < values.length) { idx(i) = index.get(values(i)).toLong; i += 1 }
-    val dictPayload = FsstStringCodec.encode(dict)
-    val idxBytes = RleV2.encode(idx)
-    val out = new ByteWriter(dictPayload.length + idxBytes.length + 16)
-    out.writeVarLong(dictPayload.length.toLong)
-    out.writeBytes(dictPayload)
-    out.writeVarLong(idxBytes.length.toLong)
-    out.writeBytes(idxBytes)
-    out.toArray
-  }
-  def decode(bytes: Array[Byte]): Array[String] = {
-    val in = new ByteReader(bytes)
-    val dictLen = in.readVarLong().toInt
-    val dict = FsstStringCodec.decode(in.readBytes(dictLen))
-    val idxLen = in.readVarLong().toInt
-    val idx = RleV2.decode(new ByteReader(in.readBytes(idxLen)))
-    val out = new Array[String](idx.length)
-    var i = 0
-    while (i < idx.length) { out(i) = dict(idx(i).toInt); i += 1 }
-    out
-  }
-  override def decodeBytes(bytes: Array[Byte]): Utf8Chunk = {
-    val in = new ByteReader(bytes)
-    val dictLen = in.readVarLong().toInt
-    val dict = FsstStringCodec.decodeBytes(in.readBytes(dictLen))
-    val idxLen = in.readVarLong().toInt
-    Utf8Chunk.fromDict(dict, RleV2.decode(new ByteReader(in.readBytes(idxLen))))
-  }
   def encodeBytes(values: Array[Array[Byte]]): Array[Byte] = {
     val (dict, idx) = StrUtil.dictBytes(values)
     val dictPayload = FsstStringCodec.encodeBytes(dict)
@@ -361,6 +215,13 @@ object DictFsstStringCodec extends StringCodec {
     out.writeBytes(idxBytes)
     out.toArray
   }
+  def decodeBytes(bytes: Array[Byte]): Utf8Chunk = {
+    val in = new ByteReader(bytes)
+    val dictLen = in.readVarLong().toInt
+    val dict = FsstStringCodec.decodeBytes(in.readBytes(dictLen))
+    val idxLen = in.readVarLong().toInt
+    Utf8Chunk.fromDict(dict, RleV2.decode(new ByteReader(in.readBytes(idxLen))))
+  }
 }
 
 object StringCodecs {
@@ -371,22 +232,23 @@ object StringCodecs {
   def forId(id: Int): StringCodec =
     byId.getOrElse(id, throw new IllegalArgumentException(s"unknown string codec id $id"))
 
-  def encodeChunk(values: Array[String], codec: StringCodec,
-                  conf: CodecConf = CodecConf.Default): Array[Byte] = {
-    val payload = BlockCompression.wrap(codec.encode(values), conf)
-    val out = new Array[Byte](payload.length + 1)
-    out(0) = codec.id.toByte
-    System.arraycopy(payload, 0, out, 1, payload.length)
+  /** Each value's UTF-8 bytes; a null value stays null. */
+  def utf8(values: Array[String]): Array[Array[Byte]] = {
+    val out = new Array[Array[Byte]](values.length)
+    var i = 0
+    while (i < values.length) {
+      if (values(i) != null) out(i) = values(i).getBytes(StandardCharsets.UTF_8)
+      i += 1
+    }
     out
   }
 
-  def decodeChunk(bytes: Array[Byte]): Array[String] = {
-    val codec = forId(bytes(0).toInt)
-    codec.decode(BlockCompression.unwrap(bytes, 1))
-  }
+  /** Text entry point: [[encodeChunkBytes]] over the values' UTF-8. */
+  def encodeChunk(values: Array[String], codec: StringCodec,
+                  conf: CodecConf = CodecConf.Default): Array[Byte] =
+    encodeChunkBytes(utf8(values), codec, conf)
 
-  /** Byte-domain chunk encode (BINARY metadata columns) — decodes with
-    * [[decodeChunkBytes]], whose Utf8Chunk view is already byte-exact. */
+  /** Self-describing chunk: [codec id:1B][block-compressed payload]. */
   def encodeChunkBytes(values: Array[Array[Byte]], codec: StringCodec,
                        conf: CodecConf = CodecConf.Default): Array[Byte] = {
     val payload = BlockCompression.wrap(codec.encodeBytes(values), conf)
@@ -396,7 +258,6 @@ object StringCodecs {
     out
   }
 
-  /** Zero-copy chunk decode (see [[StringCodec.decodeBytes]]). */
   def decodeChunkBytes(bytes: Array[Byte]): Utf8Chunk = {
     val codec = forId(bytes(0).toInt)
     codec.decodeBytes(BlockCompression.unwrap(bytes, 1))

@@ -620,26 +620,12 @@ object GraftEncoder {
         compacted.length.toLong * bytesInPerValue, payload.length.toLong,
         minV, maxV, "", "", payload, bloom)
     case ExtraStrings(name, values) =>
-      val present = new Array[Boolean](values.length)
-      var nPresent = 0
-      var k = 0
-      while (k < values.length) {
-        if (values(k) != null) { present(k) = true; nPresent += 1 }
-        k += 1
-      }
-      val compacted = new Array[String](nPresent)
-      var j = 0
-      k = 0
-      while (k < values.length) {
-        if (present(k)) { compacted(j) = values(k); j += 1 }
-        k += 1
-      }
-      val (codec, inner) = CodecSelector.encodeStringsAuto(compacted, conf)
-      val payload = Nullable.frame(present, inner)
+      val compacted = values.filter(_ != null)
+      val (codec, payload) = nullableBytesStream(StringCodecs.utf8(values), conf)
       var bytesIn = 0L
       var minS = if (compacted.isEmpty) "" else compacted(0)
       var maxS = if (compacted.isEmpty) "" else compacted(0)
-      k = 0
+      var k = 0
       while (k < compacted.length) {
         bytesIn += compacted(k).length
         if (compareUtf8(compacted(k), minS) < 0) minS = compacted(k)
@@ -650,32 +636,34 @@ object GraftEncoder {
         if (conf.bloomColumns.contains(name) && compacted.nonEmpty)
           SegmentBloom.buildFromStrings(compacted)
         else Array.emptyByteArray
-      ColChunk(name, codec.id, codec.name, nPresent.toLong, bytesIn,
+      ColChunk(name, codec.id, codec.name, compacted.length.toLong, bytesIn,
         payload.length.toLong, 0L, 0L, minS, maxS, payload, bloom)
     case ExtraBinary(name, values) =>
-      val present = new Array[Boolean](values.length)
-      var nPresent = 0
-      var k = 0
-      while (k < values.length) {
-        if (values(k) != null) { present(k) = true; nPresent += 1 }
-        k += 1
-      }
-      val compacted = new Array[Array[Byte]](nPresent)
-      var j = 0
-      k = 0
-      while (k < values.length) {
-        if (present(k)) { compacted(j) = values(k); j += 1 }
-        k += 1
-      }
-      val (codec, inner) = CodecSelector.encodeBinaryAuto(compacted, conf)
-      val payload = Nullable.frame(present, inner)
-      var bytesIn = 0L
-      k = 0
-      while (k < compacted.length) { bytesIn += compacted(k).length; k += 1 }
+      val compacted = values.filter(_ != null)
+      val (codec, payload) = nullableBytesStream(values, conf)
       // neutral stats ("", 0): binary chunks never range-prune; nValues
       // still carries the non-null count for null pruning / COUNT pushdown
-      ColChunk(name, codec.id, codec.name, nPresent.toLong, bytesIn,
-        payload.length.toLong, 0L, 0L, "", "", payload, Array.emptyByteArray)
+      ColChunk(name, codec.id, codec.name, compacted.length.toLong,
+        compacted.map(_.length.toLong).sum, payload.length.toLong, 0L, 0L, "", "",
+        payload, Array.emptyByteArray)
+  }
+
+  /** A nullable string or binary stream: the selector over the non-null
+    * values (null = SQL null), [[Nullable]] PRESENT framing outside. */
+  private def nullableBytesStream(values: Array[Array[Byte]],
+                                  conf: CodecConf): (StringCodec, Array[Byte]) = {
+    val (codec, inner) = CodecSelector.encodeBytesAuto(values.filter(_ != null), conf)
+    (codec, Nullable.frame(values.map(_ != null), inner))
+  }
+
+  /** Per-row values of a nullable string or binary stream, absent slots
+    * null. */
+  private def nullableValues[T >: Null <: AnyRef : scala.reflect.ClassTag](payload: Array[Byte])(
+      value: (Utf8Chunk, Int) => T): Array[T] = {
+    val (chunk, present, toCompact) = Nullable.decodeStringsBytes(payload)
+    Array.tabulate(present.length) { i =>
+      if (present(i)) value(chunk, if (toCompact == null) i else toCompact(i)) else null
+    }
   }
 
   /** Decode one segment INCLUDING its metadata streams, in the STORED
@@ -689,8 +677,8 @@ object GraftEncoder {
   def decodeSegmentWithMeta(seg: Segment,
                             specs: Seq[MetaColSpec]): Iterator[(BucketedRow, Array[AnyRef])] = {
     val byCol = seg.cols.map(c => c.col -> c).toMap
-    val docIds = StringCodecs.decodeChunk(byCol("doc_id").payload)
-    val sources = StringCodecs.decodeChunk(byCol("source").payload)
+    val docIds = StringCodecs.decodeChunkBytes(byCol("doc_id").payload)
+    val sources = StringCodecs.decodeChunkBytes(byCol("source").payload)
     val nToks = IntCodecs.decodeChunkInt(byCol("n_tok").payload)
     val tokLens = IntCodecs.decodeChunkInt(byCol("tok_len").payload)
     val flat = IntCodecs.decodeChunkInt(byCol("tokens").payload)
@@ -714,12 +702,12 @@ object GraftEncoder {
       if (s.isList) {
         val (lens, lp) = Nullable.decodeInts(byCol(s.lenStream).payload)
         val elems: AnyRef =
-          if (s.isString) Nullable.decodeStrings(payload)
+          if (s.isString) nullableValues[String](payload)(_.string(_))
           else Nullable.decodeInts(payload)
         DecodedList(lens, lp, elems): AnyRef
       }
-      else if (s.isBinary) Nullable.decodeBinary(payload): AnyRef
-      else if (s.isString) Nullable.decodeStrings(payload): AnyRef
+      else if (s.isBinary) nullableValues[Array[Byte]](payload)(_.bytes(_)): AnyRef
+      else if (s.isString) nullableValues[String](payload)(_.string(_)): AnyRef
       else Nullable.decodeInts(payload): AnyRef
       }
     }.toArray
@@ -753,7 +741,7 @@ object GraftEncoder {
         }
         j += 1
       }
-      (BucketedRow(docIds(i), toks, nToks(i), sources(i), seg.bucket), metas)
+      (BucketedRow(docIds.string(i), toks, nToks(i), sources.string(i), seg.bucket), metas)
     }
   }
 

@@ -60,9 +60,12 @@ case class GraftDecodeStrings(child: Expression) extends UnaryExpression {
 }
 
 object GraftDecodeStrings {
-  def decode(payload: Array[Byte]): GenericArrayData =
-    new GenericArrayData(
-      graft.codec.StringCodecs.decodeChunk(payload).map(UTF8String.fromString))
+  /** Each value wraps its slice of the decoded UTF-8 blob, no copy. */
+  def decode(payload: Array[Byte]): GenericArrayData = {
+    val c = graft.codec.StringCodecs.decodeChunkBytes(payload)
+    new GenericArrayData(Array.tabulate[Any](c.size)(i =>
+      UTF8String.fromBytes(c.blob, c.offsets(i), c.lens(i))))
+  }
 }
 
 object SqlFunctions {

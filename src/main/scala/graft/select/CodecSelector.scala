@@ -186,99 +186,57 @@ object CodecSelector {
     (codec, encoded)
   }
 
-  def sampleStrings(values: Array[String], max: Int = 2048): Array[String] = {
+  /** Up to `max` evenly strided values: the string trial sample, which IS
+    * the chunk when it holds at most `max` values. */
+  def sampleStrings(values: Array[Array[Byte]], max: Int = 2048): Array[Array[Byte]] = {
     if (values.length <= max) return values
-    val out = new Array[String](max)
+    val out = new Array[Array[Byte]](max)
     val stride = values.length.toDouble / max
     var i = 0
     while (i < max) { out(i) = values((i * stride).toInt); i += 1 }
     out
   }
 
-  /** Pick the string codec for one column chunk (ORC's 0.8 dict threshold). */
-  def chooseString(values: Array[String], conf: CodecConf = CodecConf.Default): StringCodec =
-    trialString(values, conf)._1
+  /** Text entry point: [[encodeBytesAuto]] over the values' UTF-8, which
+    * is computed once per chunk and shared by every trial. */
+  def encodeStringsAuto(values: Array[String],
+                        conf: CodecConf = CodecConf.Default): (StringCodec, Array[Byte]) =
+    encodeBytesAuto(StringCodecs.utf8(values), conf)
 
-  /** [[chooseString]] plus, when the sample IS the chunk
-    * (`sampleStrings(values) eq values`, at most 2048 values), its trial
-    * encodings: the winner's bytes and RAW's when RAW was a candidate
-    * (null otherwise). */
-  private def trialString(values: Array[String],
-                          conf: CodecConf): (StringCodec, Array[Byte], Array[Byte]) = {
-    if (values.isEmpty) return (RawStringCodec, null, null)
+  /** Encode one byte-string chunk (UTF-8 text or BINARY values): on the
+    * sample, a distinct ratio at or under ORC's dict threshold makes the
+    * two dictionary codecs the candidates, else raw and FSST; the smallest
+    * trial chunk wins, then the raw guard. Encoding is deterministic, so
+    * when the sample is the whole chunk its trials ARE the encodes: the
+    * winner's bytes and RAW's are reused, and FSST builds a small chunk's
+    * symbol table once, not twice. */
+  def encodeBytesAuto(values: Array[Array[Byte]],
+                      conf: CodecConf = CodecConf.Default): (StringCodec, Array[Byte]) = {
+    if (values.isEmpty) return (RawStringCodec, StringCodecs.encodeChunkBytes(values, RawStringCodec, conf))
     val s = sampleStrings(values)
-    val distinct = new java.util.HashSet[String]()
+    val distinct = new java.util.HashSet[java.nio.ByteBuffer]()
     var i = 0
-    while (i < s.length) { distinct.add(s(i)); i += 1 }
-    val ratio = distinct.size.toDouble / s.length
+    while (i < s.length) { distinct.add(java.nio.ByteBuffer.wrap(s(i))); i += 1 }
     val candidates: List[StringCodec] =
-      if (ratio <= conf.dictThreshold) List(DictStringCodec, DictFsstStringCodec)
+      if (distinct.size.toDouble / s.length <= conf.dictThreshold)
+        List(DictStringCodec, DictFsstStringCodec)
       else List(RawStringCodec, FsstStringCodec)
-    var best: StringCodec = candidates.head
+    var best: StringCodec = null
     var bestBytes: Array[Byte] = null
-    var raw: Array[Byte] = null
+    var trialRaw: Array[Byte] = null
     candidates.foreach { c =>
-      val b = StringCodecs.encodeChunk(s, c, conf)
-      if (c.id == RawStringCodec.id) raw = b
+      val b = StringCodecs.encodeChunkBytes(s, c, conf)
+      if (c.id == RawStringCodec.id) trialRaw = b
       if (bestBytes == null || b.length < bestBytes.length) { best = c; bestBytes = b }
     }
-    if (s eq values) (best, bestBytes, raw) else (best, null, null)
-  }
-
-  /** Encode one string chunk with the selected codec, then the raw guard.
-    * Encoding is deterministic, so a trial over the whole chunk IS its
-    * encode: FSST builds a small chunk's symbol table once, not twice. */
-  def encodeStringsAuto(values: Array[String],
-                        conf: CodecConf = CodecConf.Default): (StringCodec, Array[Byte]) = {
-    val (codec, trialBytes, trialRaw) = trialString(values, conf)
-    val encoded =
-      if (trialBytes != null) trialBytes else StringCodecs.encodeChunk(values, codec, conf)
-    if (codec.id != RawStringCodec.id) {
+    val whole = s eq values
+    val encoded = if (whole) bestBytes else StringCodecs.encodeChunkBytes(values, best, conf)
+    if (best.id != RawStringCodec.id) {
       val raw =
-        if (trialRaw != null) trialRaw else StringCodecs.encodeChunk(values, RawStringCodec, conf)
+        if (whole && trialRaw != null) trialRaw
+        else StringCodecs.encodeChunkBytes(values, RawStringCodec, conf)
       if (raw.length < encoded.length) return (RawStringCodec, raw)
     }
-    (codec, encoded)
-  }
-
-  /** Byte-domain twin of [[encodeStringsAuto]] (BINARY metadata columns):
-    * the same dict-threshold heuristic over sampled distinct ratio (bytes
-    * wrapped for hashing), the same raw-fallback guard. */
-  def encodeBinaryAuto(values: Array[Array[Byte]],
-                       conf: CodecConf = CodecConf.Default): (StringCodec, Array[Byte]) = {
-    val codec: StringCodec =
-      if (values.isEmpty) RawStringCodec
-      else {
-        val max = 2048
-        val s =
-          if (values.length <= max) values
-          else {
-            val out = new Array[Array[Byte]](max)
-            val stride = values.length.toDouble / max
-            var i = 0
-            while (i < max) { out(i) = values((i * stride).toInt); i += 1 }
-            out
-          }
-        val distinct = new java.util.HashSet[java.nio.ByteBuffer]()
-        var i = 0
-        while (i < s.length) { distinct.add(java.nio.ByteBuffer.wrap(s(i))); i += 1 }
-        val ratio = distinct.size.toDouble / s.length
-        val candidates: List[StringCodec] =
-          if (ratio <= conf.dictThreshold) List(DictStringCodec, DictFsstStringCodec)
-          else List(RawStringCodec, FsstStringCodec)
-        var best: StringCodec = candidates.head
-        var bestSize = Long.MaxValue
-        candidates.foreach { c =>
-          val sz = StringCodecs.encodeChunkBytes(s, c, conf).length.toLong
-          if (sz < bestSize) { best = c; bestSize = sz }
-        }
-        best
-      }
-    val encoded = StringCodecs.encodeChunkBytes(values, codec, conf)
-    if (codec.id != RawStringCodec.id) {
-      val raw = StringCodecs.encodeChunkBytes(values, RawStringCodec, conf)
-      if (raw.length < encoded.length) return (RawStringCodec, raw)
-    }
-    (codec, encoded)
+    (best, encoded)
   }
 }

@@ -189,15 +189,41 @@ class CodecKernelSpec extends AnyFunSuite {
       Array("大熊和奏", "🤔", "", "plain"))
     for (codec <- StringCodecs.all; p <- payloads) {
       val enc = StringCodecs.encodeChunk(p, codec)
-      assert(StringCodecs.decodeChunk(enc).toSeq === p.toSeq, s"codec=${codec.name}")
+      assert(ChunkValues.strings(enc) === p.toSeq, s"codec=${codec.name}")
     }
   }
 
   test("dict string: low-cardinality column compresses to near-nothing") {
     val values = Array.tabulate(10000)(i => s"source_${i % 3}")
-    val enc = DictStringCodec.encode(values)
-    assert(DictStringCodec.decode(enc).toSeq === values.toSeq)
+    val enc = DictStringCodec.encodeBytes(StringCodecs.utf8(values))
+    assert(ChunkValues.strings(DictStringCodec.decodeBytes(enc)) === values.toSeq)
     assert(enc.length < 4000, s"got ${enc.length}")
+  }
+
+  test("dictionary chunks whose table was sorted in UTF-16 order still decode") {
+    def unhex(h: String): Array[Byte] = h.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray
+    // Chunks written when the dictionary codecs sorted their tables by
+    // String.compareTo (UTF-16 order: "a" < "大熊" < "🤔" < U+FFFD). Today
+    // they sort by unsigned UTF-8 bytes, code-point order, where U+FFFD
+    // (EF BF BD) comes before "🤔" (F0 9F A4 94). Tables are index-addressed,
+    // so both orders decode to the same values.
+    val five = Array("\uFFFD", "🤔", "大熊", "a", "")
+    val nine = Array("a", "", "大熊", "\uFFFD", "a", "🤔", "", "\uFFFD", "大熊")
+    val recorded = Seq(
+      (five, DictStringCodec,
+        "0b001f050705010504208c060e61e5a4a7e7868af09fa494efbfbd06050305080001"),
+      (five, DictFsstStringCodec,
+        "0d00251d0705010504208c06020861e5a4a7e7868af0069fa494efbfbd0e02000106050305080001"),
+      (nine, DictStringCodec,
+        "0b0022050705010504208c060e61e5a4a7e7868af09fa494efbfbd09090109040284628004"),
+      (nine, DictFsstStringCodec,
+        "0d00281d0705010504208c06020861e5a4a7e7868af0069fa494efbfbd0e02000109090109040284628004"))
+    for ((values, codec, hex) <- recorded) {
+      assert(ChunkValues.strings(unhex(hex)) === values.toSeq, s"old ${codec.name}")
+      val now = StringCodecs.encodeChunk(values, codec)
+      assert(ChunkValues.strings(now) === values.toSeq, s"new ${codec.name}")
+      assert(!now.sameElements(unhex(hex)), s"${codec.name}: table in code-point order")
+    }
   }
 
   test("TokenPack: shuffle varint pack round-trips, incl. edge ints; vocab ids pack small") {
@@ -221,15 +247,8 @@ class CodecKernelSpec extends AnyFunSuite {
 
   test("selector: string encode reusing the trial bytes equals choose + encode + raw guard") {
     import graft.select.CodecSelector
-    def reference(values: Array[String]): (StringCodec, Array[Byte]) = {
-      val c = CodecSelector.chooseString(values)
-      val enc = StringCodecs.encodeChunk(values, c, CodecConf.Default)
-      if (c.id != RawStringCodec.id) {
-        val raw = StringCodecs.encodeChunk(values, RawStringCodec, CodecConf.Default)
-        if (raw.length < enc.length) return (RawStringCodec, raw)
-      }
-      (c, enc)
-    }
+    def fresh(values: Array[String], c: StringCodec): Array[Byte] =
+      StringCodecs.encodeChunk(values, c, CodecConf.Default)
     val rnd = new scala.util.Random(7L)
     def randomWord(len: Int): String =
       new String(Array.fill(len)((33 + rnd.nextInt(94)).toChar))
@@ -249,9 +268,18 @@ class CodecKernelSpec extends AnyFunSuite {
     for (n <- Seq(1, 2047, 2048, 2049, 5000); gen <- gens) {
       val values = gen(n)
       val (c, bytes) = CodecSelector.encodeStringsAuto(values)
-      val (rc, rbytes) = reference(values)
-      assert(c.id === rc.id, s"codec at n=$n")
-      assert(java.util.Arrays.equals(bytes, rbytes), s"bytes at n=$n, codec ${c.name}")
+      assert(java.util.Arrays.equals(bytes, fresh(values, c)), s"bytes at n=$n, codec ${c.name}")
+      val raw = fresh(values, RawStringCodec).length
+      assert(bytes.length <= raw, s"raw guard at n=$n")
+      if (n <= 2048) {
+        // the trial sample is the chunk: the winner is the smallest of its
+        // family (split at the dict threshold), or raw when that is smaller
+        val family =
+          if (values.distinct.length.toDouble / n <= CodecConf.Default.dictThreshold)
+            Seq(DictStringCodec, DictFsstStringCodec)
+          else Seq(RawStringCodec, FsstStringCodec)
+        assert(bytes.length === (raw +: family.map(fresh(values, _).length)).min, s"size at n=$n")
+      }
       winners += c.name
     }
     assert(winners === StringCodecs.all.map(_.name).toSet, s"winners seen: $winners")

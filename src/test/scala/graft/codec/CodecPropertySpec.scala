@@ -151,39 +151,44 @@ object CodecPropertySpec extends Properties("codecs") {
 
   property("every string codec round-trips") = forAll(genStrings) { values =>
     StringCodecs.all.forall { c =>
-      StringCodecs.decodeChunk(StringCodecs.encodeChunk(values, c)).toSeq == values.toSeq
+      ChunkValues.strings(StringCodecs.encodeChunk(values, c)) == values.toSeq
     }
   }
 
   property("auto-selected string chunk round-trips") = forAll(genStrings) { values =>
     val (_, encoded) = CodecSelector.encodeStringsAuto(values)
-    StringCodecs.decodeChunk(encoded).toSeq == values.toSeq
+    ChunkValues.strings(encoded) == values.toSeq
   }
 
-  property("zero-copy byte decode matches String decode, every codec") =
-    forAll(genStrings) { values =>
-      StringCodecs.all.forall { c =>
-        val encoded = StringCodecs.encodeChunk(values, c)
-        val chunk = StringCodecs.decodeChunkBytes(encoded)
-        chunk.size == values.length &&
-          values.indices.forall(i => chunk.string(i) == values(i))
+  // BINARY values: any bytes, UTF-8-invalid ones included
+  private val genBinary: Gen[Array[Array[Byte]]] = for {
+    n <- Gen.chooseNum(0, 300)
+    card <- Gen.oneOf(1, 5, 100000)
+    pool <- Gen.listOfN(math.min(card, 64),
+      Gen.listOf(Gen.chooseNum(Byte.MinValue, Byte.MaxValue)).map(_.take(40).toArray))
+    vs <-
+      if (card >= 100000) Gen.listOfN(n, Gen.listOf(Gen.chooseNum(Byte.MinValue, Byte.MaxValue))
+        .map(_.take(40).toArray))
+      else Gen.listOfN(n, Gen.oneOf(if (pool.isEmpty) List(Array.emptyByteArray) else pool))
+  } yield vs.toArray
+
+  property("every string codec and the selector round-trip arbitrary bytes") =
+    forAll(genBinary) { values =>
+      def same(chunk: Array[Byte]): Boolean = {
+        val c = StringCodecs.decodeChunkBytes(chunk)
+        c.size == values.length && values.indices.forall(i => c.bytes(i).sameElements(values(i)))
       }
+      StringCodecs.all.forall(c => same(StringCodecs.encodeChunkBytes(values, c))) &&
+        same(CodecSelector.encodeBytesAuto(values)._2)
     }
 
-  property("nullable zero-copy string decode matches nullable String decode") = {
+  property("nullable string chunk round-trips via the byte decode") = {
     val genNullable: Gen[Array[String]] = for {
       vs <- genStrings
       mask <- Gen.listOfN(vs.length, Gen.prob(0.3))
     } yield vs.zip(mask).map { case (v, isNull) => if (isNull) null else v }
     forAll(genNullable) { values =>
-      val encoded = Nullable.encodeStrings(values, RawStringCodec)
-      val viaStrings = Nullable.decodeStrings(encoded)
-      val (chunk, present, toCompact) = Nullable.decodeStringsBytes(encoded)
-      def at(i: Int): String =
-        if (!present(i)) null
-        else chunk.string(if (toCompact == null) i else toCompact(i))
-      present.length == values.length &&
-        values.indices.forall(i => at(i) == viaStrings(i) && viaStrings(i) == values(i))
+      ChunkValues.nullableStrings(ChunkValues.frameStrings(values, RawStringCodec)) == values.toSeq
     }
   }
 

@@ -21,7 +21,8 @@ object NullableSpec extends Properties("nullable") {
   property("nullable int chunks round-trip (values + present bitmap)") =
     forAll(genIntsWithNulls) { case (values, present) =>
       IntCodecs.all.forall { c =>
-        val enc = Nullable.encodeInts(values, present, c)
+        val enc = Nullable.frame(present,
+          IntCodecs.encodeChunk(Nullable.compactLongs(values, present), c))
         val (vOut, pOut) = Nullable.decodeInts(enc)
         pOut.toSeq == present.toSeq &&
           vOut.indices.forall(i => !present(i) || vOut(i) == values(i))
@@ -31,7 +32,8 @@ object NullableSpec extends Properties("nullable") {
   property("dense (no-null) framing costs exactly one flag byte") =
     forAll(Gen.listOf(Gen.chooseNum(0L, 50256L))) { vs =>
       val values = vs.toArray
-      val enc = Nullable.encodeInts(values, Array.fill(values.length)(true), RleV2Codec)
+      val enc = Nullable.frame(Array.fill(values.length)(true),
+        IntCodecs.encodeChunk(values, RleV2Codec))
       enc.length == IntCodecs.encodeChunk(values, RleV2Codec).length + 1
     }
 
@@ -46,7 +48,7 @@ object NullableSpec extends Properties("nullable") {
   property("nullable string chunks round-trip (null != empty string)") =
     forAll(genStringsWithNulls) { values =>
       StringCodecs.all.forall { c =>
-        Nullable.decodeStrings(Nullable.encodeStrings(values, c)).toSeq == values.toSeq
+        ChunkValues.nullableStrings(ChunkValues.frameStrings(values, c)) == values.toSeq
       }
     }
 }

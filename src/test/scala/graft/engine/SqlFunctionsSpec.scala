@@ -48,7 +48,7 @@ class SqlFunctionsSpec extends AnyFunSuite {
       val sql = spark.sql(
         s"SELECT graft_decode_strings(X'${byCol(col).payload.map("%02x".format(_)).mkString}')")
         .collect()(0).getSeq[String](0)
-      assert(sql === graft.codec.StringCodecs.decodeChunk(byCol(col).payload).toSeq)
+      assert(sql === graft.codec.ChunkValues.strings(byCol(col).payload))
     }
     // whole-table cross-check entirely in SQL vs entirely in the engine
     val sqlTotal = spark.sql(

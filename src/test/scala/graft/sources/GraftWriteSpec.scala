@@ -266,4 +266,25 @@ class GraftWriteSpec extends AnyFunSuite {
       }
     } finally pool.shutdownNow()
   }
+
+  test("part-files carry parquet page CRCs on the payload columns") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.parquet.format.Util
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val dir = tmp()
+    tokenDf(50).write.format("graft").option("buckets", "1").mode(SaveMode.Append).save(dir)
+    val conf = spark.sessionState.newHadoopConf()
+    val file = HadoopInputFile.fromPath(
+      new org.apache.hadoop.fs.Path(GraftLayout.listDataFiles(dir, conf).head), conf)
+    val reader = ParquetFileReader.open(file)
+    val chunk = try reader.getFooter.getBlocks.get(0).getColumns.asScala
+      .find(_.getPath.toDotString == "c_tokens__payload").get
+    finally reader.close()
+    val in = file.newStream()
+    val header = try { in.seek(chunk.getStartingPos); Util.readPageHeader(in) } finally in.close()
+    // parquet-hadoop writes page checksums by default; readers check them
+    // only when asked (ParquetReadOptions.usePageChecksumVerification)
+    assert(header.isSetCrc)
+  }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.sources.{And => SAnd, EqualTo, GreaterThan, In, Less
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.codec.{CodecConf, Nullable}
+import graft.codec.{ChunkValues, CodecConf, Nullable}
 import graft.select.CodecSelector
 
 /** Unit contract of the metadata-column machinery: the sortable-double
@@ -253,7 +253,7 @@ class MetaColumnsSpec extends AnyFunSuite {
       val present = vals.map(_ != null)
       val compacted = vals.filter(_ != null)
       val (_, inner) = CodecSelector.encodeStringsAuto(compacted, CodecConf.Default)
-      val got = Nullable.decodeStrings(Nullable.frame(present, inner))
+      val got = ChunkValues.nullableStrings(Nullable.frame(present, inner))
       assert(got.toSeq === vals.toSeq)
     }
   }

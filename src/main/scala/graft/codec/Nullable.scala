@@ -114,4 +114,14 @@ object Nullable {
       case other => throw new IllegalStateException(s"bad nullable flag $other")
     }
   }
+
+  /** Per-row values of a string or binary stream, absent slots null:
+    * `value(chunk, j)` builds compacted value j of [[decodeStringsBytes]]. */
+  def decodeRows[T >: Null <: AnyRef : scala.reflect.ClassTag](bytes: Array[Byte])(
+      value: (Utf8Chunk, Int) => T): Array[T] = {
+    val (chunk, present, toCompact) = decodeStringsBytes(bytes)
+    Array.tabulate(present.length) { i =>
+      if (present(i)) value(chunk, if (toCompact == null) i else toCompact(i)) else null
+    }
+  }
 }

@@ -99,26 +99,20 @@ private[codec] object StrUtil {
   /** Distinct values sorted by unsigned byte order (code-point order for
     * UTF-8, the order ORC's dictionary writer uses) + per-value dict index. */
   def dictBytes(values: Array[Array[Byte]]): (Array[Array[Byte]], Array[Long]) = {
-    val firstSeen = new java.util.HashMap[java.nio.ByteBuffer, Integer]()
-    val keys = new java.util.ArrayList[Array[Byte]]()
-    val seenId = new Array[Int](values.length)
-    var i = 0
-    while (i < values.length) {
-      val k = java.nio.ByteBuffer.wrap(values(i))
-      val id = firstSeen.putIfAbsent(k, keys.size)
-      if (id == null) { seenId(i) = keys.size; keys.add(values(i)) } else seenId(i) = id
-      i += 1
+    val cmp = new java.util.Comparator[Array[Byte]] {
+      def compare(a: Array[Byte], b: Array[Byte]): Int =
+        java.util.Arrays.compareUnsigned(a, b)
     }
-    val order = Array.tabulate[Integer](keys.size)(Integer.valueOf)
-    java.util.Arrays.sort(order,
-      (a: Integer, b: Integer) => java.util.Arrays.compareUnsigned(keys.get(a), keys.get(b)))
-    val dict = new Array[Array[Byte]](order.length)
-    val rank = new Array[Int](order.length)
+    val distinct = new java.util.TreeMap[Array[Byte], Integer](cmp)
+    var i = 0
+    while (i < values.length) { distinct.put(values(i), 0); i += 1 }
+    val dict = new Array[Array[Byte]](distinct.size)
+    val it = distinct.keySet().iterator()
     i = 0
-    while (i < order.length) { dict(i) = keys.get(order(i)); rank(order(i)) = i; i += 1 }
+    while (it.hasNext) { val k = it.next(); dict(i) = k; distinct.put(k, i); i += 1 }
     val idx = new Array[Long](values.length)
     i = 0
-    while (i < values.length) { idx(i) = rank(seenId(i)).toLong; i += 1 }
+    while (i < values.length) { idx(i) = distinct.get(values(i)).toLong; i += 1 }
     (dict, idx)
   }
 }

@@ -656,16 +656,6 @@ object GraftEncoder {
     (codec, Nullable.frame(values.map(_ != null), inner))
   }
 
-  /** Per-row values of a nullable string or binary stream, absent slots
-    * null. */
-  private def nullableValues[T >: Null <: AnyRef : scala.reflect.ClassTag](payload: Array[Byte])(
-      value: (Utf8Chunk, Int) => T): Array[T] = {
-    val (chunk, present, toCompact) = Nullable.decodeStringsBytes(payload)
-    Array.tabulate(present.length) { i =>
-      if (present(i)) value(chunk, if (toCompact == null) i else toCompact(i)) else null
-    }
-  }
-
   /** Decode one segment INCLUDING its metadata streams, in the STORED
     * domain: per row a [[BucketedRow]] (bucket = the segment's own — valid
     * while the table's bucket count is unchanged, since bucket is a pure
@@ -702,12 +692,12 @@ object GraftEncoder {
       if (s.isList) {
         val (lens, lp) = Nullable.decodeInts(byCol(s.lenStream).payload)
         val elems: AnyRef =
-          if (s.isString) nullableValues[String](payload)(_.string(_))
+          if (s.isString) Nullable.decodeRows[String](payload)(_.string(_))
           else Nullable.decodeInts(payload)
         DecodedList(lens, lp, elems): AnyRef
       }
-      else if (s.isBinary) nullableValues[Array[Byte]](payload)(_.bytes(_)): AnyRef
-      else if (s.isString) nullableValues[String](payload)(_.string(_)): AnyRef
+      else if (s.isBinary) Nullable.decodeRows[Array[Byte]](payload)(_.bytes(_)): AnyRef
+      else if (s.isString) Nullable.decodeRows[String](payload)(_.string(_)): AnyRef
       else Nullable.decodeInts(payload): AnyRef
       }
     }.toArray

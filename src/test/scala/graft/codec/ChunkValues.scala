@@ -8,12 +8,8 @@ object ChunkValues {
   def strings(chunk: Array[Byte]): Seq[String] = strings(StringCodecs.decodeChunkBytes(chunk))
 
   /** A [[Nullable]]-framed string stream's rows, absent slots null. */
-  def nullableStrings(payload: Array[Byte]): Seq[String] = {
-    val (c, present, toCompact) = Nullable.decodeStringsBytes(payload)
-    present.indices.map { i =>
-      if (present(i)) c.string(if (toCompact == null) i else toCompact(i)) else null
-    }
-  }
+  def nullableStrings(payload: Array[Byte]): Seq[String] =
+    Nullable.decodeRows[String](payload)(_.string(_)).toSeq
 
   /** `values` (null = SQL null) framed over one codec's chunk of the
     * non-null values. */

@@ -271,15 +271,19 @@ class CodecKernelSpec extends AnyFunSuite {
       assert(java.util.Arrays.equals(bytes, fresh(values, c)), s"bytes at n=$n, codec ${c.name}")
       val raw = fresh(values, RawStringCodec).length
       assert(bytes.length <= raw, s"raw guard at n=$n")
-      if (n <= 2048) {
-        // the trial sample is the chunk: the winner is the smallest of its
-        // family (split at the dict threshold), or raw when that is smaller
-        val family =
-          if (values.distinct.length.toDouble / n <= CodecConf.Default.dictThreshold)
-            Seq(DictStringCodec, DictFsstStringCodec)
-          else Seq(RawStringCodec, FsstStringCodec)
-        assert(bytes.length === (raw +: family.map(fresh(values, _).length)).min, s"size at n=$n")
-      }
+      // the winner is the smallest trial on the sample (the chunk itself
+      // up to 2048 values) among its family, split at the dict threshold;
+      // raw replaces it when a fresh raw encode of the chunk is smaller
+      val sample = CodecSelector.sampleStrings(StringCodecs.utf8(values))
+      val family =
+        if (sample.map(_.toSeq).distinct.length.toDouble / sample.length <=
+          CodecConf.Default.dictThreshold) Seq(DictStringCodec, DictFsstStringCodec)
+        else Seq(RawStringCodec, FsstStringCodec)
+      val trialWinner = family.minBy(StringCodecs.encodeChunkBytes(sample, _).length)
+      val expected =
+        if (trialWinner != RawStringCodec && raw < fresh(values, trialWinner).length) RawStringCodec
+        else trialWinner
+      assert(c === expected, s"codec at n=$n")
       winners += c.name
     }
     assert(winners === StringCodecs.all.map(_.name).toSet, s"winners seen: $winners")

@@ -48,8 +48,11 @@ object Utf8Chunk {
     var pos = 0L
     var i = 0
     while (i < lens.length) {
-      require(lens(i) >= 0 && pos + lens(i) <= blob.length,
-        s"string lengths overrun a ${blob.length}-byte blob at value $i")
+      // an explicit throw, not `require`: its by-name message would be a
+      // closure per value on the scan's decode path
+      if (lens(i) < 0 || pos + lens(i) > blob.length)
+        throw new IllegalArgumentException(
+          s"string lengths overrun a ${blob.length}-byte blob at value $i")
       offs(i) = pos.toInt
       ls(i) = lens(i).toInt
       pos += ls(i)

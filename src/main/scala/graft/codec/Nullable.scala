@@ -116,12 +116,12 @@ object Nullable {
   }
 
   /** Per-row values of a string or binary stream, absent slots null:
-    * `value(chunk, j)` builds compacted value j of [[decodeStringsBytes]]. */
+    * `values(chunk)` builds the compacted values of [[decodeStringsBytes]]. */
   def decodeRows[T >: Null <: AnyRef : scala.reflect.ClassTag](bytes: Array[Byte])(
-      value: (Utf8Chunk, Int) => T): Array[T] = {
+      values: Utf8Chunk => Array[T]): Array[T] = {
     val (chunk, present, toCompact) = decodeStringsBytes(bytes)
-    Array.tabulate(present.length) { i =>
-      if (present(i)) value(chunk, if (toCompact == null) i else toCompact(i)) else null
-    }
+    val compacted = values(chunk)
+    if (toCompact == null) compacted
+    else Array.tabulate(present.length)(i => if (present(i)) compacted(toCompact(i)) else null)
   }
 }

@@ -34,6 +34,31 @@ final class Utf8Chunk(val blob: Array[Byte], val offsets: Array[Int],
   def size: Int = lens.length
   def string(i: Int): String =
     new String(blob, offsets(i), lens(i), StandardCharsets.UTF_8)
+  /** Every value as a `String`. In a dictionary view (values overlapping
+    * in the blob) each entry is decoded once and its `String` shared by
+    * every value that points at it. */
+  def strings(): Array[String] = {
+    val out = new Array[String](size)
+    var total = 0L
+    var i = 0
+    while (i < size) { total += lens(i); i += 1 }
+    if (total <= blob.length) {
+      i = 0
+      while (i < size) { out(i) = string(i); i += 1 }
+    } else {
+      // the value last built at each offset, and its byte length
+      val atOff = new Array[String](blob.length + 1)
+      val lenAt = new Array[Int](blob.length + 1)
+      i = 0
+      while (i < size) {
+        val o = offsets(i)
+        if (atOff(o) == null || lenAt(o) != lens(i)) { atOff(o) = string(i); lenAt(o) = lens(i) }
+        out(i) = atOff(o)
+        i += 1
+      }
+    }
+    out
+  }
   /** A copy of value i's bytes. */
   def bytes(i: Int): Array[Byte] =
     java.util.Arrays.copyOfRange(blob, offsets(i), offsets(i) + lens(i))

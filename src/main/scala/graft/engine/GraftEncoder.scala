@@ -667,8 +667,8 @@ object GraftEncoder {
   def decodeSegmentWithMeta(seg: Segment,
                             specs: Seq[MetaColSpec]): Iterator[(BucketedRow, Array[AnyRef])] = {
     val byCol = seg.cols.map(c => c.col -> c).toMap
-    val docIds = StringCodecs.decodeChunkBytes(byCol("doc_id").payload)
-    val sources = StringCodecs.decodeChunkBytes(byCol("source").payload)
+    val docIds = StringCodecs.decodeChunkBytes(byCol("doc_id").payload).strings()
+    val sources = StringCodecs.decodeChunkBytes(byCol("source").payload).strings()
     val nToks = IntCodecs.decodeChunkInt(byCol("n_tok").payload)
     val tokLens = IntCodecs.decodeChunkInt(byCol("tok_len").payload)
     val flat = IntCodecs.decodeChunkInt(byCol("tokens").payload)
@@ -692,12 +692,13 @@ object GraftEncoder {
       if (s.isList) {
         val (lens, lp) = Nullable.decodeInts(byCol(s.lenStream).payload)
         val elems: AnyRef =
-          if (s.isString) Nullable.decodeRows[String](payload)(_.string(_))
+          if (s.isString) Nullable.decodeRows[String](payload)(_.strings())
           else Nullable.decodeInts(payload)
         DecodedList(lens, lp, elems): AnyRef
       }
-      else if (s.isBinary) Nullable.decodeRows[Array[Byte]](payload)(_.bytes(_)): AnyRef
-      else if (s.isString) Nullable.decodeRows[String](payload)(_.string(_)): AnyRef
+      else if (s.isBinary)
+        Nullable.decodeRows[Array[Byte]](payload)(c => Array.tabulate(c.size)(c.bytes)): AnyRef
+      else if (s.isString) Nullable.decodeRows[String](payload)(_.strings()): AnyRef
       else Nullable.decodeInts(payload): AnyRef
       }
     }.toArray
@@ -731,7 +732,7 @@ object GraftEncoder {
         }
         j += 1
       }
-      (BucketedRow(docIds.string(i), toks, nToks(i), sources.string(i), seg.bucket), metas)
+      (BucketedRow(docIds(i), toks, nToks(i), sources(i), seg.bucket), metas)
     }
   }
 

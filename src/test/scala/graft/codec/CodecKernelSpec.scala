@@ -200,6 +200,16 @@ class CodecKernelSpec extends AnyFunSuite {
     assert(enc.length < 4000, s"got ${enc.length}")
   }
 
+  test("dictionary views build one String per entry") {
+    // "" and "a" start at the same dictionary offset
+    val values = Array("b", "", "a", "b", "", "a", "b")
+    for (codec <- Seq(DictStringCodec, DictFsstStringCodec)) {
+      val s = StringCodecs.decodeChunkBytes(StringCodecs.encodeChunk(values, codec)).strings()
+      assert(s.toSeq === values.toSeq, codec.name)
+      assert((s(0) eq s(3)) && (s(3) eq s(6)), s"${codec.name}: one String for \"b\"")
+    }
+  }
+
   test("dictionary chunks whose table was sorted in UTF-16 order still decode") {
     def unhex(h: String): Array[Byte] = h.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray
     // Chunks written when the dictionary codecs sorted their tables by

@@ -5,7 +5,11 @@ change run per pair, the side that runs first alternating) for each
 workload, then prints, for every end-to-end metric of BENCHMARK.json and
 every workload: each side's median and quartiles, how many pairs the change
 won, whether the change's median stays within the metric's bound, and
-whether a gain can be claimed. Where the parent's interquartile spread,
+whether a gain can be claimed. Below them, as diagnostics that are not
+gated, it prints each operation kind's median p50 on both sides and the
+pairs the change won, from the runs' `[sensitivity] kind=<k> n=<n>
+p50_ms=<x>` lines, so a change that moves one kind shows there even when
+the pooled metrics barely move. Where the parent's interquartile spread,
 relative to its median, is wider than the bound, the bound check is
 UNRESOLVED unless every change run reads better than every parent run. A gain needs the change to win at least nine
 tenths of the pairs (ties count for neither side) and the medians to differ
@@ -22,12 +26,14 @@ temporary directory, removed again at the end. With directories, the two
 checkouts are used as they are. Pair i runs seed `--seed + i` on both sides
 with the benchmark's `run_seconds`. `--metric` adds metrics beyond the
 end-to-end ones (for example per-layer metrics of `--trace 1` runs); the
-direction comes from BENCHMARK.json. Every run's result is appended to
-`--out` as it finishes. Nothing under `perfbench/` is changed.
+direction comes from BENCHMARK.json. Every run's result, with its per-kind
+p50s, is appended to `--out` as it finishes, and one closing record holds
+the per-kind medians. Nothing under `perfbench/` is changed.
 """
 import argparse
 import json
 import os
+import re
 import shutil
 import subprocess
 import sys
@@ -50,8 +56,22 @@ def load_benchmark(checkout):
         return json.load(f)
 
 
+KIND_LINE = re.compile(r"\[sensitivity\] kind=(\S+) n=(\d+) p50_ms=([0-9.eE+-]+)")
+
+
+def kind_p50s(stdout):
+    """Each operation kind's sample count and p50 from a run's output."""
+    kinds = {}
+    for line in stdout.splitlines():
+        m = KIND_LINE.search(line)
+        if m:
+            kinds[m.group(1)] = {"n": int(m.group(2)), "p50_ms": float(m.group(3))}
+    return kinds
+
+
 def run_once(checkout, command, workload, seed, seconds, trace):
-    """One benchmark run; returns the parsed result JSON (last stdout line)."""
+    """One benchmark run; returns the parsed result JSON (last stdout line)
+    and the run's per-kind p50s."""
     cmd = list(command) + ["--workload", workload, "--seed", str(seed),
                            "--seconds", str(seconds), "--trace", str(trace)]
     p = subprocess.run(cmd, cwd=checkout, stdout=subprocess.PIPE, stderr=subprocess.PIPE,
@@ -65,8 +85,8 @@ def run_once(checkout, command, workload, seed, seconds, trace):
             result = None
     if p.returncode != 0 or result is None:
         sys.stderr.write(p.stderr[-3000:])
-        return {"error": f"exit {p.returncode}", "metrics": {}}
-    return result
+        return {"error": f"exit {p.returncode}", "metrics": {}}, {}
+    return result, kind_p50s(p.stdout)
 
 
 def better_of(bench, name):
@@ -138,6 +158,42 @@ def summarize(bench, runs, extra_metrics):
     return ok
 
 
+def kind_medians(runs):
+    """Per workload and operation kind: both sides' median p50 over the
+    complete pairs and the pairs the change won (lower p50 wins)."""
+    out = {}
+    for w in sorted({r["workload"] for r in runs}):
+        pairs = {}
+        for r in runs:
+            if r["workload"] == w:
+                pairs.setdefault(r["pair"], {})[r["side"]] = r.get("kinds", {})
+        complete = [p for _, p in sorted(pairs.items()) if "parent" in p and "change" in p]
+        kinds = sorted({k for p in complete for side in p.values() for k in side})
+        for k in kinds:
+            par, chg, wins = [], [], 0
+            for p in complete:
+                if k in p["parent"] and k in p["change"]:
+                    a, b = p["parent"][k]["p50_ms"], p["change"][k]["p50_ms"]
+                    par.append(a)
+                    chg.append(b)
+                    wins += b < a
+            if par:
+                out.setdefault(w, {})[k] = {
+                    "parent_p50_ms": quantile(par, .5), "change_p50_ms": quantile(chg, .5),
+                    "change_wins": wins, "pairs": len(par)}
+    return out
+
+
+def print_kind_medians(medians):
+    """The per-kind diagnostics, one row per workload and kind; not gated."""
+    for w, kinds in medians.items():
+        for k, m in kinds.items():
+            ratio = m["change_p50_ms"] / m["parent_p50_ms"] if m["parent_p50_ms"] else float("nan")
+            print(f"{w:8} {'kind ' + k + ' p50_ms':32} {m['parent_p50_ms']:>30.4g} "
+                  f"{m['change_p50_ms']:>30.4g} {ratio:8.3f} {m['change_wins']:>3}/{m['pairs']:<3}  "
+                  "diagnostic, not gated")
+
+
 def add_worktree(rev, dest):
     subprocess.run(["git", "-C", ROOT, "worktree", "add", "--detach", dest, rev], check=True,
                    stdout=subprocess.DEVNULL)
@@ -189,10 +245,10 @@ def main():
             order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
             for w in workloads:
                 for side in order:
-                    res = run_once(sides[side], bench["command"], w, seed,
-                                   bench["run_seconds"], a.trace)
+                    res, kinds = run_once(sides[side], bench["command"], w, seed,
+                                          bench["run_seconds"], a.trace)
                     rec = {"pair": i, "seed": seed, "workload": w, "side": side,
-                           "trace": int(a.trace), "result": res}
+                           "trace": int(a.trace), "result": res, "kinds": kinds}
                     runs.append(rec)
                     if a.out:
                         with open(a.out, "a") as f:
@@ -201,7 +257,13 @@ def main():
                            if k in ("ops_per_s", "op_p50_ms")}
                     print(f"[pair {i} seed {seed}] {w} {side}: "
                           f"{res.get('error') or e2e}", flush=True)
-        return 0 if summarize(bench, runs, a.metric) else 1
+        ok = summarize(bench, runs, a.metric)
+        medians = kind_medians(runs)
+        print_kind_medians(medians)
+        if a.out:
+            with open(a.out, "a") as f:
+                f.write(json.dumps({"kind_medians": medians}) + "\n")
+        return 0 if ok else 1
     finally:
         for dest in worktrees:
             subprocess.run(["git", "-C", ROOT, "worktree", "remove", "--force", dest],

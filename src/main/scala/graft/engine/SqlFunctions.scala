@@ -93,17 +93,20 @@ object SqlFunctions {
 /** `spark.sql.extensions=graft.engine.GraftExtensions` — the standard
   * builder-time injection seam for clusters where sessions are created by
   * the platform, not application code. Injects the SQL decode functions
-  * and the connector's optimizer rules
+  * the connector's optimizer rules
   * ([[graft.sources.GraftDataSource.OptimizerRules]]: token-range and
   * map-access pruning, header-answered aggregates) as pre-CBO rules: that
   * batch runs after `V2ScanRelationPushDown`, so the graft scan relation
-  * exists by then. The rules need no extension: the connector adds the
-  * same list to any session that resolves a graft table
+  * exists by then. It also injects the planner strategy that answers
+  * point lookups on the driver ([[graft.sources.GraftDriverAnswer]]).
+  * None of them needs the extension: the connector adds the same rules
+  * and strategy to any session that resolves a graft table
   * ([[graft.sources.GraftDataSource.installRules]]), skipping the ones
   * injected here. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     SqlFunctions.all.foreach(ext.injectFunction)
     graft.sources.GraftDataSource.OptimizerRules.foreach(r => ext.injectPreCBORule(_ => r))
+    ext.injectPlannerStrategy(_ => graft.sources.GraftDriverAnswer)
   }
 }

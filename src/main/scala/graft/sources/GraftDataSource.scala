@@ -9,7 +9,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.parquet.example.data.Group
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
@@ -133,20 +133,24 @@ object GraftDataSource {
   val OptimizerRules: Seq[Rule[LogicalPlan]] =
     Seq(GraftTokenRangePushdown, GraftMapAccessPushdown, GraftStatsAggPushdown)
 
-  /** Makes [[OptimizerRules]] part of `spark`'s optimizer, idempotently.
+  /** Makes [[OptimizerRules]] part of `spark`'s optimizer and
+    * [[GraftDriverAnswer]] one of its planner strategies, idempotently.
     * Called where a graft table is resolved (table-provider resolution and
     * [[GraftCatalog.loadTable]]), which is analysis: the optimizer fixes
     * its batches when a query's optimization starts, so a rule added
     * later (say, in `newScanBuilder`) would miss the query that resolved
-    * the table. Rules the session already injected through
-    * `spark.sql.extensions=graft.engine.GraftExtensions` are not added a
-    * second time. */
+    * the table. Rules and the strategy the session already injected
+    * through `spark.sql.extensions=graft.engine.GraftExtensions` are not
+    * added a second time. */
   def installRules(spark: org.apache.spark.sql.SparkSession): Unit = {
     val injected = spark.sessionState.optimizer.preCBORules.toSet
+    val strategyInjected = spark.sessionState.planner.extraPlanningStrategies.contains(GraftDriverAnswer)
     val exp = spark.experimental
     exp.synchronized {
       val missing = OptimizerRules.filterNot(r => injected(r) || exp.extraOptimizations.contains(r))
       if (missing.nonEmpty) exp.extraOptimizations = exp.extraOptimizations ++ missing
+      if (!strategyInjected && !exp.extraStrategies.contains(GraftDriverAnswer))
+        exp.extraStrategies = exp.extraStrategies :+ GraftDriverAnswer
     }
   }
 }
@@ -844,7 +848,24 @@ class GraftScan(
     }
   }
 
-  override def planInputPartitions(): Array[InputPartition] = {
+  /** Planning-time file pruning, and its count of files the stats
+    * pruned: the part-files whose header-folded stats and footer blooms
+    * may match every active filter, cut by LIMIT planning. Memoized per
+    * runtime-filter set, so [[planInputPartitions]] and
+    * [[GraftDriverAnswer]] read one value, and runtime filtering re-plans. */
+  @volatile private var filePlan: (Array[Filter], (Seq[String], Int)) = null
+  private[sources] def plannedFiles: (Seq[String], Int) = {
+    val runtime = runtimeFilters
+    val memo = filePlan
+    if (memo != null && (memo._1 eq runtime)) memo._2
+    else {
+      val planned = planFiles()
+      filePlan = (runtime, planned)
+      planned
+    }
+  }
+
+  private def planFiles(): (Seq[String], Int) = {
     val conf = hconf.value
     val active = effectiveFilters
     // FILE-level skip on the header-folded column stats: a part-file whose
@@ -888,7 +909,6 @@ class GraftScan(
               getBloom(c).forall(SegmentBloom.mightContainLong(_, p))) }
         }
       }
-    mFilesPrunedPlanning = (files.length - afterPrune.length).toLong
     // LIMIT planning, composed with pushed filters (round-3 judge #9):
     // keep planning files until the chosen set GUARANTEES >= limit
     // matching rows — a file contributes its header row count only when
@@ -914,6 +934,47 @@ class GraftScan(
         out.toSeq
       case _ => afterPrune
     }
+    (chosen, files.length - afterPrune.length)
+  }
+
+  /** What [[GraftDriverAnswer]] answers on the driver: nothing to read
+    * when planning pruned every file, or the rows of the one file it left
+    * when that file's segment stat and bloom pruning keeps at most one
+    * segment; None otherwise. The decision reads the footer and the stat
+    * columns alone, before any payload page; then the one kept segment is
+    * decoded by the scan's own reader. One segment holds at most the
+    * engine's 64k tokens, so that is the bound on driver work. The
+    * pushdown kill switch turns this off (nothing is answered from the
+    * stats it bypasses), and so does a storage-partitioned scan, whose key
+    * grouping a join above may rely on. Read once, at physical planning:
+    * runtime filters arrive later and only narrow the scan. */
+  private[sources] lazy val driverRead: Option[DriverRead] =
+    if (!toggles.pushdown || spjBuckets.isDefined) None
+    else {
+      val (planned, pruned) = plannedFiles
+      val fileCounters = Seq(GraftTaskMetric("graft files planned", planned.length.toLong),
+        GraftTaskMetric("graft files pruned (planning)", pruned.toLong))
+      planned match {
+        case Seq() => Some(DriverRead(None, Array.empty, fileCounters))
+        case Seq(f) =>
+          val reader = new GraftColumnarPartitionReader(f, required, effectiveFilters, limit,
+            tokenRange, hconf.value, tokenPoints, batchRows, elemRanges, elemPoints, toggles.bloom)
+          try {
+            if (reader.segmentsKept() > 1) None
+            else {
+              val copy = UnsafeProjection.create(required)
+              val rows = ArrayBuffer.empty[InternalRow]
+              while (reader.next()) reader.get().rowIterator().forEachRemaining(r => rows += copy(r).copy())
+              Some(DriverRead(Some(f), rows.toArray, reader.currentMetricsValues().toSeq ++ fileCounters))
+            }
+          } finally reader.close()
+        case _ => None
+      }
+    }
+
+  override def planInputPartitions(): Array[InputPartition] = {
+    val (chosen, pruned) = plannedFiles
+    mFilesPrunedPlanning = pruned.toLong
     mFilesPlanned = chosen.length.toLong
     spjBuckets match {
       case Some(_) =>
@@ -1286,6 +1347,16 @@ private[sources] final class SegmentScanCore(
   private var kept: Array[Map[String, ChunkStats]] = Array.empty
   private var pos = 0
   private var payloads: Iterator[Group] = Iterator.empty
+  // every row group's `kept`, when [[segmentsKept]] decided them up front
+  private var decided: Array[Array[Map[String, ChunkStats]]] = null
+
+  /** The stat-phase records' chunk stats, null where a skip rules the
+    * segment out. */
+  private def decide(records: Iterator[Group]): Array[Map[String, ChunkStats]] =
+    records.map { g =>
+      val c = chunks(g)
+      if (keep(c, g.getInteger("nRows", 0))) c else null
+    }.toArray
 
   /** Next matching segment, decoded; null at end of file. Every segment
     * passes [[keep]] (and so reaches exactly one counter) before any
@@ -1300,19 +1371,33 @@ private[sources] final class SegmentScanCore(
       }
       group += 1
       if (group >= cursor.rowGroups) return null
-      val records = cursor.rowGroup(group, statPhase).toArray
-      kept = records.map { g =>
-        val c = chunks(g)
-        if (keep(c, g.getInteger("nRows", 0))) c else null
-      }
       pos = 0
-      payloads =
-        if (payloadPhase == null) records.iterator
-        else if (kept.exists(_ != null)) cursor.rowGroup(group, payloadPhase)
-        else Iterator.fill(kept.length)(null)
+      if (payloadPhase == null) {
+        // unfiltered: one pass reads stats and payloads together
+        val records = cursor.rowGroup(group, statPhase).toArray
+        kept = decide(records.iterator)
+        payloads = records.iterator
+      } else {
+        kept = if (decided != null) decided(group) else decide(cursor.rowGroup(group, statPhase))
+        payloads =
+          if (kept.exists(_ != null)) cursor.rowGroup(group, payloadPhase)
+          else Iterator.fill(kept.length)(null)
+      }
     }
     null
   }
+
+  /** How many of the file's segments survive the chunk skips, decided
+    * before any payload page is read: a filtered scan reads every row
+    * group's stat phase now, and [[nextSegment]] then reads only payloads;
+    * an unfiltered scan keeps every segment, so its count comes from the
+    * footer. Call it before the first [[nextSegment]]. */
+  def segmentsKept(): Long =
+    if (payloadPhase == null) cursor.recordCount
+    else {
+      decided = Array.tabulate(cursor.rowGroups)(i => decide(cursor.rowGroup(i, statPhase)))
+      decided.iterator.map(_.count(_ != null).toLong).sum
+    }
 
   def close(): Unit = cursor.close()
 
@@ -1630,6 +1715,9 @@ class GraftColumnarPartitionReader(file: String, required: StructType,
 
   override def currentMetricsValues(): Array[CustomTaskMetric] =
     core.metricsValues(mRows)
+
+  /** [[SegmentScanCore.segmentsKept]] of this reader's file. */
+  def segmentsKept(): Long = core.segmentsKept()
 
   // projected metadata fields: ordinal into DecodedSegment.extras
   private val metaIndex: Map[String, Int] =

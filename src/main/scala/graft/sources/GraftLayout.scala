@@ -81,14 +81,17 @@ object GraftLayout {
     * and every task of a scan, whose Configuration is the scan's broadcast
     * value (one object per executor). The options are path-free, which
     * only matters for parquet modular encryption (per-file decryption
-    * properties) — graft never writes encrypted parquet. */
+    * properties) — graft never writes encrypted parquet. Page checksums
+    * are verified: graft's writers store a CRC with every page, and a
+    * flipped byte in a copy that lost its `.crc` side file (or on a store
+    * without Hadoop checksums) must fail the read, not reach a decoder. */
   @volatile private var lastReadOptions: (Configuration, ParquetReadOptions) = null
 
   private def readOptions(conf: Configuration): ParquetReadOptions = {
     val last = lastReadOptions
     if (last != null && (last._1 eq conf)) last._2
     else {
-      val opts = HadoopReadOptions.builder(conf).build()
+      val opts = HadoopReadOptions.builder(conf).usePageChecksumVerification(true).build()
       lastReadOptions = (conf, opts)
       opts
     }
@@ -157,13 +160,21 @@ object GraftLayout {
     /** Row groups in the file. */
     def rowGroups: Int = reader.getRowGroups.size
 
+    /** Records in the file, from the footer: no page is read. */
+    def recordCount: Long = reader.getRecordCount
+
     /** Every record of row group `i` under `p`, in file order, reading
       * only p's column chunks: a reader can look at a row group's small
       * columns first and fetch the large ones only when a record needs
       * them. */
     def rowGroup(i: Int, p: Projection): Iterator[Group] = {
       reader.setRequestedSchema(p.schema)
-      val pages = reader.readRowGroup(i)
+      // parquet's page errors (a failed CRC check among them) name no file
+      val pages =
+        try reader.readRowGroup(i)
+        catch { case e: org.apache.parquet.io.ParquetDecodingException =>
+          throw new org.apache.parquet.io.ParquetDecodingException(
+            s"$file, row group $i: ${e.getMessage}", e) }
       val rr = p.io.getRecordReader(pages, new GroupRecordConverter(p.schema))
       Iterator.fill(pages.getRowCount.toInt)(rr.read())
     }

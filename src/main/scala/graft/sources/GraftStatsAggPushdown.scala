@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{AliasHelper, ArrayMax, ArrayMin, Attribute, AttributeMap, Alias, Expression, GetStructField, Literal}
+import org.apache.spark.sql.catalyst.expressions.{AliasHelper, ArrayMax, ArrayMin, Attribute, AttributeMap, Alias, Expression, GetStructField, InterpretedMutableProjection, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count, Max, Min}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LocalRelation, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -43,20 +43,40 @@ import org.apache.spark.unsafe.types.UTF8String
   * Any filter, limit or token predicate between the aggregate and the
   * scan, or `graft.scan.pushdown=false`, leaves the plan alone
   * ([[GraftScan.headerAnswerable]]); so does a single output of any other
-  * shape (`avg`, `sum`, DISTINCT, FILTER clauses, grouping). */
+  * shape (`avg`, `sum`, DISTINCT, FILTER clauses, grouping). A
+  * deterministic projection directly above an answered aggregate (say
+  * `select($"n" + $"n")`, which `CollapseProject` keeps apart because it
+  * reads the count twice) is evaluated into the answer row as well. */
 object GraftStatsAggPushdown extends Rule[LogicalPlan] with AliasHelper {
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
-    case agg @ Aggregate(Seq(), aggExprs, child, _) if aggExprs.nonEmpty =>
+    // a projection left directly above the aggregate folds into the answer
+    // row too: run from `extraOptimizations`, this rule comes after
+    // `ConvertToLocalRelation`, so the projection would otherwise run as a
+    // one-task job over the local relation
+    case p @ Project(ps, agg: Aggregate) if ps.forall(GraftDriverAnswer.evaluable) =>
+      answer(agg).fold(p: LogicalPlan) { row =>
+        val project = new InterpretedMutableProjection(ps, agg.output)
+        project.initialize(0)
+        LocalRelation(p.output, Seq(project(row).copy()))
+      }
+    case agg: Aggregate => answer(agg).fold(agg: LogicalPlan)(row => LocalRelation(agg.output, Seq(row)))
+  }
+
+  /** The one row an ungrouped aggregate over a graft scan computes, when
+    * the scan's folded headers answer every output. */
+  private def answer(agg: Aggregate): Option[InternalRow] = agg match {
+    case Aggregate(Seq(), aggExprs, child, _) if aggExprs.nonEmpty =>
       scanUnder(child) match {
         case Some((gs, aliases)) if gs.headerAnswerable =>
           val answers = aggExprs.map(e => answerOf(replaceAlias(e, aliases)))
           if (answers.forall(_.isDefined)) {
             val h = gs.headerFold
-            LocalRelation(agg.output, Seq(InternalRow.fromSeq(answers.map(_.get(h)))))
-          } else agg
-        case _ => agg
+            Some(InternalRow.fromSeq(answers.map(_.get(h))))
+          } else None
+        case _ => None
       }
+    case _ => None
   }
 
   /** True when `plan` was answered on the driver: a local relation and no

@@ -287,4 +287,62 @@ class GraftWriteSpec extends AnyFunSuite {
     // only when asked (ParquetReadOptions.usePageChecksumVerification)
     assert(header.isSetCrc)
   }
+
+  test("a flipped byte in a payload page fails the scan by the part-file's name") {
+    import java.nio.file.{Files, Path => JPath}
+    import scala.jdk.CollectionConverters._
+    import org.apache.parquet.format.Util
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val src = tmp()
+    val input = tokenDf(200)
+    input.write.format("graft").option("buckets", "2").mode(SaveMode.Append).save(src)
+    // copies without the `.crc` side files, so Hadoop's checksummed local
+    // filesystem has nothing to check: only parquet's page CRCs can
+    def copyWithoutCrc(): String = {
+      val to = tmp()
+      val from = java.nio.file.Paths.get(src)
+      Files.walk(from).iterator().asScala.toList.foreach { p =>
+        val dest: JPath = java.nio.file.Paths.get(to).resolve(from.relativize(p).toString)
+        if (Files.isDirectory(p)) Files.createDirectories(dest)
+        else if (!p.getFileName.toString.endsWith(".crc")) Files.copy(p, dest)
+      }
+      to
+    }
+    val intact = copyWithoutCrc()
+    val broken = copyWithoutCrc()
+    val conf = spark.sessionState.newHadoopConf()
+    val part = GraftLayout.listDataFiles(broken, conf).head
+    val file = HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(part), conf)
+    val reader = ParquetFileReader.open(file)
+    val chunk = try reader.getFooter.getBlocks.get(0).getColumns.asScala
+      .find(_.getPath.toDotString == "c_tokens__payload").get
+    finally reader.close()
+    // the chunk's first data page: its header, then its stored bytes
+    val in = file.newStream()
+    val (dataStart, dataLen) = try {
+      in.seek(chunk.getStartingPos)
+      var header = Util.readPageHeader(in)
+      if (header.isSetDictionary_page_header) {
+        in.seek(in.getPos + header.getCompressed_page_size)
+        header = Util.readPageHeader(in)
+      }
+      assert(header.isSetData_page_header || header.isSetData_page_header_v2)
+      (in.getPos, header.getCompressed_page_size)
+    } finally in.close()
+    val raf = new java.io.RandomAccessFile(new java.io.File(new java.net.URI(part).getPath), "rw")
+    try {
+      val at = dataStart + dataLen / 2
+      raf.seek(at)
+      val b = raf.read()
+      raf.seek(at)
+      raf.write(b ^ 0x10)
+    } finally raf.close()
+    val e = intercept[Exception](spark.read.format("graft").load(broken).collect())
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).mkString("\n")
+    assert(messages.contains(new org.apache.hadoop.fs.Path(part).getName), messages)
+    assert(messages.contains("CRC"), messages)
+    assert(collectTokens(spark.read.format("graft").load(intact)) === collectTokens(input))
+  }
 }

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.engine.TokenTables
+import graft.sources.ScanMetrics.jobsOf
 
 /** Header-answerable aggregates run no Spark job on a plain
   * `format("graft")` session: the connector installs its optimizer rules
@@ -68,30 +69,6 @@ class HeaderAggregateSpec extends AnyFunSuite {
     "mixed" -> (_.agg(count(lit(1)), max(col("n_tok")), min(array_min(col("tags"))),
       count(col("info.kind")), min(col("lang")))))
 
-  /** Runs `body` and counts the Spark jobs it submitted: the jobs of its
-    * job group, read once a later sentinel job has been seen (listener
-    * events arrive in order). */
-  private def jobsOf[A](s: SparkSession)(body: => A): (A, Int) = {
-    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
-    }
-    val sc = s.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup("graft-header-agg-probe", "header aggregate")
-      val out = try body finally sc.clearJobGroup()
-      sc.setJobGroup("graft-header-agg-sentinel", "sentinel")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!groups.contains("graft-header-agg-sentinel") && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      assert(groups.contains("graft-header-agg-sentinel"), "listener never saw the sentinel job")
-      (out, groups.toArray.count(_ == "graft-header-agg-probe"))
-    } finally sc.removeSparkListener(listener)
-  }
-
   private object Plans extends AdaptiveSparkPlanHelper
   private def scansGraft(df: DataFrame): Boolean =
     Plans.collectFirst(df.queryExecution.executedPlan) {
@@ -129,6 +106,22 @@ class HeaderAggregateSpec extends AnyFunSuite {
     first.read.format("graft").load(table).agg(count(lit(1))).collect()
     // a sibling session has its own optimizer: the connector installs there too
     assertZeroJobShapes(spark.newSession())
+  }
+
+  test("a projection left above an answered aggregate folds into the answer row: zero jobs") {
+    // `n + n` reads the count twice, so CollapseProject keeps the Project
+    // apart; the rule runs after ConvertToLocalRelation, which would
+    // otherwise leave that Project to run as a one-task job
+    val build = (df: DataFrame) => df.agg(count(lit(1)).as("n")).select((col("n") + col("n")).as("twice"))
+    val q = build(spark.read.format("graft").load(table))
+    assert(q.queryExecution.optimizedPlan.collectFirst {
+      case p: org.apache.spark.sql.catalyst.plans.logical.Project => p }.isEmpty,
+      s"the projection was not folded:\n${q.queryExecution.optimizedPlan}")
+    val (rows, jobs) = jobsOf(spark)(q.collect().toSeq)
+    assert(GraftStatsAggPushdown.answeredOnDriver(q.queryExecution.executedPlan))
+    assert(jobs === 0)
+    assert(rows === build(input).collect().toSeq)
+    assert(rows === Seq(Row(600L)))
   }
 
   test("shapes the headers cannot answer keep scanning and stay exact") {

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
 /** The `format("graft")` scan's DSv2 custom metrics as specs read them:
   * per query, from the SQL status store — the same UI-visible path a user
@@ -31,11 +31,13 @@ object ScanMetrics {
     (rows, metrics)
   }
 
-  /** Segments in the part-files `df`'s scan planned. */
+  /** Segments in the part-files `df`'s scan planned: a batch scan's input
+    * partitions, or the file a driver answer read. */
   def segmentsPlanned(df: DataFrame): Long = {
     val files = df.queryExecution.executedPlan.collect {
       case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
         b.inputPartitions.map(GraftInputPartition.fileOf)
+      case l: GraftLocalScanExec => l.file.toSeq
     }.flatten
     if (files.isEmpty) 0L else df.sparkSession.read.parquet(files: _*).count()
   }
@@ -51,5 +53,30 @@ object ScanMetrics {
     assert(counted === segmentsPlanned(df),
       s"segment counters must cover every planned segment: $m")
     m.getOrElse(counter, 0L)
+  }
+
+  /** Runs `body` and counts the Spark jobs it submitted: the jobs of its
+    * job group, read once a later sentinel job has been seen (listener
+    * events arrive in order). */
+  def jobsOf[A](s: SparkSession)(body: => A): (A, Int) = {
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+    }
+    val sc = s.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("graft-jobs-probe", "counted")
+      val out = try body finally sc.clearJobGroup()
+      sc.setJobGroup("graft-jobs-sentinel", "sentinel")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!groups.contains("graft-jobs-sentinel") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      org.scalatest.Assertions.assert(groups.contains("graft-jobs-sentinel"),
+        "listener never saw the sentinel job")
+      (out, groups.toArray.count(_ == "graft-jobs-probe"))
+    } finally sc.removeSparkListener(listener)
   }
 }

@@ -64,6 +64,10 @@ import graft.codec.{IntCodecs, SegmentBloom, StringCodecs}
   *    driver from the folded segment headers and replace the aggregate
   *    with a local relation ([[GraftStatsAggPushdown]]) — no Spark job,
   *    payload pages never read;
+  *  - **driver-answered lookups**: a scan that planning prunes to no file,
+  *    or to one file and one segment (a `doc_id` point lookup), is read on
+  *    the driver and planned as one leaf ([[GraftDriverAnswer]]) — no
+  *    Spark job;
   *  - **scan opener** (§2.A.5/7): one InputPartition per segment part-file;
   *    each reader streams Groups straight from parquet with no Spark
   *    session on the executor path, under the session's Hadoop conf

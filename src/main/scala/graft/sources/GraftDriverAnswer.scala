@@ -19,7 +19,9 @@ import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
   * query then runs no Spark job and skips the batch scan's planning and
   * preparation. Spark's own planning runs otherwise, and also whenever an
   * expression of the chain cannot be evaluated on the driver as it stands
-  * (nondeterministic, a subquery, or an unevaluable expression). */
+  * (nondeterministic, a subquery, or an unevaluable expression). The
+  * optimizer keeps a nondeterministic filter out of the chain, so it runs
+  * in Spark over a driver answer of the rest. */
 object GraftDriverAnswer extends SparkStrategy {
 
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
@@ -40,8 +42,8 @@ object GraftDriverAnswer extends SparkStrategy {
   }
 
   /** Deterministic, subquery-free, and evaluable once its attributes are
-    * bound (the test `ConvertToLocalRelation` applies before folding a
-    * projection on the driver). */
+    * bound: the test Spark's `ConvertToLocalRelation` applies before it
+    * evaluates a projection on the driver. */
   def evaluable(e: Expression): Boolean =
     e.deterministic && !SubqueryExpression.hasSubquery(e) &&
       !e.exists(x => x.isInstanceOf[Unevaluable] && !x.isInstanceOf[AttributeReference])
